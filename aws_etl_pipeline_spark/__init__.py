@@ -10,7 +10,8 @@ full relational + LLM-data-pipeline operator surface on top.
 Layout:
     session.py    SparkSession factory (AQE, UTC, Arrow, ns-parquet shim)
     schemas.py    explicit StructType schemas (transactions + testdata)
-    catalog.py    table loaders / temp-view registration
+    catalog.py    table loaders
+    staging.py    build-once fixtures and per-process scratch under $TMPDIR
     registry.py   named-query registry (Spark callable + DuckDB oracle twin)
     generator.py  deterministic Spark-native transaction generator (R20)
     operators/    ETL pipeline (R1-R18), relational, window, set ops, upsert

@@ -18,7 +18,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import TABLE_NAMES
 from .session import ensure_engine_confs
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -65,11 +64,3 @@ def load_spread_keyed(
     df = load_table(spark, sf_dir, name)
     return df.repartition(spark.sparkContext.defaultParallelism, key)
 
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> None:
-    """Register temp views so SQL-expressed operators can reference tables
-    by the same names the DuckDB oracle uses."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

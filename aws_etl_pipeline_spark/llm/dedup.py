@@ -1248,24 +1248,24 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidate quality is identical to `dedup_minhash_lsh` — same 16
     md5-derived permutations, 4 bands of 4 — so the estimated
     Jaccard column is directly comparable across the family."""
-    import os
-
+    from .. import staging
     from ..api import _lsh_band_rows
-    from ..operators.graph import _STAGE_ROOT, _source_fingerprint, _stage
 
     d = load_spread(spark, sf_dir, "documents")
-    key = _source_fingerprint(sf_dir, ("documents",))
-    hist = _stage(
+    hist = staging.staged(
         spark,
-        os.path.join(_STAGE_ROOT, f"minhash_index_{key}"),
-        lambda: _lsh_band_rows(
-            d.where(F.col("doc_id") % 2 == 0),
-            "doc_id",
-            "text",
-            N_MINHASH,
-            N_BANDS,
-            SHINGLE,
-            include_sig=True,
+        "minhash_index",
+        sf_dir,
+        staging.spread(
+            lambda: _lsh_band_rows(
+                d.where(F.col("doc_id") % 2 == 0),
+                "doc_id",
+                "text",
+                N_MINHASH,
+                N_BANDS,
+                SHINGLE,
+                include_sig=True,
+            )
         ),
     )
     batch = _lsh_band_rows(

@@ -20,11 +20,11 @@ bit-identical scores (rounded only to absorb final-ulp risk).
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..cache import track
 from ..catalog import load_spread
 from ..registry import query
@@ -100,13 +100,6 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="vec_id",
         vec_col="embedding",
         k=TOP_K,
-    )
-
-
-def _planes_sql() -> str:
-    rows = plane_weights()
-    return ", ".join(
-        "[" + ", ".join(f"{x:.3f}" for x in row) + "]" for row in rows
     )
 
 
@@ -302,12 +295,6 @@ def sim_label_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 N_PROBE = 2  # centroid cells probed per query
-
-
-def _cell_sim():
-    # centroid/query cosine used by assignment and probing — shared so
-    # the staged layout probes with the EXACT expression the build used
-    return _dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cnrm"))
 
 
 def _ivf_base(spark: SparkSession, sf_dir: str, train_filter=None):
@@ -616,28 +603,15 @@ def ivf_staged_layout(spark: SparkSession, sf_dir: str):
     quantizer and the partitioned index once, serve probes against
     the layout (the `ppr_edges_bucketed` discipline applied to the
     vector index). Returns ``(corpus, cent_n)`` readers."""
-    from ..operators.graph import (
-        _STAGE_ROOT,
-        _source_fingerprint,
-        _stage,
-        _stage_partitioned,
-    )
-
-    key = _source_fingerprint(sf_dir, ("embeddings",))
-
     def build_corpus() -> DataFrame:
         # assign already carries (v, nrm) alongside the cell id (r14)
         _, assign, _ = _ivf_parts(spark, sf_dir)
         return assign.select("vec_id", "v", "nrm", "cell")
 
-    def build_cent() -> DataFrame:
-        return _ivf_base(spark, sf_dir)[1]
-
-    corp = _stage_partitioned(
-        spark, os.path.join(_STAGE_ROOT, f"ivf_corpus_{key}"), build_corpus, "cell"
+    corp = staging.staged(
+        spark, "ivf_corpus", sf_dir, staging.partitioned(build_corpus, "cell")
     )
-    cent_n = _stage(spark, os.path.join(_STAGE_ROOT, f"ivf_cent_{key}"), build_cent)
-    return corp, cent_n
+    return corp, ivf_staged_centroids(spark, sf_dir)
 
 
 def ivf_staged_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -645,14 +619,9 @@ def ivf_staged_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same path, same build — callers that serve a different index body
     over the same coarse quantizer, e.g. the staged-PQ layout, reuse
     it without also staging the full-precision corpus)."""
-    from ..operators.graph import _STAGE_ROOT, _source_fingerprint, _stage
-
-    key = _source_fingerprint(sf_dir, ("embeddings",))
-
-    def build_cent() -> DataFrame:
-        return _ivf_base(spark, sf_dir)[1]
-
-    return _stage(spark, os.path.join(_STAGE_ROOT, f"ivf_cent_{key}"), build_cent)
+    return staging.staged(
+        spark, "ivf_cent", sf_dir, staging.spread(lambda: _ivf_base(spark, sf_dir)[1])
+    )
 
 
 @query(
@@ -1010,7 +979,6 @@ def hash_argmin(
     score: F.Column,
     keys: list[str],
     out: str = "cell",
-    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Distributed argmin over a broadcast candidate relation with
     (score asc, cell asc) tie-break, using ONLY hash aggregates — the
@@ -1033,13 +1001,7 @@ def hash_argmin(
     min(cell) for the oracle's deterministic tie-break. Two codegen
     passes over the expansion instead of one sorted one — the classic
     two-pass argmin trade, and the only shape whose shuffle volume is
-    one row per key at any scale.
-
-    ``carry`` (r15, guide §2.4): extra ``narrow`` columns functionally
-    dependent on ``keys`` (e.g. the subvector the key was derived
-    from) ride the final hash aggregate as additional group keys, so
-    consumers that need them do not pay a join back onto ``narrow``
-    after the argmin."""
+    one row per key at any scale."""
     def expand(df: DataFrame) -> DataFrame:
         j = (
             df.join(F.broadcast(cand), expand_on)
@@ -1052,7 +1014,7 @@ def hash_argmin(
     return (
         expand(narrow.join(mins, list(keys)))
         .filter(F.col("_sc") == F.col("_msc"))
-        .groupBy(*keys, *carry)
+        .groupBy(*keys)
         .agg(F.min("cell").alias(out))
     )
 
@@ -2660,14 +2622,6 @@ def ivf_pq_staged_layout(spark: SparkSession, sf_dir: str):
     scoring is bit-identical to the in-query build. Returns
     ``(codes, cent)`` readers: codes = (neighbor_id, sub, code, cell),
     cent = (sub, cell, cv)."""
-    from ..operators.graph import (
-        _STAGE_ROOT,
-        _source_fingerprint,
-        _stage,
-        _stage_partitioned,
-    )
-
-    key = _source_fingerprint(sf_dir, ("embeddings",))
 
     def build_cent() -> DataFrame:
         n, _, _ = _ivf_parts(spark, sf_dir)
@@ -2678,7 +2632,7 @@ def ivf_pq_staged_layout(spark: SparkSession, sf_dir: str):
             sub.filter(F.col("vec_id") < N_QUERIES + PQ_TRAIN_SAMPLE)
         )
 
-    cent = _stage(spark, os.path.join(_STAGE_ROOT, f"ivfpq_cent_{key}"), build_cent)
+    cent = staging.staged(spark, "ivfpq_cent", sf_dir, staging.spread(build_cent))
 
     def build_codes() -> DataFrame:
         # derive codes FROM the staged fp layout (the realistic ingest
@@ -2695,8 +2649,8 @@ def ivf_pq_staged_layout(spark: SparkSession, sf_dir: str):
             F.col("vec_id").alias("neighbor_id"), "sub", "code", "cell"
         )
 
-    codes = _stage_partitioned(
-        spark, os.path.join(_STAGE_ROOT, f"ivfpq_codes_{key}"), build_codes, "cell"
+    codes = staging.staged(
+        spark, "ivfpq_codes", sf_dir, staging.partitioned(build_codes, "cell")
     )
     return codes, cent
 

@@ -22,14 +22,13 @@ fixed-iteration twin, no recursion needed.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..cache import track
 from ..catalog import load_table
 from ..registry import query
@@ -47,111 +46,19 @@ __all__ = [
     "graph_label_propagation",
 ]
 
-# ---------------------------------------------------------------------------
-# Shared staged edge fixtures (round-9, r8 verdict #5). Six of the
-# seven graph queries consume one of two edge relations derived from
-# the same lineitem scan: the oriented part co-purchase list
-# (triangle counting, edge-Jaccard) and the distinct customer–supplier
-# pair list (PageRank, BFS, k-core, HITS). Rebuilding those per query
-# dominated the local line (the basket self-join alone is ~2/3 of
-# graph_triangle_count's 8.5 s at sf0.1) while telling us nothing new
-# about the operators themselves. Each relation is now staged to
-# parquet ONCE per (sf_dir, source-file identity) with the tmp +
-# atomic-rename discipline merge_into_parquet uses — first writer
-# wins, losers discard their private tmp dir — and every query reads
-# the staged copy. Correctness is untouched (the staged rows are
-# byte-identical to the inline build; every oracle hash is unchanged)
-# and the staging cost itself still shows up exactly once in any cold
-# run. At 100 TB this IS the production shape: edge lists are
-# materialized, partitioned tables that many downstream jobs share,
-# not per-query rebuilds of an n-way self-join.
-# (graph_label_propagation keeps its inline build: its edge list is
-# sparsified with a quantity predicate, a different relation.)
-# ---------------------------------------------------------------------------
-
-_STAGE_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_stage")
-
-
-def _source_fingerprint(sf_dir: str, tables: tuple[str, ...]) -> str:
-    """Identity of the staged fixture: sf_dir path + (mtime_ns, size)
-    of every source parquet, so a test fixture dir that is rewritten
-    in place can never serve a stale stage."""
-    h = hashlib.md5(os.path.abspath(sf_dir).encode())
-    for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        paths = (
-            [os.path.join(p, f) for f in sorted(os.listdir(p))]
-            if os.path.isdir(p)
-            else [p]
-        )
-        for f in paths:
-            try:
-                st = os.stat(f)
-                h.update(f"{f}:{st.st_mtime_ns}:{st.st_size}".encode())
-            except OSError:
-                h.update(f"{f}:absent".encode())
-    return h.hexdigest()[:16]
-
-
-def _stage(spark: SparkSession, dest: str, build) -> DataFrame:
-    """Write ``build()`` to ``dest`` once (tmp + atomic rename; the
-    first concurrent writer wins) and return a reader DataFrame.
-
-    The write is spread across the session's parallelism: AQE
-    coalesces the builder's final shuffle to a handful of partitions,
-    and a 4-file stage caps every downstream scan at 4 tasks — at the
-    1000x replica that 1.9 GB / 4-file custsupp fixture bounded the
-    whole pagerank loop to 4-way parallelism (r10). One explicit
-    round-robin repartition at write time gives any reader full-width
-    scans (the load_spread discipline, applied at the producer)."""
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
-        tmp = f"{dest}.tmp-{os.getpid()}"
-        df = build()
-        # round-robin scatters similar rows and costs ~3.5x on-disk
-        # (measured on the 1000x custsupp stage); a local sort inside
-        # each partition restores run-length locality for the encoder
-        # without any extra exchange.
-        df.repartition(spark.sparkContext.defaultParallelism).sortWithinPartitions(
-            *df.columns
-        ).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, dest)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return spark.read.parquet(dest)
-
-
-def _stage_partitioned(
-    spark: SparkSession, dest: str, build, part_col: str
-) -> DataFrame:
-    """`_stage`, but the fixture is written directory-partitioned by
-    ``part_col`` so readers that filter on it get file-source
-    PARTITION PRUNING (the scan lists only matching directories —
-    `PartitionFilters` in the plan). `repartition(part_col)` keys the
-    write shuffle on the partition column, so every output directory
-    is written by exactly one task: one file per partition value, no
-    small-file fan-out. The in-file sort keeps encoder run-length
-    locality, same as `_stage`."""
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        os.makedirs(_STAGE_ROOT, exist_ok=True)
-        tmp = f"{dest}.tmp-{os.getpid()}"
-        df = build()
-        data_cols = [c for c in df.columns if c != part_col]
-        df.repartition(F.col(part_col)).sortWithinPartitions(
-            part_col, *data_cols
-        ).write.partitionBy(part_col).mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, dest)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return spark.read.parquet(dest)
+# Six of the seven graph queries read one of two staged edge relations
+# derived from the same lineitem scan: the oriented part co-purchase
+# list (triangle counting, edge-Jaccard) and the distinct
+# customer–supplier pair list (PageRank, BFS, k-core, HITS). The basket
+# self-join alone is ~2/3 of graph_triangle_count's 8.5 s at sf0.1, so
+# it is built once per fixture (see `staging`), not per query.
+# graph_label_propagation keeps its inline build: its edge list is
+# sparsified with a quantity predicate, a different relation.
 
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oriented part co-purchase edge list ``(u, v)`` with u < v:
     parts sharing an order are adjacent. Staged once per sf_dir."""
-    key = _source_fingerprint(sf_dir, ("lineitem",))
 
     def build() -> DataFrame:
         basket = (
@@ -173,7 +80,7 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return _stage(spark, os.path.join(_STAGE_ROOT, f"copurchase_{key}"), build)
+    return staging.staged(spark, "copurchase", sf_dir, staging.spread(build))
 
 
 def custsupp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,7 +88,6 @@ def custsupp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem ⋈ orders. Staged once per sf_dir; consumers needing the
     undirected string-labeled form project/symmetrize on top (a cheap
     map over the staged scan)."""
-    key = _source_fingerprint(sf_dir, ("lineitem", "orders"))
 
     def build() -> DataFrame:
         o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -194,7 +100,7 @@ def custsupp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return _stage(spark, os.path.join(_STAGE_ROOT, f"custsupp_{key}"), build)
+    return staging.staged(spark, "custsupp", sf_dir, staging.spread(build))
 
 
 def _custsupp_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -234,42 +140,23 @@ def pagerank_edges_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sibling of `ppr_edges_bucketed` (directory-partitioned, for
     FRONTIER pruning): single-seed walks want partition PRUNING,
     whole-graph iterations want partition ALIGNMENT — two layouts,
-    one staged relation each, both build-once artifacts.
+    one staged relation each, both build-once artifacts."""
 
-    Data files write once per fixture content (``_SUCCESS`` guard); a
-    fresh session (in-memory catalog) just re-registers the external
-    table over the existing files."""
-    key = _source_fingerprint(sf_dir, ("lineitem", "orders"))
-    tbl = f"pr_edges_b{PR_EDGE_BUCKETS}_{key}"
-    dest = os.path.join(_STAGE_ROOT, tbl)
-    if not spark.catalog.tableExists(tbl):
-        if os.path.exists(os.path.join(dest, "_SUCCESS")):
-            spark.sql(
-                f"""CREATE TABLE IF NOT EXISTS {tbl}
-                    (a STRING, b STRING, deg BIGINT)
-                    USING parquet
-                    CLUSTERED BY (a) SORTED BY (a)
-                    INTO {PR_EDGE_BUCKETS} BUCKETS
-                    LOCATION '{dest}'"""
-            )
-        else:
-            pairs = _custsupp_labeled(spark, sf_dir)
-            edges = pairs.union(
-                pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            deg = edges.groupBy(F.col("a").alias("node")).agg(
-                F.count(F.lit(1)).cast("long").alias("deg")
-            )
-            (
-                edges.join(deg.withColumnRenamed("node", "a"), "a")
-                .select("a", "b", "deg")
-                .write.bucketBy(PR_EDGE_BUCKETS, "a")
-                .sortBy("a")
-                .option("path", dest)
-                .mode("overwrite")
-                .saveAsTable(tbl)
-            )
-    return spark.table(tbl)
+    def writer():
+        pairs = _custsupp_labeled(spark, sf_dir)
+        edges = pairs.union(
+            pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        )
+        deg = edges.groupBy(F.col("a").alias("node")).agg(
+            F.count(F.lit(1)).cast("long").alias("deg")
+        )
+        return edges.join(deg.withColumnRenamed("node", "a"), "a").select(
+            "a", "b", "deg"
+        ).write
+
+    return staging.bucketed(
+        spark, f"pr_edges_b{PR_EDGE_BUCKETS}", sf_dir, writer, "a", PR_EDGE_BUCKETS
+    )
 
 
 def _oracle() -> str:
@@ -1361,7 +1248,6 @@ def ppr_edges_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     so no per-query deg join or edge-sized persist exists, and
     per-round scan cost tracks the FRONTIER's bucket count, not the
     graph (measured: SCALING.md round-11 replica table)."""
-    key = _source_fingerprint(sf_dir, ("lineitem", "orders"))
 
     def build() -> DataFrame:
         pairs = _custsupp_labeled(spark, sf_dir)
@@ -1375,13 +1261,11 @@ def ppr_edges_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a", "b", "deg", _ppr_bucket(F.col("a")).alias("bkt")
         )
 
-    return _stage_partitioned(
+    return staging.staged(
         spark,
-        os.path.join(
-            _STAGE_ROOT, f"ppr_edeg_b{PPR_EDGE_BUCKETS}_{key}"
-        ),
-        build,
-        "bkt",
+        f"ppr_edeg_b{PPR_EDGE_BUCKETS}",
+        sf_dir,
+        staging.partitioned(build, "bkt"),
     )
 
 
@@ -1733,50 +1617,6 @@ _NF_RUN_SEQ = 0
 #: radii measured (hops).
 NF_ROUNDS = 3
 
-#: pid roots this process has registered an atexit sweep for.
-_NF_ATEXIT_ROOTS: set[str] = set()
-
-
-def _nf_sweep_dead_roots(prefix: str) -> None:
-    """Remove neighborhood-function state roots owned by DEAD
-    processes: the owning pid is parsed exactly from the dir-name
-    suffix and the dir is removed only when that process no longer
-    exists (os.kill(pid, 0) probe), so a concurrent live session can
-    never lose its state mid-run (r12 advice: the old substring test
-    could)."""
-    import glob
-
-    for stale in glob.glob(
-        os.path.join(tempfile.gettempdir(), f"{prefix}_*")
-    ):
-        try:
-            owner = int(os.path.basename(stale).rsplit("_", 1)[-1])
-        except ValueError:
-            continue
-        if owner == os.getpid():
-            continue
-        try:
-            os.kill(owner, 0)
-        except ProcessLookupError:
-            shutil.rmtree(stale, ignore_errors=True)
-        except PermissionError:
-            pass  # alive under another uid — leave it
-
-
-def _nf_pid_root(prefix: str) -> str:
-    """This process's state root for ``prefix``, with a best-effort
-    atexit sweep registered once — a cleanly-exiting session removes
-    its own state instead of leaving it for the next session's
-    dead-pid probe."""
-    root = os.path.join(tempfile.gettempdir(), f"{prefix}_{os.getpid()}")
-    if root not in _NF_ATEXIT_ROOTS:
-        _NF_ATEXIT_ROOTS.add(root)
-        import atexit
-
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
-
-
 def _nf_prune_runs(pid_root: str, keep: set[str]) -> None:
     """Bound WITHIN-process state accumulation (r13 advice, medium):
     bench invokes the neighborhood-function family 12+ times per run
@@ -1801,33 +1641,30 @@ def _nf_prune_runs(pid_root: str, keep: set[str]) -> None:
             shutil.rmtree(p, ignore_errors=True)
 
 
-def _nf_edges(spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
-    """All-long symmetric edge relation (ia, ib) — both directions of
-    h60-hashed customer/supplier labels — staged ONCE per (process,
-    source fingerprint) and shared by every run of the owning
-    neighborhood-function spelling. The previous per-run edge rebuild
-    paid a 2x-pairs parquet write per invocation (~19 GB per run at
-    the 1000x replica) for byte-identical content."""
+def _nf_edge_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All-long symmetric edge relation (ia, ib): both directions of
+    h60-hashed customer/supplier labels."""
     from .sketches import _h60_spark
 
-    fp = _source_fingerprint(sf_dir, ("lineitem", "orders"))
-    dest = os.path.join(_nf_pid_root(prefix), f"edges_{fp}")
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        os.makedirs(os.path.dirname(dest), exist_ok=True)
-        pairs = _custsupp_labeled(spark, sf_dir)
-        ids = pairs.select(
-            _h60_spark(F.col("a")).alias("ia"),
-            _h60_spark(F.col("b")).alias("ib"),
-        )
-        tmp = f"{dest}.tmp-{os.getpid()}"
-        ids.union(
-            ids.select(F.col("ib").alias("ia"), F.col("ia").alias("ib"))
-        ).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, dest)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return spark.read.parquet(dest)
+    pairs = _custsupp_labeled(spark, sf_dir)
+    ids = pairs.select(
+        _h60_spark(F.col("a")).alias("ia"),
+        _h60_spark(F.col("b")).alias("ib"),
+    )
+    return ids.union(ids.select(F.col("ib").alias("ia"), F.col("ia").alias("ib")))
+
+
+def _nf_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`_nf_edge_ids`, staged once per fixture and shared by every run
+    of the neighborhood-function family. A per-run rebuild paid a
+    2x-pairs parquet write per invocation (~19 GB per run at the 1000x
+    replica) for byte-identical content."""
+    return staging.staged(
+        spark,
+        "nf_edges",
+        sf_dir,
+        lambda tmp: _nf_edge_ids(spark, sf_dir).write.parquet(tmp),
+    )
 
 
 def _nf_oracle() -> str:
@@ -1935,13 +1772,9 @@ def graph_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three concurrent shuffle stages exhausted the 12 GiB protocol
     # heap at the 100x replica. Disk-staged state is the HyperBall
     # practice anyway — the sketch file IS the round's output. The
-    # state root is pid-keyed (no cross-session clash); stale roots
-    # from DEAD runs are swept on entry, own older runs pruned at
-    # build start (r13 advice: unbounded run_N accumulation), and the
-    # symmetric long-edge relation is staged once per process and
-    # shared across runs.
-    _nf_sweep_dead_roots("spark_graft_nfstate")
-    pid_root = _nf_pid_root("spark_graft_nfstate")
+    # state lives in this process's scratch root; own older runs are
+    # pruned at build start (r13 advice: unbounded run_N accumulation).
+    pid_root = staging.scratch_dir("nfstate")
     _nf_prune_runs(pid_root, keep=set())
     # per-INVOCATION subdir under the pid root: a family digest builds
     # ONE union plan across members, so a second run in the same
@@ -1970,7 +1803,7 @@ def graph_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.set(pf, old_pf)
         return spark.read.parquet(path)
 
-    edges = _nf_edges(spark, sf_dir, "spark_graft_nfstate")
+    edges = _nf_edges(spark, sf_dir)
     # seed state: each node's sketch is {its own hash} — and the node
     # id IS that hash, so the seed is (id, id)
     sk = mat(
@@ -2152,7 +1985,8 @@ def _nf_edge_buckets(spark: SparkSession, sf_dir: str) -> int:
     the staged distinct-pair parquet (built anyway as the table's
     input): the edge table is ~4x its bytes — both directions, and
     two near-incompressible h60-hashed longs per row."""
-    pairs_dir = _stage_dir_of_custsupp(spark, sf_dir)
+    custsupp_pairs(spark, sf_dir)  # stages on first touch
+    pairs_dir = staging.location("custsupp", sf_dir)
     size = sum(
         os.path.getsize(os.path.join(pairs_dir, f))
         for f in os.listdir(pairs_dir)
@@ -2162,15 +1996,6 @@ def _nf_edge_buckets(spark: SparkSession, sf_dir: str) -> int:
     while b < 1024 and (size * 4) / b > NF_BUCKET_TARGET_BYTES:
         b *= 2
     return b
-
-
-def _stage_dir_of_custsupp(spark: SparkSession, sf_dir: str) -> str:
-    """Ensure the distinct customer–supplier pair list is staged and
-    return its parquet directory (the sizing input for
-    `_nf_edge_buckets`)."""
-    custsupp_pairs(spark, sf_dir)  # stages on first touch
-    key = _source_fingerprint(sf_dir, ("lineitem", "orders"))
-    return os.path.join(_STAGE_ROOT, f"custsupp_{key}")
 
 
 def nf_edges_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2189,43 +2014,17 @@ def nf_edges_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffle nothing edge-sized (the per-run parquet spelling paid
     a full edge exchange per round — at the 1000x replica that is a
     ~19 GB shuffle write per pass, x G*rounds passes)."""
-    key = _source_fingerprint(sf_dir, ("lineitem", "orders"))
     buckets = _nf_edge_buckets(spark, sf_dir)
-    tbl = f"nf_edges_b{buckets}_{key}"
-    dest = os.path.join(_STAGE_ROOT, tbl)
-    if not spark.catalog.tableExists(tbl):
-        if os.path.exists(os.path.join(dest, "_SUCCESS")):
-            spark.sql(
-                f"""CREATE TABLE IF NOT EXISTS {tbl}
-                    (ia BIGINT, ib BIGINT)
-                    USING parquet
-                    CLUSTERED BY (ia) SORTED BY (ia)
-                    INTO {buckets} BUCKETS
-                    LOCATION '{dest}'"""
-            )
-        else:
-            from .sketches import _h60_spark
-
-            pairs = _custsupp_labeled(spark, sf_dir)
-            ids = pairs.select(
-                _h60_spark(F.col("a")).alias("ia"),
-                _h60_spark(F.col("b")).alias("ib"),
-            )
-            (
-                ids.union(
-                    ids.select(F.col("ib").alias("ia"), F.col("ia").alias("ib"))
-                )
-                # pre-shuffle to the bucket key so each bucket is
-                # written by one task: {buckets} files, no
-                # tasks-x-buckets small-file fan-out
-                .repartition(buckets, F.col("ia"))
-                .write.bucketBy(buckets, "ia")
-                .sortBy("ia")
-                .option("path", dest)
-                .mode("overwrite")
-                .saveAsTable(tbl)
-            )
-    return spark.table(tbl)
+    # pre-shuffle to the bucket key so each bucket is written by one
+    # task: {buckets} files, no tasks-x-buckets small-file fan-out
+    return staging.bucketed(
+        spark,
+        f"nf_edges_b{buckets}",
+        sf_dir,
+        lambda: _nf_edge_ids(spark, sf_dir).repartition(buckets, F.col("ia")).write,
+        "ia",
+        buckets,
+    )
 
 
 #: in-session reuse cache for COMPLETED register-round state roots
@@ -2279,7 +2078,7 @@ def _nfr_state_root(
     diagnostic (`nf_register_round_stats`), so the 1000x behavior is
     row counts, not prose."""
     key = (
-        _source_fingerprint(sf_dir, ("lineitem", "orders")),
+        staging.fingerprint(sf_dir),
         NF_ROUNDS,
         NFR_M,
     )
@@ -2289,8 +2088,7 @@ def _nfr_state_root(
             os.path.join(cached, "_COMPLETE")
         ):
             return cached
-    _nf_sweep_dead_roots("spark_graft_nfregstate")
-    pid_root = _nf_pid_root("spark_graft_nfregstate")
+    pid_root = staging.scratch_dir("nfregstate")
     _nf_prune_runs(pid_root, keep=set(_NFREG_CACHE.values()))
     global _NF_RUN_SEQ
     _NF_RUN_SEQ += 1
@@ -2333,7 +2131,7 @@ def _nfr_state_root(
     if slices > 1:
         edges = nf_edges_table(spark, sf_dir)
     else:
-        edges = _nf_edges(spark, sf_dir, "spark_graft_nfregstate")
+        edges = _nf_edges(spark, sf_dir)
     # seed: each node's own hash IS its id (KMV-sibling identity
     # trick); every seed register is "new", so delta_0 = state_0.
     seed = (
@@ -2485,7 +2283,7 @@ def nf_register_round_stats(
     shipping every round ships ~state x degree; under delta shipping
     the last rounds collapse with the frontier."""
     root = _nfr_state_root(spark, sf_dir, reuse=True)
-    edges = _nf_edges(spark, sf_dir, "spark_graft_nfregstate")
+    edges = _nf_edges(spark, sf_dir)
     deg = edges.groupBy(F.col("ia").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )

@@ -670,15 +670,6 @@ def privacy_dp_count_laplace(spark: SparkSession, sf_dir: str) -> DataFrame:
 AMS_R = 16  # independent tug-of-war estimators (mean-combined)
 
 
-def _ams_sign_sql(seed: str) -> str:
-    """±1 sign from the low bit of a salted md5 — deterministic across
-    engines (the _h60 device, folded to one bit)."""
-    return (
-        f"CASE WHEN ('0x' || substr(md5('{seed}:' || user_id), 1, 8))::UBIGINT"
-        f" % 2 = 0 THEN 1 ELSE -1 END"
-    )
-
-
 @query(
     "sketch_ams_f2",
     oracle=f"""

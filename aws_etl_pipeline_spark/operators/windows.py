@@ -17,10 +17,6 @@ from ..registry import query
 from .relational import _dsum  # SQL twin helper
 
 
-def _dwsum(expr: str) -> str:
-    return f"CAST(sum(CAST({expr} AS DECIMAL(18,2)))"
-
-
 @query(
     "window_ranking",
     oracle="""

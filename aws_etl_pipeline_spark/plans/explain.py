@@ -40,12 +40,6 @@ def read_schema_columns(df: DataFrame) -> list[str]:
     return cols
 
 
-def has_node(df: DataFrame, node: str) -> bool:
-    """Whether the physical plan contains an operator (e.g.
-    'BroadcastHashJoin', 'TakeOrderedAndProject', 'Exchange')."""
-    return node in plan_string(df)
-
-
 def python_eval_nodes(df: DataFrame) -> list[str]:
     """Python-evaluation operators in the plan — empty means the whole
     query runs JVM-side."""
@@ -55,15 +49,3 @@ def python_eval_nodes(df: DataFrame) -> list[str]:
         if n in plan_string(df)
     ]
 
-
-def codegen_fraction(df: DataFrame) -> float:
-    """Fraction of plan operators inside whole-stage codegen (marked
-    '*' in formatted mode) — a quick 'how JVM-hot is this plan' gauge."""
-    ops = stars = 0
-    for line in plan_string(df).splitlines():
-        s = line.strip()
-        if s.startswith(("+-", ":-")) or (s and s[0] == "*"):
-            ops += 1
-            if "* " in s.split("(")[0] or s.startswith("*"):
-                stars += 1
-    return stars / ops if ops else 0.0

@@ -8,73 +8,20 @@ format -> scan must reproduce the table bit-for-bit, so the oracle is
 simply the original table — any encode/decode defect surfaces as a
 hash mismatch.
 
-Each query materializes its fixture under /tmp keyed by sf_dir, so
-runs are self-contained and rerunnable.
+Round-trip fixtures rewrite on every call, because the write is the
+operator under test; layout fixtures are built once. Both live where
+`staging` puts them.
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..catalog import load_table
 from ..registry import query
 from ..schemas import TESTDATA
-
-
-#: bump to invalidate every cached fixture when the fixture-building
-#: code changes shape (part of the cache key below).
-_FIXTURE_VERSION = "v2"
-
-
-def _sf_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of the source testdata: path + (name, size,
-    mtime) of every parquet file. Regenerated testdata at the same path
-    therefore gets fresh fixtures instead of silently reusing stale
-    /tmp or metastore copies."""
-    parts = [sf_dir, _FIXTURE_VERSION]
-    try:
-        for fname in sorted(os.listdir(sf_dir)):
-            if fname.endswith(".parquet"):
-                st = os.stat(os.path.join(sf_dir, fname))
-                parts.append(f"{fname}:{st.st_size}:{int(st.st_mtime)}")
-    except OSError:
-        pass
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-
-
-def _fixture_dir(sf_dir: str, tag: str) -> str:
-    return os.path.join(
-        tempfile.gettempdir(), f"spark_graft_{tag}_{_sf_fingerprint(sf_dir)}"
-    )
-
-
-def _publish_fixture(write_fn, out: str) -> None:
-    """Build a fixture via ``write_fn(tmp_dir)`` in a UNIQUE temp dir,
-    then swap it into place (rmtree + rename) — the same discipline as
-    stream_exec_dedup's staging (round-6 advice): two sessions hitting
-    the same sf_dir each build a complete private copy, and whichever
-    rename wins leaves a fully-written directory; a reader can never
-    observe an interleaved half-overwritten fixture. (The rmtree→
-    rename gap is a transient not-found, never silent corruption.)"""
-    import shutil
-    import uuid
-
-    tmp = f"{out}.tmp.{uuid.uuid4().hex[:8]}"
-    write_fn(tmp)
-    shutil.rmtree(out, ignore_errors=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        # another session's complete fixture won the rename race —
-        # use theirs, discard ours.
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(out):
-            raise
 
 
 @query(
@@ -85,11 +32,9 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink + scan with explicit schema (R1/R21): customer written
     as headered CSV, read back typed. The oracle is the source table —
     the round trip must be lossless."""
-    out = _fixture_dir(sf_dir, "csv")
+    out = staging.location("csv", sf_dir)
     c = load_table(spark, sf_dir, "customer")
-    _publish_fixture(
-        lambda tmp: c.write.mode("overwrite").option("header", True).csv(tmp), out
-    )
+    staging.publish(out, lambda tmp: c.write.option("header", True).csv(tmp))
     return spark.read.schema(TESTDATA["customer"]).option("header", True).csv(out)
 
 
@@ -99,9 +44,9 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink + scan with explicit schema (R16/R22 -> scan)."""
-    out = _fixture_dir(sf_dir, "json")
+    out = staging.location("json", sf_dir)
     r = load_table(spark, sf_dir, "region")
-    _publish_fixture(lambda tmp: r.write.mode("overwrite").json(tmp), out)
+    staging.publish(out, lambda tmp: r.write.json(tmp))
     return spark.read.schema(TESTDATA["region"]).json(out)
 
 
@@ -118,15 +63,15 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     which it never reads back selectively — SURVEY §4.1). The filter on
     the partition column prunes directories before any IO; the plan
     assertion lives in tests/test_plans.py."""
-    out = _fixture_dir(sf_dir, "part_orders")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):  # idempotent fixture build
+
+    def write(tmp: str) -> None:
         o = load_table(spark, sf_dir, "orders")
-        o.withColumn("yr", F.year("o_orderdate").cast("long")).write.mode(
-            "overwrite"
-        ).partitionBy("yr").parquet(out)
+        o.withColumn("yr", F.year("o_orderdate").cast("long")).write.partitionBy(
+            "yr"
+        ).parquet(tmp)
+
     return (
-        spark.read.parquet(out)
+        staging.staged(spark, "part_orders", sf_dir, write)
         .filter(F.col("yr") == 1997)
         .select("o_orderkey", "o_totalprice", "yr")
     )
@@ -140,9 +85,9 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC sink + scan (the third columnar format Spark ships natively;
     DuckDB has no ORC reader, so the oracle is the source table and the
     round trip must be lossless — same contract as the CSV/JSON scans)."""
-    out = _fixture_dir(sf_dir, "orc")
+    out = staging.location("orc", sf_dir)
     n = load_table(spark, sf_dir, "nation")
-    _publish_fixture(lambda tmp: n.write.mode("overwrite").orc(tmp), out)
+    staging.publish(out, lambda tmp: n.write.orc(tmp))
     return spark.read.schema(TESTDATA["nation"]).orc(out)
 
 
@@ -165,24 +110,18 @@ def scan_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle at ingest, never again. Bucketed tables also demonstrate
     the zstd parquet codec (smaller at rest, splittable, and cheap to
     decode; snappy is the read-throughput alternative)."""
-    key = _sf_fingerprint(sf_dir)
-    names = {}
-    for tbl, bucket_col in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-        name = f"bkt_{tbl}_{key}"
-        names[tbl] = name
-        if not spark.catalog.tableExists(name):
-            path = _fixture_dir(sf_dir, f"bkt_{tbl}")
-            (
-                load_table(spark, sf_dir, tbl)
-                .write.mode("overwrite")
-                .option("path", path)
-                .option("compression", "zstd")
-                .bucketBy(8, bucket_col)
-                .sortBy(bucket_col)
-                .saveAsTable(name)
-            )
-    o = spark.table(names["orders"])
-    l = spark.table(names["lineitem"])
+
+    def bucketed(tbl: str, col: str) -> DataFrame:
+        return staging.bucketed(
+            spark,
+            f"bkt_{tbl}",
+            sf_dir,
+            lambda: load_table(spark, sf_dir, tbl).write.option("compression", "zstd"),
+            col,
+            8,
+        )
+
+    o, l = bucketed("orders", "o_orderkey"), bucketed("lineitem", "l_orderkey")
     return (
         o.join(l, o.o_orderkey == l.l_orderkey)
         .groupBy("o_orderstatus")
@@ -217,16 +156,14 @@ def scan_range_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted file-by-file in tests/test_plans.py. The oracle is the
     same filter+aggregate on the unclustered source — layout must not
     change results."""
-    out = _fixture_dir(sf_dir, "range_lineitem")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .repartitionByRange(8, "l_shipdate")
-            .sortWithinPartitions("l_shipdate")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
+    out, _ = staging.stage(
+        "range_lineitem",
+        sf_dir,
+        lambda tmp: load_table(spark, sf_dir, "lineitem")
+        .repartitionByRange(8, "l_shipdate")
+        .sortWithinPartitions("l_shipdate")
+        .write.parquet(tmp),
+    )
     lo, hi = "1994-01-01", "1994-12-31"
     return (
         spark.read.schema(TESTDATA["lineitem"])
@@ -312,16 +249,16 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the difference between one bad object failing a
     2-hour job (FAILFAST), silent data loss (DROPMALFORMED), and an
     auditable quarantine (PERMISSIVE)."""
-    out = _fixture_dir(sf_dir, "csv_permissive")
-    marker = os.path.join(out, "bad.csv")
-    if not os.path.exists(marker):
-        c = load_table(spark, sf_dir, "customer")
-        c.write.mode("overwrite").option("header", True).csv(out)
-        with open(marker, "w") as f:
+
+    def write(tmp: str) -> None:
+        load_table(spark, sf_dir, "customer").write.option("header", True).csv(tmp)
+        with open(f"{tmp}/bad.csv", "w") as f:
             f.write("c_custkey,c_name,c_nationkey,c_acctbal,c_mktsegment\n")
             f.write("notanint,Garbage Row,xx,notadouble,JUNK\n")
             f.write("alsobad,Short Row\n")
             f.write("NaN,Another,One,Bad,Row,With,Extra,Columns\n")
+
+    out, _ = staging.stage("csv_permissive", sf_dir, write)
     schema = _permissive_customer_schema()
     df = (
         spark.read.schema(schema)
@@ -367,14 +304,18 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     column pruning/pushdown still apply per file. The oracle is the
     same union spelled with explicit NULL padding — a type widening or
     column misalignment in the merge path flips the hash."""
-    out = _fixture_dir(sf_dir, "schemaevo")
+    out = staging.location("schemaevo", sf_dir)
     o = load_table(spark, sf_dir, "orders")
-    o.filter(F.col("o_orderkey") % 2 == 0).select(
-        "o_orderkey", "o_totalprice"
-    ).write.mode("overwrite").parquet(out + "/gen1")
-    o.filter(F.col("o_orderkey") % 2 == 1).select(
-        "o_orderkey", "o_totalprice", "o_orderpriority", "o_orderdate"
-    ).write.mode("overwrite").parquet(out + "/gen2")
+
+    def write(tmp: str) -> None:
+        o.filter(F.col("o_orderkey") % 2 == 0).select(
+            "o_orderkey", "o_totalprice"
+        ).write.parquet(tmp + "/gen1")
+        o.filter(F.col("o_orderkey") % 2 == 1).select(
+            "o_orderkey", "o_totalprice", "o_orderpriority", "o_orderdate"
+        ).write.parquet(tmp + "/gen2")
+
+    staging.publish(out, write)
     return (
         spark.read.option("mergeSchema", True)
         .parquet(out + "/gen1", out + "/gen2")
@@ -395,11 +336,15 @@ def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the CSV path, R1). Special characters are entity-escaped on
     write and unescaped on read, so the trip is lossless and the
     oracle is the source table."""
-    out = _fixture_dir(sf_dir, "xml")
+    out = staging.location("xml", sf_dir)
     n = load_table(spark, sf_dir, "nation")
-    n.write.mode("overwrite").format("xml").option("rootTag", "nations").option(
-        "rowTag", "nation"
-    ).save(out)
+    staging.publish(
+        out,
+        lambda tmp: n.write.format("xml")
+        .option("rootTag", "nations")
+        .option("rowTag", "nation")
+        .save(tmp),
+    )
     return (
         spark.read.schema(TESTDATA["nation"])
         .format("xml")
@@ -418,11 +363,9 @@ def scan_avro_roundtrip_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_avro.py probes the format at session time and executes
     this round trip for real the day the environment gains the jar —
     the delta-spark / protobuf standing-probe pattern."""
-    out = _fixture_dir(sf_dir, "avro")
+    out = staging.location("avro", sf_dir)
     n = load_table(spark, sf_dir, "nation")
-    _publish_fixture(
-        lambda tmp: n.write.mode("overwrite").format("avro").save(tmp), out
-    )
+    staging.publish(out, lambda tmp: n.write.format("avro").save(tmp))
     return spark.read.schema(TESTDATA["nation"]).format("avro").load(out)
 
 
@@ -447,33 +390,28 @@ def _derby_customer_db(spark: SparkSession, sf_dir: str) -> str:
     the customer table — the stand-in operational DB. Column names are
     written UPPERCASE so Spark's unquoted partition predicates
     (``C_CUSTKEY >= ?``) resolve against Derby's case-folding."""
-    out = _fixture_dir(sf_dir, "derby_cust")
-    if not os.path.exists(out):
+
+    def build(tmp: str) -> None:
         cust = load_table(spark, sf_dir, "customer")
-
-        def build(tmp: str) -> None:
-            up = cust.select(
-                *[F.col(c).alias(c.upper()) for c in cust.columns]
+        up = cust.select(*[F.col(c).alias(c.upper()) for c in cust.columns])
+        up.coalesce(2).write.jdbc(
+            url=f"jdbc:derby:{tmp};create=true",
+            table="CUSTOMER_JDBC",
+            mode="errorifexists",
+            properties=_DERBY_PROPS,
+        )
+        # cleanly shut the db down before the rename swap — Derby
+        # keeps booted databases open in the JVM, and renaming an
+        # open store corrupts it. Successful shutdown SIGNALS via
+        # SQLException 08006 by design.
+        try:
+            spark._jvm.java.sql.DriverManager.getConnection(  # noqa: SLF001
+                f"jdbc:derby:{tmp};shutdown=true"
             )
-            up.coalesce(2).write.jdbc(
-                url=f"jdbc:derby:{tmp};create=true",
-                table="CUSTOMER_JDBC",
-                mode="errorifexists",
-                properties=_DERBY_PROPS,
-            )
-            # cleanly shut the db down before the rename swap — Derby
-            # keeps booted databases open in the JVM, and renaming an
-            # open store corrupts it. Successful shutdown SIGNALS via
-            # SQLException 08006 by design.
-            try:
-                spark._jvm.java.sql.DriverManager.getConnection(  # noqa: SLF001
-                    f"jdbc:derby:{tmp};shutdown=true"
-                )
-            except Exception:
-                pass
+        except Exception:
+            pass
 
-        _publish_fixture(build, out)
-    return out
+    return staging.stage("derby_cust", sf_dir, build)[0]
 
 
 @query(

@@ -67,85 +67,115 @@ def run_pipeline_available_now(
     return writer.foreachBatch(sink_batch).outputMode("update").start()
 
 
+from .. import staging
 from ..registry import query
 
 
-def _stage_events(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Stage the events table as four parquet files for one-file-per-
-    micro-batch replay. Keyed on the testdata CONTENT fingerprint
-    (``_sf_fingerprint``: path + per-file size/mtime), not just the
-    path, so regenerated testdata at the same path gets a fresh stage
-    instead of silently replaying stale files against a fresh oracle —
-    same staleness guard the batch scan fixtures use."""
-    import os
-    import shutil
-    import tempfile
+# Replayed event stages: each writer below lays the events table out as
+# parquet files that `staging.replay` delivers one per micro-batch, in
+# file mtime order.
 
+_DEDUP_COLS = ["event_id", "user_id", "event_type", "value"]
+
+
+def _events(spark: SparkSession, sf_dir: str, tmp: str) -> None:
+    """The events table as four parquet files."""
     from ..catalog import load_table
-    from ..sources.scans import _sf_fingerprint
 
-    key = _sf_fingerprint(sf_dir)
-    stage_dir = os.path.join(tempfile.gettempdir(), f"spark_graft_streamexec_{key}")
-    if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        load_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(stage_dir)
-    return stage_dir, key
+    load_table(spark, sf_dir, "events").repartition(4).write.parquet(tmp)
 
 
-def _stage_events_timesliced(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Stage the events table as four single-file TIME SLICES for
-    watermark-deterministic replay: ``ntile(4)`` over ``(ts,
-    event_id)`` splits the table into contiguous time quarters; slices
-    2, 3, 4 are written first (in time order) and slice 1 — the
-    EARLIEST quarter — last, each file with a strictly increasing
-    mtime so the file stream source (which orders by modification
-    time) replays them as four micro-batches in exactly that order.
-    Result: batches 1–3 are time-monotone (no on-time row ever falls
-    behind the advancing watermark), and batch 4 is a deliberately
-    LATE delivery whose rows sit far below the watermark — the
-    deterministic late-drop fixture ``stream_exec_stream_join_
-    watermarked`` needs.  Same content-fingerprint staleness guard as
-    ``_stage_events``.  (The global ntile sort is fine for a staging
-    fixture; a 100 TB pipeline would time-slice with
+def _events_quartered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events with ``slice`` = their time quarter, ``ntile(4)`` over
+    ``(ts, event_id)``. (A 100 TB pipeline would time-slice with
     ``repartitionByRange(ts)`` instead — no total order needed.)"""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
     from ..catalog import load_table
-    from ..sources.scans import _sf_fingerprint
 
-    key = _sf_fingerprint(sf_dir)
-    stage_dir = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_streamexec_ts_{key}"
-    )
-    if os.path.exists(os.path.join(stage_dir, "_STAGED")):
-        return stage_dir, key
-    shutil.rmtree(stage_dir, ignore_errors=True)
-    os.makedirs(stage_dir)
-    ev = load_table(spark, sf_dir, "events").withColumn(
+    return load_table(spark, sf_dir, "events").withColumn(
         # global-ok: one-time sf-sized test-fixture staging (slices the
         # events table into 4 micro-batch files), not a query path
         "slice", F.ntile(4).over(W.orderBy("ts", "event_id"))
     )
+
+
+def _write_slices(tmp: str, frames: list[DataFrame]) -> None:
+    """Write each frame as one parquet file in ``tmp`` with strictly
+    increasing mtimes in list order, so the replay delivers them as
+    micro-batches in exactly that order."""
+    import glob
+    import shutil
+
+    os.makedirs(tmp)
     mtime = 1_000_000_000  # fixed base: only the ORDER matters
-    for i, s in enumerate([2, 3, 4, 1]):
-        tmp = os.path.join(stage_dir, f"_tmp_{s}")
-        ev.filter(F.col("slice") == s).drop("slice").coalesce(1).write.parquet(tmp)
-        (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dest = os.path.join(stage_dir, f"slice_{i}_{s}.parquet")
+    for i, df in enumerate(frames):
+        part_dir = os.path.join(tmp, f"_part_{i}")
+        df.coalesce(1).write.parquet(part_dir)
+        (part,) = glob.glob(os.path.join(part_dir, "part-*.parquet"))
+        dest = os.path.join(tmp, f"slice_{i}.parquet")
         os.rename(part, dest)
         os.utime(dest, (mtime + 10 * i, mtime + 10 * i))
-        shutil.rmtree(tmp)
-    with open(os.path.join(stage_dir, "_STAGED"), "w") as fh:
-        fh.write(key)
-    return stage_dir, key
+        shutil.rmtree(part_dir)
+
+
+def _events_timesliced(spark: SparkSession, sf_dir: str, tmp: str) -> None:
+    """The events table as four time quarters for watermark-deterministic
+    replay: quarters 2, 3, 4 first (in time order), then quarter 1 —
+    the EARLIEST — last. Batches 1–3 are time-monotone (no on-time row
+    ever falls behind the advancing watermark), and batch 4 is a
+    deliberately LATE delivery whose rows sit far below the watermark:
+    the deterministic late-drop fixture the watermarked joins need."""
+    from pyspark.sql import functions as F
+
+    ev = _events_quartered(spark, sf_dir)
+    _write_slices(
+        tmp, [ev.filter(F.col("slice") == s).drop("slice") for s in (2, 3, 4, 1)]
+    )
+
+
+def _events_with_dupes(spark: SparkSession, sf_dir: str, tmp: str) -> None:
+    """Events in three files, then every third event duplicated
+    verbatim into a fourth, later file, so each copy arrives in a later
+    micro-batch than its original."""
+    from pyspark.sql import functions as F
+
+    from ..catalog import load_table
+
+    ev = load_table(spark, sf_dir, "events").select(*_DEDUP_COLS)
+    ev.repartition(3).write.parquet(tmp)
+    ev.filter(F.col("event_id") % 3 == 0).coalesce(1).write.mode("append").parquet(
+        tmp
+    )
+
+
+def _events_dupes_wm(spark: SparkSession, sf_dir: str, tmp: str) -> None:
+    """The four time quarters in order, then a fifth file of copies:
+    slice-1 events (every third) whose ts sits >= 13 h below
+    max(slices 1-3), re-stamped to the global max ts + 1 h (see
+    `stream_exec_dedup_watermarked`)."""
+    from pyspark.sql import functions as F
+
+    ev = _events_quartered(spark, sf_dir)
+    gm = ev.agg(F.max("ts")).collect()[0][0]
+    thr = ev.filter(F.col("slice") <= 3).agg(
+        F.max("ts") - F.expr("INTERVAL 13 HOURS")
+    ).collect()[0][0]
+    copies = (
+        ev.filter(
+            (F.col("slice") == 1)
+            & (F.col("event_id") % 3 == 0)
+            & (F.col("ts") < F.lit(thr))
+        )
+        .drop("slice")
+        .withColumn("ts", F.lit(gm) + F.expr("INTERVAL 1 HOURS"))
+    )
+    _write_slices(
+        tmp,
+        [ev.filter(F.col("slice") == s).drop("slice") for s in (1, 2, 3, 4)]
+        + [copies],
+    )
 
 
 #: State-store partition count for the availableNow drain fixtures.
@@ -204,15 +234,12 @@ def stream_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming flagship pipeline with availableNow, return the processed
     rows. Row count is deterministic (seeded generator)."""
     import datetime as dt
-    import hashlib
-    import os
     import shutil
-    import tempfile
 
     from ..generator import generate_transactions
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_ingest_{key}")
+    key = staging.fingerprint(sf_dir)
+    base = staging.scratch_dir(f"ingest_{key}")
     in_dir = os.path.join(base, "raw-data")
     shutil.rmtree(base, ignore_errors=True)
     for i, (day, n) in enumerate([(dt.date(2024, 3, 14), 60), (dt.date(2024, 3, 15), 40)]):
@@ -270,14 +297,8 @@ def stream_exec_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.relational import dsum
 
-    stage_dir, key = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
+    stream = staging.replay(spark, sf_dir, _events)
     agg = (
         stream.groupBy(F.window("ts", "10 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("total"))
@@ -289,7 +310,7 @@ def stream_exec_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total",
         )
     )
-    qname = f"streamexec_{key}"
+    qname = f"streamexec_{staging.fingerprint(sf_dir)}"
     q = (
         agg.writeStream.format("memory")
         .queryName(qname)
@@ -340,14 +361,8 @@ def stream_exec_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.relational import dsum
 
-    stage_dir, key = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
+    stream = staging.replay(spark, sf_dir, _events)
     agg = (
         stream.groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("total"))
@@ -359,7 +374,7 @@ def stream_exec_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total",
         )
     )
-    qname = f"streamexec_sess_{key}"
+    qname = f"streamexec_sess_{staging.fingerprint(sf_dir)}"
     q = (
         agg.writeStream.format("memory")
         .queryName(qname)
@@ -399,14 +414,8 @@ def stream_exec_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.relational import dsum
 
-    stage_dir, key = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
+    stream = staging.replay(spark, sf_dir, _events)
     agg = (
         stream.groupBy(F.window("ts", "10 minutes", "5 minutes"))
         .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("total"))
@@ -417,7 +426,7 @@ def stream_exec_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total",
         )
     )
-    qname = f"streamexec_slide_{key}"
+    qname = f"streamexec_slide_{staging.fingerprint(sf_dir)}"
     q = (
         agg.writeStream.format("memory")
         .queryName(qname)
@@ -543,24 +552,13 @@ def stream_exec_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative — so the materialized table must hash-equal the batch
     QUALIFY oracle no matter how the four micro-batches split the log.
     """
-    import os
     import shutil
-    import tempfile
 
-    stage_dir, key = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
-
-    target_dir = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_streamupsert_{key}"
-    )
+    target_dir = staging.scratch_dir(f"streamupsert_{staging.fingerprint(sf_dir)}")
     shutil.rmtree(target_dir, ignore_errors=True)
     merge_batch = _latest_merge_batch_fn(target_dir)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
+    stream = staging.replay(spark, sf_dir, _events)
     q = _start_state_sized(
         stream.writeStream.foreachBatch(merge_batch)
         .trigger(availableNow=True)
@@ -594,62 +592,9 @@ def stream_exec_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dropDuplicatesWithinWatermark`` (pytest-verified in
     tests/test_streaming.py), which this availableNow replay of
     bounded files does not need."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..catalog import load_table
-    from ..sources.scans import _sf_fingerprint
-
-    key = _sf_fingerprint(sf_dir)
-    stage_dir = os.path.join(tempfile.gettempdir(), f"spark_graft_streamdedup_{key}")
-    cols = ["event_id", "user_id", "event_type", "value"]
-    # Guard on our OWN marker written after BOTH writes — Spark drops
-    # _SUCCESS after the first (overwrite) write, so guarding on it
-    # would let a crash between the two writes leave a permanently
-    # duplicate-free stage: the stream would trivially match the
-    # oracle while the cross-batch dedup path went unexercised.
-    staged_marker = os.path.join(stage_dir, "_STAGED_WITH_DUPES")
-    if not os.path.exists(staged_marker):
-        # Stage into a UNIQUE temp dir, then atomically rename into
-        # place (the tmp+rename discipline merge_into_parquet uses):
-        # two sessions hitting the same sf_dir concurrently each build
-        # a complete private stage, and whichever rename wins leaves a
-        # fully-staged directory — never an interleaved rmtree/write
-        # corrupting a stage the other session is mid-way through.
-        import uuid as _uuid
-
-        tmp_dir = f"{stage_dir}.tmp.{_uuid.uuid4().hex[:8]}"
-        ev = load_table(spark, sf_dir, "events").select(*cols)
-        # originals first (files part-0000x sort before the append's),
-        # copies appended as their own file -> a later micro-batch.
-        ev.repartition(3).write.mode("overwrite").parquet(tmp_dir)
-        ev.filter(F.col("event_id") % 3 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(tmp_dir)
-        with open(os.path.join(tmp_dir, "_STAGED_WITH_DUPES"), "w") as fh:
-            fh.write("ok")
-        # Clear any marker-less (partial, pre-fix) stage, then claim.
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        try:
-            os.rename(tmp_dir, stage_dir)
-        except OSError:
-            # Another session's complete stage won the rename race —
-            # use theirs, discard ours.
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-            if not os.path.exists(staged_marker):
-                raise
-    schema = spark.read.parquet(stage_dir).schema
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
+    stream = staging.replay(spark, sf_dir, _events_with_dupes)
     deduped = stream.dropDuplicates(["event_id"])
-    qname = f"streamexec_dedup_{key}"
+    qname = f"streamexec_dedup_{staging.fingerprint(sf_dir)}"
     q = (
         deduped.writeStream.format("memory")
         .queryName(qname)
@@ -658,7 +603,7 @@ def stream_exec_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     _drain(q)
-    return spark.table(qname).select(*cols)
+    return spark.table(qname).select(*_DEDUP_COLS)
 
 
 @query(
@@ -704,75 +649,15 @@ def stream_exec_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     State bound at 100 TB: live keys are those within the delay
     window of the watermark — stream-length-independent, the reason
     this form exists."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from ..catalog import load_table
-    from ..sources.scans import _sf_fingerprint
-
-    key = _sf_fingerprint(sf_dir)
-    stage_dir = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_streamdedup_wm_{key}"
-    )
-    cols = ["event_id", "user_id", "event_type", "value"]
-    if not os.path.exists(os.path.join(stage_dir, "_STAGED")):
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        os.makedirs(stage_dir)
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            # global-ok: one-time sf-sized test-fixture staging (slices the
-            # events table into 4 micro-batch files), not a query path
-            "slice", F.ntile(4).over(W.orderBy("ts", "event_id"))
-        )
-        gm = ev.agg(F.max("ts")).collect()[0][0]
-        thr = ev.filter(F.col("slice") <= 3).agg(
-            F.max("ts") - F.expr("INTERVAL 13 HOURS")
-        ).collect()[0][0]
-        mtime = 1_000_000_000
-        for i, s in enumerate([1, 2, 3, 4]):
-            tmp = os.path.join(stage_dir, f"_tmp_{s}")
-            ev.filter(F.col("slice") == s).drop("slice").coalesce(1).write.parquet(
-                tmp
-            )
-            (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-            dest = os.path.join(stage_dir, f"slice_{i}.parquet")
-            os.rename(part, dest)
-            os.utime(dest, (mtime + 10 * i, mtime + 10 * i))
-            shutil.rmtree(tmp)
-        tmp = os.path.join(stage_dir, "_tmp_copies")
-        (
-            ev.filter(
-                (F.col("slice") == 1)
-                & (F.col("event_id") % 3 == 0)
-                & (F.col("ts") < F.lit(thr))
-            )
-            .drop("slice")
-            .withColumn("ts", F.lit(gm) + F.expr("INTERVAL 1 HOURS"))
-            .coalesce(1)
-            .write.parquet(tmp)
-        )
-        (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dest = os.path.join(stage_dir, "slice_4_copies.parquet")
-        os.rename(part, dest)
-        os.utime(dest, (mtime + 40, mtime + 40))
-        shutil.rmtree(tmp)
-        with open(os.path.join(stage_dir, "_STAGED"), "w") as fh:
-            fh.write(key)
-    schema = spark.read.parquet(stage_dir).schema
-
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
+        staging.replay(spark, sf_dir, _events_dupes_wm)
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "6 hours")
     )
     deduped = stream.dropDuplicatesWithinWatermark(["event_id"])
-    qname = f"streamexec_dedup_wm_{key}"
+    qname = f"streamexec_dedup_wm_{staging.fingerprint(sf_dir)}"
     q = (
         deduped.writeStream.format("memory")
         .queryName(qname)
@@ -781,7 +666,7 @@ def stream_exec_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
         .start()
     )
     _drain(q)
-    return spark.table(qname).select(*cols)
+    return spark.table(qname).select(*_DEDUP_COLS)
 
 
 def _dual_sink_batch_fn(json_dir: str, target_dir: str):
@@ -836,24 +721,16 @@ def stream_exec_upsert_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch body (tests/test_streaming.py)."""
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    stage_dir, key = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
-
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_streamdual_{key}")
+    base = staging.scratch_dir(f"streamdual_{staging.fingerprint(sf_dir)}")
     json_dir = os.path.join(base, "json")
     target_dir = os.path.join(base, "upsert")
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(json_dir)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
+    stream = staging.replay(spark, sf_dir, _events)
     q = _start_state_sized(
         stream.writeStream.foreachBatch(_dual_sink_batch_fn(json_dir, target_dir))
         .trigger(availableNow=True)
@@ -894,20 +771,16 @@ def stream_exec_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream side never shuffles for the join when the dim broadcasts."""
     from ..catalog import load_table
 
-    stage_dir, key = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
 
     dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
+        staging.replay(spark, sf_dir, _events)
         .select("event_id", "user_id", "event_type", "value")
     )
     enriched = stream.join(dim, stream.user_id == dim.c_custkey, "left").select(
         "event_id", "user_id", "event_type", "value", "c_mktsegment"
     )
-    qname = f"streamexec_staticjoin_{key}"
+    qname = f"streamexec_staticjoin_{staging.fingerprint(sf_dir)}"
     q = (
         enriched.writeStream.format("memory")
         .queryName(qname)
@@ -957,12 +830,8 @@ def stream_exec_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    stage_dir, key = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
+        staging.replay(spark, sf_dir, _events)
         .select(
             "user_id", F.round(F.col("value") * 100).cast("long").alias("cents")
         )
@@ -985,7 +854,7 @@ def stream_exec_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    qname = f"streamexec_state_{key}"
+    qname = f"streamexec_state_{staging.fingerprint(sf_dir)}"
     q = (
         out.writeStream.format("memory")
         .queryName(qname)
@@ -1043,14 +912,10 @@ def stream_exec_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the interval window, not the stream history."""
     from pyspark.sql import functions as F
 
-    stage_dir, key = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
 
     def side(parity: int, prefix: str) -> DataFrame:
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
+            staging.replay(spark, sf_dir, _events)
             .filter(F.col("event_id") % 2 == parity)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -1072,7 +937,7 @@ def stream_exec_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("prior_id"),
         F.col("evt_user").alias("user_id"),
     )
-    qname = f"streamexec_ssjoin_{key}"
+    qname = f"streamexec_ssjoin_{staging.fingerprint(sf_dir)}"
     q = (
         joined.writeStream.format("memory")
         .queryName(qname)
@@ -1114,7 +979,7 @@ def stream_exec_stream_join_watermarked(spark: SparkSession, sf_dir: str) -> Dat
     forever).
 
     Determinism is engineered in the staging, not assumed:
-    ``_stage_events_timesliced`` replays the events table as four
+    ``_events_timesliced`` replays the events table as four
     micro-batches — time-ordered quarters 2, 3, 4 first, then quarter
     1 (the earliest rows) LAST.  During the monotone prefix no on-time
     row ever falls behind the watermark (each batch's rows are newer
@@ -1135,14 +1000,10 @@ def stream_exec_stream_join_watermarked(spark: SparkSession, sf_dir: str) -> Dat
     memory-sink drain is the test fixture, not the operator."""
     from pyspark.sql import functions as F
 
-    stage_dir, key = _stage_events_timesliced(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
 
     def side(parity: int, prefix: str) -> DataFrame:
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
+            staging.replay(spark, sf_dir, _events_timesliced)
             .filter(F.col("event_id") % 2 == parity)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -1167,7 +1028,7 @@ def stream_exec_stream_join_watermarked(spark: SparkSession, sf_dir: str) -> Dat
         F.col("prior_id"),
         F.col("evt_user").alias("user_id"),
     )
-    qname = f"streamexec_ssjoin_wm_{key}"
+    qname = f"streamexec_ssjoin_wm_{staging.fingerprint(sf_dir)}"
     q = _start_state_sized(
         joined.writeStream.format("memory")
         .queryName(qname)
@@ -1245,14 +1106,10 @@ def stream_exec_stream_join_outer_watermarked(
     watermark-bounded."""
     from pyspark.sql import functions as F
 
-    stage_dir, key = _stage_events_timesliced(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
 
     def side(parity: int, prefix: str) -> DataFrame:
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
+            staging.replay(spark, sf_dir, _events_timesliced)
             .filter(F.col("event_id") % 2 == parity)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -1276,7 +1133,7 @@ def stream_exec_stream_join_outer_watermarked(
         F.col("prior_id"),
         F.col("evt_user").alias("user_id"),
     )
-    qname = f"streamexec_ssjoin_owm_{key}"
+    qname = f"streamexec_ssjoin_owm_{staging.fingerprint(sf_dir)}"
     q = (
         joined.writeStream.format("memory")
         .queryName(qname)
@@ -1298,8 +1155,8 @@ def stream_exec_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches. Each micro-batch folds its events to a k-row
     (hash, in_a, in_b) state; foreachBatch merges it with the
     accumulated state by "union, max the flags per key, re-take the k
-    smallest" — the associative/commutative sketch merge — staged with
-    the same tmp+atomic-rename discipline as stream_exec_dedup. The
+    smallest" — the associative/commutative sketch merge — written to
+    a tmp dir and renamed into place each batch. The
     final state must reproduce EXACTLY the batch sketch (the oracle is
     literally `sketch_theta_intersect`'s, imported — one string, two
     execution paths), proving the merge is split-invariant: any
@@ -1313,21 +1170,16 @@ def stream_exec_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch boundary."""
     import os
     import shutil
-    import tempfile
     import uuid as _uuid
 
     from pyspark.sql import functions as F
 
     from ..operators.sketches import THETA_K, _EV_A, _EV_B, _H60, _h60_spark
 
-    stage_dir, key = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
     # per-invocation private state root: the state is rebuilt from the
     # replay every time (it IS the thing under test), so no cross-
     # session reuse and no staleness guard needed.
-    state_root = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_kmvstate_{_uuid.uuid4().hex[:8]}"
-    )
+    state_root = staging.scratch_dir(f"kmvstate_{_uuid.uuid4().hex[:8]}")
     os.makedirs(state_root, exist_ok=True)
     cur = os.path.join(state_root, "current")
 
@@ -1366,11 +1218,7 @@ def stream_exec_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(tmp, cur)
         shutil.rmtree(old, ignore_errors=True)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
+    stream = staging.replay(spark, sf_dir, _events)
     q = _start_state_sized(
         stream.writeStream.foreachBatch(merge_batch)
         .trigger(availableNow=True)
@@ -1381,8 +1229,10 @@ def stream_exec_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = state.agg(
         F.max("h").alias("hk"), F.count(F.lit(1)).cast("long").alias("kk")
     )
-    # exact side from the same staged batch data the stream replayed.
-    ev = spark.read.parquet(stage_dir)
+    from ..catalog import load_table
+
+    # exact side from the rows the stream replayed.
+    ev = load_table(spark, sf_dir, "events")
     flags = (
         ev.filter(F.col("event_type").isin(_EV_A, _EV_B))
         .groupBy("user_id")
@@ -1500,22 +1350,13 @@ def stream_exec_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     final table must hash-equal the batch oracle (latest change per
     user, deletes excluded) regardless of the 4-way split.
     """
-    import os
     import shutil
-    import tempfile
 
-    stage_dir, key = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
-
-    target_dir = os.path.join(tempfile.gettempdir(), f"spark_graft_streamcdc_{key}")
+    target_dir = staging.scratch_dir(f"streamcdc_{staging.fingerprint(sf_dir)}")
     shutil.rmtree(target_dir, ignore_errors=True)
     merge_batch = _keyed_merge_batch_fn(target_dir, _cdc_normalize_batch)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
+    stream = staging.replay(spark, sf_dir, _events)
     q = _start_state_sized(
         stream.writeStream.foreachBatch(merge_batch)
         .trigger(availableNow=True)
@@ -1566,17 +1407,12 @@ def stream_exec_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; nothing stream-sized ever crosses a batch boundary."""
     import os
     import shutil
-    import tempfile
     import uuid as _uuid
 
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    stage_dir, key = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
-    state_root = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_topkstate_{_uuid.uuid4().hex[:8]}"
-    )
+    state_root = staging.scratch_dir(f"topkstate_{_uuid.uuid4().hex[:8]}")
     os.makedirs(state_root, exist_ok=True)
     cur = os.path.join(state_root, "current")
     w = W.partitionBy("event_type").orderBy(F.desc("value"), F.asc("event_id"))
@@ -1651,11 +1487,7 @@ def stream_exec_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(tmp, cur)
         shutil.rmtree(old, ignore_errors=True)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
+    stream = staging.replay(spark, sf_dir, _events)
     q = _start_state_sized(
         stream.writeStream.foreachBatch(merge_batch)
         .trigger(availableNow=True)
@@ -1717,19 +1549,12 @@ def stream_exec_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Inner semantics (facts with no candidate in window are absent) —
     the left-outer protocol under streaming lives with
     `stream_exec_stream_join_outer_watermarked`."""
-    import os
     import shutil
-    import tempfile
 
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    stage_dir, key = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
-
-    target_dir = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_streamasof_{key}"
-    )
+    target_dir = staging.scratch_dir(f"streamasof_{staging.fingerprint(sf_dir)}")
     shutil.rmtree(target_dir, ignore_errors=True)
 
     def best_per_fact(batch_df):
@@ -1756,9 +1581,7 @@ def stream_exec_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def side(parity: int, prefix: str) -> DataFrame:
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
+            staging.replay(spark, sf_dir, _events)
             .filter(F.col("event_id") % 2 == parity)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -1828,7 +1651,7 @@ def stream_exec_asof_join_watermarked(
     measured 1000x boundary in SCALING.md).
 
     Composition = the two proven devices, unchanged: the
-    ``_stage_events_timesliced`` replay makes the watermark
+    ``_events_timesliced`` replay makes the watermark
     trajectory deterministic (time-ordered quarters 2, 3, 4, then
     quarter 1 LAST — on the monotone prefix no on-time row falls
     behind the watermark and no needed candidate is evicted, because
@@ -1850,19 +1673,12 @@ def stream_exec_asof_join_watermarked(
     100 TB stream; on replica scale runs the RocksDB state store
     carries the in-batch join state (SPARK_GRAFT_STATE_STORE=rocksdb,
     the measured r11 boundary)."""
-    import os
     import shutil
-    import tempfile
 
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    stage_dir, key = _stage_events_timesliced(spark, sf_dir)
-    schema = spark.read.parquet(stage_dir).schema
-
-    target_dir = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_streamasofwm_{key}"
-    )
+    target_dir = staging.scratch_dir(f"streamasofwm_{staging.fingerprint(sf_dir)}")
     shutil.rmtree(target_dir, ignore_errors=True)
 
     def best_per_fact(batch_df):
@@ -1888,9 +1704,7 @@ def stream_exec_asof_join_watermarked(
 
     def side(parity: int, prefix: str) -> DataFrame:
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
+            staging.replay(spark, sf_dir, _events_timesliced)
             .filter(F.col("event_id") % 2 == parity)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),

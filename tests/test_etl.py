@@ -133,14 +133,14 @@ def test_csv_permissive_quarantines_all_garbage(spark, sf_dir):
     corrupt-column-only query restriction)."""
     from pyspark.sql import functions as F
 
+    from aws_etl_pipeline_spark import staging
     from aws_etl_pipeline_spark.sources.scans import (
-        _fixture_dir,
         _permissive_customer_schema,
         scan_csv_permissive,
     )
 
     scan_csv_permissive(spark, sf_dir)  # materializes the fixture
-    out = _fixture_dir(sf_dir, "csv_permissive")
+    out = staging.location("csv_permissive", sf_dir)
     schema = _permissive_customer_schema()
     df = (
         spark.read.schema(schema)

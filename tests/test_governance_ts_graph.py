@@ -587,14 +587,12 @@ def test_register_state_runs_are_pruned(spark, sf_dir):
     import glob
     import os
 
-    from aws_etl_pipeline_spark.operators.graph import (
-        _nf_pid_root,
-        graph_neighborhood_registers,
-    )
+    from aws_etl_pipeline_spark import staging
+    from aws_etl_pipeline_spark.operators.graph import graph_neighborhood_registers
 
     for _ in range(3):
         graph_neighborhood_registers(spark, sf_dir).collect()
-    pid_root = _nf_pid_root("spark_graft_nfregstate")
+    pid_root = staging.scratch_dir("nfregstate")
     runs = glob.glob(os.path.join(pid_root, "run_*"))
     assert len(runs) <= 2, runs  # newest + at most one cache-pinned
 

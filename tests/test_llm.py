@@ -574,16 +574,13 @@ def test_incremental_minhash_index_is_staged_once(spark, sf_dir):
     rebuilding the shingle->minhash pipeline for history."""
     import os
 
+    from aws_etl_pipeline_spark import staging
     from aws_etl_pipeline_spark.llm.dedup import dedup_incremental_minhash
-    from aws_etl_pipeline_spark.operators.graph import (
-        _STAGE_ROOT,
-        _source_fingerprint,
-    )
 
     df = dedup_incremental_minhash(spark, sf_dir)
     df.count()
-    key = _source_fingerprint(sf_dir, ("documents",))
-    dest = os.path.join(_STAGE_ROOT, f"minhash_index_{key}")
+    key = staging.fingerprint(sf_dir)
+    dest = staging.location("minhash_index", sf_dir)
     assert os.path.exists(os.path.join(dest, "_SUCCESS"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert f"minhash_index_{key}" in plan

@@ -162,11 +162,12 @@ def test_range_clustered_files_have_disjoint_spans(spark, sf_dir):
     """repartitionByRange + sortWithinPartitions must yield files whose
     l_shipdate ranges are pairwise non-overlapping — the property that
     lets footer min/max skip whole files for a date-range scan."""
-    from aws_etl_pipeline_spark.sources.scans import scan_range_clustered, _fixture_dir
+    from aws_etl_pipeline_spark import staging
+    from aws_etl_pipeline_spark.sources.scans import scan_range_clustered
     from aws_etl_pipeline_spark.schemas import TESTDATA
 
     scan_range_clustered(spark, sf_dir)  # materializes the fixture
-    out = _fixture_dir(sf_dir, "range_lineitem")
+    out = staging.location("range_lineitem", sf_dir)
     spans = (
         spark.read.schema(TESTDATA["lineitem"])
         .parquet(out)

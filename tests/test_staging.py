@@ -1,0 +1,158 @@
+"""The staging contract: one fingerprint, one completion marker, one
+atomic publish, and per-call scratch confined to the process root."""
+
+import glob
+import os
+import shutil
+import subprocess
+import sys
+import tempfile
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
+
+from aws_etl_pipeline_spark import staging
+from aws_etl_pipeline_spark.streaming import ingest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.fixture
+def tmpdir_root(tmp_path, monkeypatch):
+    """Stages and scratch of this test land under ``tmp_path``."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return tmp_path
+
+
+def _jobs_during(spark, fn) -> int:
+    """Spark jobs the status store records while ``fn`` runs."""
+    sc = spark.sparkContext
+    group = f"staging-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "staging test")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _small(spark):
+    return spark.range(40).select(
+        (F.col("id") % 4).cast("int").alias("cell"), (F.col("id") * 3).alias("v")
+    )
+
+
+def test_stage_hit_launches_no_job(spark, sf_dir, tmpdir_root):
+    write = staging.spread(lambda: _small(spark))
+    staging.staged(spark, "hit_probe", sf_dir, write)  # build
+    assert _jobs_during(spark, lambda: staging.staged(spark, "hit_probe", sf_dir, write)) == 0
+    # the build path does launch jobs, so the probe can see them
+    assert _jobs_during(spark, lambda: staging.staged(spark, "hit_probe2", sf_dir, write)) > 0
+
+
+def test_recorded_schema_matches_read_back(spark, sf_dir, tmpdir_root):
+    kinds = {
+        "plain": staging.spread(lambda: _small(spark)),
+        "partitioned": staging.partitioned(lambda: _small(spark), "cell"),
+        "timesliced": lambda tmp: ingest._events_timesliced(spark, sf_dir, tmp),
+        "dupes": lambda tmp: ingest._events_with_dupes(spark, sf_dir, tmp),
+    }
+    for name, write in kinds.items():
+        path, schema = staging.stage(name, sf_dir, write)
+        assert schema == spark.read.parquet(path).schema, name
+    _, schema = staging.stage("partitioned", sf_dir, kinds["partitioned"])
+    # an int partition column read back as bigint would flip xxhash digests
+    assert schema["cell"].dataType == IntegerType()
+
+    t = staging.bucketed(spark, "bucketed", sf_dir, lambda: _small(spark).write, "cell", 4)
+    path = staging.location("bucketed", sf_dir)
+    assert t.schema == spark.read.parquet(path).schema
+    assert sorted(map(tuple, t.collect())) == sorted(map(tuple, _small(spark).collect()))
+    spark.sql(f"DROP TABLE {os.path.basename(path)}")
+
+
+def test_unmarked_dest_and_leftover_tmp_are_never_served(spark, sf_dir, tmpdir_root):
+    dest = staging.location("partial", sf_dir)
+    os.makedirs(dest)
+    open(os.path.join(dest, "part-0.parquet"), "w").write("half-written")
+    leftover = f"{dest}.tmp-1-deadbeef"
+    shutil.copytree(dest, leftover)
+    open(os.path.join(leftover, staging.MARKER), "w").write("{}")
+
+    calls = []
+
+    def write(tmp):
+        calls.append(tmp)
+        _small(spark).write.parquet(tmp)
+
+    df = staging.staged(spark, "partial", sf_dir, write)
+    assert len(calls) == 1
+    assert df.count() == 40
+    assert os.path.exists(os.path.join(dest, staging.MARKER))
+    assert not os.path.exists(os.path.join(dest, "part-0.parquet"))
+
+
+def test_fingerprint_tracks_mtime(tmp_path):
+    sf = tmp_path / "sf"
+    (sf / "orders.parquet").mkdir(parents=True)
+    part = sf / "orders.parquet" / "part-0.parquet"
+    part.write_bytes(b"x")
+    (sf / "region.parquet").write_bytes(b"y")
+    key = staging.fingerprint(str(sf))
+    assert staging.fingerprint(str(sf)) == key
+    st = part.stat()
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1000))  # sub-second
+    assert staging.fingerprint(str(sf)) != key
+
+
+def test_losing_the_rename_race_leaves_one_complete_dir(tmp_path):
+    dest = str(tmp_path / "stage_0123456789abcdef")
+
+    def writer(text, inner=None):
+        def write(tmp):
+            os.makedirs(tmp)
+            if inner:
+                inner()  # a concurrent writer publishes while this one writes
+            open(os.path.join(tmp, "data.txt"), "w").write(text)
+
+        return write
+
+    staging.publish(dest, writer("loser", lambda: staging.publish(dest, writer("winner"))))
+    assert open(os.path.join(dest, "data.txt")).read() == "winner"
+    assert os.path.exists(os.path.join(dest, staging.MARKER))
+    assert glob.glob(f"{dest}.tmp*") == []
+    # a later build replaces the earlier one
+    staging.publish(dest, writer("rewrite"))
+    assert open(os.path.join(dest, "data.txt")).read() == "rewrite"
+    assert glob.glob(f"{dest}.tmp*") == []
+
+
+def test_calls_leave_no_dir_outside_the_process_root(spark, sf_dir, tmpdir_root):
+    from aws_etl_pipeline_spark.streaming.ingest import (
+        stream_exec_sketch_merge,
+        stream_exec_upsert,
+    )
+
+    stream_exec_upsert(spark, sf_dir).collect()
+    stream_exec_sketch_merge(spark, sf_dir).collect()
+    assert sorted(p.name for p in tmpdir_root.glob("spark_graft_*")) == [
+        f"spark_graft_scratch_{os.getpid()}",
+        "spark_graft_stage",
+    ]
+
+
+def test_scratch_root_removed_at_exit_and_dead_roots_swept(tmp_path):
+    dead = subprocess.Popen([sys.executable, "-c", "pass"])
+    dead.wait()
+    stale = tmp_path / f"spark_graft_scratch_{dead.pid}"
+    stale.mkdir()
+    code = (
+        "import os; from aws_etl_pipeline_spark import staging; "
+        "os.makedirs(staging.scratch_dir('x'))"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=ROOT)
+    subprocess.run([sys.executable, "-c", code], env=env, check=True)
+    assert list(tmp_path.glob("spark_graft_scratch_*")) == []
