@@ -1348,6 +1348,11 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
             .limit(1)
             .collect()
         )
+        if not row:
+            # no pair left: every word is one symbol, and no merge can
+            # make a pair, so every later round is empty too (the
+            # oracle's empty win{r} emits no row)
+            break
         a, b_, cnt = row[0]["a"], row[0]["b"], int(row[0]["cnt"])
         wins.append((a, b_, cnt))
         out_rows.append((r, f"{a}_{b_}", cnt))

@@ -1654,6 +1654,27 @@ def _nf_edge_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ids.union(ids.select(F.col("ib").alias("ia"), F.col("ia").alias("ib")))
 
 
+def _nf_mat(root: str, df: DataFrame, name: str) -> DataFrame:
+    """Write one NF round's state to ``<root>/<name>`` and read it back.
+
+    The session default sizes post-shuffle partitions by BYTES
+    (adaptive.coalescePartitions.parallelismFirst=false, session.py) —
+    right for byte-proportional stages, but the sketch/register rounds
+    shuffle tiny packed values with compute-DENSE per-row merges, and
+    byte-advisory coalescing single-threaded them (measured 2x slower
+    at sf0.1). The write pins parallelism-first and restores it."""
+    spark = df.sparkSession
+    path = os.path.join(root, name)
+    pf = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    old_pf = spark.conf.get(pf, "true")
+    spark.conf.set(pf, "true")
+    try:
+        df.write.mode("overwrite").parquet(path)
+    finally:
+        spark.conf.set(pf, old_pf)
+    return spark.read.parquet(path)
+
+
 def _nf_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`_nf_edge_ids`, staged once per fixture and shared by every run
     of the neighborhood-function family. A per-run rebuild paid a
@@ -1785,28 +1806,11 @@ def graph_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     _NF_RUN_SEQ += 1
     root = os.path.join(pid_root, f"run_{_NF_RUN_SEQ}")
 
-    def mat(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(root, name)
-        # r15: the session default sizes post-shuffle partitions by
-        # BYTES (adaptive.coalescePartitions.parallelismFirst=false,
-        # session.py) — right for byte-proportional stages, but the
-        # sketch/register rounds shuffle tiny packed values with
-        # compute-DENSE per-row merges, and byte-advisory coalescing
-        # single-threaded them (measured 2x slower at sf0.1). Pin
-        # parallelism-first for the round's materializing write.
-        pf = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-        old_pf = spark.conf.get(pf, "true")
-        spark.conf.set(pf, "true")
-        try:
-            df.write.mode("overwrite").parquet(path)
-        finally:
-            spark.conf.set(pf, old_pf)
-        return spark.read.parquet(path)
-
     edges = _nf_edges(spark, sf_dir)
     # seed state: each node's sketch is {its own hash} — and the node
     # id IS that hash, so the seed is (id, id)
-    sk = mat(
+    sk = _nf_mat(
+        root,
         edges.select(F.col("ia").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("h")),
@@ -1828,7 +1832,8 @@ def graph_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the per-round transient and filled local disk at the 100x
         # replica.
         merged = contrib.unionByName(sk).repartition("node")
-        sk = mat(
+        sk = _nf_mat(
+            root,
             merged.withColumn(
                 "rn", F.dense_rank().over(W.partitionBy("node").orderBy("h"))
             )
@@ -2094,24 +2099,6 @@ def _nfr_state_root(
     _NF_RUN_SEQ += 1
     root = os.path.join(pid_root, f"run_{_NF_RUN_SEQ}")
 
-    def mat(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(root, name)
-        # r15: the session default sizes post-shuffle partitions by
-        # BYTES (adaptive.coalescePartitions.parallelismFirst=false,
-        # session.py) — right for byte-proportional stages, but the
-        # sketch/register rounds shuffle tiny packed values with
-        # compute-DENSE per-row merges, and byte-advisory coalescing
-        # single-threaded them (measured 2x slower at sf0.1). Pin
-        # parallelism-first for the round's materializing write.
-        pf = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-        old_pf = spark.conf.get(pf, "true")
-        spark.conf.set(pf, "true")
-        try:
-            df.write.mode("overwrite").parquet(path)
-        finally:
-            spark.conf.set(pf, old_pf)
-        return spark.read.parquet(path)
-
     # Register SLICING (r14, the out-of-core knob for the 1000x
     # decade): registers are INDEPENDENT under the MAX merge — node
     # u's seed populates exactly one register index (h % m), and a
@@ -2145,7 +2132,7 @@ def _nfr_state_root(
     )
 
     def run_rounds(seed_df: DataFrame, subdir: str) -> None:
-        prev = mat(seed_df, os.path.join(subdir, "m0"))
+        prev = _nf_mat(root, seed_df, os.path.join(subdir, "m0"))
         for r in range(1, NF_ROUNDS + 1):
             delta = prev.filter(
                 F.col("old_val").isNull() | (F.col("val") > F.col("old_val"))
@@ -2161,7 +2148,8 @@ def _nfr_state_root(
             # stream when locality allows. old_val rides the same
             # aggregate (max over the single old=1 row per register), so
             # the NEXT round's delta needs no further pass.
-            prev = mat(
+            prev = _nf_mat(
+                root,
                 contrib.unionByName(
                     prev.select("node", "val", F.lit(1).alias("old"))
                 )
@@ -2193,7 +2181,7 @@ def _nfr_state_root(
         # bucket-wide DISTINCT G times (G-1 saved scans of the full
         # edge relation — ~12 passes over 1.2 B rows at the 1000x
         # replica before this).
-        seed_full = mat(seed, "_seed")
+        seed_full = _nf_mat(root, seed, "_seed")
         for s in range(slices):
             run_rounds(
                 seed_full.filter(F.shiftright("val", 6) % slices == s),
@@ -2212,7 +2200,7 @@ def _nfr_state_root(
             combined = parts[0]
             for p in parts[1:]:
                 combined = combined.unionByName(p)
-            mat(combined, f"m{r}")
+            _nf_mat(root, combined, f"m{r}")
         for s in range(slices):
             shutil.rmtree(os.path.join(root, f"s{s}"), ignore_errors=True)
         shutil.rmtree(os.path.join(root, "_seed"), ignore_errors=True)

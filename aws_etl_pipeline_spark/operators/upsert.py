@@ -7,13 +7,15 @@ equivalent is a set-based MERGE: with Delta/Iceberg on the cluster
 that's ``MERGE INTO`` (one shuffle, ACID); this environment has no
 lakehouse jars, so ``merge_upsert`` implements the same semantics as a
 pure DataFrame plan (full outer join on the key + coalesce), and
-``merge_into_parquet`` wraps it as a read-merge-rewrite sink. Replay
-of the same batch is idempotent — verified in tests/test_upsert.py.
+``merge_into_parquet`` lands it on a parquet target through
+``staging.fold``: the merged generation is written beside the target
+and swapped in, so a failed landing leaves the previous rows in place.
+Replay of the same batch is idempotent — verified in
+tests/test_upsert.py.
 """
 
 from __future__ import annotations
 
-import os
 import re
 import uuid
 
@@ -21,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import staging
 from ..catalog import load_table
 from ..registry import query
 
@@ -106,17 +109,18 @@ def _dedup_last_writer(source: DataFrame, key: str) -> DataFrame:
 
 
 def merge_into_parquet(source: DataFrame, path: str, key: str) -> None:
-    """Best-effort MERGE sink over a parquet directory: read existing
-    target if present, merge, rewrite atomically-ish (tmp + rename at
-    the FS layer is left to the deployment; local mode overwrites)."""
-    spark = source.sparkSession
-    if os.path.exists(path):
-        target = spark.read.parquet(path)
-        merged = merge_upsert(target, source, key)
-    else:
-        merged = source
-    # Materialize before overwrite (source may read from `path`).
-    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+    """MERGE ``source`` into the parquet target at ``path`` on ``key``
+    (``merge_upsert``'s policy); a missing target starts as ``source``.
+    The target is replaced whole by ``staging.fold``: the merge is
+    written to a new generation and renamed into place, so ``source``
+    may read ``path`` and a failed write loses no landed row. A target
+    written by plain Spark, without the staging marker, is merged
+    into like any other."""
+
+    def step(target: DataFrame | None) -> DataFrame:
+        return source if target is None else merge_upsert(target, source, key)
+
+    staging.fold(source.sparkSession, path, step)
 
 
 def merge_into_delta(

@@ -20,6 +20,22 @@ scan tables. The invariant every stage keeps:
   ~100 ms on ``local[2]``) and a partition column keeps the type it
   was inferred with when built.
 
+A target is a parquet directory that a sequence of writes replaces
+whole: an upsert sink, a streaming merge target, sketch state. ``fold``
+is the one way to rewrite it, and the invariant every target keeps:
+
+- One writer per target. ``fold`` reads the current generation,
+  writes the next one through ``publish`` and swaps it in, so a write
+  that fails leaves the previous generation in place.
+- A target is complete iff it holds the marker, or it is a directory
+  that existed before any ``fold`` (written by plain Spark, or copied
+  without regard to the marker); the latter is read with schema
+  inference.
+- A crash between ``publish``'s two renames leaves ``<path>`` missing
+  and its generations in ``<path>.tmp-*``. Recovery adopts the newest
+  marked generation whose writer is dead; an unmarked one, or one
+  still being written, is never adopted. Stages recover the same way.
+
 Per-call state that must not outlive the process (streaming sink
 targets, sketch and iteration state) lives under ``scratch_dir``: one
 root per process, removed at exit, with roots of dead processes swept
@@ -78,14 +94,42 @@ def location(name: str, sf_dir: str) -> str:
     )
 
 
-def _marker(dest: str) -> dict | None:
-    """The marker of a complete stage at ``dest``, else None."""
+def _marker(gen: str, dest: str | None = None) -> dict | None:
+    """The marker of a complete generation ``gen`` of ``dest`` (default
+    ``gen`` itself), else None."""
     try:
-        with open(os.path.join(dest, MARKER)) as fh:
+        with open(os.path.join(gen, MARKER)) as fh:
             m = json.load(fh)
     except (OSError, ValueError):
         return None
-    return m if m.get("fingerprint") == dest.rsplit("_", 1)[-1] else None
+    return m if m.get("fingerprint") == (dest or gen).rsplit("_", 1)[-1] else None
+
+
+def _alive(pid: int) -> bool:
+    """Whether process ``pid`` exists (under any uid)."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass  # alive under another uid
+    return True
+
+
+def _recover(dest: str) -> dict | None:
+    """The marker at ``dest``. When ``dest`` is missing, first adopt
+    the newest marked ``<dest>.tmp-<pid>-*`` generation whose writer is
+    dead: a crash between ``publish``'s two renames left it there."""
+    if not os.path.exists(dest):
+        gens = []
+        for gen in glob.glob(f"{glob.escape(dest)}.tmp-*"):
+            pid = gen[len(dest) + len(".tmp-") :].split("-", 1)[0]
+            if pid.isdigit() and not _alive(int(pid)) and _marker(gen, dest):
+                gens.append((os.stat(os.path.join(gen, MARKER)).st_mtime_ns, gen))
+        if gens:
+            with contextlib.suppress(OSError):
+                os.rename(max(gens)[1], dest)
+    return _marker(dest)
 
 
 def _parquet_schema(path: str) -> dict | None:
@@ -142,7 +186,7 @@ def stage(name: str, sf_dir: str, write) -> tuple[str, StructType | None]:
     ``schema`` is the recorded parquet schema, None for other formats."""
     t0 = time.perf_counter()
     dest = location(name, sf_dir)
-    marker = _marker(dest)
+    marker = _recover(dest)
     hit = marker is not None
     if not hit:
         publish(dest, write)
@@ -171,6 +215,25 @@ def replay(spark: SparkSession, sf_dir: str, kind) -> DataFrame:
         kind.__name__.lstrip("_"), sf_dir, lambda tmp: kind(spark, sf_dir, tmp)
     )
     return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
+
+
+def current(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet target at ``path``, None when there is none. A
+    marked target is read with its recorded schema (no Spark job); an
+    unmarked directory is read with schema inference."""
+    marker = _recover(path)
+    if marker and marker["schema"]:
+        return spark.read.schema(StructType.fromJson(marker["schema"])).parquet(path)
+    return spark.read.parquet(path) if os.path.isdir(path) else None
+
+
+def fold(spark: SparkSession, path: str, step) -> None:
+    """Replace the parquet target at ``path`` with ``step(previous)``,
+    where ``previous`` is ``current(spark, path)``. The next generation
+    is written and marked beside the target and then swapped in, so it
+    may read the previous one and a failed write changes nothing."""
+    previous = current(spark, path)  # before publish notes the marker
+    publish(path, lambda tmp: step(previous).write.parquet(tmp))
 
 
 def spread(build):
@@ -248,14 +311,8 @@ def _sweep_dead_roots() -> None:
             owner = int(stale.rsplit("_", 1)[-1])
         except ValueError:
             continue
-        if owner == os.getpid():
-            continue
-        try:
-            os.kill(owner, 0)
-        except ProcessLookupError:
+        if not _alive(owner):
             shutil.rmtree(stale, ignore_errors=True)
-        except PermissionError:
-            pass  # alive under another uid
 
 
 _SCRATCH_ROOTS: set[str] = set()

@@ -469,64 +469,45 @@ def _keyed_merge_batch_fn(target_dir: str, normalize_fn):
     """foreachBatch body: MERGE a micro-batch's per-key winner rows
     into the parquet target (``normalize_fn`` reduces the raw batch to
     normalized per-key winners carrying ``user_id``/``last_ts``/
-    ``event_id`` -> full-outer merge with the running target -> atomic
-    swap). Keeping the later of (existing, incoming) per key is
-    associative AND idempotent: the final state is independent of the
-    batch split, and re-delivering the same batch (Structured
+    ``event_id`` -> union with the running target, re-reduced ->
+    ``staging.fold``). Keeping the later of (existing, incoming) per key
+    is associative AND idempotent: the final state is independent of
+    the batch split, and re-delivering the same batch (Structured
     Streaming's at-least-once foreachBatch contract) merges identical
     winners to an identical target. The winner row may carry extra
     payload columns (e.g. a CDC ``op`` tombstone marker) — they ride
     along untouched."""
-    import os
-    import shutil
-
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    def merge_batch(batch_df, batch_id: int) -> None:
-        import glob
+    latest = W.partitionBy("user_id").orderBy(
+        F.col("last_ts").desc(), F.col("event_id").desc()
+    )
 
-        s = batch_df.sparkSession
+    def merge_batch(batch_df, batch_id: int) -> None:
         incoming = normalize_fn(batch_df)
-        # Crash recovery for the two-step swap below (round-6 advice):
-        # rename(target, old) -> rename(tmp, target) is NOT atomic — a
-        # crash between the renames leaves the accumulated state only
-        # in .old{id}, and the _SUCCESS probe would then silently
-        # restart the upsert target from the incoming batch alone.
-        # If the target is missing but an .old generation exists,
-        # adopt the newest one before probing.
-        if not os.path.exists(target_dir):
-            olds = sorted(glob.glob(target_dir + ".old*"), key=os.path.getmtime)
-            if olds:
-                os.rename(olds[-1], target_dir)
-        if os.path.exists(os.path.join(target_dir, "_SUCCESS")):
-            tgt = s.read.parquet(target_dir)
-            # union the two winner sets and re-reduce — associative, so
-            # the final state is independent of the batch split.
-            merged = (
+
+        def step(tgt):
+            if tgt is None:
+                return incoming
+            return (
                 tgt.unionByName(incoming)
-                .withColumn(
-                    "_rn",
-                    F.row_number().over(
-                        W.partitionBy("user_id").orderBy(
-                            F.col("last_ts").desc(), F.col("event_id").desc()
-                        )
-                    ),
-                )
+                .withColumn("_rn", F.row_number().over(latest))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-        else:
-            merged = incoming
-        tmp = target_dir + f".next{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = target_dir + f".old{batch_id}"
-        if os.path.exists(target_dir):
-            os.rename(target_dir, old)
-        os.rename(tmp, target_dir)
-        shutil.rmtree(old, ignore_errors=True)
+
+        staging.fold(batch_df.sparkSession, target_dir, step)
 
     return merge_batch
+
+
+def _sink(spark: SparkSession, path: str) -> DataFrame:
+    """The target a drained foreachBatch sink left at ``path``."""
+    df = staging.current(spark, path)
+    if df is None:
+        raise RuntimeError(f"stream sink {path} is empty: no micro-batch landed")
+    return df
 
 
 @query(
@@ -564,7 +545,7 @@ def stream_exec_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
     )
     _drain(q)
-    return spark.read.parquet(target_dir).select(
+    return _sink(spark, target_dir).select(
         "user_id", "last_ts", "last_type", "last_value"
     )
 
@@ -745,7 +726,7 @@ def stream_exec_upsert_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("json_rows")
     )
     return (
-        spark.read.parquet(target_dir)
+        _sink(spark, target_dir)
         .crossJoin(F.broadcast(jn))
         .select("user_id", "last_ts", "last_type", "last_value", "json_rows")
     )
@@ -1155,8 +1136,8 @@ def stream_exec_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches. Each micro-batch folds its events to a k-row
     (hash, in_a, in_b) state; foreachBatch merges it with the
     accumulated state by "union, max the flags per key, re-take the k
-    smallest" — the associative/commutative sketch merge — written to
-    a tmp dir and renamed into place each batch. The
+    smallest" — the associative/commutative sketch merge — through
+    ``staging.fold`` each batch. The
     final state must reproduce EXACTLY the batch sketch (the oracle is
     literally `sketch_theta_intersect`'s, imported — one string, two
     execution paths), proving the merge is split-invariant: any
@@ -1168,20 +1149,16 @@ def stream_exec_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     per trigger, never the stream. The per-batch state fold is a
     TakeOrdered over THAT BATCH only; nothing corpus-sized crosses a
     batch boundary."""
-    import os
-    import shutil
     import uuid as _uuid
 
     from pyspark.sql import functions as F
 
     from ..operators.sketches import THETA_K, _EV_A, _EV_B, _H60, _h60_spark
 
-    # per-invocation private state root: the state is rebuilt from the
+    # per-invocation private state: the state is rebuilt from the
     # replay every time (it IS the thing under test), so no cross-
     # session reuse and no staleness guard needed.
-    state_root = staging.scratch_dir(f"kmvstate_{_uuid.uuid4().hex[:8]}")
-    os.makedirs(state_root, exist_ok=True)
-    cur = os.path.join(state_root, "current")
+    cur = staging.scratch_dir(f"kmvstate_{_uuid.uuid4().hex[:8]}")
 
     def merge_batch(batch, _bid: int) -> None:
         part = (
@@ -1199,24 +1176,20 @@ def stream_exec_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("h", "user_id")
             .limit(THETA_K)
         )
-        if os.path.exists(os.path.join(cur, "_SUCCESS")):
-            prev = batch.sparkSession.read.parquet(cur)
-            merged = (
+
+        def step(prev):
+            if prev is None:
+                return part.coalesce(1)
+            return (
                 prev.unionByName(part)
                 .groupBy("user_id", "h")
                 .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
                 .orderBy("h", "user_id")
                 .limit(THETA_K)
+                .coalesce(1)
             )
-        else:
-            merged = part
-        tmp = os.path.join(state_root, f"tmp_{_bid}_{_uuid.uuid4().hex[:8]}")
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = os.path.join(state_root, f"old_{_bid}")
-        if os.path.exists(cur):
-            os.rename(cur, old)
-        os.rename(tmp, cur)
-        shutil.rmtree(old, ignore_errors=True)
+
+        staging.fold(batch.sparkSession, cur, step)
 
     stream = staging.replay(spark, sf_dir, _events)
     q = _start_state_sized(
@@ -1225,7 +1198,7 @@ def stream_exec_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _drain(q)
 
-    state = spark.read.parquet(cur)
+    state = _sink(spark, cur)
     sk = state.agg(
         F.max("h").alias("hk"), F.count(F.lit(1)).cast("long").alias("kk")
     )
@@ -1365,7 +1338,7 @@ def stream_exec_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     return (
-        spark.read.parquet(target_dir)
+        _sink(spark, target_dir)
         .where(F.col("op") == "U")
         .select("user_id", "last_ts", "last_value")
     )
@@ -1405,16 +1378,12 @@ def stream_exec_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the shape of real leaderboards (largest transactions, longest
     sessions, slowest requests). Per-trigger output is K x types
     rows; nothing stream-sized ever crosses a batch boundary."""
-    import os
-    import shutil
     import uuid as _uuid
 
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    state_root = staging.scratch_dir(f"topkstate_{_uuid.uuid4().hex[:8]}")
-    os.makedirs(state_root, exist_ok=True)
-    cur = os.path.join(state_root, "current")
+    cur = staging.scratch_dir(f"topkstate_{_uuid.uuid4().hex[:8]}")
     w = W.partitionBy("event_type").orderBy(F.desc("value"), F.asc("event_id"))
 
     def topk(df):
@@ -1449,43 +1418,37 @@ def stream_exec_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("rnk")
         )
 
+    def step(batch, prev):
+        if prev is None:
+            return topk(batch).coalesce(1)
+        # threshold pruning (r11, the classic streaming-top-K
+        # move): once a type's board holds K entries, any row
+        # whose value is strictly below the board's K-th value
+        # can never enter — prune it IN THE SCAN PROJECTION,
+        # before the fold's exchange. The threshold relation is
+        # K x types rows (broadcast); >= keeps boundary ties for
+        # the event_id tie-break; types with fewer than K
+        # entries prune nothing. At 1000x this collapses the
+        # per-batch exchange from batch-sized to
+        # above-threshold-sized once the first batch seeds the
+        # board.
+        thr = prev.groupBy("event_type").agg(
+            F.min("value").alias("_thr"),
+            F.count(F.lit(1)).alias("_k"),
+        )
+        pruned = (
+            batch.join(F.broadcast(thr), "event_type", "left")
+            .where(
+                F.col("_thr").isNull()
+                | (F.col("_k") < TOPK_LEADERBOARD_K)
+                | (F.col("value") >= F.col("_thr"))
+            )
+            .drop("_thr", "_k")
+        )
+        return topk(prev.unionByName(topk(pruned))).coalesce(1)
+
     def merge_batch(batch, bid: int) -> None:
-        if os.path.exists(os.path.join(cur, "_SUCCESS")):
-            prev = batch.sparkSession.read.parquet(cur)
-            # threshold pruning (r11, the classic streaming-top-K
-            # move): once a type's board holds K entries, any row
-            # whose value is strictly below the board's K-th value
-            # can never enter — prune it IN THE SCAN PROJECTION,
-            # before the fold's exchange. The threshold relation is
-            # K x types rows (broadcast); >= keeps boundary ties for
-            # the event_id tie-break; types with fewer than K
-            # entries prune nothing. At 1000x this collapses the
-            # per-batch exchange from batch-sized to
-            # above-threshold-sized once the first batch seeds the
-            # board.
-            thr = prev.groupBy("event_type").agg(
-                F.min("value").alias("_thr"),
-                F.count(F.lit(1)).alias("_k"),
-            )
-            pruned = (
-                batch.join(F.broadcast(thr), "event_type", "left")
-                .where(
-                    F.col("_thr").isNull()
-                    | (F.col("_k") < TOPK_LEADERBOARD_K)
-                    | (F.col("value") >= F.col("_thr"))
-                )
-                .drop("_thr", "_k")
-            )
-            merged = topk(prev.unionByName(topk(pruned)))
-        else:
-            merged = topk(batch)
-        tmp = os.path.join(state_root, f"tmp_{bid}_{_uuid.uuid4().hex[:8]}")
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = os.path.join(state_root, f"old_{bid}")
-        if os.path.exists(cur):
-            os.rename(cur, old)
-        os.rename(tmp, cur)
-        shutil.rmtree(old, ignore_errors=True)
+        staging.fold(batch.sparkSession, cur, lambda prev: step(batch, prev))
 
     stream = staging.replay(spark, sf_dir, _events)
     q = _start_state_sized(
@@ -1494,7 +1457,7 @@ def stream_exec_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _drain(q)
     return (
-        spark.read.parquet(cur)
+        _sink(spark, cur)
         .withColumn("rnk", F.row_number().over(w))
         .select(
             "event_type",
@@ -1602,7 +1565,7 @@ def stream_exec_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
     )
     _drain(q)
-    return spark.read.parquet(target_dir).select(
+    return _sink(spark, target_dir).select(
         F.col("user_id").alias("evt_id"),
         F.col("evt_user").alias("user_id"),
         "evt_ts",
@@ -1728,7 +1691,7 @@ def stream_exec_asof_join_watermarked(
         .trigger(availableNow=True)
     )
     _drain(q)
-    return spark.read.parquet(target_dir).select(
+    return _sink(spark, target_dir).select(
         F.col("user_id").alias("evt_id"),
         F.col("evt_user").alias("user_id"),
         # back to the events table's NTZ type for oracle comparability

@@ -782,3 +782,22 @@ def test_literal_argmin_guard_cutover(spark, sf_dir):
     big_k = S.LITERAL_ARGMIN_MAX_DOUBLES // S.DIM + 1
     rel_assign, _ = S.lloyd_assign(base, big_k, 1)
     assert "least(" not in plan_string(rel_assign)
+
+
+def test_bpe_train_with_no_pair_left_emits_no_merge(spark, tmp_path):
+    """A vocabulary of single-character words holds no symbol pair: the
+    trainer stops at the first empty round and emits no merge, like
+    the oracle, whose empty win{r} CTEs emit no row."""
+    import duckdb
+
+    from aws_etl_pipeline_spark.llm.text import _bpe_train_oracle, bpe_train_merges
+    from aws_etl_pipeline_spark.schemas import TESTDATA
+
+    docs = str(tmp_path / "documents.parquet")
+    rows = [(1, "a b c", "en", "web", 5), (2, "b  a", "en", "web", 4)]
+    spark.createDataFrame(rows, TESTDATA["documents"]).write.parquet(docs)
+    assert bpe_train_merges(spark, str(tmp_path)).collect() == []
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}/*.parquet')")
+    assert con.execute(_bpe_train_oracle()).fetchall() == []

@@ -130,6 +130,80 @@ def test_losing_the_rename_race_leaves_one_complete_dir(tmp_path):
     assert glob.glob(f"{dest}.tmp*") == []
 
 
+def _dead_pid() -> int:
+    proc = subprocess.Popen([sys.executable, "-c", "pass"])
+    proc.wait()
+    return proc.pid
+
+
+def _ids(df) -> list[int]:
+    return sorted(r[0] for r in df.collect())
+
+
+def test_failed_fold_leaves_previous_target(spark, tmp_path):
+    from pyspark.sql.utils import CapturedException
+
+    path = str(tmp_path / "target")
+    staging.fold(spark, path, lambda prev: spark.range(10))
+    marker = open(os.path.join(path, staging.MARKER)).read()
+
+    @F.udf("long")
+    def boom(i):
+        if i == 7:
+            raise ValueError("write fails mid-job")
+        return i
+
+    def step(prev):
+        return prev.unionByName(spark.range(10, 20)).select(boom("id").alias("id"))
+
+    with pytest.raises((CapturedException, ValueError)):
+        staging.fold(spark, path, step)
+    assert _ids(staging.current(spark, path)) == list(range(10))
+    assert open(os.path.join(path, staging.MARKER)).read() == marker
+    # tasks still being killed may write into the failed generation
+    # after it is removed, but it never gets a marker
+    assert glob.glob(f"{path}.tmp*/{staging.MARKER}") == []
+
+
+def test_current_adopts_only_a_marked_generation_of_a_dead_writer(spark, tmp_path):
+    path = str(tmp_path / "target")
+    dead = _dead_pid()
+
+    def generation(n: int, name: str) -> str:
+        staging.publish(path, lambda tmp: spark.range(n).write.parquet(tmp))
+        os.rename(path, f"{path}.tmp-{name}")
+        return f"{path}.tmp-{name}"
+
+    # a crash between publish's renames: the old generation moved aside,
+    # the new one (marked last) not yet renamed into place
+    generation(10, f"{dead}-0000aaaa-old")
+    new = generation(20, f"{dead}-0000bbbb")
+    # newer but unmarked, and marked but its writer alive: never adopted
+    spark.range(30).write.parquet(f"{path}.tmp-{dead}-0000cccc")
+    generation(40, f"{os.getpid()}-0000dddd")
+
+    assert _ids(staging.current(spark, path)) == list(range(20))
+    assert os.path.exists(os.path.join(path, staging.MARKER))
+    assert not os.path.exists(new)
+
+    shutil.rmtree(path)
+    for gen in glob.glob(f"{path}.tmp-*"):
+        if not gen.endswith("0000cccc"):
+            shutil.rmtree(gen)
+    assert staging.current(spark, path) is None
+    assert glob.glob(f"{path}.tmp-*") == [f"{path}.tmp-{dead}-0000cccc"]
+
+
+def test_current_of_a_marked_target_launches_no_job(spark, tmp_path):
+    path = str(tmp_path / "target")
+    staging.fold(spark, path, lambda prev: spark.range(10))
+    assert _jobs_during(spark, lambda: staging.current(spark, path)) == 0
+    # an unmarked target is read with inference, which the probe sees
+    plain = str(tmp_path / "plain")
+    spark.range(10).write.parquet(plain)
+    assert _jobs_during(spark, lambda: staging.current(spark, plain)) > 0
+
+
 def test_calls_leave_no_dir_outside_the_process_root(spark, sf_dir, tmpdir_root):
     from aws_etl_pipeline_spark.streaming.ingest import (
         stream_exec_sketch_merge,
@@ -145,9 +219,7 @@ def test_calls_leave_no_dir_outside_the_process_root(spark, sf_dir, tmpdir_root)
 
 
 def test_scratch_root_removed_at_exit_and_dead_roots_swept(tmp_path):
-    dead = subprocess.Popen([sys.executable, "-c", "pass"])
-    dead.wait()
-    stale = tmp_path / f"spark_graft_scratch_{dead.pid}"
+    stale = tmp_path / f"spark_graft_scratch_{_dead_pid()}"
     stale.mkdir()
     code = (
         "import os; from aws_etl_pipeline_spark import staging; "

@@ -44,6 +44,37 @@ def test_merge_replay_idempotent(spark, tmp_path):
     assert out == {"T1": 10.0, "T2": 99.0}
 
 
+def test_merge_into_plain_spark_target(spark, tmp_path):
+    """A target written before the staging marker existed is merged
+    into, not replaced."""
+    import os
+
+    from aws_etl_pipeline_spark import staging
+
+    path = str(tmp_path / "txn")
+    _df(spark, [("T1", 10.0, "a"), ("T2", 20.0, "b")]).write.parquet(path)
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert not os.path.exists(os.path.join(path, staging.MARKER))
+    merge_into_parquet(_df(spark, [("T2", 99.0, "b2"), ("T3", 30.0, "c")]), path, key="transaction_id")
+    out = {r.transaction_id: r.amount for r in spark.read.parquet(path).collect()}
+    assert out == {"T1": 10.0, "T2": 99.0, "T3": 30.0}
+
+
+def test_merge_into_copied_target(spark, tmp_path):
+    """A target copied to a new path (as perfbench resets its upsert
+    target) is merged into, not replaced; the original is untouched."""
+    import shutil
+
+    base, path = str(tmp_path / "base"), str(tmp_path / "target")
+    merge_into_parquet(_df(spark, [("T1", 10.0, "a"), ("T2", 20.0, "b")]), base, key="transaction_id")
+    shutil.copytree(base, path)
+    merge_into_parquet(_df(spark, [("T2", 99.0, "b2"), ("T3", 30.0, "c")]), path, key="transaction_id")
+    out = {r.transaction_id: r.amount for r in spark.read.parquet(path).collect()}
+    assert out == {"T1": 10.0, "T2": 99.0, "T3": 30.0}
+    kept = {r.transaction_id: r.amount for r in spark.read.parquet(base).collect()}
+    assert kept == {"T1": 10.0, "T2": 20.0}
+
+
 def test_merge_null_overwrites_on_match(spark):
     # MERGE semantics: a matched source row with an explicit NULL in an
     # update column overwrites the target value (ON CONFLICT DO UPDATE
