@@ -14,9 +14,10 @@ so partial schemas degrade gracefully exactly like the reference.
 
 from __future__ import annotations
 
+import datetime
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -110,7 +111,6 @@ def _write_manifest(
     analog, so SURVEY R16 maps it to a ``_manifest.json`` file inside
     the output directory — same fields, readable by any downstream
     consumer next to Spark's own ``_SUCCESS`` marker."""
-    import datetime
     import json
 
     manifest = {
@@ -124,6 +124,27 @@ def _write_manifest(
         json.dump(manifest, fh, indent=2)
 
 
+def _sink(
+    df: DataFrame,
+    path: str,
+    fmt: str,
+    partition_by: tuple[str, ...],
+    source_file: str | None,
+    stage: str,
+    **options,
+) -> None:
+    """Overwrite ``path`` with ``df`` in format ``fmt``, then write the
+    R16 sidecar. ``record_count`` is observed inside the write's own
+    job; ``df.count()`` after the write would re-run the source and the
+    transform in two more jobs."""
+    obs = Observation()
+    w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.options(**options).format(fmt).save(path)
+    _write_manifest(path, obs.get["rows"], source_file, stage)
+
+
 def write_json(
     df: DataFrame,
     path: str,
@@ -135,11 +156,7 @@ def write_json(
     records-orient single file (`lambda_function.py:285`) is the
     concatenation — acceptable per SURVEY §2A. A ``_manifest.json``
     sidecar carries the reference's object metadata."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.json(path)
-    _write_manifest(path, df.count(), source_file, stage)
+    _sink(df, path, "json", partition_by, source_file, stage)
 
 
 def write_csv(
@@ -152,11 +169,7 @@ def write_csv(
     """R21 partitioned CSV sink (` s3_uploader.py:97-143` key layout ->
     native Hive partitioning, which — unlike the reference — Spark also
     prunes on read). Writes the R16 ``_manifest.json`` sidecar."""
-    w = df.write.mode("overwrite").option("header", True)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.csv(path)
-    _write_manifest(path, df.count(), source_file, stage)
+    _sink(df, path, "csv", partition_by, source_file, stage, header=True)
 
 
 def write_parquet(
@@ -169,11 +182,7 @@ def write_parquet(
     """Parquet sink (README.md:310 lists parquet as the intended
     extension; it is the engine default for analytic storage). Writes
     the R16 ``_manifest.json`` sidecar."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-    _write_manifest(path, df.count(), source_file, stage)
+    _sink(df, path, "parquet", partition_by, source_file, stage)
 
 
 def run_pipeline(
@@ -183,8 +192,15 @@ def run_pipeline(
 ) -> DataFrame:
     """R18 conditional sink dispatch: the reference gates the warehouse
     load on env config (`lambda_function.py:170-173`); here sink
-    selection is explicit plan-build-time configuration."""
-    out = transform_transactions(df)
+    selection is explicit plan-build-time configuration. Both sinks get
+    one R7 stamp, like the reference's single ``datetime.now()``
+    (`lambda_function.py:122`): they run as two queries, and
+    ``current_timestamp()`` is evaluated once per query. The stamp is
+    cut to the JSON sink's millisecond precision, so the two sinks hold
+    equal values."""
+    now = datetime.datetime.now(datetime.timezone.utc)
+    now = now.replace(microsecond=now.microsecond // 1000 * 1000)
+    out = transform_transactions(df).withColumn("processed_timestamp", F.lit(now))
     if upsert_target is not None:
         from .upsert import merge_into_parquet
 

@@ -69,21 +69,31 @@ MARKER = "_STAGE.json"
 _SCRATCH_PREFIX = "spark_graft_scratch"
 
 
+def files_key(path: str, root: str) -> tuple[tuple[str, int, int], ...]:
+    """``(relpath from root, mtime_ns, size)`` of the file ``path``, or
+    of every file under the directory ``path``: the content key of one
+    table, so a table rewritten in place gets a new key."""
+    paths = [path]
+    if os.path.isdir(path):
+        paths = []
+        for dirpath, dirnames, files in os.walk(path):
+            dirnames.sort()
+            paths += [os.path.join(dirpath, f) for f in sorted(files)]
+    out = []
+    for p in paths:
+        st = os.stat(p)
+        out.append((os.path.relpath(p, root), st.st_mtime_ns, st.st_size))
+    return tuple(out)
+
+
 def fingerprint(sf_dir: str) -> str:
-    """Content key of the testdata: absolute path plus (name, mtime_ns,
-    size) of every file under every ``<table>.parquet`` entry."""
+    """Content key of the testdata: absolute path plus ``files_key`` of
+    every ``<table>.parquet`` entry."""
     root = os.path.abspath(sf_dir)
     h = hashlib.md5(root.encode())
-    for dirpath, dirnames, files in os.walk(root):
-        dirnames.sort()
-        if dirpath == root:  # tables are the top-level *.parquet entries
-            dirnames[:] = [d for d in dirnames if d.endswith(".parquet")]
-            files = [f for f in files if f.endswith(".parquet")]
-        for f in sorted(files):
-            path = os.path.join(dirpath, f)
-            st = os.stat(path)
-            rel = os.path.relpath(path, root)
-            h.update(f"{rel}:{st.st_mtime_ns}:{st.st_size}".encode())
+    for table in sorted(e for e in os.listdir(root) if e.endswith(".parquet")):
+        for rel, mtime_ns, size in files_key(os.path.join(root, table), root):
+            h.update(f"{rel}:{mtime_ns}:{size}".encode())
     return h.hexdigest()[:16]
 
 

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -20,6 +21,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def jobs_during(spark):
+    """``jobs_during(fn)``: the Spark jobs the status store records
+    while ``fn`` runs."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"probe-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "job probe")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(autouse=True)

@@ -3,6 +3,7 @@ DuckDB oracle can't see: coerce-cast behavior, soft columns, null
 branches, and the documented pandas divergence (SURVEY §2A R14)."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import Row, functions as F, types as T
@@ -254,3 +255,47 @@ def test_weighted_median_crossing_definition(spark, sf_dir):
                 assert abs(got[prio].weighted_median - round(v, 4)) < 1e-9
                 assert got[prio].total_wt == total
                 break
+
+
+def test_run_pipeline_stamps_one_timestamp_for_both_sinks(spark, tmp_path):
+    # R7: one landing writes one processed_timestamp to the JSON sink
+    # and the upsert target, like the reference's single datetime.now()
+    from aws_etl_pipeline_spark.generator import generate_transactions
+    from aws_etl_pipeline_spark.operators.etl import run_pipeline
+
+    json_path, target = str(tmp_path / "json"), str(tmp_path / "target")
+    run_pipeline(generate_transactions(spark, 50, seed=1), upsert_target=target)
+    run_pipeline(
+        generate_transactions(spark, 80, seed=2), json_path=json_path, upsert_target=target
+    )
+    tgt = spark.read.parquet(target)
+    js = spark.read.schema(tgt.schema).json(json_path)
+    pairs = js.alias("j").join(tgt.alias("t"), "transaction_id").select(
+        F.col("j.processed_timestamp").alias("j"), F.col("t.processed_timestamp").alias("t")
+    ).collect()
+    assert len(pairs) == js.count() > 0
+    assert all(r.j == r.t for r in pairs)
+    assert len({r.j for r in pairs}) == 1
+
+
+@pytest.mark.parametrize("sink", ["write_json", "write_csv", "write_parquet"])
+def test_sink_counts_the_rows_it_wrote_in_the_write_job(spark, tmp_path, sink, jobs_during):
+    import json
+
+    from aws_etl_pipeline_spark.operators import etl
+
+    fmt = sink.split("_")[1]
+    df = spark.range(1000).filter(F.col("id") % 7 != 0).withColumn("k", F.col("id") % 3)
+    for part in ((), ("k",)):
+        w = df.write.mode("overwrite").partitionBy(*part).format(fmt)
+        plain = jobs_during(lambda: w.save(str(tmp_path / "plain")))
+        path = str(tmp_path / f"out{len(part)}")
+        assert jobs_during(lambda: getattr(etl, sink)(df, path, partition_by=part)) == plain
+        with open(os.path.join(path, "_manifest.json")) as fh:
+            count = json.load(fh)["record_count"]
+        back = spark.read.format(fmt).option("header", True).load(path)
+        assert count == back.count() == 857
+    empty = str(tmp_path / "empty")
+    getattr(etl, sink)(df.limit(0), empty)
+    with open(os.path.join(empty, "_manifest.json")) as fh:
+        assert json.load(fh)["record_count"] == 0

@@ -7,7 +7,6 @@ import shutil
 import subprocess
 import sys
 import tempfile
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,31 +25,18 @@ def tmpdir_root(tmp_path, monkeypatch):
     return tmp_path
 
 
-def _jobs_during(spark, fn) -> int:
-    """Spark jobs the status store records while ``fn`` runs."""
-    sc = spark.sparkContext
-    group = f"staging-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "staging test")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _small(spark):
     return spark.range(40).select(
         (F.col("id") % 4).cast("int").alias("cell"), (F.col("id") * 3).alias("v")
     )
 
 
-def test_stage_hit_launches_no_job(spark, sf_dir, tmpdir_root):
+def test_stage_hit_launches_no_job(spark, sf_dir, tmpdir_root, jobs_during):
     write = staging.spread(lambda: _small(spark))
     staging.staged(spark, "hit_probe", sf_dir, write)  # build
-    assert _jobs_during(spark, lambda: staging.staged(spark, "hit_probe", sf_dir, write)) == 0
+    assert jobs_during(lambda: staging.staged(spark, "hit_probe", sf_dir, write)) == 0
     # the build path does launch jobs, so the probe can see them
-    assert _jobs_during(spark, lambda: staging.staged(spark, "hit_probe2", sf_dir, write)) > 0
+    assert jobs_during(lambda: staging.staged(spark, "hit_probe2", sf_dir, write)) > 0
 
 
 def test_recorded_schema_matches_read_back(spark, sf_dir, tmpdir_root):
@@ -194,14 +180,14 @@ def test_current_adopts_only_a_marked_generation_of_a_dead_writer(spark, tmp_pat
     assert glob.glob(f"{path}.tmp-*") == [f"{path}.tmp-{dead}-0000cccc"]
 
 
-def test_current_of_a_marked_target_launches_no_job(spark, tmp_path):
+def test_current_of_a_marked_target_launches_no_job(spark, tmp_path, jobs_during):
     path = str(tmp_path / "target")
     staging.fold(spark, path, lambda prev: spark.range(10))
-    assert _jobs_during(spark, lambda: staging.current(spark, path)) == 0
+    assert jobs_during(lambda: staging.current(spark, path)) == 0
     # an unmarked target is read with inference, which the probe sees
     plain = str(tmp_path / "plain")
     spark.range(10).write.parquet(plain)
-    assert _jobs_during(spark, lambda: staging.current(spark, plain)) > 0
+    assert jobs_during(lambda: staging.current(spark, plain)) > 0
 
 
 def test_calls_leave_no_dir_outside_the_process_root(spark, sf_dir, tmpdir_root):

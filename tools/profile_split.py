@@ -7,6 +7,13 @@ tiny, so a query whose count() segment is dominated by the optimize
 segment is paying Catalyst, not the cluster — a different fix
 (shrink the expression tree / plan) than a shuffle-bound query.
 
+Per rep it also counts the Spark jobs launched inside fn() (schema
+inference, eager staging, driver collects) and the whole-stage-codegen
+classes compiled over the rep (the JVM's CodegenMetrics counter; a
+warm rep of a query whose classes fit the session's codegen cache
+compiles 0). One stdout line per query; the per-rep counts are
+``/``-separated.
+
 Usage: python tools/profile_split.py QUERY [QUERY ...]
        SPARK_GRAFT_SF_DIR picks the data dir (default sf0.1).
 """
@@ -34,6 +41,8 @@ def main() -> None:
     qs = all_queries()
     spark = get_spark("profile-split")
     sc = spark.sparkContext
+    next_job = sc._jsc.sc().dagScheduler().nextJobId
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     for name in names:
         q = qs[name]
         # warm-up: codegen + fixture staging
@@ -41,22 +50,26 @@ def main() -> None:
         clear_persisted()
         rows = []
         for _ in range(REPS):
+            c0, j0 = compiled.getCount(), next_job()
             t0 = time.time()
             df = q.fn(spark, SF_DIR)
             t1 = time.time()
+            j1 = next_job()
             # force analysis+optimization without execution
             _ = df._jdf.queryExecution().executedPlan()
             t2 = time.time()
-            before_jobs = sc._jsc.sc().dagScheduler().nextJobId()
+            j2 = next_job()
             df.count()
             t3 = time.time()
-            after_jobs = sc._jsc.sc().dagScheduler().nextJobId()
+            rows.append((t1 - t0, t2 - t1, t3 - t2, next_job() - j2, j1 - j0,
+                         compiled.getCount() - c0))
             clear_persisted()
-            rows.append((t1 - t0, t2 - t1, t3 - t2, after_jobs - before_jobs))
         best = min(rows, key=lambda r: r[0] + r[1] + r[2])
         print(
             f"{name}: build={best[0]:.3f}s optimize={best[1]:.3f}s "
-            f"execute={best[2]:.3f}s jobs={best[3]}"
+            f"execute={best[2]:.3f}s jobs={best[3]} "
+            f"fn_jobs={'/'.join(str(r[4]) for r in rows)} "
+            f"compiles={'/'.join(str(r[5]) for r in rows)}"
         )
     spark.stop()
 
