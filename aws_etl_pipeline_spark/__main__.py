@@ -10,7 +10,8 @@ Maps 1:1 to how the reference is operated (SURVEY §3):
   explain   — formatted physical plan of any named query (the
               pushdown/broadcast/codegen evidence, engine-side)
   watch     — same pipeline as a streaming drain of the directory
-              (the S3-trigger analog, R19; availableNow)
+              (the S3-trigger analog, R19; availableNow); a re-run
+              lands only the files added since the last one
   list      — list landed files with sizes (R25)
 
 Usage:
@@ -106,10 +107,9 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "watch":
         from .streaming.ingest import run_pipeline_available_now
 
-        q = run_pipeline_available_now(
+        run_pipeline_available_now(
             spark, args.src, json_out=args.out, upsert_path=args.upsert
         )
-        q.awaitTermination()
         print(f"drained pending files: {args.src} -> {args.out}")
 
     elif args.cmd == "explain":

@@ -4,22 +4,89 @@ trigger config `README.md:155-187`).
 
 Where the reference gets one Lambda invocation per S3 object, the
 engine gets one micro-batch per discovered file from a streaming file
-source; ``trigger(availableNow=True)`` drains the backlog and stops
-(the catch-up/batch mode), a processing-time trigger tails the
-directory forever (the cron analog, R26). ``foreachBatch`` carries the
-dual-sink dispatch (JSON + upsert, R16+R17) exactly like the handler
-body.
+source. Every stream here is an availableNow drain (``_drain``): it
+processes the files not yet processed and stops. With a checkpoint a
+re-run lands only the files added since the last run, so a cron that
+runs the CLI's ``watch`` is the scheduled analog (R26).
+``foreachBatch`` carries the dual-sink dispatch (JSON + upsert,
+R16+R17) exactly like the handler body.
 """
 
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
+from .. import staging
 from ..operators.etl import transform_transactions
+from ..registry import query
 from ..schemas import TRANSACTIONS_RAW
+
+#: Drains start with min(session ``spark.sql.shuffle.partitions``,
+#: _STATE_PARTITIONS) partitions. The value at stream start fixes one
+#: state store per partition and stateful operator for the query's
+#: life, and every micro-batch pays a task launch and a checkpoint
+#: commit per store. The fixtures' state is thousands of rows, so more
+#: stores only add that cost: on a 32-partition session, 8 took
+#: `stream_exec_stream_join_watermarked` from 11.06 to 4.60 s (sf0.1);
+#: on the 4-partition ``local[2]`` session, raising 4 to 8 took it from
+#: 5.48 to 7.56 s and `stream_exec_dedup_watermarked` from 2.99 to
+#: 3.62 s. Rows are the same at 4, 8 and 32 partitions (exact
+#: aggregates and joins, one global watermark).
+_STATE_PARTITIONS = 8
+
+
+def _drain(
+    df: DataFrame, sink, *, mode: str = "append", checkpoint: str | None = None
+):
+    """Run the streaming ``df`` with an availableNow trigger until it has
+    processed every available input. ``sink`` is a memory-table name,
+    whose table is returned, or a ``foreachBatch`` function, and then
+    None is returned and the caller reads the target it wrote.
+
+    A drain still running after $SPARK_GRAFT_STREAM_DRAIN_S seconds
+    (default 300, the reference Lambda's timeout; scale-replica runs
+    raise it) is stopped and raises TimeoutError, so a hung stream
+    never falls through to reading a partial sink. Each drain logs one
+    stderr line: micro-batches, input rows, state partitions, time."""
+    spark = df.sparkSession
+    writer = df.writeStream.trigger(availableNow=True).outputMode(mode)
+    if isinstance(sink, str):
+        name, writer = sink, writer.format("memory").queryName(sink)
+    else:
+        name, writer = sink.__qualname__, writer.foreachBatch(sink)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    key = "spark.sql.shuffle.partitions"
+    session_partitions = spark.conf.get(key)
+    cap = int(session_partitions) > _STATE_PARTITIONS
+    t0 = time.perf_counter()
+    if cap:
+        spark.conf.set(key, str(_STATE_PARTITIONS))
+    try:
+        q = writer.start()  # the query keeps the conf it started with
+    finally:
+        if cap:
+            spark.conf.set(key, session_partitions)
+    timeout_s = int(os.environ.get("SPARK_GRAFT_STREAM_DRAIN_S", "300"))
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {name} ({q.id}) did not finish within {timeout_s}s"
+        )
+    progress = q.recentProgress
+    states = [s.numShufflePartitions for p in progress for s in p.stateOperators]
+    staging.log.info(
+        "drain %s batches=%d rows=%d state_partitions=%d %.0f ms",
+        name,
+        len(progress),
+        sum(p.numInputRows for p in progress),
+        max(states, default=0),
+        (time.perf_counter() - t0) * 1e3,
+    )
+    return spark.table(sink) if isinstance(sink, str) else None
 
 
 def read_transaction_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -34,41 +101,53 @@ def read_transaction_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def _landing_batch_fn(json_out: str | None, upsert_path: str | None):
+    """foreachBatch body of the landing stream (R16-R18): MERGE the
+    micro-batch into the upsert target and write it as JSON to its own
+    ``epoch=<id>`` dir in overwrite mode. A re-delivered epoch
+    (foreachBatch is at-least-once) therefore replaces its own JSON and
+    merges to the same target. Module-level so tests can re-deliver a
+    batch directly."""
+    from ..operators.upsert import merge_into_parquet
+
+    def land(batch_df: DataFrame, epoch_id: int) -> None:
+        batch_df.persist()  # one parse of the file for both sinks
+        if upsert_path is not None:
+            merge_into_parquet(batch_df, upsert_path, key="transaction_id")
+        if json_out is not None:
+            batch_df.write.mode("overwrite").json(f"{json_out}/epoch={epoch_id}")
+        batch_df.unpersist()
+
+    return land
+
+
 def run_pipeline_available_now(
     spark: SparkSession,
     in_path: str,
     json_out: str | None = None,
     upsert_path: str | None = None,
     query_name: str = "etl_ingest",
-) -> StreamingQuery:
-    """Drain all pending files through the flagship transform (R3-R14),
-    dispatching sinks per batch (R16-R18). Returns the started query;
-    callers awaitTermination() or processAllAvailable()."""
-    stream = read_transaction_stream(spark, in_path)
-    transformed = transform_transactions(stream)
-
-    def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if upsert_path is not None:
-            from ..operators.upsert import merge_into_parquet
-
-            merge_into_parquet(batch_df, upsert_path, key="transaction_id")
-        if json_out is not None:
-            batch_df.write.mode("append").json(f"{json_out}/epoch={epoch_id}")
-
-    writer = transformed.writeStream.trigger(availableNow=True)
+) -> DataFrame | None:
+    """Drain the pending files of ``in_path`` through the flagship
+    transform (R3-R14). With no sink the rows land in the memory table
+    ``query_name``, which is returned. Otherwise every micro-batch lands
+    in the JSON archive and/or the upsert target (R16-R18) and None is
+    returned. The checkpoint, ``<json_out>/_checkpoint`` or else
+    ``<upsert_path>.checkpoint`` beside the target (``staging.fold``
+    replaces the target dir on every batch), makes a re-run land only
+    the files added since the last one."""
+    transformed = transform_transactions(read_transaction_stream(spark, in_path))
     if json_out is None and upsert_path is None:
-        # test/smoke mode: land micro-batches in an in-memory table
-        return (
-            writer.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .start()
-        )
-    return writer.foreachBatch(sink_batch).outputMode("update").start()
+        return _drain(transformed, query_name)
+    if json_out is not None:
+        checkpoint = os.path.join(json_out, "_checkpoint")
+    else:
+        checkpoint = upsert_path.rstrip("/") + ".checkpoint"
+    return _drain(
+        transformed, _landing_batch_fn(json_out, upsert_path), checkpoint=checkpoint
+    )
 
 
-from .. import staging
-from ..registry import query
 
 
 # Replayed event stages: each writer below lays the events table out as
@@ -178,55 +257,6 @@ def _events_dupes_wm(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     )
 
 
-#: State-store partition count for the availableNow drain fixtures.
-#: ``spark.sql.shuffle.partitions`` at STREAM START pins the number of
-#: state-store instances for the query's lifetime; every micro-batch
-#: then pays per-instance task launch + checkpoint commit. The right
-#: sizing tracks STATE VOLUME / throughput, not the session core count:
-#: these fixtures hold interval-bounded state (thousands of rows), and
-#: 32 near-empty state stores per operator per micro-batch measured as
-#: 2.5-3x pure overhead at sf0.1 (stream-stream join 11.0 s -> 4.0 s at
-#: 8 partitions, identical output). Production deployments size it to
-#: their state volume via this knob; results are partition-count
-#: independent (exact aggregates/joins, global watermarks).
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
-
-
-def _start_state_sized(writer) -> StreamingQuery:
-    """``writer.start()`` with ``spark.sql.shuffle.partitions`` set to
-    STREAM_STATE_PARTITIONS for the start call (the streaming query
-    snapshots the conf at start; the session value is restored
-    immediately, so concurrent batch plans never see it)."""
-    spark = SparkSession.getActiveSession()
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    try:
-        return writer.start()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def _drain(q: StreamingQuery, timeout_s: int | None = None) -> None:
-    """Block until the availableNow drain finishes; a hung stream must
-    FAIL loudly, not fall through to reading a partial sink. The 300 s
-    default guards the sf0.001-0.01 fixtures; scale-replica
-    measurement runs override via $SPARK_GRAFT_STREAM_DRAIN_S (a
-    1000x replica legitimately drains for tens of minutes)."""
-    import os
-
-    if timeout_s is None:
-        timeout_s = int(os.environ.get("SPARK_GRAFT_STREAM_DRAIN_S", "300"))
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {q.name or q.id} did not finish within {timeout_s}s"
-        )
-
-
 @query("stream_file_ingest")
 def stream_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R19 end-to-end as a named query (rows-only: Structured Streaming
@@ -246,10 +276,7 @@ def stream_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         generate_transactions(spark, n, day, seed=100 + i).coalesce(1).write.mode(
             "append"
         ).option("header", True).csv(in_dir)
-    qname = f"ingest_{key}"
-    q = run_pipeline_available_now(spark, in_dir, query_name=qname)
-    _drain(q)
-    return spark.table(qname)
+    return run_pipeline_available_now(spark, in_dir, query_name=f"ingest_{key}")
 
 
 def windowed_event_counts(events_stream: DataFrame) -> DataFrame:
@@ -297,7 +324,6 @@ def stream_exec_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.relational import dsum
 
-
     stream = staging.replay(spark, sf_dir, _events)
     agg = (
         stream.groupBy(F.window("ts", "10 minutes"), "event_type")
@@ -311,15 +337,7 @@ def stream_exec_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     qname = f"streamexec_{staging.fingerprint(sf_dir)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(qname)
+    return _drain(agg, qname, mode="complete")
 
 
 @query(
@@ -361,7 +379,6 @@ def stream_exec_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.relational import dsum
 
-
     stream = staging.replay(spark, sf_dir, _events)
     agg = (
         stream.groupBy(F.session_window("ts", "30 minutes"), "user_id")
@@ -375,15 +392,7 @@ def stream_exec_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     qname = f"streamexec_sess_{staging.fingerprint(sf_dir)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(qname)
+    return _drain(agg, qname, mode="complete")
 
 
 @query(
@@ -414,7 +423,6 @@ def stream_exec_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.relational import dsum
 
-
     stream = staging.replay(spark, sf_dir, _events)
     agg = (
         stream.groupBy(F.window("ts", "10 minutes", "5 minutes"))
@@ -427,15 +435,7 @@ def stream_exec_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     qname = f"streamexec_slide_{staging.fingerprint(sf_dir)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(qname)
+    return _drain(agg, qname, mode="complete")
 
 
 def _latest_per_user(df):
@@ -540,11 +540,7 @@ def stream_exec_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge_batch = _latest_merge_batch_fn(target_dir)
 
     stream = staging.replay(spark, sf_dir, _events)
-    q = _start_state_sized(
-        stream.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-    )
-    _drain(q)
+    _drain(stream, merge_batch)
     return _sink(spark, target_dir).select(
         "user_id", "last_ts", "last_type", "last_value"
     )
@@ -576,15 +572,7 @@ def stream_exec_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = staging.replay(spark, sf_dir, _events_with_dupes)
     deduped = stream.dropDuplicates(["event_id"])
     qname = f"streamexec_dedup_{staging.fingerprint(sf_dir)}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(qname).select(*_DEDUP_COLS)
+    return _drain(deduped, qname).select(*_DEDUP_COLS)
 
 
 @query(
@@ -639,15 +627,7 @@ def stream_exec_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     deduped = stream.dropDuplicatesWithinWatermark(["event_id"])
     qname = f"streamexec_dedup_wm_{staging.fingerprint(sf_dir)}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(qname).select(*_DEDUP_COLS)
+    return _drain(deduped, qname).select(*_DEDUP_COLS)
 
 
 def _dual_sink_batch_fn(json_dir: str, target_dir: str):
@@ -661,8 +641,6 @@ def _dual_sink_batch_fn(json_dir: str, target_dir: str):
     of appending duplicates, and the merge side's keep-latest union is
     idempotent by construction (see _latest_merge_batch_fn).
     Module-level so tests can re-deliver a batch directly."""
-    import os
-
     from pyspark.sql import functions as F
 
     merge_batch = _latest_merge_batch_fn(target_dir)
@@ -700,7 +678,6 @@ def stream_exec_upsert_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch in either sink flips the hash). Idempotent-replay semantics
     are pytest-verified by re-delivering a batch through the same
     foreachBatch body (tests/test_streaming.py)."""
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -712,11 +689,7 @@ def stream_exec_upsert_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(json_dir)
 
     stream = staging.replay(spark, sf_dir, _events)
-    q = _start_state_sized(
-        stream.writeStream.foreachBatch(_dual_sink_batch_fn(json_dir, target_dir))
-        .trigger(availableNow=True)
-    )
-    _drain(q)
+    _drain(stream, _dual_sink_batch_fn(json_dir, target_dir))
     # the stream drain necessarily runs at build time (the operator IS
     # "execute the stream, read back the sinks"), but the archive row
     # count joins relationally — a broadcast 1-row aggregate over the
@@ -752,7 +725,6 @@ def stream_exec_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream side never shuffles for the join when the dim broadcasts."""
     from ..catalog import load_table
 
-
     dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     stream = (
         staging.replay(spark, sf_dir, _events)
@@ -762,15 +734,7 @@ def stream_exec_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value", "c_mktsegment"
     )
     qname = f"streamexec_staticjoin_{staging.fingerprint(sf_dir)}"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(qname)
+    return _drain(enriched, qname)
 
 
 @query(
@@ -836,16 +800,8 @@ def stream_exec_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         GroupStateTimeout.NoTimeout,
     )
     qname = f"streamexec_state_{staging.fingerprint(sf_dir)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
     return (
-        spark.table(qname)
+        _drain(out, qname, mode="update")
         .groupBy("user_id")
         .agg(F.max(F.struct("n_events", "total_cents")).alias("m"))
         .select(
@@ -853,6 +809,43 @@ def stream_exec_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("m.n_events").alias("n_events"),
             F.col("m.total_cents").alias("total_cents"),
         )
+    )
+
+
+def _interval_join(
+    spark: SparkSession, sf_dir: str, watermarked: bool, how: str = "inner"
+) -> DataFrame:
+    """The replayed events as two streams, facts (even ``event_id``) and
+    candidates (odd), joined on user where the candidate's ts lies in
+    the 6 hours up to the fact's: ``evt_id``/``evt_ts``/``evt_user``
+    and ``prior_id``/``prior_ts``/``prior_user``. ``watermarked``
+    replays ``_events_timesliced`` and watermarks both sides at the
+    6-hour interval; otherwise the sides replay ``_events`` unwatermarked."""
+    from pyspark.sql import functions as F
+
+    def side(parity: int, prefix: str) -> DataFrame:
+        ev = staging.replay(
+            spark, sf_dir, _events_timesliced if watermarked else _events
+        )
+        ts = F.col("ts")
+        if watermarked:
+            # withWatermark rejects TIMESTAMP_NTZ; the session TZ is
+            # pinned UTC so the cast preserves the instant.
+            ts = ts.cast("timestamp")
+        df = ev.filter(F.col("event_id") % 2 == parity).select(
+            F.col("event_id").alias(f"{prefix}_id"),
+            ts.alias(f"{prefix}_ts"),
+            F.col("user_id").alias(f"{prefix}_user"),
+        )
+        return df.withWatermark(f"{prefix}_ts", "6 hours") if watermarked else df
+
+    return side(0, "evt").join(
+        side(1, "prior"),
+        F.expr(
+            "evt_user = prior_user AND "
+            "prior_ts BETWEEN evt_ts - INTERVAL 6 HOURS AND evt_ts"
+        ),
+        how,
     )
 
 
@@ -891,43 +884,9 @@ def stream_exec_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the production form carries watermarks on both sides
     sized to the interval bound, making join state proportional to
     the interval window, not the stream history."""
-    from pyspark.sql import functions as F
-
-
-    def side(parity: int, prefix: str) -> DataFrame:
-        return (
-            staging.replay(spark, sf_dir, _events)
-            .filter(F.col("event_id") % 2 == parity)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-                F.col("user_id").alias(f"{prefix}_user"),
-            )
-        )
-
-    facts = side(0, "evt")
-    cands = side(1, "prior")
-    joined = facts.join(
-        cands,
-        F.expr(
-            "evt_user = prior_user AND "
-            "prior_ts BETWEEN evt_ts - INTERVAL 6 HOURS AND evt_ts"
-        ),
-    ).select(
-        F.col("evt_id"),
-        F.col("prior_id"),
-        F.col("evt_user").alias("user_id"),
-    )
+    joined = _interval_join(spark, sf_dir, watermarked=False)
     qname = f"streamexec_ssjoin_{staging.fingerprint(sf_dir)}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(qname)
+    return _drain(joined.selectExpr("evt_id", "prior_id", "evt_user AS user_id"), qname)
 
 
 @query(
@@ -979,45 +938,9 @@ def stream_exec_stream_join_watermarked(spark: SparkSession, sf_dir: str) -> Dat
     Scale shape: per-side state after this query's steady state is the
     6 h interval window of rows, independent of stream length; the
     memory-sink drain is the test fixture, not the operator."""
-    from pyspark.sql import functions as F
-
-
-    def side(parity: int, prefix: str) -> DataFrame:
-        return (
-            staging.replay(spark, sf_dir, _events_timesliced)
-            .filter(F.col("event_id") % 2 == parity)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                # withWatermark rejects TIMESTAMP_NTZ; the session TZ
-                # is pinned UTC so the cast preserves the instant.
-                F.col("ts").cast("timestamp").alias(f"{prefix}_ts"),
-                F.col("user_id").alias(f"{prefix}_user"),
-            )
-            .withWatermark(f"{prefix}_ts", "6 hours")
-        )
-
-    facts = side(0, "evt")
-    cands = side(1, "prior")
-    joined = facts.join(
-        cands,
-        F.expr(
-            "evt_user = prior_user AND "
-            "prior_ts BETWEEN evt_ts - INTERVAL 6 HOURS AND evt_ts"
-        ),
-    ).select(
-        F.col("evt_id"),
-        F.col("prior_id"),
-        F.col("evt_user").alias("user_id"),
-    )
+    joined = _interval_join(spark, sf_dir, watermarked=True)
     qname = f"streamexec_ssjoin_wm_{staging.fingerprint(sf_dir)}"
-    q = _start_state_sized(
-        joined.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    _drain(q)
-    return spark.table(qname)
+    return _drain(joined.selectExpr("evt_id", "prior_id", "evt_user AS user_id"), qname)
 
 
 @query(
@@ -1085,45 +1008,9 @@ def stream_exec_stream_join_outer_watermarked(
     State bound at 100 TB: identical to the inner form (interval
     window per side) plus the unmatched-fact buffer, also
     watermark-bounded."""
-    from pyspark.sql import functions as F
-
-
-    def side(parity: int, prefix: str) -> DataFrame:
-        return (
-            staging.replay(spark, sf_dir, _events_timesliced)
-            .filter(F.col("event_id") % 2 == parity)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").cast("timestamp").alias(f"{prefix}_ts"),
-                F.col("user_id").alias(f"{prefix}_user"),
-            )
-            .withWatermark(f"{prefix}_ts", "6 hours")
-        )
-
-    facts = side(0, "evt")
-    cands = side(1, "prior")
-    joined = facts.join(
-        cands,
-        F.expr(
-            "evt_user = prior_user AND "
-            "prior_ts BETWEEN evt_ts - INTERVAL 6 HOURS AND evt_ts"
-        ),
-        "leftOuter",
-    ).select(
-        F.col("evt_id"),
-        F.col("prior_id"),
-        F.col("evt_user").alias("user_id"),
-    )
+    joined = _interval_join(spark, sf_dir, watermarked=True, how="leftOuter")
     qname = f"streamexec_ssjoin_owm_{staging.fingerprint(sf_dir)}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(qname)
+    return _drain(joined.selectExpr("evt_id", "prior_id", "evt_user AS user_id"), qname)
 
 
 from ..operators.sketches import THETA_ORACLE as _THETA_ORACLE  # noqa: E402
@@ -1192,11 +1079,7 @@ def stream_exec_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         staging.fold(batch.sparkSession, cur, step)
 
     stream = staging.replay(spark, sf_dir, _events)
-    q = _start_state_sized(
-        stream.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-    )
-    _drain(q)
+    _drain(stream, merge_batch)
 
     state = _sink(spark, cur)
     sk = state.agg(
@@ -1330,11 +1213,7 @@ def stream_exec_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge_batch = _keyed_merge_batch_fn(target_dir, _cdc_normalize_batch)
 
     stream = staging.replay(spark, sf_dir, _events)
-    q = _start_state_sized(
-        stream.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-    )
-    _drain(q)
+    _drain(stream, merge_batch)
     from pyspark.sql import functions as F
 
     return (
@@ -1451,11 +1330,7 @@ def stream_exec_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         staging.fold(batch.sparkSession, cur, lambda prev: step(batch, prev))
 
     stream = staging.replay(spark, sf_dir, _events)
-    q = _start_state_sized(
-        stream.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-    )
-    _drain(q)
+    _drain(stream, merge_batch)
     return (
         _sink(spark, cur)
         .withColumn("rnk", F.row_number().over(w))
@@ -1466,6 +1341,56 @@ def stream_exec_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             F.round("value", 2).alias("value"),
         )
+    )
+
+
+def _best_per_fact(batch_df: DataFrame) -> DataFrame:
+    """A micro-batch of interval-join pairs reduced to each fact's latest
+    candidate, in the keyed-merge column protocol: key ``user_id`` =
+    the fact id, winner order (``last_ts``, ``event_id``) = (prior_ts,
+    prior_id); ``evt_user``/``evt_ts`` ride as payload."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    w = W.partitionBy("user_id").orderBy(
+        F.col("last_ts").desc(), F.col("event_id").desc()
+    )
+    return (
+        batch_df.select(
+            F.col("evt_id").alias("user_id"),
+            F.col("prior_ts").alias("last_ts"),
+            F.col("prior_id").alias("event_id"),
+            "evt_user",
+            "evt_ts",
+        )
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _asof_join(spark: SparkSession, sf_dir: str, watermarked: bool) -> DataFrame:
+    """The streaming as-of join: ``_interval_join`` drained through the
+    keyed-merge sink of ``_best_per_fact``, read back as facts with
+    their latest candidate."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    name = "streamasofwm" if watermarked else "streamasof"
+    target_dir = staging.scratch_dir(f"{name}_{staging.fingerprint(sf_dir)}")
+    shutil.rmtree(target_dir, ignore_errors=True)
+    joined = _interval_join(spark, sf_dir, watermarked).select(
+        "evt_id", "evt_ts", "evt_user", "prior_id", "prior_ts"
+    )
+    _drain(joined, _keyed_merge_batch_fn(target_dir, _best_per_fact))
+    return _sink(spark, target_dir).select(
+        F.col("user_id").alias("evt_id"),
+        F.col("evt_user").alias("user_id"),
+        # the events table's NTZ type (a no-op on the unwatermarked side)
+        F.col("evt_ts").cast("timestamp_ntz").alias("evt_ts"),
+        F.col("event_id").alias("prior_id"),
+        F.col("last_ts").cast("timestamp_ntz").alias("prior_ts"),
     )
 
 
@@ -1512,66 +1437,7 @@ def stream_exec_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Inner semantics (facts with no candidate in window are absent) —
     the left-outer protocol under streaming lives with
     `stream_exec_stream_join_outer_watermarked`."""
-    import shutil
-
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    target_dir = staging.scratch_dir(f"streamasof_{staging.fingerprint(sf_dir)}")
-    shutil.rmtree(target_dir, ignore_errors=True)
-
-    def best_per_fact(batch_df):
-        # normalize to the keyed-merge column protocol: key=user_id
-        # (the FACT id here), winner order = (last_ts, event_id) =
-        # (prior_ts, prior_id); evt_user/evt_ts ride as payload.
-        w = W.partitionBy("user_id").orderBy(
-            F.col("last_ts").desc(), F.col("event_id").desc()
-        )
-        return (
-            batch_df.select(
-                F.col("evt_id").alias("user_id"),
-                F.col("prior_ts").alias("last_ts"),
-                F.col("prior_id").alias("event_id"),
-                "evt_user",
-                "evt_ts",
-            )
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
-    merge_batch = _keyed_merge_batch_fn(target_dir, best_per_fact)
-
-    def side(parity: int, prefix: str) -> DataFrame:
-        return (
-            staging.replay(spark, sf_dir, _events)
-            .filter(F.col("event_id") % 2 == parity)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-                F.col("user_id").alias(f"{prefix}_user"),
-            )
-        )
-
-    joined = side(0, "evt").join(
-        side(1, "prior"),
-        F.expr(
-            "evt_user = prior_user AND "
-            "prior_ts BETWEEN evt_ts - INTERVAL 6 HOURS AND evt_ts"
-        ),
-    ).select("evt_id", "evt_ts", "evt_user", "prior_id", "prior_ts")
-    q = _start_state_sized(
-        joined.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-    )
-    _drain(q)
-    return _sink(spark, target_dir).select(
-        F.col("user_id").alias("evt_id"),
-        F.col("evt_user").alias("user_id"),
-        "evt_ts",
-        F.col("event_id").alias("prior_id"),
-        F.col("last_ts").alias("prior_ts"),
-    )
+    return _asof_join(spark, sf_dir, watermarked=False)
 
 
 @query(
@@ -1636,66 +1502,4 @@ def stream_exec_asof_join_watermarked(
     100 TB stream; on replica scale runs the RocksDB state store
     carries the in-batch join state (SPARK_GRAFT_STATE_STORE=rocksdb,
     the measured r11 boundary)."""
-    import shutil
-
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    target_dir = staging.scratch_dir(f"streamasofwm_{staging.fingerprint(sf_dir)}")
-    shutil.rmtree(target_dir, ignore_errors=True)
-
-    def best_per_fact(batch_df):
-        # keyed-merge column protocol: key=user_id (the FACT id),
-        # winner order = (last_ts, event_id) = (prior_ts, prior_id).
-        w = W.partitionBy("user_id").orderBy(
-            F.col("last_ts").desc(), F.col("event_id").desc()
-        )
-        return (
-            batch_df.select(
-                F.col("evt_id").alias("user_id"),
-                F.col("prior_ts").alias("last_ts"),
-                F.col("prior_id").alias("event_id"),
-                "evt_user",
-                "evt_ts",
-            )
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
-    merge_batch = _keyed_merge_batch_fn(target_dir, best_per_fact)
-
-    def side(parity: int, prefix: str) -> DataFrame:
-        return (
-            staging.replay(spark, sf_dir, _events_timesliced)
-            .filter(F.col("event_id") % 2 == parity)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                # withWatermark rejects TIMESTAMP_NTZ; the session TZ
-                # is pinned UTC so the cast preserves the instant.
-                F.col("ts").cast("timestamp").alias(f"{prefix}_ts"),
-                F.col("user_id").alias(f"{prefix}_user"),
-            )
-            .withWatermark(f"{prefix}_ts", "6 hours")
-        )
-
-    joined = side(0, "evt").join(
-        side(1, "prior"),
-        F.expr(
-            "evt_user = prior_user AND "
-            "prior_ts BETWEEN evt_ts - INTERVAL 6 HOURS AND evt_ts"
-        ),
-    ).select("evt_id", "evt_ts", "evt_user", "prior_id", "prior_ts")
-    q = _start_state_sized(
-        joined.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-    )
-    _drain(q)
-    return _sink(spark, target_dir).select(
-        F.col("user_id").alias("evt_id"),
-        F.col("evt_user").alias("user_id"),
-        # back to the events table's NTZ type for oracle comparability
-        F.col("evt_ts").cast("timestamp_ntz").alias("evt_ts"),
-        F.col("event_id").alias("prior_id"),
-        F.col("last_ts").cast("timestamp_ntz").alias("prior_ts"),
-    )
+    return _asof_join(spark, sf_dir, watermarked=True)

@@ -44,3 +44,13 @@ def test_explain_named_query(spark, sf_dir, capsys):
 def test_explain_unknown_query(spark, capsys):
     assert main(["explain", "no_such_query"]) == 2
     assert "unknown query" in capsys.readouterr().out
+
+
+def test_watch_rerun_lands_only_new_files(spark, tmp_path, capsys):
+    raw = str(tmp_path / "raw")
+    out = str(tmp_path / "processed")
+    assert main(["generate", "--rows", "25", "--out", raw]) == 0
+    for _ in range(2):
+        assert main(["watch", "--src", raw, "--out", out]) == 0
+        assert spark.read.json(out).count() == 25
+    assert "drained pending files" in capsys.readouterr().out

@@ -3,6 +3,7 @@ file-source ingest (R19 analog), per-file micro-batching, and
 watermark late-data semantics."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,9 +26,7 @@ def test_file_ingest_available_now(spark, tmp_path):
         "append"
     ).option("header", True).csv(in_dir)
 
-    q = run_pipeline_available_now(spark, in_dir, query_name="t_ingest")
-    q.awaitTermination(120)
-    out = spark.table("t_ingest")
+    out = run_pipeline_available_now(spark, in_dir, query_name="t_ingest")
     assert out.count() == 75
     # transform applied inside the stream
     assert "amount_category" in out.columns
@@ -41,10 +40,121 @@ def test_ingest_json_sink(spark, tmp_path):
     generate_transactions(spark, 20, seed=3).coalesce(1).write.mode("append").option(
         "header", True
     ).csv(in_dir)
-    q = run_pipeline_available_now(spark, in_dir, json_out=out_dir, query_name="t_js")
-    q.awaitTermination(120)
+    run_pipeline_available_now(spark, in_dir, json_out=out_dir, query_name="t_js")
     written = spark.read.json(f"{out_dir}/epoch=*")
     assert written.count() == 20
+
+
+def _upload(spark, in_dir, n, day):
+    """One "upload": a CSV file of ``n`` transactions dated March ``day``
+    (transaction ids are unique within a date)."""
+    generate_transactions(spark, n, dt.date(2024, 3, day), seed=day).coalesce(
+        1
+    ).write.mode("append").option("header", True).csv(in_dir)
+
+
+def test_rerun_lands_only_new_files(spark, tmp_path):
+    """The checkpoint makes a re-run over an unchanged dir land 0 rows
+    in either sink, and a re-run after a new upload land only its rows."""
+    in_dir = str(tmp_path / "raw")
+    out_dir = str(tmp_path / "processed")
+    target = str(tmp_path / "upsert")
+    _upload(spark, in_dir, 20, day=14)
+
+    def drain():
+        assert run_pipeline_available_now(spark, in_dir, out_dir, target) is None
+        return spark.read.json(out_dir).count(), spark.read.parquet(target).count()
+
+    assert drain() == (20, 20)
+    assert drain() == (20, 20)
+    _upload(spark, in_dir, 15, day=15)
+    assert drain() == (35, 35)
+    assert spark.read.json(f"{out_dir}/epoch=1").count() == 15
+
+
+def test_upsert_only_checkpoint_sits_beside_the_target(spark, tmp_path):
+    in_dir = str(tmp_path / "raw")
+    target = str(tmp_path / "upsert")
+    _upload(spark, in_dir, 20, day=14)
+    for _ in range(2):
+        run_pipeline_available_now(spark, in_dir, upsert_path=target)
+        assert spark.read.parquet(target).count() == 20
+    assert os.path.isdir(target + ".checkpoint")
+    assert not os.path.exists(os.path.join(target, "_checkpoint"))
+
+
+def test_landing_batch_replay_is_idempotent(spark, tmp_path):
+    """foreachBatch is at-least-once: re-delivering an epoch through the
+    landing body leaves the JSON archive and the upsert target as they
+    were."""
+    from aws_etl_pipeline_spark.operators.etl import transform_transactions
+    from aws_etl_pipeline_spark.streaming.ingest import _landing_batch_fn
+
+    json_dir = str(tmp_path / "json")
+    target = str(tmp_path / "upsert")
+    land = _landing_batch_fn(json_dir, target)
+    # materialized, so both deliveries carry one processed_timestamp
+    batch = transform_transactions(
+        generate_transactions(spark, 30, dt.date(2024, 3, 14), seed=6)
+    ).localCheckpoint()
+
+    land(batch, 0)
+    json_once = spark.read.json(json_dir).count()
+    target_once = sorted(map(tuple, spark.read.parquet(target).collect()))
+    assert json_once == len(target_once) == 30
+    land(batch, 0)
+    assert spark.read.json(json_dir).count() == json_once
+    assert sorted(map(tuple, spark.read.parquet(target).collect())) == target_once
+
+
+@pytest.mark.parametrize("session_partitions, state_partitions", [(16, 8), (4, 4)])
+def test_drain_starts_with_at_most_8_state_partitions(
+    spark, tmp_path, caplog, session_partitions, state_partitions
+):
+    """A stateful drain runs min(session shuffle partitions, 8) state
+    partitions, and the session keeps its own value."""
+    import logging
+
+    from aws_etl_pipeline_spark.streaming.ingest import _drain
+
+    src = str(tmp_path / "src")
+    spark.range(100).union(spark.range(50)).write.parquet(src)
+    deduped = spark.readStream.schema("id long").parquet(src).dropDuplicates(["id"])
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(session_partitions))
+    try:
+        with caplog.at_level(logging.INFO):
+            out = _drain(deduped, f"t_parts_{session_partitions}")
+        assert spark.conf.get(key) == str(session_partitions)
+    finally:
+        spark.conf.set(key, before)
+    assert out.count() == 100
+    (line,) = [
+        r.getMessage()
+        for r in caplog.records
+        if r.getMessage().startswith(f"drain t_parts_{session_partitions} ")
+    ]
+    assert f" rows=150 state_partitions={state_partitions} " in line
+
+
+def test_drain_guard_stops_a_hung_stream(spark, tmp_path, monkeypatch):
+    """A drain past $SPARK_GRAFT_STREAM_DRAIN_S raises TimeoutError naming
+    the query and leaves no stream running."""
+    import time
+
+    from aws_etl_pipeline_spark.streaming.ingest import _drain
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_DRAIN_S", "1")
+    src = str(tmp_path / "src")
+    spark.range(5).write.parquet(src)
+
+    def slow_sink(batch_df, epoch_id):
+        time.sleep(4)
+
+    with pytest.raises(TimeoutError, match="slow_sink.*within 1s"):
+        _drain(spark.readStream.schema("id long").parquet(src), slow_sink)
+    assert spark.streams.active == []
 
 
 def test_watermark_drops_late_rows(spark):
