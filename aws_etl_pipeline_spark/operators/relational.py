@@ -588,10 +588,16 @@ FROM events GROUP BY event_type
 """,
 )
 def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregation (expand + two-phase aggregate in Spark)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"),
+    """Two exact distinct counts per group. The (event_type, user_id)
+    pairs are deduplicated once; users are then counted over them and
+    the buckets with the one remaining distinct aggregate. Two distinct
+    aggregates in one ``agg`` make Spark expand every row once per
+    distinct group, and its rewrite orders those groups by a hash that
+    includes expression ids, so the plan and its codegen classes
+    differed from one build to the next."""
+    ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
+    return ev.distinct().groupBy("event_type").agg(
+        F.count("user_id").alias("n_users"),
         F.countDistinct(F.col("user_id") % 10).alias("n_user_buckets"),
     )
 

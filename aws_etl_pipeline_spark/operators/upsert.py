@@ -6,8 +6,13 @@ processed_timestamp`` (`lambda_function.py:226-235`). The Spark-native
 equivalent is a set-based MERGE: with Delta/Iceberg on the cluster
 that's ``MERGE INTO`` (one shuffle, ACID); this environment has no
 lakehouse jars, so ``merge_upsert`` implements the same semantics as a
-pure DataFrame plan (full outer join on the key + coalesce), and
-``merge_into_parquet`` lands it on a parquet target through
+pure DataFrame plan. A full-row replace (every target column comes
+from the source and is updated on a match, the R17 landing) is a left
+anti join of the target against the batch's keys plus the batch: the
+keys are broadcast under Spark's own size rule and the target is
+never shuffled. A partial update (the reference's ``DO UPDATE SET``
+column list) is a full outer join on the key with a per-column
+choice. ``merge_into_parquet`` lands either on a parquet target through
 ``staging.fold``: the merged generation is written beside the target
 and swapped in, so a failed landing leaves the previous rows in place.
 Replay of the same batch is idempotent — verified in
@@ -36,6 +41,9 @@ except ImportError:
     pass
 
 
+_TARGET_ROW = "__merge_target_row"
+
+
 def merge_upsert(
     target: DataFrame,
     source: DataFrame,
@@ -45,11 +53,23 @@ def merge_upsert(
 ) -> DataFrame:
     """MERGE semantics of R17: matched rows take ``update_cols`` from the
     source (all source columns by default), unmatched source rows are
-    inserted whole, unmatched target rows are kept.
+    inserted whole, unmatched target rows are kept. The key must be
+    unique per side (it is the PK, `lambda_function.py:199`).
 
-    One full-outer shuffle join on the key — the plan a MERGE INTO
-    compiles to. The key must be unique per side (it is the PK,
-    `lambda_function.py:199`).
+    Full-row replace — every target column is a source column and
+    every non-key target column is in ``update_cols`` — is a matched
+    target row dropped and its source row inserted:
+    ``target LEFT ANTI JOIN source keys UNION source``. The keys are
+    broadcast when they fit ``spark.sql.autoBroadcastJoinThreshold``
+    (above it Spark plans a sort-merge anti join, same rows), so the
+    target is read once and not shuffled, and the plan builds in a
+    few JVM calls. NULL keys never match, so a NULL-key source row is
+    inserted and a NULL-key target row kept, as in the outer join;
+    duplicate source keys each land, as in the outer join.
+
+    A partial update (a target column the source lacks, or one left
+    out of ``update_cols``) is one full-outer shuffle join on the key
+    with a per-column choice — the plan a MERGE INTO compiles to.
 
     Match is decided on key presence, not value presence: a matched
     source row carrying an explicit NULL in an update column *does*
@@ -67,19 +87,25 @@ def merge_upsert(
     row's own content.
     """
     cols = target.columns
-    update_cols = update_cols or tuple(c for c in source.columns if c != key)
+    source_cols = source.columns
+    update_cols = update_cols or tuple(c for c in source_cols if c != key)
     if best_effort:
         source = _dedup_last_writer(source.filter(F.col(key).isNotNull()), key)
-    t = target.alias("t")
+    if set(cols) <= set(source_cols) and set(cols) - {key} <= set(update_cols):
+        kept = target.join(source.select(key), key, "left_anti")
+        return kept.unionByName(source.select(*cols))
+    # a target row is told apart from a missing one by a flag, not by
+    # its key, so a NULL-key target row is kept rather than nulled
+    t = target.select("*", F.lit(True).alias(_TARGET_ROW)).alias("t")
     s = source.alias("s")
     joined = t.join(s, F.col(f"t.{key}") == F.col(f"s.{key}"), "full_outer")
-    inserted = F.col(f"t.{key}").isNull()
+    inserted = F.col(f"t.{_TARGET_ROW}").isNull()
     matched = F.col(f"s.{key}").isNotNull() & F.col(f"t.{key}").isNotNull()
     out_cols = []
     for c in cols:
         if c == key:
             out_cols.append(F.coalesce(F.col(f"t.{key}"), F.col(f"s.{key}")).alias(key))
-        elif c in source.columns:
+        elif c in source_cols:
             sc, tc = F.col(f"s.{c}"), F.col(f"t.{c}")
             if c in update_cols:
                 expr = F.when(inserted | matched, sc).otherwise(tc)

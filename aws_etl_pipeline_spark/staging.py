@@ -18,7 +18,9 @@ scan tables. The invariant every stage keeps:
   once at build time. A hit reads with that schema, so serving a
   stage launches no Spark job (schema inference costs one job,
   ~100 ms on ``local[2]``) and a partition column keeps the type it
-  was inferred with when built.
+  was inferred with when built: a stage's writer may partition by
+  directory, and only a read-back knows the types parquet infers from
+  the directory names.
 
 A target is a parquet directory that a sequence of writes replaces
 whole: an upsert sink, a streaming merge target, sketch state. ``fold``
@@ -27,6 +29,9 @@ is the one way to rewrite it, and the invariant every target keeps:
 - One writer per target. ``fold`` reads the current generation,
   writes the next one through ``publish`` and swaps it in, so a write
   that fails leaves the previous generation in place.
+- A fold writes one flat frame, so its marker schema is that frame's
+  schema with every field nullable, which is how parquet reads it
+  back. No job reads the new generation back.
 - A target is complete iff it holds the marker, or it is a directory
   that existed before any ``fold`` (written by plain Spark, or copied
   without regard to the marker); the latter is read with schema
@@ -58,7 +63,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 log = logging.getLogger(__name__)
 if not log.handlers:
@@ -153,6 +158,20 @@ def _parquet_schema(path: str) -> dict | None:
     return SparkSession.active().read.parquet(path).schema.jsonValue()
 
 
+def _as_read(t: DataType) -> DataType:
+    """``t`` as parquet reads it back: every field, element and map
+    value nullable."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _as_read(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_read(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_read(t.keyType), _as_read(t.valueType), True)
+    return t
+
+
 def _stamp(dest: str) -> tuple[int, int] | None:
     """Identity of the marker at ``dest``, None when there is none."""
     try:
@@ -166,16 +185,22 @@ def publish(dest: str, write) -> None:
     """Build ``dest`` with ``write(tmp)`` into a private tmp dir, mark
     it complete and rename it into place. A dest left by an earlier
     build is replaced; if a concurrent writer publishes ``dest`` after
-    this call started, that copy is kept and this one discarded."""
+    this call started, that copy is kept and this one discarded.
+
+    ``write`` may return the schema of the one flat parquet frame it
+    wrote; the marker records it as parquet reads it back. When it
+    returns None the schema is read back from ``tmp``."""
     seen = _stamp(dest)
     tmp = f"{dest}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     old = f"{tmp}-old"
     os.makedirs(os.path.dirname(dest), exist_ok=True)
     try:
-        write(tmp)
+        written = write(tmp)
         marker = {
             "fingerprint": dest.rsplit("_", 1)[-1],
-            "schema": _parquet_schema(tmp),
+            "schema": (
+                _parquet_schema(tmp) if written is None else _as_read(written).jsonValue()
+            ),
         }
         with open(os.path.join(tmp, MARKER), "w") as fh:
             json.dump(marker, fh)
@@ -243,7 +268,13 @@ def fold(spark: SparkSession, path: str, step) -> None:
     is written and marked beside the target and then swapped in, so it
     may read the previous one and a failed write changes nothing."""
     previous = current(spark, path)  # before publish notes the marker
-    publish(path, lambda tmp: step(previous).write.parquet(tmp))
+
+    def write(tmp: str) -> StructType:
+        df = step(previous)
+        df.write.parquet(tmp)
+        return df.schema
+
+    publish(path, write)
 
 
 def spread(build):

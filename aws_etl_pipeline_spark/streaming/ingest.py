@@ -25,26 +25,48 @@ from ..registry import query
 from ..schemas import TRANSACTIONS_RAW
 
 #: Drains start with min(session ``spark.sql.shuffle.partitions``,
-#: _STATE_PARTITIONS) partitions. The value at stream start fixes one
-#: state store per partition and stateful operator for the query's
-#: life, and every micro-batch pays a task launch and a checkpoint
-#: commit per store. The fixtures' state is thousands of rows, so more
-#: stores only add that cost: on a 32-partition session, 8 took
-#: `stream_exec_stream_join_watermarked` from 11.06 to 4.60 s (sf0.1);
-#: on the 4-partition ``local[2]`` session, raising 4 to 8 took it from
-#: 5.48 to 7.56 s and `stream_exec_dedup_watermarked` from 2.99 to
-#: 3.62 s. Rows are the same at 4, 8 and 32 partitions (exact
-#: aggregates and joins, one global watermark).
+#: ``defaultParallelism``, _STATE_PARTITIONS) state partitions. The
+#: value at stream start fixes one state store per partition and
+#: stateful operator for the query's life, and every micro-batch pays a
+#: task launch and a checkpoint commit per store; stores beyond the
+#: cores only queue behind each other. The fixtures' state is thousands
+#: of rows, so more stores only add that cost: on a 32-partition
+#: session, 8 took `stream_exec_stream_join_watermarked` from 11.06 to
+#: 4.60 s (sf0.1); on the 4-partition ``local[2]`` session of a 4-vCPU
+#: host (sf0.1, median of 5 warm runs), 2 instead of 4 took it from
+#: 5.55 to 4.85 s, `stream_exec_tumbling` from 2.33 to 2.14 s and
+#: `stream_exec_dedup_watermarked` (with its no-data batch skipped)
+#: from 3.95 to 2.90 s. Rows are the same at every count (exact
+#: aggregates and joins, one global watermark). RocksDB with changelog
+#: checkpointing was slower than the in-heap store on every one of
+#: these drains (dedup 3.95 vs 2.90 s, stream join 7.59 vs 4.85 s).
 _STATE_PARTITIONS = 8
 
 
+def _state_partitions(session_partitions: int, cores: int) -> int:
+    """State partitions of a drain started on a session with
+    ``session_partitions`` shuffle partitions and ``cores`` cores."""
+    return min(session_partitions, cores, _STATE_PARTITIONS)
+
+
 def _drain(
-    df: DataFrame, sink, *, mode: str = "append", checkpoint: str | None = None
+    df: DataFrame,
+    sink,
+    *,
+    mode: str = "append",
+    checkpoint: str | None = None,
+    skip_no_data_batch: bool = False,
 ):
     """Run the streaming ``df`` with an availableNow trigger until it has
     processed every available input. ``sink`` is a memory-table name,
     whose table is returned, or a ``foreachBatch`` function, and then
     None is returned and the caller reads the target it wrote.
+
+    ``skip_no_data_batch=True`` runs no micro-batch without input, so
+    the drain ends after the batch of its last file. Such a batch only
+    advances the watermark; pass it only where every stateful operator
+    emits a row on arrival (``dropDuplicates*``), so that batch could
+    only evict state and never changes the output.
 
     A drain still running after $SPARK_GRAFT_STREAM_DRAIN_S seconds
     (default 300, the reference Lambda's timeout; scale-replica runs
@@ -59,17 +81,25 @@ def _drain(
         name, writer = sink.__qualname__, writer.foreachBatch(sink)
     if checkpoint is not None:
         writer = writer.option("checkpointLocation", checkpoint)
-    key = "spark.sql.shuffle.partitions"
-    session_partitions = spark.conf.get(key)
-    cap = int(session_partitions) > _STATE_PARTITIONS
+    # the query keeps the confs it started with
+    confs = {}
+    session_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts = _state_partitions(
+        session_partitions, spark.sparkContext.defaultParallelism
+    )
+    if parts < session_partitions:
+        confs["spark.sql.shuffle.partitions"] = str(parts)
+    if skip_no_data_batch:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    saved = {k: spark.conf.get(k) for k in confs}
     t0 = time.perf_counter()
-    if cap:
-        spark.conf.set(key, str(_STATE_PARTITIONS))
     try:
-        q = writer.start()  # the query keeps the conf it started with
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        q = writer.start()
     finally:
-        if cap:
-            spark.conf.set(key, session_partitions)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
     timeout_s = int(os.environ.get("SPARK_GRAFT_STREAM_DRAIN_S", "300"))
     if not q.awaitTermination(timeout_s):
         q.stop()
@@ -572,7 +602,7 @@ def stream_exec_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = staging.replay(spark, sf_dir, _events_with_dupes)
     deduped = stream.dropDuplicates(["event_id"])
     qname = f"streamexec_dedup_{staging.fingerprint(sf_dir)}"
-    return _drain(deduped, qname).select(*_DEDUP_COLS)
+    return _drain(deduped, qname, skip_no_data_batch=True).select(*_DEDUP_COLS)
 
 
 @query(
@@ -627,7 +657,7 @@ def stream_exec_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     deduped = stream.dropDuplicatesWithinWatermark(["event_id"])
     qname = f"streamexec_dedup_wm_{staging.fingerprint(sf_dir)}"
-    return _drain(deduped, qname).select(*_DEDUP_COLS)
+    return _drain(deduped, qname, skip_no_data_batch=True).select(*_DEDUP_COLS)
 
 
 def _dual_sink_batch_fn(json_dir: str, target_dir: str):

@@ -42,6 +42,32 @@ def jobs_during(spark):
     return count
 
 
+@pytest.fixture
+def py4j_calls_during(spark):
+    """``py4j_calls_during(fn)``: the commands Python sends the JVM while
+    ``fn`` runs. Object deletes (``m\nd\n``) are not counted: py4j
+    sends them on garbage collection, whenever that happens."""
+    from py4j.clientserver import ClientServerConnection
+
+    def count(fn) -> int:
+        sent = []
+        send = ClientServerConnection.send_command
+
+        def counting(self, command):
+            if not command.startswith("m\nd\n"):
+                sent.append(command)
+            return send(self, command)
+
+        ClientServerConnection.send_command = counting
+        try:
+            fn()
+        finally:
+            ClientServerConnection.send_command = send
+        return len(sent)
+
+    return count
+
+
 @pytest.fixture(autouse=True)
 def _sweep_tracked_cache():
     """Unpersist the previous test's tracked blocks before each test —

@@ -299,3 +299,52 @@ def test_sink_counts_the_rows_it_wrote_in_the_write_job(spark, tmp_path, sink, j
     getattr(etl, sink)(df.limit(0), empty)
     with open(os.path.join(empty, "_manifest.json")) as fh:
         assert json.load(fh)["record_count"] == 0
+
+
+def test_transform_builds_in_one_projection(spark, py4j_calls_during):
+    """The transform is two selectExprs over the filter: at most 80 py4j
+    commands to build (a withColumn per step took 254), and the plan
+    holds two Project nodes, the casts and the derived columns."""
+    df = spark.createDataFrame([], TRANSACTIONS_RAW)
+    built = []
+    assert py4j_calls_during(lambda: built.append(transform_transactions(df))) <= 80
+    assert built[0]._jdf.queryExecution().analyzed().toString().count("Project") == 2
+
+
+def test_transform_keeps_column_order_and_replaces_in_place(spark):
+    """Cast and cleaned columns keep their position, derived columns
+    are appended in step order, and an existing derived column
+    (``processed_timestamp``, ``month``) is replaced where it stands."""
+    df = make_txn(spark, [{}]).withColumn("month", F.lit("stale")).withColumn(
+        "processed_timestamp", F.lit("stale")
+    )
+    out = transform_transactions(df)
+    assert out.columns == [
+        "transaction_id", "date", "timestamp", "amount", "category", "description",
+        "transaction_type", "account", "location", "month", "processed_timestamp",
+        "processed_by", "amount_category", "amount_abs", "day_of_week", "year",
+    ]
+    row = out.first()
+    assert row.month == 3 and isinstance(row.processed_timestamp, dt.datetime)
+    assert dict(out.dtypes)["amount"] == "double" and dict(out.dtypes)["date"] == "date"
+
+
+def test_run_pipeline_into_a_marked_target_launches_at_most_3_jobs(
+    spark, tmp_path, jobs_during
+):
+    """A landing into an existing target: the broadcast of the batch's
+    keys, the target write and the JSON write. The marker schema comes
+    from the written frame, so no job reads the new generation back."""
+    from aws_etl_pipeline_spark.generator import generate_transactions
+    from aws_etl_pipeline_spark.operators.etl import run_pipeline
+
+    target = str(tmp_path / "target")
+    csv = str(tmp_path / "batch")
+    generate_transactions(spark, 200, seed=3).write.option("header", True).csv(csv)
+    run_pipeline(spark.read.csv(csv, header=True, schema=TRANSACTIONS_RAW), upsert_target=target)
+    df = spark.read.csv(csv, header=True, schema=TRANSACTIONS_RAW)
+    jobs = jobs_during(
+        lambda: run_pipeline(df, json_path=str(tmp_path / "json"), upsert_target=target)
+    )
+    assert jobs <= 3
+    assert spark.read.parquet(target).count() == spark.read.json(str(tmp_path / "json")).count()

@@ -214,3 +214,55 @@ def test_scratch_root_removed_at_exit_and_dead_roots_swept(tmp_path):
     env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=ROOT)
     subprocess.run([sys.executable, "-c", code], env=env, check=True)
     assert list(tmp_path.glob("spark_graft_scratch_*")) == []
+
+
+def _marker_schema(path: str):
+    import json
+
+    from pyspark.sql.types import StructType
+
+    with open(os.path.join(path, staging.MARKER)) as fh:
+        return StructType.fromJson(json.load(fh)["schema"])
+
+
+def test_fold_records_the_schema_parquet_reads_back(spark, sf_dir, tmpdir_root, jobs_during):
+    """A fold takes its marker schema from the frame it writes, made
+    nullable as parquet reads it: nested fields, non-nullable columns
+    and field metadata included, for every fold user."""
+    from aws_etl_pipeline_spark.generator import generate_transactions
+    from aws_etl_pipeline_spark.operators.etl import transform_transactions
+    from aws_etl_pipeline_spark.operators.upsert import merge_into_parquet
+
+    nested = str(tmpdir_root / "nested")
+    frame = spark.range(5).select(
+        F.col("id").alias("k", metadata={"comment": "key"}),
+        F.struct(F.col("id").alias("x"), F.array(F.col("id")).alias("xs")).alias("s"),
+        F.create_map(F.lit("a"), F.struct(F.col("id").alias("y"))).alias("m"),
+        F.lit(None).cast("string").alias("n"),
+    )
+    write_jobs = jobs_during(lambda: frame.write.parquet(str(tmpdir_root / "plain")))
+    assert jobs_during(lambda: staging.fold(spark, nested, lambda prev: frame)) == write_jobs
+    targets = [nested]
+
+    upsert = str(tmpdir_root / "upsert")
+    for seed in (1, 2):
+        merge_into_parquet(
+            transform_transactions(generate_transactions(spark, 40, seed=seed)),
+            upsert,
+            key="transaction_id",
+        )
+    targets.append(upsert)
+
+    for q in (
+        ingest.stream_exec_upsert,  # _latest_merge_batch_fn
+        ingest.stream_exec_cdc,  # _keyed_merge_batch_fn
+        ingest.stream_exec_sketch_merge,
+        ingest.stream_exec_topk_merge,
+    ):
+        q(spark, sf_dir).collect()
+    for prefix in ("streamupsert_", "streamcdc_", "kmvstate_", "topkstate_"):
+        (target,) = glob.glob(staging.scratch_dir(f"{prefix}*"))
+        targets.append(target)
+
+    for path in targets:
+        assert _marker_schema(path) == spark.read.parquet(path).schema, path

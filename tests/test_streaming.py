@@ -107,16 +107,19 @@ def test_landing_batch_replay_is_idempotent(spark, tmp_path):
     assert sorted(map(tuple, spark.read.parquet(target).collect())) == target_once
 
 
-@pytest.mark.parametrize("session_partitions, state_partitions", [(16, 8), (4, 4)])
-def test_drain_starts_with_at_most_8_state_partitions(
+@pytest.mark.parametrize("session_partitions, state_partitions", [(16, 4), (4, 4), (2, 2)])
+def test_drain_starts_with_min_of_session_cores_and_8_state_partitions(
     spark, tmp_path, caplog, session_partitions, state_partitions
 ):
-    """A stateful drain runs min(session shuffle partitions, 8) state
-    partitions, and the session keeps its own value."""
+    """A stateful drain runs min(session shuffle partitions, cores, 8)
+    state partitions, and the session keeps its own value. The test
+    session has 4 cores: at 16 session partitions the cores bind, at 2
+    the session does."""
     import logging
 
     from aws_etl_pipeline_spark.streaming.ingest import _drain
 
+    assert spark.sparkContext.defaultParallelism == 4
     src = str(tmp_path / "src")
     spark.range(100).union(spark.range(50)).write.parquet(src)
     deduped = spark.readStream.schema("id long").parquet(src).dropDuplicates(["id"])
@@ -136,6 +139,61 @@ def test_drain_starts_with_at_most_8_state_partitions(
         if r.getMessage().startswith(f"drain t_parts_{session_partitions} ")
     ]
     assert f" rows=150 state_partitions={state_partitions} " in line
+
+
+@pytest.mark.parametrize(
+    "session_partitions, cores, state_partitions",
+    [(200, 32, 8), (32, 4, 4), (4, 2, 2), (2, 16, 2), (8, 8, 8)],
+)
+def test_state_partition_rule(session_partitions, cores, state_partitions):
+    """The rule itself, where no test session can reach: 8 binds on a
+    many-core session, the cores on a small host, the session value
+    when it is smallest."""
+    from aws_etl_pipeline_spark.streaming.ingest import _state_partitions
+
+    assert _state_partitions(session_partitions, cores) == state_partitions
+
+
+def test_drain_without_no_data_batch(spark, tmp_path, caplog):
+    """A dedup drain that skips the trailing no-data batch runs one
+    micro-batch per file, returns the rows of a drain that runs it, and
+    leaves the session conf as it was."""
+    import logging
+
+    from aws_etl_pipeline_spark.streaming.ingest import _drain
+
+    src = str(tmp_path / "src")
+    for i in range(3):  # each file repeats half of the previous one
+        spark.range(i * 50, i * 50 + 100).withColumn(
+            "ts", F.timestamp_seconds(F.col("id") * 60 + 60)
+        ).coalesce(1).write.mode("append").parquet(src)
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key)
+
+    def drain(name: str, skip: bool):
+        stream = (
+            spark.readStream.schema("id long, ts timestamp")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .withWatermark("ts", "10 minutes")
+            .dropDuplicatesWithinWatermark(["id"])
+        )
+        with caplog.at_level(logging.INFO):
+            rows = sorted(_drain(stream, name, skip_no_data_batch=skip).collect())
+        assert spark.conf.get(key) == before
+        (line,) = [
+            r.getMessage()
+            for r in caplog.records
+            if r.getMessage().startswith(f"drain {name} ")
+        ]
+        return rows, int(line.split(" batches=")[1].split()[0])
+
+    skipped, skipped_batches = drain("t_no_data_skipped", True)
+    full, full_batches = drain("t_no_data_run", False)
+    assert skipped_batches == 3
+    assert full_batches == 4
+    assert skipped == full
+    assert [r.id for r in skipped] == list(range(200))
 
 
 def test_drain_guard_stops_a_hung_stream(spark, tmp_path, monkeypatch):

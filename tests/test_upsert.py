@@ -1,5 +1,6 @@
 """MERGE upsert semantics (R17): conflict policy + idempotent replay."""
 
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from aws_etl_pipeline_spark.operators.upsert import merge_into_parquet, merge_upsert
@@ -140,3 +141,96 @@ def test_staging_merge_sql_reference_policy():
     update_clause = sql.split("UPDATE SET")[1].split("WHEN NOT MATCHED")[0]
     assert "transaction_id" not in update_clause  # key never updated
     assert "WHEN NOT MATCHED THEN INSERT" in sql
+
+
+# --- full-row replace against a plain-Python MERGE -------------------------
+
+
+def _reference_merge(target, source, cols, source_cols):
+    """MERGE on ``k`` in plain Python: a target row whose non-NULL key
+    the source holds is replaced by every source row with that key
+    (target-only columns keep the target's value); other target rows
+    are kept; source rows with a NULL or unmatched key are inserted,
+    target-only columns NULL."""
+    skeys = {s["k"] for s in source if s["k"] is not None}
+    tkeys = {t["k"] for t in target if t["k"] is not None}
+    out = []
+    for t in target:
+        if t["k"] in skeys:
+            out += [
+                tuple(s[c] if c in source_cols else t[c] for c in cols)
+                for s in source
+                if s["k"] == t["k"]
+            ]
+        else:
+            out.append(tuple(t[c] for c in cols))
+    out += [
+        tuple(s.get(c) for c in cols)
+        for s in source
+        if s["k"] is None or s["k"] not in tkeys
+    ]
+    return sorted(out, key=repr)
+
+
+@settings(
+    deadline=None, max_examples=25, suppress_health_check=[HealthCheck.function_scoped_fixture]
+)
+@given(
+    target_keys=st.lists(st.integers(0, 9), unique=True, max_size=8),
+    target_null_keys=st.integers(0, 2),
+    source_keys=st.lists(st.one_of(st.none(), st.integers(0, 12)), max_size=10),
+    target_only=st.booleans(),
+    source_extra=st.booleans(),
+)
+def test_merge_upsert_equals_reference_merge(
+    spark, target_keys, target_null_keys, source_keys, target_only, source_extra
+):
+    """NULL keys on both sides, duplicate source keys, a target-only
+    column (the partial update) and an extra source column (still a
+    full-row replace)."""
+    cols = ["k", "a", "b"] + (["t_only"] if target_only else [])
+    source_cols = ["b", "k", "a"] + (["s_extra"] if source_extra else [])
+    keys = [f"K{k}" for k in target_keys] + [None] * target_null_keys
+    target = [
+        {"k": k, "a": float(i), "b": f"t{i}", "t_only": f"x{i}"} for i, k in enumerate(keys)
+    ]
+    source = [
+        {"k": None if k is None else f"K{k}", "a": 100.0 + j, "b": f"s{j}", "s_extra": j}
+        for j, k in enumerate(source_keys)
+    ]
+    types = {"k": "string", "a": "double", "b": "string", "t_only": "string", "s_extra": "int"}
+
+    def frame(rows, names):
+        schema = ", ".join(f"{c} {types[c]}" for c in names)
+        return spark.createDataFrame([tuple(r[c] for c in names) for r in rows], schema)
+
+    merged = merge_upsert(frame(target, cols), frame(source, source_cols), "k")
+    assert merged.columns == cols
+    got = sorted((tuple(r) for r in merged.collect()), key=repr)
+    assert got == _reference_merge(target, source, cols, source_cols)
+
+
+def test_full_row_merge_broadcasts_the_batch_keys(spark, tmp_path, py4j_calls_during):
+    """A full-row replace is a broadcast anti join: the target is not
+    shuffled, and the plan builds in at most 150 py4j commands (the
+    full outer join with a per-column choice took 1120)."""
+    from aws_etl_pipeline_spark.generator import generate_transactions
+    from aws_etl_pipeline_spark.operators.etl import transform_transactions
+    from aws_etl_pipeline_spark.schemas import TRANSACTIONS_RAW
+
+    csv, path = str(tmp_path / "batch"), str(tmp_path / "target")
+    generate_transactions(spark, 50, seed=1).write.option("header", True).csv(csv)
+
+    def batch():
+        return transform_transactions(spark.read.csv(csv, header=True, schema=TRANSACTIONS_RAW))
+
+    batch().write.parquet(path)
+    target, source = spark.read.parquet(path), batch()
+    built = []
+    assert (
+        py4j_calls_during(lambda: built.append(merge_upsert(target, source, "transaction_id")))
+        <= 150
+    )
+    plan = built[0]._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    assert "FullOuter" not in plan
