@@ -28,6 +28,29 @@ ENGINE_NAME = "aws-etl-pipeline-spark"
 #: cannot set a static conf and keeps the default: correct, only slower.
 CODEGEN_CACHE_ENTRIES = 10000
 
+#: Ceiling of the default driver heap: the heap the 1000x-replica
+#: measurements in SCALING.md were taken with.
+DRIVER_MEM_CAP_MB = 12 * 1024
+
+
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """The driver heap: $SPARK_GRAFT_DRIVER_MEM (a deployment setting)
+    if set, else a quarter of physical memory (the JVM's own default
+    heap share), capped at ``DRIVER_MEM_CAP_MB`` and never below Spark's
+    own 1 GiB default. A local session's driver is its executor too,
+    and shares the host with the Python workers and an in-process
+    DuckDB: a 12 GiB heap on a 15 GiB host grew to 10.7 GiB resident
+    and was killed mid-run."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        except (ValueError, OSError):
+            return f"{DRIVER_MEM_CAP_MB}m"
+    return f"{max(1024, min(DRIVER_MEM_CAP_MB, phys_bytes // 4 // 2**20))}m"
+
+
 #: SQL confs that are runtime-settable and required for correct reads —
 #: applied defensively to *any* session handed to us (the verify driver
 #: builds its own SparkSession).
@@ -224,7 +247,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

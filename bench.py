@@ -1,29 +1,26 @@
-"""Benchmark harness: runs the headline query set at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-compact JSON lines {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ..., "reps": ..., "warmup_sec": ...,
-"loadavg_start": [...], "loadavg_end": [...]} — one per frozen query
-set (HEADLINE, EXT, R8...), each emitted TWICE: full head copies
-in priority order first, then a size-bounded tail block ("dup":true) —
-one ~120-byte MINIMAL line per frozen metric OLDEST-first (round-13
-fix: newest-first let the 2 KB cap eat the freshest value once the
-set count grew), then ONE all-sets summary line carrying every frozen
-value (+ the batch/streaming split), then the full HEADLINE line very
-last — so EVERY frozen value fits inside the driver's ~2 KB
-tail-retaining capture and the frozen HEADLINE line is both the first
-and the very last stdout line, surviving either a head- or
-tail-retaining bounded capture.  Full per-query spread diagnostics go to stderr only
-(round-8 fix: they used to sit on stdout between the copies and
-pushed the headline value out of BENCH_r07.json).
+"""Benchmark harness: runs the frozen query sets (``SETS``) at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Protocol (round 3, variance-aware — round 2's best-of-2 let run-order
-noise masquerade as >2x regressions): fixed query order (HEADLINE),
-one recorded warm-up pass, then REPS (default 5) timed passes per
-query; the reported number is the MEDIAN, with the per-query spread
-(min..max) on stderr and in the JSON under "spread" so a noisy
-measurement is visibly noisy. The timed region covers plan + execution
-to a count() sink (results are not collected to the driver — we
-measure engine throughput, not driver serialization).
+Protocol: one warm-up pass of every query at sf0.001 (its wall clock is
+recorded as ``warmup_sec``), then REPS (default 5) timed reps per query
+in fixed order. A rep times ``fn()`` plus a ``count()`` sink; the
+reported number is the median rep.
+
+Stdout is 24 compact JSON lines, one layout for every set:
+
+1. head copies: one full line per set in ``SETS`` order, with the set's
+   medians under ``queries``, its total under ``value``, the
+   batch/streaming split and the host fields (loadavg, warm-up, CPU
+   calibration);
+2. tail copies (``"dup":true``): one minimal line per set (metric,
+   value, sf, load1), oldest set first;
+3. one summary line carrying every set's value and batch value;
+4. the full HEADLINE line again, last.
+
+The driver keeps only about the last 2 KB of stdout, so the tail block
+repeats every value in little space, newest last, and the frozen
+HEADLINE line is both the first and the last line. Per-query spreads
+and counters go to stderr.
 """
 
 from __future__ import annotations
@@ -40,294 +37,118 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
 #   full box unless the caller explicitly says otherwise (r10 found
 #   a whole day of scale numbers silently taken at 4 cores).
 
-from aws_etl_pipeline_spark.cache import clear_persisted
+from aws_etl_pipeline_spark.profile import Probe, measure, warm
 from aws_etl_pipeline_spark.registry import all_queries
 from aws_etl_pipeline_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: headline set: one per operator family, excluding the O(n^2)-ish
-#: pairwise dedup demos (those are correctness fixtures; the scalable
-#: variants minhash-lsh / lsh-ann are included).
-HEADLINE = [
-    "etl_flagship",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q6_forecast_revenue",
-    "q7_nation_volume",
-    "q12_shipmode_priority",
-    "q16_supplier_part_stats",
-    "q18_large_volume_customer",
-    "q19_disjunctive_predicates",
-    "sql_cte_chain",
-    "join_asof",
-    "join_skew_salted",
-    "agg_rollup",
-    "agg_distinct",
-    "window_ranking",
-    "topk_per_group",
-    "set_union_all",
-    "stream_tumbling_window",
-    "stream_session_window",
-    "upsert_merge",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "sim_bruteforce_topk",
-    "sim_lsh_ann",
-    "sim_ivf_ann",
-    "text_stats",
-    "corpus_curation_pipeline",
-    "text_tfidf_topterms",
-    "multimodal_features",
-    "multimodal_resize",
-    "sample_stable_hash",
-    "scd2_intervals",
-]
-
-#: HEADLINE_EXT (frozen in round 7): the heavy post-r1 operators that
-#: had one-off SCALING.md slope rows but no per-round drift tracking
-#: (r6 verdict). A SECOND frozen list — never merged into HEADLINE, so
-#: the r1-comparable total stays comparable — emitted as its own
-#: compact JSON line with metric "headline_ext_query_set_wall_clock".
-#: Names are frozen at their round-7 spellings (sim_ivf_sq8 is the
-#: operator benched as sim_ivf_pq in r6, renamed — scalar
-#: quantization, not product quantization).
-HEADLINE_EXT = [
-    "stream_exec_upsert_json",
-    "sim_ivf_sq8",
-    "sim_ivf_truepq",
-    "dedup_semantic",
-    "dedup_containment_lsh",
-    "dedup_substring",
-    "sample_importance_resampling",
-    "graph_triangle_count",
-    "bpe_train_merges",
-]
-
-#: HEADLINE_R8 (authored late in round 7; its first recorded point is
-#: in BENCH_r07 — the "R8" in the frozen metric name predates the r8
-#: doc sweep's label convention and stays as-is because renaming a
-#: frozen metric would break cross-round trend tools): the late-r7
-#: surface — sketches,
-#: retrieval, governance, streaming sketch merge, edge-Jaccard — gets
-#: its own frozen third line (metric
-#: "headline_r8_query_set_wall_clock") for per-round drift tracking,
-#: by the same policy that froze HEADLINE_EXT in r7. Never merged into
-#: the earlier lines, so their cross-round totals stay comparable.
-HEADLINE_R8 = [
-    "sketch_countmin_heavyhitters",
-    "sketch_kmv_distinct",
-    "sketch_bloom_membership",
-    "sketch_theta_intersect",
-    "sketch_histogram_quantiles",
-    "stream_exec_sketch_merge",
-    "text_bm25_topk",
-    "sim_hybrid_rrf",
-    "sim_matryoshka_truncation",
-    "sim_hard_negatives",
-    "quality_expectations",
-    "privacy_dp_count_laplace",
-    "ts_seasonal_decompose",
-    "graph_jaccard_neighbors",
-    "join_asof_multi",
-    "er_sorted_neighborhood",
-]
-
-
-#: HEADLINE_R9 (frozen in round 8; first recorded point BENCH_r08 —
-#: named one ahead of the round for consistency with HEADLINE_R8's
-#: frozen name): the round-8 surface (watermarked stream-stream join,
-#: OR-amplified semantic-decon LSH) plus the five late-r7 operators
-#: that got their slope rows this round — per-round drift tracking
-#: for all of them, by the same policy that froze EXT and R8. Never
-#: merged into earlier lines. The two connected-components queries
-#: are deliberately NOT here: ~32 s each at sf0.1 is the pairwise
-#: jaccard CORRECTNESS fixture they sit on (the same O(n^2) family
-#: the HEADLINE policy excludes), not the CC loop — loop timings are
-#: tracked in SCALING.md's staged-pair-graph measurements instead.
-HEADLINE_R9 = [
-    "stream_exec_stream_join_watermarked",
-    "decontaminate_semantic_lsh",
-    "graph_kcore",
-    "text_winnowing",
-    "text_kneser_ney_bigram",
-    "classifier_train_nb",
-    "quality_benford",
-]
-
-
-#: HEADLINE_R10 (frozen late in round 8; first recorded point
-#: BENCH_r08 — same one-ahead naming as R8/R9): the nine late-r8
-#: operator batches — interval-bucketed join, the privacy/stat
-#: guardrails, the value-histogram family (binning, rank tests,
-#: trimmed means), LPA + HITS, Holt-Winters + backtest, skyline, ABC,
-#: reconciliation checksums, FS linkage, cohort LTV, Neyman design,
-#: soft dedup. sim_bitext_margin_mining is deliberately absent (the
-#: O(n^2) pairwise-family exclusion, SCALING.md ninth-batch note).
-HEADLINE_R10 = [
-    "join_interval_bucketed",
-    "privacy_t_closeness",
-    "events_chisq_independence",
-    "feature_quantile_binning",
-    "graph_label_propagation",
-    "events_anova_f",
-    "ts_holt_winters",
-    "window_skyline_pareto",
-    "events_mannwhitney_u",
-    "events_ks_test",
-    "graph_hits",
-    "agg_trimmed_mean",
-    "agg_abc_classification",
-    "etl_partition_checksums",
-    "er_fellegi_sunter",
-    "ts_backtest_rolling",
-    "events_cohort_ltv",
-    "sample_neyman_allocation",
-    "dedup_soft_weights",
-]
-
-
-#: HEADLINE_R11 (frozen in round 9; first recorded point BENCH_r09 —
-#: same one-ahead naming as R8/R9/R10): the round-9 surface — the
-#: three late-r8 queries that got their driver seats this round, the
-#: corpus-curation trio, the lexical-retrieval ladder rungs, the
-#: nearest-event join, Croston, local-DP randomized response,
-#: curriculum staging, DiD, revenue Gini, isotropy, budget assembly,
-#: the calendar surface, the AMS sketch, the streaming top-k
-#: leaderboard, and the hashing-trick vectorizer. All keyed-shuffle /
-#: broadcast plans (slope table in SCALING.md, flat-to-3.0x at 10x).
-HEADLINE_R11 = [
-    "sim_eval_ir_metrics",
-    "classifier_calibration_ece",
-    "quality_referential_integrity",
-    "text_zipf_hapax",
-    "text_oov_rate",
-    "text_boilerplate_ngrams",
-    "text_querylm_dirichlet",
-    "text_rocchio_prf",
-    "join_nearest_event",
-    "ts_croston_forecast",
-    "privacy_randomized_response",
-    "pack_curriculum_order",
-    "events_did_estimator",
-    "agg_gini_concentration",
-    "embed_isotropy_score",
-    "mix_token_budget",
-    "fn_datetime_advanced",
-    "sketch_ams_f2",
-    "stream_exec_topk_merge",
-    "feature_hashing_trick",
-]
-
-
-#: HEADLINE_R12 (frozen in round 10; first recorded point BENCH_r10 —
-#: same one-ahead naming as R8-R11): the round-10 surface — the three
-#: new operators (harmonic best-fit packing, CCNet perplexity
-#: bucketing, daily retention triangle) plus the r10 scale rewrites
-#: that had no frozen drift line of their own (two-pass packing
-#: cumsum, ntile-arithmetic RFM, long-packed nearest-hub, hash-argmin
-#: k-means). All keyed-shuffle / broadcast plans; slope tables in
-#: SCALING.md's round-10 sections. Never merged into earlier lines.
-HEADLINE_R12 = [
-    "pack_bestfit_windows",
-    "text_perplexity_filter",
-    "events_retention_triangle",
-    "mix_unimax",
-    "pack_token_budget",
-    "events_rfm_segmentation",
-    "geo_nearest_hub",
-    "kmeans_train",
-]
-
-
-#: HEADLINE_R13 (frozen in round 11; first recorded point BENCH_r11 —
-#: same one-ahead naming as R8-R12): the round-11 surface — the new
-#: staged-IVF operator (ANN served from the persisted partition-by-
-#: cell index) and the bucketed-edge personalized-pagerank rewrite,
-#: which previously had NO frozen drift line (it was measured only in
-#: SCALING.md replica tables), plus the r11-continuation batch
-#: (Bayesian A/B grid posterior, Poisson-bootstrap CI, DP quantile,
-#: gains/lift chart, per-source quality gate — added before BENCH_r11
-#: recorded its first point, so the line was still mutable under the
-#: freeze policy). Never merged into earlier lines.
-HEADLINE_R13 = [
-    "sim_ivf_staged",
-    "graph_personalized_pagerank",
-    "events_bayesian_ab",
-    "sample_poisson_bootstrap",
-    "privacy_dp_quantile",
-    "classifier_lift_gains",
-    "mix_quality_topq",
-    "graph_clustering_coefficient",
-    "er_transitive_clusters",
-    "sim_ivf_staged_pq",
-]
-
-
-#: HEADLINE_R14 (frozen in round 12; first recorded point BENCH_r12 —
-#: same one-ahead-capable naming as R8-R13, though this one lands
-#: in-round): the round-12 surface — the triangle family's two bounded
-#: at-scale variants (DOULION md5-coin sampling, degree-capped exact),
-#: the watermarked streaming as-of join, the composed end-to-end
-#: corpus assembly run, MMR diversified re-ranking, golden-record
-#: survivorship, and the fractional-overlap decontamination rule.
-#: Never merged into earlier lines.
-HEADLINE_R14 = [
-    "graph_triangle_doulion",
-    "graph_triangle_capped",
-    "stream_exec_asof_join_watermarked",
-    "corpus_assembly_pipeline",
-    "sim_mmr_rerank",
-    "er_golden_record",
-    "decontaminate_fractional",
-    # added before BENCH_r12 recorded the line's first driver point
-    # (the quiet-box r12 bench note predates this member — same
-    # mutability note as sim_ivf_staged_pq in R13)
-    "sim_late_interaction",
-    "sim_binary_quantized",
-]
-
-
-#: HEADLINE_R15 (frozen in round 13; first recorded point BENCH_r13 —
-#: same one-ahead-capable naming as R8-R14): the round-13 surface —
-#: the HLL-register neighborhood function (the at-scale spelling with
-#: the measured 100x point its KMV sibling couldn't reach), the real
-#: PIL-free BMP decode through mapInPandas, and the cross-feature
-#: quantile normalization that landed after the r12 sweep (its set-
-#: membership here is its first frozen drift line). Never merged into
-#: earlier lines.
-HEADLINE_R15 = [
-    "graph_neighborhood_registers",
-    "multimodal_decode_bmp",
-    "feature_quantile_normalize",
-    # the second r13 batch, added before BENCH_r13 records the line's
-    # first driver point (same pre-first-point mutability note as
-    # sim_late_interaction in R14)
-    "graph_effective_diameter",
-    "sim_ivf_incremental",
-]
-
-
-#: HEADLINE_R16 (frozen in round 14; first recorded point BENCH_r14 —
-#: same one-ahead-capable naming as R8-R15): the round-14 surface —
-#: the persisted-band-index incremental near-dup probe, the real
-#: RIFF/WAVE PCM decode through mapInPandas, and the drift-gated
-#: retrain-vs-delta maintenance capstone. Never merged into earlier
-#: lines.
-HEADLINE_R16 = [
-    "dedup_incremental_minhash",
-    "multimodal_decode_wav",
-    "sim_index_maintenance",
-]
-
+#: The frozen sets in priority order: (metric, members). A set is frozen
+#: once a bench records its first point, so every metric stays comparable
+#: across rounds; a new surface gets a new set, never new members in an
+#: old one. Members are named as they were when the set froze.
+SETS: tuple[tuple[str, tuple[str, ...]], ...] = (
+    # one per operator family; the O(n^2) pairwise dedup demos are out
+    ("headline_query_set_wall_clock", (
+        "etl_flagship", "q1_pricing_summary", "q3_shipping_priority",
+        "q5_region_revenue", "q6_forecast_revenue", "q7_nation_volume",
+        "q12_shipmode_priority", "q16_supplier_part_stats",
+        "q18_large_volume_customer", "q19_disjunctive_predicates",
+        "sql_cte_chain", "join_asof", "join_skew_salted", "agg_rollup",
+        "agg_distinct", "window_ranking", "topk_per_group", "set_union_all",
+        "stream_tumbling_window", "stream_session_window", "upsert_merge",
+        "dedup_exact", "dedup_minhash_lsh", "sim_bruteforce_topk",
+        "sim_lsh_ann", "sim_ivf_ann", "text_stats", "corpus_curation_pipeline",
+        "text_tfidf_topterms", "multimodal_features", "multimodal_resize",
+        "sample_stable_hash", "scd2_intervals",
+    )),
+    # round 7: the heavy post-r1 operators
+    ("headline_ext_query_set_wall_clock", (
+        "stream_exec_upsert_json", "sim_ivf_sq8", "sim_ivf_truepq",
+        "dedup_semantic", "dedup_containment_lsh", "dedup_substring",
+        "sample_importance_resampling", "graph_triangle_count",
+        "bpe_train_merges",
+    )),
+    # late round 7: sketches, retrieval, governance, edge-Jaccard
+    ("headline_r8_query_set_wall_clock", (
+        "sketch_countmin_heavyhitters", "sketch_kmv_distinct",
+        "sketch_bloom_membership", "sketch_theta_intersect",
+        "sketch_histogram_quantiles", "stream_exec_sketch_merge",
+        "text_bm25_topk", "sim_hybrid_rrf", "sim_matryoshka_truncation",
+        "sim_hard_negatives", "quality_expectations",
+        "privacy_dp_count_laplace", "ts_seasonal_decompose",
+        "graph_jaccard_neighbors", "join_asof_multi", "er_sorted_neighborhood",
+    )),
+    # round 8: watermarked stream join, semantic-decon LSH (the two
+    # connected-components queries sit on an O(n^2) fixture and are out)
+    ("headline_r9_query_set_wall_clock", (
+        "stream_exec_stream_join_watermarked", "decontaminate_semantic_lsh",
+        "graph_kcore", "text_winnowing", "text_kneser_ney_bigram",
+        "classifier_train_nb", "quality_benford",
+    )),
+    # late round 8 (sim_bitext_margin_mining is O(n^2) and out)
+    ("headline_r10_query_set_wall_clock", (
+        "join_interval_bucketed", "privacy_t_closeness",
+        "events_chisq_independence", "feature_quantile_binning",
+        "graph_label_propagation", "events_anova_f", "ts_holt_winters",
+        "window_skyline_pareto", "events_mannwhitney_u", "events_ks_test",
+        "graph_hits", "agg_trimmed_mean", "agg_abc_classification",
+        "etl_partition_checksums", "er_fellegi_sunter", "ts_backtest_rolling",
+        "events_cohort_ltv", "sample_neyman_allocation", "dedup_soft_weights",
+    )),
+    # round 9
+    ("headline_r11_query_set_wall_clock", (
+        "sim_eval_ir_metrics", "classifier_calibration_ece",
+        "quality_referential_integrity", "text_zipf_hapax", "text_oov_rate",
+        "text_boilerplate_ngrams", "text_querylm_dirichlet", "text_rocchio_prf",
+        "join_nearest_event", "ts_croston_forecast",
+        "privacy_randomized_response", "pack_curriculum_order",
+        "events_did_estimator", "agg_gini_concentration",
+        "embed_isotropy_score", "mix_token_budget", "fn_datetime_advanced",
+        "sketch_ams_f2", "stream_exec_topk_merge", "feature_hashing_trick",
+    )),
+    # round 10
+    ("headline_r12_query_set_wall_clock", (
+        "pack_bestfit_windows", "text_perplexity_filter",
+        "events_retention_triangle", "mix_unimax", "pack_token_budget",
+        "events_rfm_segmentation", "geo_nearest_hub", "kmeans_train",
+    )),
+    # round 11
+    ("headline_r13_query_set_wall_clock", (
+        "sim_ivf_staged", "graph_personalized_pagerank", "events_bayesian_ab",
+        "sample_poisson_bootstrap", "privacy_dp_quantile",
+        "classifier_lift_gains", "mix_quality_topq",
+        "graph_clustering_coefficient", "er_transitive_clusters",
+        "sim_ivf_staged_pq",
+    )),
+    # round 12
+    ("headline_r14_query_set_wall_clock", (
+        "graph_triangle_doulion", "graph_triangle_capped",
+        "stream_exec_asof_join_watermarked", "corpus_assembly_pipeline",
+        "sim_mmr_rerank", "er_golden_record", "decontaminate_fractional",
+        "sim_late_interaction", "sim_binary_quantized",
+    )),
+    # round 13
+    ("headline_r15_query_set_wall_clock", (
+        "graph_neighborhood_registers", "multimodal_decode_bmp",
+        "feature_quantile_normalize", "graph_effective_diameter",
+        "sim_ivf_incremental",
+    )),
+    # round 14
+    ("headline_r16_query_set_wall_clock", (
+        "dedup_incremental_minhash", "multimodal_decode_wav",
+        "sim_index_maintenance",
+    )),
+)
 
 WARMUP_SF = "/root/testdata/sf0.001"
 
 
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
 
-LOADAVG_START = [round(x, 2) for x in os.getloadavg()]
+
+def _loadavg() -> list[float]:
+    return [round(x, 2) for x in os.getloadavg()]
 
 
 def _cpu_calibration() -> tuple[float, float]:
@@ -362,285 +183,99 @@ def _cpu_calibration() -> tuple[float, float]:
     return calib, mean_mhz
 
 
-CPU_CALIB_SEC, CPU_MHZ = _cpu_calibration()
-
-
-def main() -> None:
-    sf_dir = SF_DIR
-    queries = all_queries()
-    spark = get_spark("bench")
-    # warm-up: JVM, parquet footers, shuffle machinery, and each plan's
-    # whole-stage-codegen compilation (run once at the smallest SF so
-    # the timed sf run measures engine throughput, not JIT latency).
-    # The warm-up wall clock is RECORDED in the output so a run whose
-    # JIT/page-cache state differed is distinguishable after the fact.
-    t_w = time.time()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for name in HEADLINE + HEADLINE_EXT + HEADLINE_R8 + HEADLINE_R9 + HEADLINE_R10 + HEADLINE_R11 + HEADLINE_R12 + HEADLINE_R13 + HEADLINE_R14 + HEADLINE_R15 + HEADLINE_R16:
-        try:
-            queries[name].fn(spark, WARMUP_SF).count()
-            clear_persisted()
-        except Exception as e:  # warmup is best-effort
-            print(f"# warmup {name} failed: {e}", file=sys.stderr)
-    warmup_sec = round(time.time() - t_w, 3)
-
-    def run_set(names: list[str]):
-        timings: dict[str, float] = {}
-        spread: dict[str, list[float]] = {}
-        for name in names:
-            q = queries[name]
-            samples, n = [], 0
-            for _ in range(REPS):
-                t0 = time.time()
-                df = q.fn(spark, sf_dir)
-                n = df.count()
-                samples.append(time.time() - t0)
-                # each rep re-builds (and re-persists) its
-                # intermediates; sweep them so cached blocks don't
-                # pile up across reps (timing unchanged: every rep
-                # pays its own persist).
-                clear_persisted()
-            samples.sort()
-            timings[name] = round(samples[len(samples) // 2], 3)
-            spread[name] = [round(samples[0], 3), round(samples[-1], 3)]
-            print(
-                f"# {name}: median {timings[name]}s "
-                f"[{spread[name][0]}..{spread[name][1]}] ({n} rows)",
-                file=sys.stderr,
-            )
-        return timings, spread
-
-    timings, spread = run_set(HEADLINE)
-    ext_timings, ext_spread = run_set(HEADLINE_EXT)
-    r8_timings, r8_spread = run_set(HEADLINE_R8)
-    r9_timings, r9_spread = run_set(HEADLINE_R9)
-    r10_timings, r10_spread = run_set(HEADLINE_R10)
-    r11_timings, r11_spread = run_set(HEADLINE_R11)
-    r12_timings, r12_spread = run_set(HEADLINE_R12)
-    r13_timings, r13_spread = run_set(HEADLINE_R13)
-    r14_timings, r14_spread = run_set(HEADLINE_R14)
-    r15_timings, r15_spread = run_set(HEADLINE_R15)
-    r16_timings, r16_spread = run_set(HEADLINE_R16)
-
-    total = round(sum(timings.values()), 3)
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+def _sf(sf_dir: str) -> float | None:
     try:
-        sf = float(sf)
+        return float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
-        sf = None  # non-standard dir name (e.g. a scale replica)
-    # Compact medians-only line, printed FIRST and again LAST: the
-    # driver's stdout capture has a bounded buffer and rounds 3/4
-    # landed with the (single, large) JSON line head-truncated and
-    # unparseable. The observed truncation pattern is tail-retention
-    # (the line's HEAD was cut), so a head-retaining parser needs the
-    # compact line first while a tail-retaining one needs it last —
-    # emit both (identical content) so one intact parseable line
-    # survives either policy. The full diagnostics blob (spreads,
-    # loadavg, warmup) sits between them for humans and post-hoc
-    # analysis.
-    # The compact line carries loadavg/warmup/reps INSIDE it (round-5
-    # lesson: those fields lived only in the big diagnostics blob, the
-    # captured tail truncated them, and the round's uniform ~1.6x
-    # driver shift had to be re-adjudicated as load noise from
-    # uniformity arguments alone).  With them in the compact line every
-    # BENCH_r*.json is self-adjudicating: a concurrent session shows up
-    # as loadavg >> ncpus-idle right next to the medians it inflated.
-    compact_fields = {
-        "metric": "headline_query_set_wall_clock",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "reps": REPS,
-        "stat": "median",
-        "warmup_sec": warmup_sec,
-        # 1/5/15-min load before/after: the box-sharing context a
-        # total is meaningless without (round-4 lesson: a concurrent
-        # session turned a 286 s measurement into 538 s with
-        # identical plans).
-        "loadavg_start": LOADAVG_START,
-        "loadavg_end": [round(x, 2) for x in os.getloadavg()],
-        # host-speed marker (r13 verdict #5): wall of a pinned
-        # single-thread numpy sweep + /proc/cpuinfo mean MHz, measured
-        # at process start. Cross-round comparisons divide medians by
-        # the calib ratio instead of re-running quiet-box pairs.
-        "cpu_calib_sec": CPU_CALIB_SEC,
-        "cpu_mhz": CPU_MHZ,
-    }
-    # The EXT line shares the protocol and self-adjudication fields but
-    # carries its own metric name + total, so cross-round trend tools
-    # track both sets independently (HEADLINE stays r1-comparable).
-    ext_fields = {
-        **compact_fields,
-        "metric": "headline_ext_query_set_wall_clock",
-        "value": round(sum(ext_timings.values()), 3),
-        "queries": ext_timings,
-    }
-    r8_fields = {
-        **compact_fields,
-        "metric": "headline_r8_query_set_wall_clock",
-        "value": round(sum(r8_timings.values()), 3),
-        "queries": r8_timings,
-    }
-    r9_fields = {
-        **compact_fields,
-        "metric": "headline_r9_query_set_wall_clock",
-        "value": round(sum(r9_timings.values()), 3),
-        "queries": r9_timings,
-    }
-    r10_fields = {
-        **compact_fields,
-        "metric": "headline_r10_query_set_wall_clock",
-        "value": round(sum(r10_timings.values()), 3),
-        "queries": r10_timings,
-    }
-    r11_fields = {
-        **compact_fields,
-        "metric": "headline_r11_query_set_wall_clock",
-        "value": round(sum(r11_timings.values()), 3),
-        "queries": r11_timings,
-    }
-    r12_fields = {
-        **compact_fields,
-        "metric": "headline_r12_query_set_wall_clock",
-        "value": round(sum(r12_timings.values()), 3),
-        "queries": r12_timings,
-    }
-    r13_fields = {
-        **compact_fields,
-        "metric": "headline_r13_query_set_wall_clock",
-        "value": round(sum(r13_timings.values()), 3),
-        "queries": r13_timings,
-    }
-    r14_fields = {
-        **compact_fields,
-        "metric": "headline_r14_query_set_wall_clock",
-        "value": round(sum(r14_timings.values()), 3),
-        "queries": r14_timings,
-    }
-    r15_fields = {
-        **compact_fields,
-        "metric": "headline_r15_query_set_wall_clock",
-        "value": round(sum(r15_timings.values()), 3),
-        "queries": r15_timings,
-    }
-    r16_fields = {
-        **compact_fields,
-        "metric": "headline_r16_query_set_wall_clock",
-        "value": round(sum(r16_timings.values()), 3),
-        "queries": r16_timings,
-    }
-    # Batch-vs-streaming split (round-13 fix, r12 verdict #4): the
-    # streaming-drain fixtures (stream_exec_* — availableNow replay
-    # through a real StreamingQuery, multi-trigger drain) cost wall
-    # time in fixture machinery, not plan execution, and
-    # stream_exec_asof_join_watermarked alone was ~50% of the frozen
-    # R14 total — masking batch-plan regressions inside the set. The
-    # frozen "value" stays sum-of-all (r12-comparable); every set's
-    # fields now ALSO carry value_batch / value_streaming so trend
-    # tools can watch the batch plans alone.
-    for f in (compact_fields, ext_fields, r8_fields, r9_fields,
-              r10_fields, r11_fields, r12_fields, r13_fields, r14_fields,
-              r15_fields, r16_fields):
-        stream_t = {k: v for k, v in f["queries"].items()
-                    if k.startswith("stream_exec_")}
+        return None  # non-standard dir name (e.g. a scale replica)
+
+
+def emit(results, warmup_sec: float, sf: float | None, host: dict) -> None:
+    """Print the stdout layout of the module docstring, and each set's
+    spreads on stderr. ``results`` holds (metric, medians, spreads) per
+    set in ``SETS`` order; ``host`` holds ``loadavg_start``,
+    ``cpu_calib_sec`` and ``cpu_mhz``."""
+    loadavg_end = _loadavg()
+    fields = []
+    for metric, timings, _ in results:
+        f = {
+            "metric": metric,
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "queries": timings,
+            "sf": sf,
+            "reps": REPS,
+            "stat": "median",
+            "warmup_sec": warmup_sec,
+            "loadavg_start": host["loadavg_start"],
+            "loadavg_end": loadavg_end,
+            "cpu_calib_sec": host["cpu_calib_sec"],
+            "cpu_mhz": host["cpu_mhz"],
+        }
+        # the streaming-drain fixtures cost fixture time, not plan time:
+        # value_batch lets trend tools watch the batch plans alone
+        stream_t = {k: v for k, v in timings.items() if k.startswith("stream_exec_")}
         f["value_batch"] = round(f["value"] - sum(stream_t.values()), 3)
         if stream_t:
             f["value_streaming"] = round(sum(stream_t.values()), 3)
             f["streaming_members"] = sorted(stream_t)
-    compact = json.dumps(compact_fields, separators=(",", ":"))
-    compact_ext = json.dumps(ext_fields, separators=(",", ":"))
-    compact_r8 = json.dumps(r8_fields, separators=(",", ":"))
-    compact_r9 = json.dumps(r9_fields, separators=(",", ":"))
-    compact_r10 = json.dumps(r10_fields, separators=(",", ":"))
-    compact_r11 = json.dumps(r11_fields, separators=(",", ":"))
-    compact_r12 = json.dumps(r12_fields, separators=(",", ":"))
-    compact_r13 = json.dumps(r13_fields, separators=(",", ":"))
-    compact_r14 = json.dumps(r14_fields, separators=(",", ":"))
-    compact_r15 = json.dumps(r15_fields, separators=(",", ":"))
-    compact_r16 = json.dumps(r16_fields, separators=(",", ":"))
-    # stdout carries ONLY the compact lines (round-8 fix: BENCH_r07
-    # lost the headline value because three dup lines trailed it with
-    # the headline copy FIRST — the tail-retention capture cut the
-    # front.  Order is now head-copies in priority order, then
-    # tail-copies in REVERSE priority so the frozen HEADLINE compact
-    # line is the very LAST line of stdout and survives any
-    # tail-retaining capture intact).  The full diagnostics blobs
-    # (per-query spreads) go to stderr — humans and post-hoc analysis
-    # read them there; they can no longer displace the compact lines
-    # from the driver's bounded stdout buffer.
-    print(compact, flush=True)
-    print(compact_ext, flush=True)
-    print(compact_r8, flush=True)
-    print(compact_r9, flush=True)
-    print(compact_r10, flush=True)
-    print(compact_r11, flush=True)
-    print(compact_r12, flush=True)
-    print(compact_r13, flush=True)
-    print(compact_r14, flush=True)
-    print(compact_r15, flush=True)
-    print(compact_r16, flush=True)
-    print(json.dumps({**compact_fields, "spread": spread}), file=sys.stderr)
-    print(json.dumps({**ext_fields, "spread": ext_spread}), file=sys.stderr)
-    print(json.dumps({**r8_fields, "spread": r8_spread}), file=sys.stderr)
-    print(json.dumps({**r9_fields, "spread": r9_spread}), file=sys.stderr)
-    print(json.dumps({**r10_fields, "spread": r10_spread}), file=sys.stderr)
-    print(json.dumps({**r11_fields, "spread": r11_spread}), file=sys.stderr)
-    print(json.dumps({**r12_fields, "spread": r12_spread}), file=sys.stderr)
-    print(json.dumps({**r13_fields, "spread": r13_spread}), file=sys.stderr)
-    print(json.dumps({**r14_fields, "spread": r14_spread}), file=sys.stderr)
-    print(json.dumps({**r15_fields, "spread": r15_spread}), file=sys.stderr)
-    print(json.dumps({**r16_fields, "spread": r16_spread}), file=sys.stderr)
-    # Tail-retention copies (round-9 fix, REORDERED in round 13: the
-    # driver's artifact keeps only the LAST ~2 KB of stdout, and
-    # BENCH_r12 lost the NEWEST set's value because the tail block led
-    # with the newest minimal line — with nine frozen sets the block
-    # outgrew the cap and the cut landed on the freshest number, the
-    # one the round is judged on. Order is now OLDEST-first /
-    # NEWEST-last, and an ALL-SETS one-liner (every frozen value +
-    # batch split in ~250 bytes) sits after the minimal lines, so even
-    # when the cap eats the oldest minimal lines EVERY frozen value
-    # still survives inside the summary line. The full HEADLINE
-    # compact line stays very last so a tail-retaining parser's "last
-    # parseable line" still carries per-query medians. "dup":true lets
-    # a parser that scans EVERY stdout JSON line dedup instead of
-    # double-counting.
-    load_pair = [LOADAVG_START[0], round(os.getloadavg()[0], 2)]
-    all_fields = (compact_fields, ext_fields, r8_fields, r9_fields,
-                  r10_fields, r11_fields, r12_fields, r13_fields,
-                  r14_fields, r15_fields, r16_fields)
-    for f in all_fields:
-        minimal = {
-            "metric": f["metric"],
-            "value": f["value"],
-            "unit": "sec",
-            "sf": sf,
-            "load1": load_pair,
-            "dup": True,
-        }
-        print(json.dumps(minimal, separators=(",", ":")), flush=True)
-    summary = {
+        fields.append(f)
+
+    def line(d: dict) -> None:
+        print(json.dumps(d, separators=(",", ":")), flush=True)
+
+    for f in fields:
+        line(f)
+    for f, (_, _, spread) in zip(fields, results):
+        print(json.dumps({**f, "spread": spread}), file=sys.stderr)
+    load1 = [host["loadavg_start"][0], loadavg_end[0]]
+    for f in fields:
+        line({"metric": f["metric"], "value": f["value"], "unit": "sec", "sf": sf,
+              "load1": load1, "dup": True})
+
+    def short(f: dict) -> str:
+        return f["metric"].replace("_query_set_wall_clock", "")
+
+    line({
         "metric": "all_query_set_wall_clocks",
-        "values": {
-            f["metric"].replace("_query_set_wall_clock", ""): f["value"]
-            for f in all_fields
-        },
-        "values_batch": {
-            f["metric"].replace("_query_set_wall_clock", ""): f["value_batch"]
-            for f in all_fields
-            if "value_streaming" in f
-        },
+        "values": {short(f): f["value"] for f in fields},
+        "values_batch": {short(f): f["value_batch"] for f in fields if "value_streaming" in f},
         "unit": "sec",
         "sf": sf,
-        "load1": load_pair,
-        "cpu_calib_sec": CPU_CALIB_SEC,
+        "load1": load1,
+        "cpu_calib_sec": host["cpu_calib_sec"],
         "dup": True,
-    }
-    print(json.dumps(summary, separators=(",", ":")), flush=True)
-    print(
-        json.dumps({**compact_fields, "dup": True}, separators=(",", ":")),
-        flush=True,
-    )
+    })
+    line({**fields[0], "dup": True})
+
+
+def main() -> None:
+    host = {"loadavg_start": _loadavg()}
+    host["cpu_calib_sec"], host["cpu_mhz"] = _cpu_calibration()
+    queries = all_queries()
+    spark = get_spark("bench")
+    probe = Probe(spark)
+    names = [name for _, members in SETS for name in members]
+    warmup_sec = round(warm(spark, queries, names, WARMUP_SF), 3)
+    results = []
+    for metric, members in SETS:
+        timings: dict[str, float] = {}
+        spread: dict[str, list[float]] = {}
+        for name in members:
+            reps = sorted(measure(spark, queries[name].fn, SF_DIR, REPS, probe),
+                          key=lambda r: r.seconds)
+            mid = reps[len(reps) // 2]
+            cost = mid.built + mid.ran
+            timings[name] = round(mid.seconds, 3)
+            spread[name] = [round(reps[0].seconds, 3), round(reps[-1].seconds, 3)]
+            print(
+                f"# {name}: median {timings[name]}s "
+                f"[{spread[name][0]}..{spread[name][1]}] ({mid.rows} rows) "
+                f"jobs={cost.jobs} py4j={cost.py4j} compiles={cost.compiles}",
+                file=sys.stderr,
+            )
+        results.append((metric, timings, spread))
+    emit(results, warmup_sec, _sf(SF_DIR), host)
     spark.stop()
 
 

@@ -1,6 +1,5 @@
 import os
 import sys
-import uuid
 
 import pytest
 
@@ -24,48 +23,26 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
-def jobs_during(spark):
-    """``jobs_during(fn)``: the Spark jobs the status store records
-    while ``fn`` runs."""
-    sc = spark.sparkContext
+def probe(spark):
+    """The session's job, py4j-command and codegen counters
+    (``aws_etl_pipeline_spark.profile``)."""
+    from aws_etl_pipeline_spark.profile import Probe
 
-    def count(fn) -> int:
-        group = f"probe-{uuid.uuid4().hex[:8]}"
-        sc.setJobGroup(group, "job probe")
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    return count
+    return Probe(spark)
 
 
-@pytest.fixture
-def py4j_calls_during(spark):
+@pytest.fixture(scope="session")
+def jobs_during(probe):
+    """``jobs_during(fn)``: the Spark jobs submitted while ``fn`` runs,
+    from any thread."""
+    return lambda fn: probe.during(fn).jobs
+
+
+@pytest.fixture(scope="session")
+def py4j_calls_during(probe):
     """``py4j_calls_during(fn)``: the commands Python sends the JVM while
-    ``fn`` runs. Object deletes (``m\nd\n``) are not counted: py4j
-    sends them on garbage collection, whenever that happens."""
-    from py4j.clientserver import ClientServerConnection
-
-    def count(fn) -> int:
-        sent = []
-        send = ClientServerConnection.send_command
-
-        def counting(self, command):
-            if not command.startswith("m\nd\n"):
-                sent.append(command)
-            return send(self, command)
-
-        ClientServerConnection.send_command = counting
-        try:
-            fn()
-        finally:
-            ClientServerConnection.send_command = send
-        return len(sent)
-
-    return count
+    ``fn`` runs, object deletes not counted."""
+    return lambda fn: probe.during(fn).py4j
 
 
 @pytest.fixture(autouse=True)

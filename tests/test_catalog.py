@@ -63,10 +63,9 @@ def test_two_loads_of_one_table_self_join(spark, sf_dir):
     assert pairs.count() == sum(r["count"] ** 2 for r in by_cust)
 
 
-def test_warm_query_compiles_no_codegen_class(spark, sf_dir):
+def test_warm_query_compiles_no_codegen_class(spark, sf_dir, probe):
     # one interactive session's mix; its classes overflow Spark's
     # default 100-entry codegen cache
-    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     qs = all_queries()
     names = (
         "etl_flagship", "q3_shipping_priority", "q6_forecast_revenue", "sql_cte_chain",
@@ -74,7 +73,7 @@ def test_warm_query_compiles_no_codegen_class(spark, sf_dir):
     )
     for name in names:  # cold run: compiles and caches
         qs[name].fn(spark, sf_dir).collect()
-    before = compiled.getCount()
+    before = probe.read()
     for name in names:
         qs[name].fn(spark, sf_dir).collect()
-    assert compiled.getCount() - before == 0
+    assert (probe.read() - before).compiles == 0

@@ -124,21 +124,38 @@ def main():
         sys.exit(f"unknown queries: {unknown}; have {sorted(queries)}")
 
     spark = get_spark("check")
+    failed = check_all(
+        spark,
+        oracle_db(args.sf),
+        [(n, queries[n].fn, queries[n].oracle) for n in names],
+        args.sf,
+        args.verbose,
+    )
+    print(f"\n{len(names) - len(failed)}/{len(names)} passed")
+    spark.stop()
+    sys.exit(1 if failed else 0)
+
+
+def oracle_db(sf_dir: str):
+    """A DuckDB connection with one view per table of ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
-        )
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
 
+
+def check_all(spark, con, queries, sf_dir: str, verbose: bool = False) -> list[str]:
+    """Run each ``(name, fn, oracle_sql)`` on Spark and, where it has an
+    oracle, on DuckDB; print one line per query and return the names
+    that failed."""
     from aws_etl_pipeline_spark.cache import clear_persisted
 
     failed = []
-    for name in names:
-        q = queries[name]
+    for name, fn, oracle in queries:
         clear_persisted()  # sweep the previous query's pinned blocks
         t0 = time.time()
         try:
-            sdf = q.fn(spark, args.sf)
+            sdf = fn(spark, sf_dir)
             spark_cols = sdf.columns
             spark_rows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
@@ -146,12 +163,12 @@ def main():
             failed.append(name)
             continue
         t_spark = time.time() - t0
-        if q.oracle is None:
+        if oracle is None:
             print(f"ok?   {name}: rows-only ({len(spark_rows)} rows, {t_spark:.1f}s)")
             continue
         t0 = time.time()
         try:
-            cur = con.execute(q.oracle)
+            cur = con.execute(oracle)
             oracle_cols = [d[0] for d in cur.description]
             oracle_rows = cur.fetchall()
         except Exception as e:
@@ -159,7 +176,7 @@ def main():
             failed.append(name)
             continue
         t_oracle = time.time() - t0
-        problems = compare(spark_rows, spark_cols, oracle_rows, oracle_cols, args.verbose)
+        problems = compare(spark_rows, spark_cols, oracle_rows, oracle_cols, verbose)
         if problems:
             print(f"FAIL  {name} ({len(spark_rows)} rows):")
             for p in problems:
@@ -169,10 +186,7 @@ def main():
             print(
                 f"PASS  {name} ({len(spark_rows)} rows, spark {t_spark:.1f}s, duckdb {t_oracle:.2f}s)"
             )
-
-    print(f"\n{len(names) - len(failed)}/{len(names)} passed")
-    spark.stop()
-    sys.exit(1 if failed else 0)
+    return failed
 
 
 if __name__ == "__main__":

@@ -7,16 +7,13 @@ from __future__ import annotations
 
 import sys
 
-import duckdb
 from pyspark.sql import SparkSession
 
 sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod  # noqa: E402
+from tools.check import check_all, oracle_db  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def main():
@@ -43,32 +40,8 @@ def main():
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
-
-    sys.path.insert(0, "/root/repo/tools")
-    from check import compare
-
-    failed = []
-    for name, fn in qs.items():
-        if names and name not in names:
-            continue
-        sdf = fn(spark, SF)
-        s_rows = [tuple(r) for r in sdf.collect()]
-        if name not in oracles:
-            print(f"rows-only {name}: {len(s_rows)} rows")
-            continue
-        cur = con.execute(oracles[name])
-        o_cols = [d[0] for d in cur.description]
-        o_rows = cur.fetchall()
-        problems = compare(s_rows, sdf.columns, o_rows, o_cols)
-        status = "PASS" if not problems else "FAIL"
-        print(f"{status} {name}: {len(s_rows)} rows")
-        for p in problems:
-            print("   ", p)
-        if problems:
-            failed.append(name)
+    todo = [(name, fn, oracles.get(name)) for name, fn in qs.items() if not names or name in names]
+    failed = check_all(spark, oracle_db(SF), todo, SF)
     print("FAILED:", failed) if failed else print("all queries match")
     sys.exit(1 if failed else 0)
 

@@ -2,9 +2,9 @@
 replicas included) — the measurement tool behind SCALING.md's
 10x/100x/1000x slope tables.
 
-Protocol (matches the r9 tables): one warm-up pass per query at
-sf0.001 (JIT + codegen compile), then N timed reps at the target dir
-(count() sink, cache swept between reps), reporting the MIN of the
+Protocol (matches the r9 tables): one warm-up pass of every query at
+sf0.001 (JIT + codegen compile), then N timed reps of each at the target
+dir (count() sink, cache swept between reps), reporting the MIN of the
 warm reps (scale tables want the noise floor, not the median — the
 question is "what does the plan cost", and background load only ever
 adds). Loadavg is recorded so a loaded run is self-adjudicating.
@@ -18,7 +18,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -27,7 +26,7 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
 #   full box unless the caller explicitly says otherwise (r10 found
 #   a whole day of scale numbers silently taken at 4 cores).
 
-from aws_etl_pipeline_spark.cache import clear_persisted  # noqa: E402
+from aws_etl_pipeline_spark.profile import Probe, count_rows, measure, warm  # noqa: E402
 from aws_etl_pipeline_spark.registry import all_queries  # noqa: E402
 from aws_etl_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -44,16 +43,14 @@ REPS = int(os.environ.get("SPARK_GRAFT_TIME_REPS", "2"))
 SINK = os.environ.get("SPARK_GRAFT_TIME_SINK", "count")
 
 
-def _drain(df) -> int:
-    if SINK == "hash":
-        from pyspark.sql import functions as F
+def _hash_rows(df) -> int:
+    from pyspark.sql import functions as F
 
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64(*df.columns)).alias("h"),
-        ).collect()[0]
-        return row["n"]
-    return df.count()
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*df.columns)).alias("h"),
+    ).collect()[0]
+    return row["n"]
 
 
 def main() -> None:
@@ -64,22 +61,15 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
     spark = get_spark("time_queries")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    out: dict[str, dict] = {}
+    probe = Probe(spark)
+    sink = _hash_rows if SINK == "hash" else count_rows
     load_start = [round(x, 2) for x in os.getloadavg()]
+    warm(spark, queries, names, WARMUP_SF, sink)
+    out: dict[str, dict] = {}
     for name in names:
-        q = queries[name]
-        try:
-            _drain(q.fn(spark, WARMUP_SF))
-            clear_persisted()
-        except Exception as e:
-            print(f"# warmup {name} failed: {e}", file=sys.stderr)
-        samples, n = [], 0
-        for _ in range(REPS):
-            t0 = time.time()
-            n = _drain(q.fn(spark, sf_dir))
-            samples.append(time.time() - t0)
-            clear_persisted()
+        reps = measure(spark, queries[name].fn, sf_dir, REPS, probe, sink)
+        samples = [r.seconds for r in reps]
+        n = reps[-1].rows
         out[name] = {
             "min": round(min(samples), 3),
             "all": [round(s, 3) for s in samples],
