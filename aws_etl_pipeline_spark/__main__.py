@@ -93,6 +93,8 @@ def main(argv: list[str] | None = None) -> int:
         print(f"backfilled {args.days} days to {args.out} (year=/month=/day= layout)")
 
     elif args.cmd == "process":
+        import json
+
         from .operators.etl import run_pipeline
         from .schemas import TRANSACTIONS_RAW
 
@@ -101,8 +103,11 @@ def main(argv: list[str] | None = None) -> int:
             .option("header", True)
             .csv(args.src)
         )
-        out = run_pipeline(src, json_path=args.out, upsert_target=args.upsert)
-        print(f"processed {out.count()} records: {args.src} -> {args.out}")
+        run_pipeline(src, json_path=args.out, upsert_target=args.upsert)
+        # counted inside the JSON write; a count() would parse the batch again
+        with open(os.path.join(args.out, "_manifest.json")) as fh:
+            n = json.load(fh)["record_count"]
+        print(f"processed {n} records: {args.src} -> {args.out}")
 
     elif args.cmd == "watch":
         from .streaming.ingest import run_pipeline_available_now

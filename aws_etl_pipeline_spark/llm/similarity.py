@@ -1123,11 +1123,13 @@ def _pq_lloyd_rows(items) -> list:
 
 
 def _pq_train(sub: DataFrame) -> DataFrame:
-    """Per-subspace Lloyd's k-means over corpus subvectors,
-    deterministic by the same construction as kmeans_train: seed = the
-    first PQ_K corpus vectors' subvectors, ties on cell asc, means
-    through DECIMAL. Returns the final codebook (sub, cell, cv) as a
-    LOCAL relation.
+    """Per-subspace Lloyd's k-means over the corpus subvectors ``sub``
+    with ``vec_id < N_QUERIES + PQ_TRAIN_SAMPLE`` (the training sample;
+    the filter here bounds the collect below whatever the caller
+    passes), deterministic by the same construction as kmeans_train:
+    seed = the first PQ_K corpus vectors' subvectors, ties on cell asc,
+    means through DECIMAL. Returns the final codebook (sub, cell, cv)
+    as a LOCAL relation.
 
     r15 (guide §1.2 step 1 — fix the distributed algorithm): PQ
     training is bounded by PQ_TRAIN_SAMPLE (the FAISS practice:
@@ -1144,7 +1146,8 @@ def _pq_train(sub: DataFrame) -> DataFrame:
     Corpus-scaled work (the full-corpus encode) stays distributed —
     only the sample and the index header ever touch the driver."""
     spark = sub.sparkSession
-    raw = sub.select("vec_id", "sub", "sv").collect()
+    sample = sub.filter(F.col("vec_id") < N_QUERIES + PQ_TRAIN_SAMPLE)
+    raw = sample.select("vec_id", "sub", "sv").collect()
     rows = _pq_lloyd_rows(
         [(r["vec_id"], r["sub"], [float(x) for x in r["sv"]]) for r in raw]
     )
@@ -1216,7 +1219,7 @@ def _truepq_scored(spark: SparkSession, sf_dir: str):
     # the trained codebook feeds three consumers (encode, sqnorm table,
     # query LUT) — it is a LOCAL relation (r15, see _pq_train), so
     # every consumer reads 2048 local rows and no persist is needed.
-    cent = _pq_train(sub.filter(F.col("vec_id") < N_QUERIES + PQ_TRAIN_SAMPLE))
+    cent = _pq_train(sub)
     codes = _pq_assign(sub, cent).select(
         F.col("vec_id").alias("neighbor_id"), "sub", F.col("cell").alias("code")
     )
@@ -2628,9 +2631,7 @@ def ivf_pq_staged_layout(spark: SparkSession, sf_dir: str):
         sub = _pq_subvectors(
             n.filter(F.col("vec_id") >= N_QUERIES).select("vec_id", "v")
         )
-        return _pq_train(
-            sub.filter(F.col("vec_id") < N_QUERIES + PQ_TRAIN_SAMPLE)
-        )
+        return _pq_train(sub)
 
     cent = staging.staged(spark, "ivfpq_cent", sf_dir, staging.spread(build_cent))
 

@@ -138,27 +138,13 @@ SUITES: dict[str, list[str]] = {
         "join_range_interval",
         "join_skew_salted",
         "join_fuzzy_blocked",
-        # r7: one-pass multi-feature point-in-time join
         "join_asof_multi",
-        # r7: sorted-neighborhood blocking ER (the other classic
-        # blocking strategy next to join_fuzzy_blocked)
         "er_sorted_neighborhood",
-        # r8: no-equi-key interval join via month-bucket decomposition
         "join_interval_bucketed",
-        # r8 eighth batch: Fellegi-Sunter linkage scoring over the
-        # same blocking as join_fuzzy_blocked
         "er_fellegi_sunter",
-        # r9 third batch: bidirectional nearest-event enrichment (the
-        # as-of join's two-sided sibling, still join-free)
         "join_nearest_event",
-        # r9 second rotation: digest-seats the broadcast-join flagship
-        # so its PRIORITY slot (direct green r1-r8) can fund a new
-        # r9 direct row
         "join_inner_broadcast",
-        # r11 continuation: the ER ladder's clustering step
-        # (threshold-then-transitive-closure entity partition)
         "er_transitive_clusters",
-        # r12: the ladder's final rung — golden-record survivorship
         "er_golden_record",
     ],
     "suite_agg": [
@@ -172,34 +158,18 @@ SUITES: dict[str, list[str]] = {
         "agg_boolean",
         "agg_percentile_exact",
         "agg_hll_mergeable",
-        # r7: rotated out of PRIORITY into the digest (direct green
-        # history r1-r6)
         "agg_collect",
         "agg_approx_quantile",
-        # r7: deterministic count-rank mode
         "agg_mode",
-        # r7: exact 4th-order moments in one aggregate
         "agg_skew_kurtosis",
-        # r7 ninth batch: categorical dispersion
         "agg_entropy_gini",
-        # r7 tenth batch: cumulative-weight crossing median
         "agg_weighted_median",
-        # r8 seventh batch: histogram-exact robust means + Pareto ABC
         "agg_trimmed_mean",
         "agg_abc_classification",
-        # r8 fourth rotation: vacates its PRIORITY slot (direct green
-        # r1-r7) to fund the suite_stats digest row
         "agg_distinct",
-        # r9 fifth batch: continuous-value revenue concentration (the
-        # categorical-impurity agg_entropy_gini's Lorenz twin)
         "agg_gini_concentration",
-        # r9 fifteenth batch: pivot with multiple aggregates per value
         "agg_pivot_multi",
-        # r9 second rotation: digest-seats the hash-agg flagship
-        # (direct green r1-r8) to fund a new r9 direct row
         "agg_basic",
-        # r11 continuation: digest-seats the HLL++ flagship (direct
-        # green r1-r10) to fund a new direct row
         "agg_approx_distinct",
     ],
     "suite_setops": [
@@ -220,29 +190,23 @@ SUITES: dict[str, list[str]] = {
         "sql_recursive_cte",
         "fn_unpivot",
         "sql_session_variables",
-        "sql_lateral_join",  # r7
-        # r11 continuation: digest-seats the multi-key nulls-first/last
-        # sort flagship so its PRIORITY slot (direct green r1-r10) can
-        # fund a new direct row
+        "sql_lateral_join",
         "sort_multi_nulls",
     ],
     "suite_window": [
-        "window_gaps_islands",  # r7
-        "window_rolling_median",  # r7
+        "window_gaps_islands",
+        "window_rolling_median",
         "window_ranking",
         "window_lag_lead",
         "window_running",
         "window_range_frame",
         "window_cume_pct",
         "topk_per_group",
-        # r8: domain-collapsed 2-D Pareto frontier
         "window_skyline_pareto",
-        # r11 continuation: digest-seats the TakeOrderedAndProject
-        # flagship (direct green r1-r10) to fund a new direct row
         "limit_topk",
     ],
     "suite_fn_scalar": [
-        "fn_url",  # r7
+        "fn_url",
         "fn_string",
         "fn_string_split",
         "fn_date",
@@ -252,9 +216,7 @@ SUITES: dict[str, list[str]] = {
         "fn_regexp",
         "fn_hash",
         "fn_bitwise",
-        # r7 eleventh batch: try_* null-on-error surface
         "fn_try_arithmetic",
-        # r9 sixth batch: calendar arithmetic beyond fn_date
         "fn_datetime_advanced",
     ],
     "suite_fn_semistructured": [
@@ -281,9 +243,7 @@ SUITES: dict[str, list[str]] = {
         "scan_bucketed_join",
         "scan_schema_evolution",
         "scan_xml_roundtrip",
-        # r7: stride-partitioned parallel JDBC ingest (embedded Derby)
         "scan_jdbc_partitioned",
-        # r8: Spark 4 Python DataSource lifecycle, md5-parity generator
         "scan_python_datasource",
     ],
     "suite_streaming": [
@@ -303,28 +263,18 @@ SUITES: dict[str, list[str]] = {
         "stream_exec_static_join",
         "stream_exec_custom_state",
         "stream_exec_stream_join",
-        # r8: watermarked production form (bounded state, late drops)
         "stream_exec_stream_join_watermarked",
-        # r8: left-outer watermarked form (outer-null protocol)
         "stream_exec_stream_join_outer_watermarked",
-        # r8: bounded-state dedup (state-expiry re-emission pinned)
         "stream_exec_dedup_watermarked",
-        # r7: cross-micro-batch mergeable-sketch state
         "stream_exec_sketch_merge",
-        # r7 ninth batch: CDC apply with retained DELETE tombstones
         "stream_exec_cdc",
-        # r9 seventh batch: mergeable cross-batch top-k leaderboard
         "stream_exec_topk_merge",
-        # r11 continuation: streaming as-of join (interval join +
-        # per-fact keyed-argmax merge in foreachBatch)
         "stream_exec_asof_join",
-        # r12: the watermarked production form of the as-of join
-        # (bounded state; closed-form late-drop set in the oracle)
         "stream_exec_asof_join_watermarked",
     ],
     "suite_dedup": [
         "dedup_exact",
-        "dedup_url_canonical",  # r7
+        "dedup_url_canonical",
         "dedup_substring",
         "dedup_ngram_jaccard",
         "dedup_minhash_lsh",
@@ -332,19 +282,13 @@ SUITES: dict[str, list[str]] = {
         "dedup_embedding_cosine",
         "dedup_keep_best",
         "dedup_connected_components",
-        # r8: alternating large-star/small-star CC (high-diameter form)
         "dedup_connected_components_star",
         "dedup_containment",
         "dedup_containment_lsh",
         "dedup_semantic",
-        # r8 ninth batch: duplicate-aware soft sampling weights
         "dedup_soft_weights",
-        # r9 ninth batch: bloom-screened incremental-ingest dedup
         "dedup_incremental_bloom",
-        # r9 eleventh batch: b-bit minwise hashing (32x signature
-        # memory cut, debiased estimator next to the full-width one)
         "dedup_minhash_bbit",
-        # r14: persisted band-signature index probed by the delta batch
         "dedup_incremental_minhash",
     ],
     "suite_sim": [
@@ -352,9 +296,7 @@ SUITES: dict[str, list[str]] = {
         "sim_bruteforce_pandas",
         "sim_lsh_ann",
         "sim_ivf_ann",
-        # r13: frozen-quantizer delta-segment index maintenance
         "sim_ivf_incremental",
-        # r14: drift-gated retrain-vs-delta maintenance capstone
         "sim_index_maintenance",
         "sim_ivf_sq8",
         "sim_ivf_sq8_rerank",
@@ -366,46 +308,26 @@ SUITES: dict[str, list[str]] = {
         "embed_gram_matrix",
         "embed_pca_project",
         "kmeans_train",
-        # r7: hybrid retrieval (BM25 + dense fused with RRF)
         "text_bm25_topk",
         "sim_hybrid_rrf",
-        # r12: MMR diversified re-ranking (greedy, candidate-bounded)
         "sim_mmr_rerank",
-        # r12: ColBERT-style late-interaction MaxSim scoring
         "sim_late_interaction",
-        # r12: binary quantization (sign masks -> Hamming -> rerank)
         "sim_binary_quantized",
-        # r7 second batch: embedding-training ops
         "sim_matryoshka_truncation",
         "sim_hard_negatives",
-        # r8 ninth batch: margin-criterion mutual-NN bitext mining
         "sim_bitext_margin_mining",
-        # r8 final batch (digest-seated r9): recall@k / MRR / nDCG
-        # measurement layer over a frozen relevance set
         "sim_eval_ir_metrics",
-        # r9 second batch: the lexical ladder's LM ranker and the
-        # Rocchio/RM1 pseudo-relevance-feedback expansion
         "text_querylm_dirichlet",
         "text_rocchio_prf",
-        # r9 fifth batch: embedding-space isotropy health gate
         "embed_isotropy_score",
-        # r9 eighth batch: MIPS-to-cosine reduction (norm-completion
-        # augmentation), hash-proves inner-product order exactness
         "sim_mips_transform",
-        # r9 tenth batch: centroid-cosine drift monitor (the vector-
-        # space sibling of quality_drift_psi)
         "quality_embedding_drift",
-        # r9 fourteenth batch: MMR diversity re-ranking (unrolled
-        # greedy, the fixed-iteration discipline applied to ranking)
         "sim_mmr_diversify",
-        # r11: IVF served from the persisted partition-by-cell layout
         "sim_ivf_staged",
-        # r11 continuation: PQ codes from the partitioned layout
         "sim_ivf_staged_pq",
     ],
     "suite_text": [
-        "corpus_dataset_card",  # r7
-        # r10: CCNet perplexity head/middle/tail bucketing
+        "corpus_dataset_card",
         "text_perplexity_filter",
         "text_stats",
         "text_langid",
@@ -419,27 +341,21 @@ SUITES: dict[str, list[str]] = {
         "text_unigram_logprob",
         "text_inverted_index",
         "decontaminate_ngram",
-        # r12: the fractional-overlap (PaLM-rule) decon sibling
         "decontaminate_fractional",
         "text_repetition",
         "corpus_ppl_buckets",
         "classifier_train_logreg",
-        "classifier_train_nb",  # r7: counting-pass NB + confusion matrix
-        "text_kneser_ney_bigram",  # r7: KN-smoothed bigram LM scoring
-        "text_winnowing",  # r7: MOSS winnowing fingerprints
+        "classifier_train_nb",  # counting-pass NB + confusion matrix
+        "text_kneser_ney_bigram",  # KN-smoothed bigram LM scoring
+        "text_winnowing",  # MOSS winnowing fingerprints
         "text_gopher_rules",
         "bpe_pair_counts",
         "bpe_train_merges",
         "bpe_encode_corpus",
         "classifier_score_docs",
-        # r7 ninth batch: per-doc n-gram novelty
         "text_ngram_novelty",
-        # r7 tenth batch: embedding-space eval-leakage guard
         "decontaminate_semantic",
-        # r8: LSH-bucketed big-benchmark semantic decontamination
         "decontaminate_semantic_lsh",
-        # r9 first batch: corpus-curation trio — vocabulary health,
-        # OOV/surprisal scoring, within-source boilerplate n-grams
         "text_zipf_hapax",
         "text_oov_rate",
         "text_boilerplate_ngrams",
@@ -449,11 +365,7 @@ SUITES: dict[str, list[str]] = {
         "multimodal_frame_sample",
         "multimodal_resize",
         "multimodal_chunk_energy",
-        # r13: REAL image decode (synthesized BMP files through the
-        # pure-numpy BI_RGB parser, formula-recomputing oracle)
         "multimodal_decode_bmp",
-        # r14: REAL audio decode (synthesized RIFF/WAVE PCM through the
-        # pure-numpy chunk-walk parser, formula-recomputing oracle)
         "multimodal_decode_wav",
     ],
     "suite_assembly": [
@@ -466,33 +378,18 @@ SUITES: dict[str, list[str]] = {
         "shard_manifest",
         "sample_weighted_reservoir",
         "sample_importance_resampling",
-        "pack_interleave_domains",  # r7
-        # r7 tenth batch: frozen train/val/test split
+        "pack_interleave_domains",
         "sample_train_test_split",
-        # r8 ninth batch: Neyman-optimal stratified design
         "sample_neyman_allocation",
-        # r9 fourth batch: curriculum-learning difficulty staging
         "pack_curriculum_order",
-        # r9 sixth batch: budget-to-manifest epoch assembly (turns
-        # mix_temperature's target distribution into an admission list)
         "mix_token_budget",
-        # r9 thirteenth batch: decile length bucketing with padding-
-        # waste accounting
         "pack_length_buckets",
-        # r10: harmonic size-class packing into fixed context windows
         "pack_bestfit_windows",
-        # r10: UniMax capped-epoch water-filling source mix
         "mix_unimax",
-        # r11 continuation: per-source quality-quantile gate
         "mix_quality_topq",
-        # r12: the composed end-to-end assembly run (quality gate ->
-        # minhash+CC dedup -> n-gram decontamination -> UniMax ->
-        # greedy window packing), one recursive-CTE oracle
         "corpus_assembly_pipeline",
     ],
     "suite_tpch": [
-        # r9 second rotation: digest-seats the revenue-forecast
-        # flagship (direct green r1-r8) to fund a new r9 direct row
         "q6_forecast_revenue",
         "q2_min_cost_supplier",
         "q3_shipping_priority",
@@ -524,18 +421,13 @@ SUITES: dict[str, list[str]] = {
         "scd2_intervals",
         "sample_stable_hash",
         "etl_winsorize",
-        # r7 tenth batch: two-pass dense surrogate keys
         "etl_dense_surrogate_ids",
-        # r8 seventh batch: order-insensitive reconciliation checksums
         "etl_partition_checksums",
-        # r9 thirteenth batch: salted-hash key tokenization with the
-        # referential-consistency verdict
         "etl_pseudonymize_keys",
     ],
     "suite_analytics": [
         "events_funnel",
         "events_retention_cohort",
-        # r10: daily normalized retention triangle
         "events_retention_triangle",
         "events_sessionize",
         "profile_table",
@@ -548,93 +440,48 @@ SUITES: dict[str, list[str]] = {
         "privacy_k_anonymity",
         "events_ewma",
         "graph_triangle_count",
-        # r12: the triangle family's at-scale members (DOULION
-        # md5-coin edge sampling with the estimator contract in the
-        # schema; degree-capped exact-on-subgraph with the adjacency
-        # contract in the schema)
         "graph_triangle_doulion",
         "graph_triangle_capped",
-        # r7: governance, decomposition, node similarity
         "quality_expectations",
-        # r9 tenth batch: exact Shapley channel attribution (the
-        # cooperative-game twin of the Markov removal effects)
         "events_shapley_attribution",
         "privacy_l_diversity",
         "privacy_dp_count_laplace",
-        "events_rfm_segmentation",  # r7
-        "events_markov_attribution",  # r7
+        "events_rfm_segmentation",
+        "events_markov_attribution",
         "ts_seasonal_decompose",
         "graph_jaccard_neighbors",
-        # r7 eighth batch: frontier-pruned multi-source BFS
         "graph_bfs_reach",
-        # r12: HyperBall-style neighborhood function (KMV ball sketches)
         "graph_neighborhood_function",
-        # r13: the HLL-register spelling (the at-scale form: packed
-        # 6-bit registers, map-side-combinable MAX merge), and the
-        # interpolated HyperANF effective-diameter readout derived
-        # from it
         "graph_neighborhood_registers",
         "graph_effective_diameter",
-        # (suite seat only — PRIORITY seat lives in registry.py)
         "events_survival_km",
-        # r8 sixth batch: HITS hubs/authorities
         "graph_hits",
-        # r7 seventh batch: time-series statistics on the daily rollup
         "ts_autocorrelation",
         "ts_cusum_changepoint",
         "ts_theil_sen",
-        # r7 eighth batch: feature-engineering encodings
         "feature_target_encode_loo",
         "feature_woe_iv",
-        # r7 ninth batch: sequence patterns + robust outliers
         "events_pattern_match",
-        # r7 tenth batch: trend-aware forecasting
         "ts_brown_des_forecast",
-        # r7 twelfth batch: Benford audit + k-core peeling
         "graph_kcore",
-        # r8: t-closeness (privacy ladder rung 3) + chi-square
-        # independence guardrail
         "privacy_t_closeness",
-        # r8 fourth batch: equi-depth binning (value-histogram exact
-        # deciles), LPA communities, one-way ANOVA
         "feature_quantile_binning",
         "graph_label_propagation",
-        # r8 fifth batch: the seasonal rung of the forecasting ladder
-        # (per-series Arrow grouped-map recursion)
         "ts_holt_winters",
-        # r8 eighth batch: forecast backtest harness + cohort LTV
         "ts_backtest_rolling",
         "events_cohort_ltv",
-        # r9 third batch: the forecasting ladder's intermittent-demand
-        # rung (Croston + SBA, exact unrolled SES)
         "ts_croston_forecast",
-        # r9 eighth batch: seed-teleport proximity scores on the
-        # staged customer-supplier graph
         "graph_personalized_pagerank",
-        # r9 eleventh batch: SES hyperparameter selection + label-free
-        # dictionary encoding with long-tail collapse
         "ts_ses_alpha_select",
         "feature_count_encode_rare",
-        # r9 fifteenth batch: weighted one-mode projection of the
-        # bipartite purchase graph (creates the similarity network
-        # graph_jaccard_neighbors scores)
         "graph_bipartite_projection",
-        # r9 twelfth batch: proportional top-down coherence
         "ts_forecast_reconciliation",
-        # r9 fourth batch: the privacy ladder's local-DP rung (Warner
-        # randomized response, salted-md5 coin)
         "privacy_randomized_response",
-        # r9 seventh batch: stateless hashing-trick vectorization
         "feature_hashing_trick",
-        # r12: cross-feature quantile normalization on the bounded
-        # daily rollup
         "feature_quantile_normalize",
     ],
-    # r8 split: the hypothesis-test / monitor family got its own
-    # digest row once suite_analytics passed 45 members — one red row
-    # should localize to a family, and the driver row's cost stays
-    # bounded. Members moved here keep their digest coverage
-    # continuity (same canonicalization, same oracle).
+    # the hypothesis-test / monitor family has its own digest row, so
+    # one red row localizes to a family and a row's cost stays bounded
     "suite_stats": [
         "events_abtest_welch",
         "events_uplift_cuped",
@@ -647,24 +494,13 @@ SUITES: dict[str, list[str]] = {
         "quality_benford",
         "quality_outlier_mad",
         "agg_regression_ols",
-        # r8 final batch (digest-seated r9): reliability-bin expected
-        # calibration error + cross-table orphan audit
         "classifier_calibration_ece",
         "quality_referential_integrity",
-        # r9 fifth batch: the quasi-experimental causal estimator
         "events_did_estimator",
-        # r9 eighth batch: Wald's always-valid sequential monitor
         "events_sprt_sequential",
-        # r9 ninth batch: strict time-bounded conversion funnel
         "events_window_funnel",
-        # r9 twelfth batch: experiment design (required-n / power)
         "events_power_analysis",
-        # r9 fourteenth batch: fraud-velocity rules (RANGE-interval
-        # burst window + per-user amount z-score)
         "events_velocity_flags",
-        # r11 continuation batch: Bayesian grid-posterior A/B readout,
-        # Poisson-bootstrap CI, exponential-mechanism DP quantile, and
-        # the gains/lift chart next to calibration
         "events_bayesian_ab",
         "sample_poisson_bootstrap",
         "privacy_dp_quantile",
@@ -675,19 +511,14 @@ SUITES: dict[str, list[str]] = {
         "sketch_kmv_distinct",
         "sketch_bloom_membership",
         "sketch_theta_intersect",
-        # r7 second batch: mergeable-bin quantiles
         "sketch_histogram_quantiles",
-        # r9 seventh batch: AMS tug-of-war F2 (self-join size)
         "sketch_ams_f2",
     ],
     "suite_geo": [
         "geo_grid_density",
         "geo_radius_join",
         "geo_nearest_hub",
-        # r7 ninth batch: grid-DBSCAN hotspot clustering
         "geo_hotspot_clusters",
-        # r11 continuation: Watts-Strogatz local clustering coefficient
-        # (graph family rides this digest, like jaccard/triangles)
         "graph_clustering_coefficient",
     ],
 }

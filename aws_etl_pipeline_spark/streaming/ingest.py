@@ -8,8 +8,14 @@ source. Every stream here is an availableNow drain (``_drain``): it
 processes the files not yet processed and stops. With a checkpoint a
 re-run lands only the files added since the last run, so a cron that
 runs the CLI's ``watch`` is the scheduled analog (R26).
-``foreachBatch`` carries the dual-sink dispatch (JSON + upsert,
-R16+R17) exactly like the handler body.
+
+Every stream that lands in a parquet target does so through one
+``foreachBatch`` body, ``_fold_batch_fn``: each micro-batch replaces
+the target with ``step(batch, previous)`` through ``staging.fold``, and
+may also land in a JSON archive — the handler body's dual sink (JSON +
+upsert, R16+R17). The keyed targets share one step, ``_keep_latest``;
+the named queries drain into a fresh target and read it back with
+``_fold_query``.
 """
 
 from __future__ import annotations
@@ -131,24 +137,97 @@ def read_transaction_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _landing_batch_fn(json_out: str | None, upsert_path: str | None):
-    """foreachBatch body of the landing stream (R16-R18): MERGE the
-    micro-batch into the upsert target and write it as JSON to its own
-    ``epoch=<id>`` dir in overwrite mode. A re-delivered epoch
-    (foreachBatch is at-least-once) therefore replaces its own JSON and
-    merges to the same target. Module-level so tests can re-deliver a
-    batch directly."""
-    from ..operators.upsert import merge_into_parquet
+def _fold_batch_fn(target: str | None, step, json_dir: str | None = None):
+    """The ``foreachBatch`` body of every stream that lands in a parquet
+    target: each micro-batch ``batch`` replaces ``target`` with
+    ``step(batch, previous)`` through ``staging.fold`` (``previous`` is
+    None on the first batch). With ``json_dir`` the batch is persisted,
+    so its file is parsed once, and also written to
+    ``<json_dir>/epoch=<id>`` in overwrite mode; ``target`` None lands
+    the archive alone. A re-delivered epoch (foreachBatch is
+    at-least-once) replaces its own JSON, and an idempotent ``step``
+    folds it to the same target."""
 
-    def land(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()  # one parse of the file for both sinks
-        if upsert_path is not None:
-            merge_into_parquet(batch_df, upsert_path, key="transaction_id")
-        if json_out is not None:
-            batch_df.write.mode("overwrite").json(f"{json_out}/epoch={epoch_id}")
-        batch_df.unpersist()
+    def fold_batch(batch: DataFrame, epoch_id: int) -> None:
+        if json_dir is not None:
+            batch.persist()
+        try:
+            if json_dir is not None:
+                batch.write.mode("overwrite").json(f"{json_dir}/epoch={epoch_id}")
+            if target is not None:
+                staging.fold(batch.sparkSession, target, lambda prev: step(batch, prev))
+        finally:
+            batch.unpersist()
 
-    return land
+    return fold_batch
+
+
+def _keep_latest(project):
+    """The fold step of the keyed targets: ``project`` maps a
+    micro-batch into the ``(user_id, last_ts, event_id, payload...)``
+    protocol, and per ``user_id`` the row with the largest ``(last_ts,
+    event_id)`` of the target and the projected batch is kept. Keeping
+    the latest is associative and idempotent, so the target does not
+    depend on how the stream splits into batches, and a re-delivered
+    batch leaves it as it was."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    latest = W.partitionBy("user_id").orderBy(
+        F.col("last_ts").desc(), F.col("event_id").desc()
+    )
+
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        rows = project(batch)
+        if prev is not None:
+            rows = prev.unionByName(rows)
+        return (
+            rows.withColumn("_rn", F.row_number().over(latest))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+
+    return step
+
+
+def _fold_query(
+    stream: DataFrame, step, name: str, sf_dir: str, archive: bool = False
+) -> DataFrame:
+    """Drain ``stream`` through ``_fold_batch_fn(target, step)`` into a
+    fresh target and read it back. The target is the scratch dir
+    ``<name>_<fingerprint(sf_dir)>``, emptied first. With ``archive``
+    each batch also lands in the JSON archive ``<target>.json``, and
+    every returned row carries the archive's row count as
+    ``json_rows``. Raises when no micro-batch landed."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    target = staging.scratch_dir(f"{name}_{staging.fingerprint(sf_dir)}")
+    json_dir = f"{target}.json" if archive else None
+    for d in (target, f"{target}.json"):
+        shutil.rmtree(d, ignore_errors=True)
+    _drain(stream, _fold_batch_fn(target, step, json_dir))
+    spark = stream.sparkSession
+    df = staging.current(spark, target)
+    if df is None:
+        raise RuntimeError(f"stream sink {target} is empty: no micro-batch landed")
+    if not archive:
+        return df
+    # a broadcast 1-row aggregate: the archive is read by the returned
+    # plan, not by an eager count()
+    rows = spark.read.json(json_dir).agg(
+        F.count(F.lit(1)).cast("long").alias("json_rows")
+    )
+    return df.crossJoin(F.broadcast(rows))
+
+
+def _upsert_step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """The landing's fold step: MERGE the batch into the target on
+    ``transaction_id`` (``merge_upsert``'s policy, R17)."""
+    from ..operators.upsert import merge_upsert
+
+    return batch if prev is None else merge_upsert(prev, batch, "transaction_id")
 
 
 def run_pipeline_available_now(
@@ -174,10 +253,10 @@ def run_pipeline_available_now(
     else:
         checkpoint = upsert_path.rstrip("/") + ".checkpoint"
     return _drain(
-        transformed, _landing_batch_fn(json_out, upsert_path), checkpoint=checkpoint
+        transformed,
+        _fold_batch_fn(upsert_path, _upsert_step, json_out),
+        checkpoint=checkpoint,
     )
-
-
 
 
 # Replayed event stages: each writer below lays the events table out as
@@ -468,76 +547,18 @@ def stream_exec_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(agg, qname, mode="complete")
 
 
-def _latest_per_user(df):
-    """Per-user latest event (ties by event_id) — the batch reduce
-    under the streaming upsert sinks."""
-    from pyspark.sql import Window as W
+def _latest_per_user(df: DataFrame) -> DataFrame:
+    """Events in the keep-latest protocol, keyed by user: the per-user
+    latest event is the streaming upsert sinks' target."""
     from pyspark.sql import functions as F
 
-    w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "user_id",
-            F.col("ts").alias("last_ts"),
-            F.col("event_type").alias("last_type"),
-            F.col("value").alias("last_value"),
-            "event_id",
-        )
+    return df.select(
+        "user_id",
+        F.col("ts").alias("last_ts"),
+        F.col("event_type").alias("last_type"),
+        F.col("value").alias("last_value"),
+        "event_id",
     )
-
-
-def _latest_merge_batch_fn(target_dir: str):
-    """foreachBatch body for the per-user-LATEST sinks: see
-    :func:`_keyed_merge_batch_fn`. Shared by stream_exec_upsert and
-    stream_exec_upsert_json."""
-    return _keyed_merge_batch_fn(target_dir, _latest_per_user)
-
-
-def _keyed_merge_batch_fn(target_dir: str, normalize_fn):
-    """foreachBatch body: MERGE a micro-batch's per-key winner rows
-    into the parquet target (``normalize_fn`` reduces the raw batch to
-    normalized per-key winners carrying ``user_id``/``last_ts``/
-    ``event_id`` -> union with the running target, re-reduced ->
-    ``staging.fold``). Keeping the later of (existing, incoming) per key
-    is associative AND idempotent: the final state is independent of
-    the batch split, and re-delivering the same batch (Structured
-    Streaming's at-least-once foreachBatch contract) merges identical
-    winners to an identical target. The winner row may carry extra
-    payload columns (e.g. a CDC ``op`` tombstone marker) — they ride
-    along untouched."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    latest = W.partitionBy("user_id").orderBy(
-        F.col("last_ts").desc(), F.col("event_id").desc()
-    )
-
-    def merge_batch(batch_df, batch_id: int) -> None:
-        incoming = normalize_fn(batch_df)
-
-        def step(tgt):
-            if tgt is None:
-                return incoming
-            return (
-                tgt.unionByName(incoming)
-                .withColumn("_rn", F.row_number().over(latest))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-
-        staging.fold(batch_df.sparkSession, target_dir, step)
-
-    return merge_batch
-
-
-def _sink(spark: SparkSession, path: str) -> DataFrame:
-    """The target a drained foreachBatch sink left at ``path``."""
-    df = staging.current(spark, path)
-    if df is None:
-        raise RuntimeError(f"stream sink {path} is empty: no micro-batch landed")
-    return df
 
 
 @query(
@@ -552,28 +573,21 @@ QUALIFY row_number() OVER (PARTITION BY user_id
 def stream_exec_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming-CDC materialization: the replayed event stream
     drives ``foreachBatch``, and every micro-batch MERGEs its per-key
-    latest rows into a parquet target table (reduce batch -> full-outer
-    merge with the running target -> atomic swap) — the
+    latest rows into a parquet target table (keep the latest row per
+    key of the target and the batch -> atomic swap) — the
     readStream → foreachBatch → upsert-sink pipeline the reference's
     Redshift loader approximates (`lambda_function.py:176-271`),
     executed incrementally.
 
     The final target is the per-user LATEST event (ties by event_id),
-    which is batching-invariant — merging per-batch winners is
-    associative — so the materialized table must hash-equal the batch
+    which is batching-invariant — keeping the latest is associative —
+    so the materialized table must hash-equal the batch
     QUALIFY oracle no matter how the four micro-batches split the log.
     """
-    import shutil
-
-    target_dir = staging.scratch_dir(f"streamupsert_{staging.fingerprint(sf_dir)}")
-    shutil.rmtree(target_dir, ignore_errors=True)
-    merge_batch = _latest_merge_batch_fn(target_dir)
-
     stream = staging.replay(spark, sf_dir, _events)
-    _drain(stream, merge_batch)
-    return _sink(spark, target_dir).select(
-        "user_id", "last_ts", "last_type", "last_value"
-    )
+    step = _keep_latest(_latest_per_user)
+    target = _fold_query(stream, step, "streamupsert", sf_dir)
+    return target.select("user_id", "last_ts", "last_type", "last_value")
 
 
 @query(
@@ -660,31 +674,6 @@ def stream_exec_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     return _drain(deduped, qname, skip_no_data_batch=True).select(*_DEDUP_COLS)
 
 
-def _dual_sink_batch_fn(json_dir: str, target_dir: str):
-    """foreachBatch body for the reference's FULL event path
-    (`lambda_function.py:40-50`: transform -> JSON archive + warehouse
-    upsert) as ONE streaming query: each micro-batch is transformed
-    once, appended to a JSON archive, and MERGEd into the upsert
-    target. Idempotent under foreachBatch's at-least-once re-delivery:
-    the JSON side writes a PER-BATCH directory (``batch=<id>``) in
-    overwrite mode, so a replayed batch replaces its own output instead
-    of appending duplicates, and the merge side's keep-latest union is
-    idempotent by construction (see _latest_merge_batch_fn).
-    Module-level so tests can re-deliver a batch directly."""
-    from pyspark.sql import functions as F
-
-    merge_batch = _latest_merge_batch_fn(target_dir)
-
-    def dual_sink(batch_df, batch_id: int) -> None:
-        out = batch_df.withColumn("value_abs", F.abs(F.col("value")))
-        out.persist()  # one compute, two sinks
-        out.write.mode("overwrite").json(os.path.join(json_dir, f"batch={batch_id}"))
-        merge_batch(out.drop("value_abs"), batch_id)
-        out.unpersist()
-
-    return dual_sink
-
-
 @query(
     "stream_exec_upsert_json",
     oracle="""
@@ -708,31 +697,17 @@ def stream_exec_upsert_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch in either sink flips the hash). Idempotent-replay semantics
     are pytest-verified by re-delivering a batch through the same
     foreachBatch body (tests/test_streaming.py)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
-    base = staging.scratch_dir(f"streamdual_{staging.fingerprint(sf_dir)}")
-    json_dir = os.path.join(base, "json")
-    target_dir = os.path.join(base, "upsert")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(json_dir)
-
-    stream = staging.replay(spark, sf_dir, _events)
-    _drain(stream, _dual_sink_batch_fn(json_dir, target_dir))
-    # the stream drain necessarily runs at build time (the operator IS
-    # "execute the stream, read back the sinks"), but the archive row
-    # count joins relationally — a broadcast 1-row aggregate over the
-    # JSON sink — so the read-back/verify cost lives in the returned
-    # plan, not in an eager count() (round-6 advice).
-    jn = spark.read.json(json_dir).agg(
-        F.count(F.lit(1)).cast("long").alias("json_rows")
+    # the archive holds each batch as transformed, the target its
+    # per-user latest rows
+    stream = staging.replay(spark, sf_dir, _events).withColumn(
+        "value_abs", F.abs(F.col("value"))
     )
-    return (
-        _sink(spark, target_dir)
-        .crossJoin(F.broadcast(jn))
-        .select("user_id", "last_ts", "last_type", "last_value", "json_rows")
+    target = _fold_query(
+        stream, _keep_latest(_latest_per_user), "streamdual", sf_dir, archive=True
     )
+    return target.select("user_id", "last_ts", "last_type", "last_value", "json_rows")
 
 
 @query(
@@ -1066,18 +1041,11 @@ def stream_exec_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     per trigger, never the stream. The per-batch state fold is a
     TakeOrdered over THAT BATCH only; nothing corpus-sized crosses a
     batch boundary."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     from ..operators.sketches import THETA_K, _EV_A, _EV_B, _H60, _h60_spark
 
-    # per-invocation private state: the state is rebuilt from the
-    # replay every time (it IS the thing under test), so no cross-
-    # session reuse and no staleness guard needed.
-    cur = staging.scratch_dir(f"kmvstate_{_uuid.uuid4().hex[:8]}")
-
-    def merge_batch(batch, _bid: int) -> None:
+    def step(batch, prev):
         part = (
             batch.filter(F.col("event_type").isin(_EV_A, _EV_B))
             .groupBy("user_id")
@@ -1093,25 +1061,19 @@ def stream_exec_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("h", "user_id")
             .limit(THETA_K)
         )
-
-        def step(prev):
-            if prev is None:
-                return part.coalesce(1)
-            return (
-                prev.unionByName(part)
-                .groupBy("user_id", "h")
-                .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
-                .orderBy("h", "user_id")
-                .limit(THETA_K)
-                .coalesce(1)
-            )
-
-        staging.fold(batch.sparkSession, cur, step)
+        if prev is None:
+            return part.coalesce(1)
+        return (
+            prev.unionByName(part)
+            .groupBy("user_id", "h")
+            .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
+            .orderBy("h", "user_id")
+            .limit(THETA_K)
+            .coalesce(1)
+        )
 
     stream = staging.replay(spark, sf_dir, _events)
-    _drain(stream, merge_batch)
-
-    state = _sink(spark, cur)
+    state = _fold_query(stream, step, "kmvstate", sf_dir)
     sk = state.agg(
         F.max("h").alias("hk"), F.count(F.lit(1)).cast("long").alias("kk")
     )
@@ -1171,31 +1133,18 @@ def stream_exec_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cdc_normalize_batch(batch_df):
-    """Reduce a raw micro-batch to per-user LATEST CDC changes,
-    keeping the op marker: error events are DELETE tombstones,
-    everything else an upsert."""
-    from pyspark.sql import Window as W
+def _cdc_changes(batch_df: DataFrame) -> DataFrame:
+    """Events as CDC changes in the keep-latest protocol, keeping the op
+    marker: error events are DELETE tombstones, everything else an
+    upsert."""
     from pyspark.sql import functions as F
 
-    return (
-        batch_df.select(
-            "user_id",
-            F.col("ts").alias("last_ts"),
-            "event_id",
-            F.col("value").alias("last_value"),
-            F.when(F.col("event_type") == "error", "D").otherwise("U").alias("op"),
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                W.partitionBy("user_id").orderBy(
-                    F.col("last_ts").desc(), F.col("event_id").desc()
-                )
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    return batch_df.select(
+        "user_id",
+        F.col("ts").alias("last_ts"),
+        "event_id",
+        F.col("value").alias("last_value"),
+        F.when(F.col("event_type") == "error", "D").otherwise("U").alias("op"),
     )
 
 
@@ -1236,21 +1185,11 @@ def stream_exec_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     final table must hash-equal the batch oracle (latest change per
     user, deletes excluded) regardless of the 4-way split.
     """
-    import shutil
-
-    target_dir = staging.scratch_dir(f"streamcdc_{staging.fingerprint(sf_dir)}")
-    shutil.rmtree(target_dir, ignore_errors=True)
-    merge_batch = _keyed_merge_batch_fn(target_dir, _cdc_normalize_batch)
-
-    stream = staging.replay(spark, sf_dir, _events)
-    _drain(stream, merge_batch)
     from pyspark.sql import functions as F
 
-    return (
-        _sink(spark, target_dir)
-        .where(F.col("op") == "U")
-        .select("user_id", "last_ts", "last_value")
-    )
+    stream = staging.replay(spark, sf_dir, _events)
+    target = _fold_query(stream, _keep_latest(_cdc_changes), "streamcdc", sf_dir)
+    return target.where(F.col("op") == "U").select("user_id", "last_ts", "last_value")
 
 
 TOPK_LEADERBOARD_K = 5
@@ -1287,12 +1226,9 @@ def stream_exec_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the shape of real leaderboards (largest transactions, longest
     sessions, slowest requests). Per-trigger output is K x types
     rows; nothing stream-sized ever crosses a batch boundary."""
-    import uuid as _uuid
-
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    cur = staging.scratch_dir(f"topkstate_{_uuid.uuid4().hex[:8]}")
     w = W.partitionBy("event_type").orderBy(F.desc("value"), F.asc("event_id"))
 
     def topk(df):
@@ -1356,13 +1292,9 @@ def stream_exec_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return topk(prev.unionByName(topk(pruned))).coalesce(1)
 
-    def merge_batch(batch, bid: int) -> None:
-        staging.fold(batch.sparkSession, cur, lambda prev: step(batch, prev))
-
     stream = staging.replay(spark, sf_dir, _events)
-    _drain(stream, merge_batch)
     return (
-        _sink(spark, cur)
+        _fold_query(stream, step, "topkstate", sf_dir)
         .withColumn("rnk", F.row_number().over(w))
         .select(
             "event_type",
@@ -1375,46 +1307,30 @@ def stream_exec_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _best_per_fact(batch_df: DataFrame) -> DataFrame:
-    """A micro-batch of interval-join pairs reduced to each fact's latest
-    candidate, in the keyed-merge column protocol: key ``user_id`` =
-    the fact id, winner order (``last_ts``, ``event_id``) = (prior_ts,
-    prior_id); ``evt_user``/``evt_ts`` ride as payload."""
-    from pyspark.sql import Window as W
+    """Interval-join pairs in the keep-latest protocol: key ``user_id``
+    = the fact id, winner order (``last_ts``, ``event_id``) =
+    (prior_ts, prior_id); ``evt_user``/``evt_ts`` ride as payload."""
     from pyspark.sql import functions as F
 
-    w = W.partitionBy("user_id").orderBy(
-        F.col("last_ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        batch_df.select(
-            F.col("evt_id").alias("user_id"),
-            F.col("prior_ts").alias("last_ts"),
-            F.col("prior_id").alias("event_id"),
-            "evt_user",
-            "evt_ts",
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    return batch_df.select(
+        F.col("evt_id").alias("user_id"),
+        F.col("prior_ts").alias("last_ts"),
+        F.col("prior_id").alias("event_id"),
+        "evt_user",
+        "evt_ts",
     )
 
 
 def _asof_join(spark: SparkSession, sf_dir: str, watermarked: bool) -> DataFrame:
-    """The streaming as-of join: ``_interval_join`` drained through the
-    keyed-merge sink of ``_best_per_fact``, read back as facts with
+    """The streaming as-of join: ``_interval_join`` drained into the
+    keep-latest target of ``_best_per_fact``, read back as facts with
     their latest candidate."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     name = "streamasofwm" if watermarked else "streamasof"
-    target_dir = staging.scratch_dir(f"{name}_{staging.fingerprint(sf_dir)}")
-    shutil.rmtree(target_dir, ignore_errors=True)
-    joined = _interval_join(spark, sf_dir, watermarked).select(
-        "evt_id", "evt_ts", "evt_user", "prior_id", "prior_ts"
-    )
-    _drain(joined, _keyed_merge_batch_fn(target_dir, _best_per_fact))
-    return _sink(spark, target_dir).select(
+    joined = _interval_join(spark, sf_dir, watermarked)
+    target = _fold_query(joined, _keep_latest(_best_per_fact), name, sf_dir)
+    return target.select(
         F.col("user_id").alias("evt_id"),
         F.col("evt_user").alias("user_id"),
         # the events table's NTZ type (a no-op on the unwatermarked side)
@@ -1444,11 +1360,9 @@ def stream_exec_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged files feed two streaming sources (even event_ids = facts,
     odd = candidate states, the `stream_exec_stream_join` split); the
     stream-stream interval join emits every in-window pairing in
-    append mode, and ``foreachBatch`` reduces each micro-batch to its
-    per-fact best candidate and MERGEs it into a parquet target
-    keeping the max (prior_ts, prior_id) per fact — the
-    `stream_exec_upsert` keyed-merge discipline pointed at join
-    output. "Latest within window" is an associative, idempotent
+    append mode, and ``foreachBatch`` MERGEs each micro-batch into a
+    parquet target keeping the max (prior_ts, prior_id) per fact — the
+    `stream_exec_upsert` keep-latest step pointed at join output. "Latest within window" is an associative, idempotent
     reduction, so the target is batching-invariant and replay-safe,
     and must hash-equal the batch as-of oracle (QUALIFY row_number
     = 1) regardless of how the four micro-batches interleave — the
@@ -1519,8 +1433,8 @@ def stream_exec_asof_join_watermarked(
     min(max even ts, max odd ts) - 6h, the closed-form `kept`
     predicate the oracle states — Spark's query watermark is the MIN
     across watermarked inputs of max-seen minus delay), and the
-    ``foreachBatch`` keyed-merge argmax sink reduces every
-    micro-batch's join output to its per-fact latest candidate
+    ``foreachBatch`` keep-latest sink keeps each fact's latest
+    candidate of the target and the micro-batch's join output
     ("latest within window" is associative and idempotent, so the
     target is batching-invariant and replay-safe). The oracle is
     therefore the batch as-of (QUALIFY row_number = 1) over the kept

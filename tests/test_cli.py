@@ -17,6 +17,24 @@ def test_generate_process_roundtrip(spark, tmp_path, capsys):
     assert "amount_category" in back.columns
 
 
+def test_process_launches_only_the_json_write(spark, tmp_path, capsys, jobs_during):
+    """``process`` prints the row count the JSON sink observed inside its
+    own write, so it launches no job beyond that write's."""
+    from aws_etl_pipeline_spark.operators.etl import transform_transactions, write_json
+    from aws_etl_pipeline_spark.schemas import TRANSACTIONS_RAW
+
+    raw = str(tmp_path / "raw-data")
+    assert main(["generate", "--rows", "25", "--date", "2024-03-15", "--out", raw]) == 0
+    src = spark.read.schema(TRANSACTIONS_RAW).option("header", True).csv(raw)
+    write_jobs = jobs_during(
+        lambda: write_json(transform_transactions(src), str(tmp_path / "plain"))
+    )
+    out = str(tmp_path / "processed-data")
+    capsys.readouterr()
+    assert jobs_during(lambda: main(["process", "--src", raw, "--out", out])) == write_jobs
+    assert "processed 25 records" in capsys.readouterr().out
+
+
 def test_backfill_layout(spark, tmp_path):
     raw = str(tmp_path / "hist")
     assert main(["backfill", "--days", "2", "--end-date", "2024-03-15", "--out", raw]) == 0

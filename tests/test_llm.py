@@ -715,6 +715,40 @@ def test_pq_driver_train_matches_relational_spelling(spark, sf_dir):
     assert bits(driver) == bits(relational)
 
 
+def test_pq_train_bounds_its_own_sample(spark, sf_dir):
+    """_pq_train trains on vec_id < N_QUERIES + PQ_TRAIN_SAMPLE whatever
+    it is given: the corpus subvectors give the same codebook with and
+    without the filter. The sf0.001 corpus lies inside the bound, so
+    a shifted copy of it is added past the bound."""
+    from pyspark.sql import functions as F
+
+    from aws_etl_pipeline_spark.llm.similarity import (
+        N_QUERIES,
+        PQ_TRAIN_SAMPLE,
+        _ivf_parts,
+        _pq_subvectors,
+        _pq_train,
+    )
+
+    n, _, _ = _ivf_parts(spark, sf_dir)
+    sub = _pq_subvectors(
+        n.filter(F.col("vec_id") >= N_QUERIES).select("vec_id", "v")
+    )
+    past = sub.select(
+        (F.col("vec_id") + N_QUERIES + PQ_TRAIN_SAMPLE).alias("vec_id"),
+        "sub",
+        F.transform("sv", lambda x: x + 1.0).alias("sv"),
+    )
+    sub = sub.unionByName(past)
+    subt = sub.filter(F.col("vec_id") < N_QUERIES + PQ_TRAIN_SAMPLE)
+    assert sub.count() > subt.count()
+
+    def codebook(df):
+        return sorted((r["sub"], r["cell"], tuple(r["cv"])) for r in _pq_train(df).collect())
+
+    assert codebook(sub) == codebook(subt)
+
+
 def test_lloyd_literal_matches_relational_spelling(spark, sf_dir):
     """r15: lloyd_assign assigns via the literal-centroid projection
     (_argmin_d2_sql) with per-iteration bounded centroid collects.

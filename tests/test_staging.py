@@ -254,8 +254,8 @@ def test_fold_records_the_schema_parquet_reads_back(spark, sf_dir, tmpdir_root, 
     targets.append(upsert)
 
     for q in (
-        ingest.stream_exec_upsert,  # _latest_merge_batch_fn
-        ingest.stream_exec_cdc,  # _keyed_merge_batch_fn
+        ingest.stream_exec_upsert,  # _keep_latest
+        ingest.stream_exec_cdc,  # _keep_latest, tombstones
         ingest.stream_exec_sketch_merge,
         ingest.stream_exec_topk_merge,
     ):

@@ -83,28 +83,109 @@ def test_upsert_only_checkpoint_sits_beside_the_target(spark, tmp_path):
     assert not os.path.exists(os.path.join(target, "_checkpoint"))
 
 
-def test_landing_batch_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: re-delivering an epoch through the
-    landing body leaves the JSON archive and the upsert target as they
-    were."""
+def test_dual_sink_drain_parses_each_file_once(spark, tmp_path, caplog):
+    """A landing into both sinks persists each micro-batch, so a 20-row
+    file is read once: the drain counts 20 input rows, not 20 per
+    sink."""
+    import logging
+
+    in_dir = str(tmp_path / "raw")
+    _upload(spark, in_dir, 20, day=14)
+    with caplog.at_level(logging.INFO):
+        run_pipeline_available_now(
+            spark, in_dir, str(tmp_path / "json"), str(tmp_path / "upsert")
+        )
+    (line,) = [
+        r.getMessage()
+        for r in caplog.records
+        if r.getMessage().startswith("drain _fold_batch_fn.")
+    ]
+    assert " batches=1 rows=20 " in line
+
+
+def _events_batch(spark, sf_dir):
+    from aws_etl_pipeline_spark.catalog import load_table
+
+    ev = load_table(spark, sf_dir, "events").limit(200)
+    return ev.select("event_id", "user_id", "ts", "event_type", "value")
+
+
+def _fold_case(spark, sf_dir, case: str):
+    """``(step, batch, archived)``: the fold step, a micro-batch and
+    whether the JSON archive is on, as each streaming target uses the
+    one foreachBatch body."""
     from aws_etl_pipeline_spark.operators.etl import transform_transactions
-    from aws_etl_pipeline_spark.streaming.ingest import _landing_batch_fn
+    from aws_etl_pipeline_spark.streaming import ingest
 
-    json_dir = str(tmp_path / "json")
-    target = str(tmp_path / "upsert")
-    land = _landing_batch_fn(json_dir, target)
-    # materialized, so both deliveries carry one processed_timestamp
-    batch = transform_transactions(
-        generate_transactions(spark, 30, dt.date(2024, 3, 14), seed=6)
-    ).localCheckpoint()
+    if case == "landing":  # the CLI watch: upsert + JSON archive
+        # materialized, so both deliveries carry one processed_timestamp
+        batch = transform_transactions(
+            generate_transactions(spark, 30, dt.date(2024, 3, 14), seed=6)
+        ).localCheckpoint()
+        return ingest._upsert_step, batch, True
+    latest = ingest._keep_latest(ingest._latest_per_user)
+    if case == "dual_sink":  # stream_exec_upsert_json
+        batch = _events_batch(spark, sf_dir).withColumn("value_abs", F.abs(F.col("value")))
+        return latest, batch, True
+    if case == "upsert":
+        return latest, _events_batch(spark, sf_dir), False
+    if case == "cdc":
+        return ingest._keep_latest(ingest._cdc_changes), _events_batch(spark, sf_dir), False
+    # as-of: facts (even ids) paired with every candidate (odd ids) of
+    # the same user in the 6 hours before
+    ev = _events_batch(spark, sf_dir)
+    facts = ev.filter(F.col("event_id") % 2 == 0).selectExpr(
+        "event_id AS evt_id", "ts AS evt_ts", "user_id AS evt_user"
+    )
+    cands = ev.filter(F.col("event_id") % 2 == 1).selectExpr(
+        "event_id AS prior_id", "ts AS prior_ts", "user_id AS prior_user"
+    )
+    pairs = facts.join(
+        cands,
+        F.expr(
+            "evt_user = prior_user AND "
+            "prior_ts BETWEEN evt_ts - INTERVAL 6 HOURS AND evt_ts"
+        ),
+    )
+    return ingest._keep_latest(ingest._best_per_fact), pairs, False
 
-    land(batch, 0)
-    json_once = spark.read.json(json_dir).count()
-    target_once = sorted(map(tuple, spark.read.parquet(target).collect()))
-    assert json_once == len(target_once) == 30
-    land(batch, 0)
-    assert spark.read.json(json_dir).count() == json_once
-    assert sorted(map(tuple, spark.read.parquet(target).collect())) == target_once
+
+@pytest.mark.parametrize("case", ["landing", "dual_sink", "upsert", "cdc", "asof"])
+def test_fold_batch_replay_is_idempotent(spark, sf_dir, tmp_path, case):
+    """foreachBatch is at-least-once: re-delivering epoch 0 through the
+    one fold body leaves the target and the JSON archive as they were —
+    the archive because each epoch overwrites its own ``epoch=<id>``
+    dir, the target because folding the same batch again is
+    idempotent."""
+    from aws_etl_pipeline_spark.streaming.ingest import _fold_batch_fn
+
+    step, batch, archived = _fold_case(spark, sf_dir, case)
+    json_dir = str(tmp_path / "json") if archived else None
+    target = str(tmp_path / "target")
+    fold = _fold_batch_fn(target, step, json_dir)
+
+    def json_rows():
+        return spark.read.json(json_dir).count() if archived else None
+
+    def target_rows():
+        return sorted(map(tuple, spark.read.parquet(target).collect()))
+
+    fold(batch, 0)
+    json_once, target_once = json_rows(), target_rows()
+    fold(batch, 0)  # re-delivery of the same epoch
+    assert json_rows() == json_once
+    assert target_rows() == target_once
+    if case == "landing":
+        assert json_once == len(target_once) == 30
+    elif case == "dual_sink":
+        assert json_once == 200
+        # a LATER batch with overlapping keys still advances the target
+        fold(batch.withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 SECOND")), 1)
+        assert spark.read.json(json_dir).count() == 400
+        advanced = spark.read.parquet(target)
+        assert advanced.count() == len(target_once)
+    else:
+        assert target_once
 
 
 @pytest.mark.parametrize("session_partitions, state_partitions", [(16, 4), (4, 4), (2, 2)])
@@ -261,43 +342,6 @@ def test_watermark_drops_late_rows(spark):
     assert dt.datetime(2024, 1, 1, 12, 0) in starts
 
 
-def test_dual_sink_batch_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: re-delivering the SAME micro-batch
-    through the dual-sink body must leave both sinks byte-identical —
-    the JSON side because each batch overwrites its own batch=<id>
-    directory, the upsert side because keep-latest merging of identical
-    winners is idempotent."""
-    from aws_etl_pipeline_spark.catalog import load_table
-    from aws_etl_pipeline_spark.streaming.ingest import _dual_sink_batch_fn
-
-    json_dir = str(tmp_path / "json")
-    target_dir = str(tmp_path / "upsert")
-    fn = _dual_sink_batch_fn(json_dir, target_dir)
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").limit(200)
-    batch = ev.select("event_id", "user_id", "ts", "event_type", "value")
-
-    fn(batch, 0)
-    json_once = spark.read.json(json_dir).count()
-    upsert_once = sorted(
-        tuple(r) for r in spark.read.parquet(target_dir).collect()
-    )
-    assert json_once == 200
-
-    fn(batch, 0)  # re-delivery of the same epoch
-    assert spark.read.json(json_dir).count() == json_once
-    assert (
-        sorted(tuple(r) for r in spark.read.parquet(target_dir).collect())
-        == upsert_once
-    )
-
-    # a LATER batch with overlapping keys still advances the target
-    fn(batch.withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 SECOND")), 1)
-    assert spark.read.json(json_dir).count() == 400
-    advanced = spark.read.parquet(target_dir)
-    assert advanced.count() == len(upsert_once)
-
-
 def test_cdc_tombstone_blocks_resurrection(spark, tmp_path):
     """A DELETE in an early micro-batch must suppress an
     OLDER-timestamped upsert arriving in a LATER batch — the reason
@@ -307,12 +351,13 @@ def test_cdc_tombstone_blocks_resurrection(spark, tmp_path):
     from pyspark.sql import Row
 
     from aws_etl_pipeline_spark.streaming.ingest import (
-        _cdc_normalize_batch,
-        _keyed_merge_batch_fn,
+        _cdc_changes,
+        _fold_batch_fn,
+        _keep_latest,
     )
 
     target = str(tmp_path / "cdc_target")
-    merge = _keyed_merge_batch_fn(target, _cdc_normalize_batch)
+    merge = _fold_batch_fn(target, _keep_latest(_cdc_changes))
 
     def ev(eid, uid, ts, typ, val):
         return Row(
