@@ -20,11 +20,21 @@ tracked intermediates until its action has run):
 
 Unpersisting is always correctness-neutral (a cleared plan recomputes),
 so a stray early clear can cost time but never rows.
+
+``bounded_collect(df, max_rows, what)`` brings a relation that a
+driver-side loop consumes to the driver: it fetches at most
+``max_rows + 1`` rows, raises ``BoundExceeded`` past the bound (the
+caller then takes its distributed path) and logs
+``collect <what> rows=<n> <ms> ms`` to stderr.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import time
+
+from pyspark.sql import DataFrame, Row
+
+from . import staging
 
 _TRACKED: list[DataFrame] = []
 
@@ -50,3 +60,25 @@ def clear_persisted() -> int:
         except Exception:
             pass  # session already stopped — nothing to free
     return n
+
+
+class BoundExceeded(RuntimeError):
+    """A bounded collect found more than ``max_rows`` rows."""
+
+    def __init__(self, what: str, max_rows: int):
+        super().__init__(f"collect {what}: more than {max_rows} rows")
+        self.what = what
+        self.max_rows = max_rows
+
+
+def bounded_collect(df: DataFrame, max_rows: int, what: str) -> list[Row]:
+    """``df``'s rows, fetched with ``limit(max_rows + 1)``; raises
+    :class:`BoundExceeded` if there are more than ``max_rows``."""
+    t0 = time.perf_counter()
+    rows = df.limit(max_rows + 1).collect()
+    staging.log.info(
+        "collect %s rows=%d %.0f ms", what, len(rows), (time.perf_counter() - t0) * 1e3
+    )
+    if len(rows) > max_rows:
+        raise BoundExceeded(what, max_rows)
+    return rows

@@ -11,10 +11,12 @@ is single-space word salad; a production pipeline would swap in
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..cache import track
+from ..cache import BoundExceeded, bounded_collect, track
 from ..catalog import load_spread, load_spread_keyed, load_table
 from ..registry import query
 
@@ -1254,75 +1256,101 @@ def _bpe_train_oracle() -> str:
 
 @query("bpe_train_merges", oracle=_bpe_train_oracle())
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE TRAINING loop (Sennrich et al. 2016), {BPE_ROUNDS} merge
-    rounds unrolled — the full trainer iteration bpe_pair_counts pins
-    one round of: count adjacent symbol pairs over the (deduplicated,
-    frequency-weighted) vocabulary, pick the argmax pair, apply the
-    merge to the symbol stream, repeat. Emits the learned merge table
-    (round, pair, merge_count) — the artifact a tokenizer trainer
-    persists.
+    """BPE training (Sennrich et al. 2016), {BPE_ROUNDS} merge rounds:
+    count adjacent symbol pairs over the deduplicated, frequency-weighted
+    vocabulary, pick the argmax pair, merge it everywhere, repeat. Emits
+    the learned merge table (round, pair, merge_count).
 
-    Representation: each word is a string of bracketed symbols
-    "\\x02sym\\x03\\x02sym\\x03…"; applying the winning merge (a, b)
-    is one engine-native replace() of "\\x02a\\x03\\x02b\\x03" with
-    "\\x02ab\\x03" — replace() is greedy left-to-right non-overlapping
-    on both engines, which IS the BPE merge rule (an 'aaa' run with
-    winner (a,a) becomes [aa, a], exactly like the reference
-    implementation). Brackets make symbols self-delimiting so a
-    pattern can never match inside a longer symbol.
-
-    100 TB shape: the corpus is touched ONCE (the vocab aggregation —
-    the dedupe-to-vocabulary-first trick from bpe_pair_counts); every
-    round then runs over the vocabulary relation only, with the winner
-    as a broadcast 1-row join (argmax via global TakeOrdered) — cost
-    tracks vocabulary size x rounds, not corpus size (measured flat at
-    the 10x replica, SCALING.md). Each round's symbol strings and the
-    winner relation persist (cache.track) so round r+1's plan builds
-    on materialized round-r state instead of an exponentially
-    re-expanded lineage — the kmeans/pagerank iterative-loop rule.
-
-    Determinism: pair counts are integer sums; the argmax orders by
-    (count desc, 'a_b' label asc) identically on both engines; merges
-    are byte-exact string ops. The oracle unrolls the same rounds as
-    chained CTEs."""
+    Each word is a string of bracketed symbols "\\x02sym\\x03…".
+    Applying the winner (a, b) is one replace() of "\\x02a\\x03\\x02b\\x03"
+    with "\\x02ab\\x03": greedy, left-to-right and non-overlapping on
+    both engines, which is the BPE merge rule (an 'aaa' run with winner
+    (a, a) becomes [aa, a]). Brackets make symbols self-delimiting, so
+    a pattern never matches inside a longer symbol. The argmax orders
+    by (count desc, 'a_b' label asc). The oracle unrolls the same
+    rounds as chained CTEs."""
     outs, _ = _bpe_train(spark, sf_dir)
     return outs
 
 
-def _bpe_train(spark: SparkSession, sf_dir: str):
-    """The shared BPE training loop: returns ``(outs, wins)`` — the
-    per-round (round, pair, merge_count) output relation and the
-    per-round winner TUPLES (a, b, cnt), the latter consumed as
-    literal merge rules by bpe_encode_corpus.
+#: Largest vocabulary (distinct words) ``_bpe_train`` merges on the
+#: driver. Warm ``_bpe_train`` on local[2], synthetic vocabularies of
+#: 3-10 letter words, driver loop / Spark loop: 20k words 1.06 / 2.04 s,
+#: 50k 1.55 / 2.49 s, 100k 3.00 / 3.25 s, 200k 4.42 / 5.24 s. The driver
+#: loop grows with the words (the collect alone is 0.6 s at 50k and
+#: 2.2 s at 200k), while more executors shorten the Spark loop's
+#: per-round jobs, so the bound sits well below the local[2] crossover.
+BPE_DRIVER_MAX_WORDS = 50_000
 
-    r15 (guide §1.2, the bounded control-plane device): each round's
-    argmax winner is ONE row, so it is collected (the TakeOrdered the
-    tracked 1-row relation already ran) and folded back as LITERAL
-    pattern/replacement strings — the per-round crossJoin(broadcast)
-    and the per-round persists of the winner AND the re-written
-    vocabulary disappear; rounds become projections over the one
-    persisted base vocabulary, and only the per-round pair-count
-    argmax touches the cluster. Winner selection, counts and the
-    emitted rows are byte-identical (same ordering, same strings)."""
+
+def _bpe_train(spark: SparkSession, sf_dir: str):
+    """The shared BPE trainer: returns ``(outs, wins)``, the
+    (round, pair, merge_count) relation and the winners as literal
+    ``(a, b, cnt)`` tuples, which bpe_encode_corpus applies.
+
+    The corpus is read once, by the vocabulary aggregate. A vocabulary
+    of at most ``BPE_DRIVER_MAX_WORDS`` words is collected and merged
+    on the driver; a larger one runs the rounds in Spark over the
+    persisted vocabulary (its aggregate then runs a second time).
+    Both loops see the same Spark-built strings: Java's "." leaves
+    line terminators unbracketed."""
     d = load_table(spark, sf_dir, "documents")
-    vocab = (
+    words = (
         d.select(F.explode(_words()).alias("term"))
-        .filter(F.col("term") != "")
+        .where("term <> ''")
         .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("freq"))
+        .agg(F.expr("count(1) AS freq"))
+        .selectExpr(f"regexp_replace(term, '(.)', '{_BPE_O}$1{_BPE_C}') AS w", "freq")
     )
-    words = track(
-        vocab.select(
-            F.regexp_replace("term", "(.)", _BPE_O + "$1" + _BPE_C).alias("w"),
-            "freq",
-        )
+    try:
+        rows = bounded_collect(words, BPE_DRIVER_MAX_WORDS, "bpe_vocab")
+    except BoundExceeded:
+        wins = _bpe_rounds_spark(track(words))
+    else:
+        wins = _bpe_rounds_driver(rows)  # Rows are (w, freq) tuples
+    outs = spark.createDataFrame(
+        [(r, f"{a}_{b}", cnt) for r, (a, b, cnt) in enumerate(wins, 1)],
+        "round bigint, pair string, merge_count bigint",
     )
-    out_rows, wins = [], []
-    for r in range(1, BPE_ROUNDS + 1):
+    return outs, wins
+
+
+def _bpe_merge(a: str, b: str) -> tuple[str, str]:
+    """The (pattern, replacement) strings that merge symbol pair (a, b)."""
+    return _BPE_O + a + _BPE_C + _BPE_O + b + _BPE_C, _BPE_O + a + b + _BPE_C
+
+
+def _bpe_rounds_driver(words: list[tuple[str, int]]) -> list[tuple[str, str, int]]:
+    """The merge rounds over collected ``(w, freq)`` rows. Each step
+    matches the Spark loop's: ``str.split`` on the bracket pair as
+    Spark's ``split``, Python's code-point string order as Spark's
+    UTF-8 byte order, ``str.replace`` as Java's ``String.replace``
+    (greedy, left to right, non-overlapping)."""
+    wins = []
+    for _ in range(BPE_ROUNDS):
+        pairs: Counter[tuple[str, str]] = Counter()
+        for w, freq in words:
+            syms = w[1:-1].split(_BPE_C + _BPE_O)
+            for ab in zip(syms, syms[1:]):
+                pairs[ab] += freq
+        if not pairs:
+            break  # every word is one symbol: no later round has a pair
+        (a, b), cnt = min(pairs.items(), key=lambda kv: (-kv[1], f"{kv[0][0]}_{kv[0][1]}"))
+        wins.append((a, b, cnt))
+        pat, rep = _bpe_merge(a, b)
+        words = [(w.replace(pat, rep), freq) for w, freq in words]
+    return wins
+
+
+def _bpe_rounds_spark(words: DataFrame) -> list[tuple[str, str, int]]:
+    """The merge rounds in Spark over a ``(w, freq)`` relation: one
+    argmax job per round, each winner folded back as literal strings."""
+    wins = []
+    for _ in range(BPE_ROUNDS):
         arr = F.split(F.expr("substring(w, 2, length(w) - 2)"), _BPE_C + _BPE_O)
         wp = words.withColumn("arr", arr)
-        # guard: Spark's sequence(1, 0) is the DESCENDING [1, 0], not
-        # empty — single-symbol words must contribute no pairs.
+        # Spark's sequence(1, 0) is the descending [1, 0], not empty:
+        # single-symbol words must contribute no pairs.
         idx = F.when(
             F.size("arr") > 1, F.sequence(F.lit(1), F.size("arr") - 1)
         ).otherwise(F.array().cast("array<int>"))
@@ -1349,22 +1377,14 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
             .collect()
         )
         if not row:
-            # no pair left: every word is one symbol, and no merge can
-            # make a pair, so every later round is empty too (the
-            # oracle's empty win{r} emits no row)
-            break
-        a, b_, cnt = row[0]["a"], row[0]["b"], int(row[0]["cnt"])
-        wins.append((a, b_, cnt))
-        out_rows.append((r, f"{a}_{b_}", cnt))
-        pat = F.lit(_BPE_O + a + _BPE_C + _BPE_O + b_ + _BPE_C)
-        rep = F.lit(_BPE_O + a + b_ + _BPE_C)
+            break  # every word is one symbol: no later round has a pair
+        a, b, cnt = row[0]["a"], row[0]["b"], int(row[0]["cnt"])
+        wins.append((a, b, cnt))
+        pat, rep = _bpe_merge(a, b)
         words = words.select(
-            F.replace(F.col("w"), pat, rep).alias("w"), "freq"
+            F.replace(F.col("w"), F.lit(pat), F.lit(rep)).alias("w"), "freq"
         )
-    outs = spark.createDataFrame(
-        out_rows, "round bigint, pair string, merge_count bigint"
-    )
-    return outs, wins
+    return wins
 
 
 def _bpe_encode_oracle() -> str:
@@ -1408,28 +1428,18 @@ FROM docs{BPE_ROUNDS}n
 
 @query("bpe_encode_corpus", oracle=_bpe_encode_oracle())
 def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE ENCODE — the apply half of the tokenizer loop
-    (bpe_train_merges is the train half, sharing ``_bpe_train``): the
-    {BPE_ROUNDS} learned merges are applied IN TRAINING ORDER to every
-    document's character stream, and each document reports its symbol
-    count before (pure characters) and after (BPE tokens) plus the
-    compression ratio — the per-document token count a packing /
-    budgeting stage (pack_token_budget) consumes downstream.
+    """BPE encode, the apply half of the tokenizer (bpe_train_merges is
+    the train half; both share ``_bpe_train``): the {BPE_ROUNDS} learned
+    merges are applied in training order to every document's character
+    stream, and each document reports its symbol count before (pure
+    characters) and after (BPE tokens) plus the compression ratio.
 
-    Representation matches training: every non-space character is
-    bracketed "\\x02ch\\x03" (spaces stay BARE, so a merge pattern —
-    which always carries brackets — can never cross a word boundary:
-    word-internal merges only, the Sennrich setup). Each merge is one
-    engine-native greedy replace() with the 1-row winner relation
-    broadcast; token counts are length deltas (count of \\x02 marks),
-    all inside codegen.
-
-    100 TB shape: training cost is vocabulary-bound (measured flat,
-    SCALING.md); the encode is {BPE_ROUNDS} sequential linear scans of
-    the corpus with zero shuffles — state is the broadcast merge
-    table, exactly how a production tokenizer-apply stage distributes
-    (in practice the full merge list rides one broadcast instead of
-    per-round joins)."""
+    Every non-space character is bracketed "\\x02ch\\x03"; spaces stay
+    bare, so a merge pattern, which always carries brackets, never
+    crosses a word boundary. The winners are literal strings, so each
+    merge is one replace() projection over a linear scan of the corpus
+    (no join, no shuffle), and token counts are length deltas (the
+    count of \\x02 marks)."""
     _, wins = _bpe_train(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     wrap = F.regexp_replace(
@@ -1441,14 +1451,10 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = d.select("doc_id", wrap.alias("w")).select(
         "doc_id", "w", n_marks(F.col("w")).cast("long").alias("n0")
     )
-    # r15: the learned merges are literal tuples (see _bpe_train), so
-    # each apply round is a pure projection — no per-round broadcast
-    # join; the whole encode is BPE_ROUNDS chained replace()s.
     for a, b, _cnt in wins:
-        pat = F.lit(_BPE_O + a + _BPE_C + _BPE_O + b + _BPE_C)
-        rep = F.lit(_BPE_O + a + b + _BPE_C)
+        pat, rep = _bpe_merge(a, b)
         docs = docs.select(
-            "doc_id", F.replace(F.col("w"), pat, rep).alias("w"), "n0"
+            "doc_id", F.replace(F.col("w"), F.lit(pat), F.lit(rep)).alias("w"), "n0"
         )
     nt = n_marks(F.col("w")).cast("long")
     return docs.select(

@@ -254,36 +254,41 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.select("node", "deg", "rank")
 
 
+#: Packed pair keys ``u * 2^32 + v`` are exact (one key per pair, and
+#: ``cast("int")`` unpacks them) while both ids lie in [0, 2^31).
+PACK_ID_BOUND = 1 << 31
+
+
+def _packed(u: F.Column, v: F.Column) -> F.Column:
+    return u.cast("long") * F.lit(1 << 32) + v.cast("long")
+
+
+def _packed_checked(u: F.Column, v: F.Column) -> F.Column:
+    """``_packed(u, v)``, raising at run time for an id outside
+    [0, ``PACK_ID_BOUND``) instead of colliding. Null ids pack to null."""
+    outside = (u < 0) | (u >= PACK_ID_BOUND) | (v < 0) | (v >= PACK_ID_BOUND)
+    return F.when(outside, F.raise_error(F.lit(
+        "packed graph key: node id outside [0, 2^31)"
+    ))).otherwise(_packed(u, v))
+
+
 def _wedge_close(edges: DataFrame) -> DataFrame:
     """Oriented wedge-close triangles (a, b, c) over an oriented
-    (u < v) edge relation — the shared kernel of the triangle family
-    (exact, DOULION-sampled, degree-capped, edge-jaccard, clustering
+    (u < v) edge relation: the shared kernel of the triangle family
+    (exact, DOULION-sampled, degree-capped, edge-Jaccard, clustering
     coefficient).
 
-    r15 (guide §2.3 "narrower types", applied to the probe key): the
-    closing join used to probe on the 2-column key (u, v) against the
-    full edge relation; the key is now PACKED into one 64-bit long
-    (u * 2^32 + v — exact and collision-free while node ids are
-    32-bit, which the integer part keys are; the dtype guard below
-    falls back to the 2-column join for any non-integer node type)
-    and the build side is the single packed column. Measured 3.1x on
-    the close stage at sf0.1 (4.31 s -> 1.39 s noop sink, identical
-    1,884,488 triangles): one long hash/compare per wedge probe
-    against a column-pruned build relation instead of a two-column
-    struct against full edge rows."""
+    Integer ids close on one packed long key instead of the 2-column
+    (u, v) key: 3.1x on the close stage at sf0.1 (4.31 -> 1.39 s,
+    1,884,488 triangles). Every edge is packed through the range check,
+    so the probe side, whose ids are edge endpoints, packs unchecked.
+    Other id types take the 2-column join."""
     e1, e2 = edges.alias("e1"), edges.alias("e2")
     int_types = {"int", "bigint", "smallint", "tinyint"}
     dt = dict(edges.dtypes)
     if dt.get("u") in int_types and dt.get("v") in int_types:
-        two32 = F.lit(1 << 32).cast("long")
-        closed = edges.select(
-            (F.col("u").cast("long") * two32 + F.col("v").cast("long")).alias(
-                "_uv"
-            )
-        )
-        probe = (
-            F.col("e1.u").cast("long") * two32 + F.col("e2.v").cast("long")
-        )
+        closed = edges.select(_packed_checked(F.col("u"), F.col("v")).alias("_uv"))
+        probe = _packed(F.col("e1.u"), F.col("e2.v"))
         joined = e1.join(e2, F.col("e2.u") == F.col("e1.v")).join(
             closed, probe == F.col("_uv")
         )
@@ -698,17 +703,11 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
     )
-    tri = (
-        _wedge_close(pairs)
-    )
-    # r15 (guide §2.3): the per-edge triangle count groups on the
-    # PACKED pair key (one long instead of a two-int key — exact for
-    # 32-bit part keys, the _wedge_close device) and unpacks after the
-    # filter; the node-sized degree table is broadcast into both
-    # lookups (its aggregate carries no usable size estimate, so the
-    # common relation was being sort-merge-exchanged twice).
-    two32 = F.lit(1 << 32).cast("long")
-    pk = lambda x, y: F.col(x).cast("long") * two32 + F.col(y).cast("long")  # noqa: E731
+    tri = _wedge_close(pairs)
+    # the per-edge triangle count groups on the packed pair key and
+    # unpacks after the filter; the node-sized degree table is broadcast
+    # into both lookups (its aggregate carries no usable size estimate).
+    pk = lambda x, y: _packed_checked(F.col(x), F.col(y))  # noqa: E731
     common = (
         tri.select(
             F.explode(
@@ -720,7 +719,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_common") >= JACCARD_MIN_COMMON)
         .select(
             F.shiftrightunsigned("uv", 32).cast("int").alias("u"),
-            (F.col("uv") % two32).cast("int").alias("v"),
+            (F.col("uv") % F.lit(1 << 32)).cast("int").alias("v"),
             "n_common",
         )
     )

@@ -280,3 +280,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return ensure_engine_confs(spark)
+
+
+def stop_streaming(spark: SparkSession) -> None:
+    """Stop ``spark``'s active streams and the state stores' maintenance
+    task. Run before ``spark.stop()``: a maintenance run that overlaps
+    the context shutdown logs ``SparkEnv not active, cannot do
+    maintenance on StateStores``. A later stateful stream restarts the
+    task."""
+    for q in spark.streams.active:
+        q.stop()
+    spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+
+
+def stop_spark(spark: SparkSession) -> None:
+    """The one way a harness ends its session: streams and state-store
+    maintenance first (``stop_streaming``), then ``spark.stop()``."""
+    stop_streaming(spark)
+    spark.stop()

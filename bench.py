@@ -39,7 +39,7 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
 
 from aws_etl_pipeline_spark.profile import Probe, measure, warm
 from aws_etl_pipeline_spark.registry import all_queries
-from aws_etl_pipeline_spark.session import get_spark
+from aws_etl_pipeline_spark.session import get_spark, stop_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -276,7 +276,7 @@ def main() -> None:
             )
         results.append((metric, timings, spread))
     emit(results, warmup_sec, _sf(SF_DIR), host)
-    spark.stop()
+    stop_spark(spark)
 
 
 if __name__ == "__main__":

@@ -5,7 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from aws_etl_pipeline_spark.session import get_spark
+from aws_etl_pipeline_spark.session import get_spark, stop_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -14,7 +14,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 def spark():
     s = get_spark("tests", cpus=4)
     yield s
-    s.stop()
+    stop_spark(s)
 
 
 @pytest.fixture(scope="session")

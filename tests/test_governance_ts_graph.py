@@ -3,6 +3,8 @@ domain invariants plus the single-pass and wedge-join plan contracts."""
 
 import re
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from aws_etl_pipeline_spark.operators.analytics import (
@@ -689,3 +691,46 @@ def test_nf_bucketed_edges_join_has_no_edge_exchange(spark, sf_dir):
     # the edge-side scan must not sit under an Exchange: the only
     # exchange in the join subtree is the delta side's
     assert plan.count("Exchange hashpartitioning") <= 1, plan
+
+
+#: Four parts bought together (a 4-clique: 4 triangles, 2 common
+#: neighbours per edge) plus a fifth sharing an order with two of them.
+_BASKETS = [(1, (10, 20, 30, 40)), (2, (30, 40, 50))]
+
+
+def _lineitem_fixture(spark, root, parts):
+    rows = [(o, parts.get(p, p)) for o, basket in _BASKETS for p in basket]
+    spark.createDataFrame(rows, "l_orderkey bigint, l_partkey bigint").write.parquet(
+        str(root / "lineitem.parquet")
+    )
+    return str(root)
+
+
+@pytest.mark.parametrize("name", ["graph_triangle_count", "graph_jaccard_neighbors"])
+def test_packed_keys_match_the_oracle_on_bigint_ids(spark, tmp_path, name):
+    import duckdb
+
+    from aws_etl_pipeline_spark.registry import all_queries
+
+    q = all_queries()[name]
+    sf = _lineitem_fixture(spark, tmp_path, {})
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{sf}/lineitem.parquet/*.parquet')"
+    )
+    got = sorted(tuple(r) for r in q.fn(spark, sf).collect())
+    assert got and got == sorted(con.execute(q.oracle).fetchall())
+
+
+@pytest.mark.parametrize("bad_id", [2**32 + 20, -7])
+@pytest.mark.parametrize("name", ["graph_triangle_count", "graph_jaccard_neighbors"])
+def test_packed_keys_refuse_ids_outside_32_bits(spark, tmp_path, name, bad_id):
+    """u * 2^32 + v is exact only for ids in [0, 2^31): 2^32 + 20 would
+    pack like 20 plus one in u, and a negative id borrows from u."""
+    from pyspark.errors import SparkRuntimeException
+
+    from aws_etl_pipeline_spark.registry import all_queries
+
+    sf = _lineitem_fixture(spark, tmp_path, {20: bad_id})
+    with pytest.raises(SparkRuntimeException, match=r"node id outside \[0, 2\^31\)"):
+        all_queries()[name].fn(spark, sf).collect()

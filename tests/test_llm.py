@@ -835,3 +835,58 @@ def test_bpe_train_with_no_pair_left_emits_no_merge(spark, tmp_path):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}/*.parquet')")
     assert con.execute(_bpe_train_oracle()).fetchall() == []
+
+
+#: One document per line; every word's count is chosen for the merge
+#: it forces. Round 1: (a, a) = 19 over the 'aaa'/'aaaa' runs, which
+#: merge to [aa, a] and [aa, aa]. Round 2: (a, 1) = 16. Round 3: (a1, x)
+#: and (a, 2) tie at 10 and the 'a_b' label decides: "a1_x" < "a_2"
+#: ('1' < '_'), where tuple order would pick (a, 2). Also: multi-byte
+#: symbols, one-character words, an empty term and terms holding a
+#: newline, which Java's "." leaves unbracketed.
+_BPE_DOCS = [
+    "中é 中é 中é é中é a 中",
+    "aaa aaa aaa aaa aaa aaaa aaaa aaaa",
+    " ".join(["a2"] * 10),
+    " ".join(["a1x"] * 10 + ["a1"] * 6),
+    "b\nc ab\ncd ab\ncd  x é",
+]
+
+
+def test_bpe_driver_loop_fallback_and_oracle_agree(spark, tmp_path, monkeypatch):
+    import duckdb
+
+    from aws_etl_pipeline_spark.llm import text
+    from aws_etl_pipeline_spark.schemas import TESTDATA
+
+    docs = str(tmp_path / "documents.parquet")
+    rows = [(i, t, "en", "web", len(t)) for i, t in enumerate(_BPE_DOCS)]
+    spark.createDataFrame(rows, TESTDATA["documents"]).write.parquet(docs)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}/*.parquet')")
+
+    def run():
+        train = [tuple(r) for r in text.bpe_train_merges(spark, str(tmp_path)).collect()]
+        encode = sorted(tuple(r) for r in text.bpe_encode_corpus(spark, str(tmp_path)).collect())
+        return train, encode
+
+    fallbacks = []
+    spark_rounds = text._bpe_rounds_spark
+    monkeypatch.setattr(
+        text, "_bpe_rounds_spark", lambda w: fallbacks.append(1) or spark_rounds(w)
+    )
+    driver = run()
+    assert fallbacks == []
+    monkeypatch.setattr(text, "BPE_DRIVER_MAX_WORDS", 0)
+    fallback = run()
+    assert fallbacks == [1, 1]  # once per query
+    oracle = (
+        con.execute(text._bpe_train_oracle()).fetchall(),
+        sorted(con.execute(text._bpe_encode_oracle()).fetchall()),
+    )
+
+    assert driver[0] == [(1, "a_a", 19), (2, "a_1", 16), (3, "a1_x", 10)]
+    assert driver == fallback
+    assert driver[0] == oracle[0]
+    assert [r[:3] for r in driver[1]] == [r[:3] for r in oracle[1]]
+    assert [r[3] for r in driver[1]] == pytest.approx([r[3] for r in oracle[1]], abs=1e-9)

@@ -564,16 +564,15 @@ def test_aqe_splits_skewed_join_partition_at_runtime(spark):
 
 
 def test_bpe_encode_zero_shuffle_apply(spark, sf_dir):
-    # The encode stage applies broadcast 1-row merge rules to linear
-    # scans of the corpus: no Python anywhere, no unbounded cartesian
-    # (the only nested-loop joins are the broadcast 1-row winner
-    # relations), and the per-doc output must not introduce a wide
-    # shuffle beyond the training aggregations.
+    # The encode stage applies the learned merges as literal replace()
+    # projections over a linear scan of the corpus: no Python UDF, no
+    # join and no shuffle.
     from aws_etl_pipeline_spark.llm.text import bpe_encode_corpus
 
     df = bpe_encode_corpus(spark, sf_dir)
     plan = _plan(df)
-    assert "CartesianProduct" not in plan, plan
+    for node in ("Join", "CartesianProduct", "Exchange"):
+        assert node not in plan, plan
     assert not python_eval_nodes(df)
 
 

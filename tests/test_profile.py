@@ -4,6 +4,8 @@
 import os
 import sys
 
+import pytest
+
 from aws_etl_pipeline_spark.profile import measure
 from aws_etl_pipeline_spark.registry import all_queries
 
@@ -41,3 +43,29 @@ def test_measure_splits_build_from_execute(spark, probe):
     assert all(r.built.jobs == 0 and r.ran.jobs > 0 for r in reps)
     assert all(r.built.py4j > 0 for r in reps)
     assert all(r.seconds == r.build_s + r.optimize_s + r.execute_s for r in reps)
+
+
+#: (jobs, py4j call commands) inside a warm ``fn()`` of each
+#: ``olap_short`` query at sf0.001: the build sends a fixed number of
+#: commands, and only bpe_train_merges launches jobs (the vocabulary
+#: aggregate's shuffle stage and its bounded collect).
+OLAP_SHORT_BUILDS = {
+    "etl_flagship": (0, 505),
+    "q3_shipping_priority": (0, 377),
+    "q6_forecast_revenue": (0, 295),
+    "sql_cte_chain": (0, 51),
+    "agg_distinct": (0, 112),
+    "upsert_merge": (0, 175),
+    "multimodal_features": (0, 85),
+    "bpe_train_merges": (2, 138),
+}
+
+
+@pytest.mark.parametrize("name", sorted(OLAP_SHORT_BUILDS))
+def test_olap_short_build_budget(spark, sf_dir, jobs_during, py4j_calls_during, name):
+    jobs, py4j = OLAP_SHORT_BUILDS[name]
+    fn = all_queries()[name].fn
+    fn(spark, sf_dir)  # warm: schema inference, fixture staging
+    assert jobs_during(lambda: fn(spark, sf_dir)) <= jobs
+    # 10% headroom over the pinned count
+    assert py4j_calls_during(lambda: fn(spark, sf_dir)) <= py4j * 1.1

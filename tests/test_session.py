@@ -25,3 +25,17 @@ def test_default_reads_this_host(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
     mb = int(driver_memory().rstrip("m"))
     assert 1024 <= mb <= DRIVER_MEM_CAP_MB
+
+
+def test_stop_streaming_stops_state_store_maintenance(spark, sf_dir):
+    from aws_etl_pipeline_spark.registry import all_queries
+    from aws_etl_pipeline_spark.session import stop_streaming
+
+    q = all_queries()["stream_exec_dedup_watermarked"]
+    q.fn(spark, sf_dir).count()  # warm
+    q.fn(spark, sf_dir).count()
+    state_store = spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore
+    assert state_store.isMaintenanceRunning()
+    stop_streaming(spark)
+    assert spark.streams.active == []
+    assert not state_store.isMaintenanceRunning()

@@ -25,7 +25,7 @@ import duckdb  # noqa: E402
 
 from aws_etl_pipeline_spark.registry import all_queries  # noqa: E402
 from aws_etl_pipeline_spark.schemas import TABLE_NAMES  # noqa: E402
-from aws_etl_pipeline_spark.session import get_spark  # noqa: E402
+from aws_etl_pipeline_spark.session import get_spark, stop_spark  # noqa: E402
 
 FLOAT_REL_TOL = 1e-9
 
@@ -132,7 +132,7 @@ def main():
         args.verbose,
     )
     print(f"\n{len(names) - len(failed)}/{len(names)} passed")
-    spark.stop()
+    stop_spark(spark)
     sys.exit(1 if failed else 0)
 
 

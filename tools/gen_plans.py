@@ -14,7 +14,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aws_etl_pipeline_spark.plans.explain import plan_string  # noqa: E402
 from aws_etl_pipeline_spark.registry import all_queries  # noqa: E402
-from aws_etl_pipeline_spark.session import get_spark  # noqa: E402
+from aws_etl_pipeline_spark.session import get_spark, stop_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 
@@ -113,7 +113,7 @@ def main() -> None:
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
-    spark.stop()
+    stop_spark(spark)
 
 
 if __name__ == "__main__":

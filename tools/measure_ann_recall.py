@@ -25,7 +25,7 @@ from collections import defaultdict
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aws_etl_pipeline_spark.registry import all_queries  # noqa: E402
-from aws_etl_pipeline_spark.session import get_spark  # noqa: E402
+from aws_etl_pipeline_spark.session import get_spark, stop_spark  # noqa: E402
 
 ANN_QUERIES = (
     "sim_lsh_ann",
@@ -62,7 +62,7 @@ def main() -> None:
                 len(got & exact) / len(exact), 3
             )
     print(json.dumps(out, indent=1))
-    spark.stop()
+    stop_spark(spark)
 
 
 if __name__ == "__main__":

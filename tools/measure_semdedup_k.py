@@ -25,7 +25,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from aws_etl_pipeline_spark.cache import clear_persisted  # noqa: E402
 from aws_etl_pipeline_spark.llm.dedup import SEMDEDUP_TAU, semdedup_frame  # noqa: E402
 from aws_etl_pipeline_spark.llm.similarity import KMEANS_ITERS  # noqa: E402
-from aws_etl_pipeline_spark.session import get_spark  # noqa: E402
+from aws_etl_pipeline_spark.session import get_spark, stop_spark  # noqa: E402
 
 REPS = 3
 
@@ -53,7 +53,7 @@ def main() -> None:
             f"{label}: median {med:.2f}s [{samples[0]:.2f}..{samples[-1]:.2f}] "
             f"rows={n} pair_space={pair_space:,}"
         )
-    spark.stop()
+    stop_spark(spark)
 
 
 if __name__ == "__main__":

@@ -31,7 +31,7 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
 
 from aws_etl_pipeline_spark.profile import Probe, measure, warm  # noqa: E402
 from aws_etl_pipeline_spark.registry import all_queries  # noqa: E402
-from aws_etl_pipeline_spark.session import get_spark  # noqa: E402
+from aws_etl_pipeline_spark.session import get_spark, stop_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPS = int(os.environ.get("SPARK_GRAFT_PROFILE_REPS", "3"))
@@ -53,7 +53,7 @@ def main() -> None:
             f"py4j={'/'.join(str(r.built.py4j) for r in reps)} "
             f"compiles={'/'.join(str((r.built + r.ran).compiles) for r in reps)}"
         )
-    spark.stop()
+    stop_spark(spark)
 
 
 if __name__ == "__main__":

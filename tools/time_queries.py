@@ -28,7 +28,7 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
 
 from aws_etl_pipeline_spark.profile import Probe, count_rows, measure, warm  # noqa: E402
 from aws_etl_pipeline_spark.registry import all_queries  # noqa: E402
-from aws_etl_pipeline_spark.session import get_spark  # noqa: E402
+from aws_etl_pipeline_spark.session import get_spark, stop_spark  # noqa: E402
 
 WARMUP_SF = "/root/testdata/sf0.001"
 REPS = int(os.environ.get("SPARK_GRAFT_TIME_REPS", "2"))
@@ -90,7 +90,7 @@ def main() -> None:
         ),
         flush=True,
     )
-    spark.stop()
+    stop_spark(spark)
 
 
 if __name__ == "__main__":
