@@ -79,11 +79,14 @@ def udf_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@F.udf(T.StringType())
+@F.udf(T.StringType(), useArrow=False)
 def _categorize_amount_py(amount) -> str:
     """Row-at-a-time port of the reference's categorize_amount
     (`lambda_function.py:154-167`) — the slow path, kept only as the
-    UDF-registry parity demo; production uses the CASE expression (R9)."""
+    UDF-registry parity demo; production uses the CASE expression (R9).
+    ``useArrow=False`` names the pickled row-at-a-time path; left
+    unset, PySpark tries to infer an eval type from the hints and warns
+    on every import of the registry."""
     if amount is None:
         return "unknown"
     a = abs(amount)

@@ -8,6 +8,14 @@ pandas-UDF path, and the legacy nanos-as-long parquet shim (the
 driver-generated ``events`` table stores TIMESTAMP(NANOS), which Spark
 otherwise refuses to read; see catalog.load_table for the ns->us
 conversion).
+
+The driver JVM maps a class-data-sharing archive of the classes the
+engine loads (``cds.py``), built once per JDK and Spark install. On a
+4-vCPU host (``local[2]``, OpenJDK 17, Spark 4.1) ``get_spark`` took
+10.3-10.6 s without it and 3.7-4.4 s with it; in 10 alternating
+perfbench pairs each, ``setup_s`` fell from a median of 43.3 to 34.2 s
+on ``ingest_upsert`` and from 37.9 to 29.8 s on ``olap_short``, and
+``pass_s`` stayed within 1%.
 """
 
 from __future__ import annotations
@@ -15,6 +23,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from . import cds
 
 ENGINE_NAME = "aws-etl-pipeline-spark"
 
@@ -277,7 +287,7 @@ def get_spark(
             builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = cds.get_or_create(builder, extra_conf or {})
     spark.sparkContext.setLogLevel("WARN")
     return ensure_engine_confs(spark)
 

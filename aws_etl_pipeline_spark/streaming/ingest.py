@@ -55,6 +55,13 @@ def _state_partitions(session_partitions: int, cores: int) -> int:
     return min(session_partitions, cores, _STATE_PARTITIONS)
 
 
+#: The ``durationMs`` phases a drain's line sums over its micro-batches.
+#: They run one after another inside a batch, so they add up to no more
+#: than the drain; ``addBatch`` is the batch's own jobs, the rest is
+#: per-batch bookkeeping.
+_DRAIN_PHASES = ("addBatch", "queryPlanning", "latestOffset", "walCommit", "commitOffsets")
+
+
 def _drain(
     df: DataFrame,
     sink,
@@ -78,7 +85,9 @@ def _drain(
     (default 300, the reference Lambda's timeout; scale-replica runs
     raise it) is stopped and raises TimeoutError, so a hung stream
     never falls through to reading a partial sink. Each drain logs one
-    stderr line: micro-batches, input rows, state partitions, time."""
+    stderr line: micro-batches, input rows, state partitions, the summed
+    ``_DRAIN_PHASES`` in ms, the last batch's state rows and bytes over
+    its stateful operators, and the drain's time."""
     spark = df.sparkSession
     writer = df.writeStream.trigger(availableNow=True).outputMode(mode)
     if isinstance(sink, str):
@@ -114,12 +123,19 @@ def _drain(
         )
     progress = q.recentProgress
     states = [s.numShufflePartitions for p in progress for s in p.stateOperators]
+    last = progress[-1].stateOperators if progress else []
     staging.log.info(
-        "drain %s batches=%d rows=%d state_partitions=%d %.0f ms",
+        "drain %s batches=%d rows=%d state_partitions=%d %s state_rows=%d "
+        "state_bytes=%d %.0f ms",
         name,
         len(progress),
         sum(p.numInputRows for p in progress),
         max(states, default=0),
+        " ".join(
+            f"{k}={sum(p.durationMs.get(k, 0) for p in progress)}" for k in _DRAIN_PHASES
+        ),
+        sum(s.numRowsTotal for s in last),
+        sum(s.memoryUsedBytes for s in last),
         (time.perf_counter() - t0) * 1e3,
     )
     return spark.table(sink) if isinstance(sink, str) else None
@@ -275,17 +291,22 @@ def _events(spark: SparkSession, sf_dir: str, tmp: str) -> None:
 
 def _events_quartered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events with ``slice`` = their time quarter, ``ntile(4)`` over
-    ``(ts, event_id)``. (A 100 TB pipeline would time-slice with
-    ``repartitionByRange(ts)`` instead — no total order needed.)"""
+    ``(ts, event_id)``, persisted (``cache.track``) so the fixture's
+    slice writes and aggregates compute the global window once.
+    (A 100 TB pipeline would time-slice with ``repartitionByRange(ts)``
+    instead — no total order needed.)"""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
+    from ..cache import track
     from ..catalog import load_table
 
-    return load_table(spark, sf_dir, "events").withColumn(
-        # global-ok: one-time sf-sized test-fixture staging (slices the
-        # events table into 4 micro-batch files), not a query path
-        "slice", F.ntile(4).over(W.orderBy("ts", "event_id"))
+    return track(
+        load_table(spark, sf_dir, "events").withColumn(
+            # global-ok: one-time sf-sized test-fixture staging (slices
+            # the events table into 4 micro-batch files), not a query path
+            "slice", F.ntile(4).over(W.orderBy("ts", "event_id"))
+        )
     )
 
 
@@ -346,10 +367,10 @@ def _events_dupes_wm(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     from pyspark.sql import functions as F
 
     ev = _events_quartered(spark, sf_dir)
-    gm = ev.agg(F.max("ts")).collect()[0][0]
-    thr = ev.filter(F.col("slice") <= 3).agg(
-        F.max("ts") - F.expr("INTERVAL 13 HOURS")
-    ).collect()[0][0]
+    gm, thr = ev.agg(
+        F.max("ts"),
+        F.max(F.when(F.col("slice") <= 3, F.col("ts"))) - F.expr("INTERVAL 13 HOURS"),
+    ).first()
     copies = (
         ev.filter(
             (F.col("slice") == 1)

@@ -353,3 +353,18 @@ def test_rotated_out_slots_stay_digest_covered():
     ):
         assert rotated_in in PRIORITY, rotated_in
         assert rotated_in in digest_covered, rotated_in
+
+
+def test_registry_import_raises_no_user_warning():
+    """Importing the registry warns about nothing (PySpark warns when a
+    ``udf``'s type hints name no eval type)."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        f"import sys; sys.path.insert(0, {root!r}); "
+        "from aws_etl_pipeline_spark.registry import all_queries; all_queries()"
+    )
+    subprocess.run([sys.executable, "-W", "error::UserWarning", "-c", code], check=True)

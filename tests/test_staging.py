@@ -266,3 +266,15 @@ def test_fold_records_the_schema_parquet_reads_back(spark, sf_dir, tmpdir_root, 
 
     for path in targets:
         assert _marker_schema(path) == spark.read.parquet(path).schema, path
+
+
+def test_dupes_wm_fixture_computes_its_window_once(spark, sf_dir, tmpdir_root, jobs_during):
+    """The watermarked-dupes fixture persists its quartered events once
+    for its one aggregate and five slice writes: 8 jobs, where computing
+    the global window per consumer took 14."""
+    from aws_etl_pipeline_spark.catalog import load_table
+
+    load_table(spark, sf_dir, "events")  # the schema inference job is not the fixture's
+    tmp = str(tmpdir_root / "dupes_wm")
+    assert jobs_during(lambda: ingest._events_dupes_wm(spark, sf_dir, tmp)) <= 8
+    assert len(glob.glob(os.path.join(tmp, "slice_*.parquet"))) == 5

@@ -498,3 +498,28 @@ def test_stream_asof_watermarked_drop_set_is_exact(spark, sf_dir):
     assert got_set == exp_set, (
         f"{len(got_set - exp_set)} extra, {len(exp_set - got_set)} missing"
     )
+
+
+def test_drain_line_splits_its_time_into_phases(spark, tmp_path, caplog):
+    """A drain's line sums the ``durationMs`` phases of its micro-batches,
+    which add up to no more than the drain, and reports the last batch's
+    state rows and bytes."""
+    import logging
+    import re
+
+    from aws_etl_pipeline_spark.streaming.ingest import _DRAIN_PHASES, _drain
+
+    src = str(tmp_path / "src")
+    spark.range(100).union(spark.range(50)).repartition(3).write.parquet(src)
+    stream = (
+        spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).parquet(src)
+    )
+    with caplog.at_level(logging.INFO):
+        _drain(stream.dropDuplicates(["id"]), "t_phases", skip_no_data_batch=True)
+    (line,) = [r.getMessage() for r in caplog.records if r.getMessage().startswith("drain t_phases ")]
+    fields = dict(re.findall(r" (\w+)=(\d+)", line))
+    total_ms = float(re.search(r" (\d+) ms$", line).group(1))
+    phases = [int(fields[k]) for k in _DRAIN_PHASES]
+    assert fields["batches"] == "3" and phases[0] > 0
+    assert sum(phases) <= total_ms
+    assert fields["state_rows"] == "100" and int(fields["state_bytes"]) > 0
