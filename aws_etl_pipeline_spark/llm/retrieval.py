@@ -68,19 +68,24 @@ def _bm25_score_sql() -> str:
     return " + ".join(parts)
 
 
-def _bm25_oracle() -> str:
-    dfs = ", ".join(
-        f"sum(CASE WHEN list_contains(ws, '{t}') THEN 1 ELSE 0 END)::DOUBLE AS df_{t}"
-        for t in BM25_QUERY
-    )
-    return f"""
-WITH t AS (
+#: The tokenized corpus and its one-row statistics, DuckDB spelling of
+#: `_bm25_parts`'s ``docs`` and ``stats``.
+_BM25_CTES = f"""
+t AS (
   SELECT doc_id, string_split(lower(trim(text)), ' ') AS ws FROM documents
 ),
 docs AS (SELECT doc_id, ws, len(ws)::DOUBLE AS dl FROM t),
 stats AS (
-  SELECT count(*)::DOUBLE AS n_docs, avg(dl) AS avgdl, {dfs} FROM docs
-),
+  SELECT count(*)::DOUBLE AS n_docs, avg(dl) AS avgdl, {", ".join(
+      f"sum(CASE WHEN list_contains(ws, '{t}') THEN 1 ELSE 0 END)::DOUBLE AS df_{t}"
+      for t in BM25_QUERY
+  )} FROM docs
+)"""
+
+
+def _bm25_oracle() -> str:
+    return f"""
+WITH {_BM25_CTES},
 scored AS (
   SELECT doc_id,
          round({_bm25_score_sql()}, 8) AS bm25
@@ -91,8 +96,10 @@ QUALIFY row_number() OVER (ORDER BY bm25 DESC, doc_id) <= {BM25_TOP}
 """
 
 
-def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents -> (doc_id, bm25) for the fixed query, unranked."""
+def _bm25_parts(spark: SparkSession, sf_dir: str):
+    """The BM25 scorer for the fixed query: ``(docs, stats, bm25)``
+    with docs = (doc_id, ws, dl), tracked; stats = its one-row corpus
+    statistics; bm25 = the rounded score over ``docs x stats``."""
     # load_spread: the token pass is compute-bound (array filters per
     # term over every document) and big replicas arrive as 2 file
     # splits — measured 8.6 s -> 1.8 s at 100x with the spread.
@@ -111,7 +118,6 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t in BM25_QUERY
         ],
     )
-    scored = docs.crossJoin(F.broadcast(stats))
     summands = []
     for t in BM25_QUERY:
         tf = F.size(F.filter("ws", lambda w: w == F.lit(t))).cast("double")  # noqa: B023
@@ -131,7 +137,13 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = summands[0]
     for s in summands[1:]:
         total = total + s
-    return scored.select("doc_id", F.round(total, 8).alias("bm25"))
+    return docs, stats, F.round(total, 8)
+
+
+def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents -> (doc_id, bm25) for the fixed query, unranked."""
+    docs, stats, bm25 = _bm25_parts(spark, sf_dir)
+    return docs.crossJoin(F.broadcast(stats)).select("doc_id", bm25.alias("bm25"))
 
 
 @query("text_bm25_topk", oracle=_bm25_oracle())
@@ -150,18 +162,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rrf_oracle() -> str:
     return f"""
-WITH t AS (
-  SELECT doc_id, string_split(lower(trim(text)), ' ') AS ws FROM documents
-),
-docs AS (SELECT doc_id, ws, len(ws)::DOUBLE AS dl FROM t),
-stats AS (
-  SELECT count(*)::DOUBLE AS n_docs, avg(dl) AS avgdl,
-         {", ".join(
-             f"sum(CASE WHEN list_contains(ws, '{t}') THEN 1 ELSE 0 END)::DOUBLE AS df_{t}"
-             for t in BM25_QUERY
-         )}
-  FROM docs
-),
+WITH {_BM25_CTES},
 bm25_all AS (
   SELECT doc_id, round({_bm25_score_sql()}, 8) AS bm25
   FROM docs CROSS JOIN stats
@@ -748,15 +749,7 @@ PRF_TOP = 20
 def _prf_oracle() -> str:
     orig = ", ".join(f"'{t}'" for t in BM25_QUERY)
     return f"""
-WITH t AS (
-  SELECT doc_id, string_split(lower(trim(text)), ' ') AS ws FROM documents
-),
-docs AS (SELECT doc_id, ws, len(ws)::DOUBLE AS dl FROM t),
-stats AS (
-  SELECT count(*)::DOUBLE AS n_docs, avg(dl) AS avgdl,
-         {", ".join(f"sum(CASE WHEN list_contains(ws, '{t}') THEN 1 ELSE 0 END)::DOUBLE AS df_{t}" for t in BM25_QUERY)}
-  FROM docs
-),
+WITH {_BM25_CTES},
 rel AS (
   SELECT doc_id, dl, ws FROM (
     SELECT d.doc_id, d.dl, d.ws,
@@ -830,47 +823,10 @@ def text_rocchio_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is the (doc, term) tf aggregation RESTRICTED to expanded
     terms — candidate-postings-sized, never corpus x vocab. At 100 TB
     each stage stays keyed or broadcast; no all-pairs anywhere."""
-    docs = None  # reuse the BM25 scorer's docs relation via its builder
-    d = load_spread(spark, sf_dir, "documents")
-    ws = F.split(F.lower(F.trim(F.col("text"))), " ")
-    docs = d.select(
-        "doc_id", ws.alias("ws"), F.size(ws).cast("double").alias("dl")
-    ).transform(track)  # bm25 pass + postings pass + dl join
-    stats = docs.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-        *[
-            F.sum(F.when(F.array_contains("ws", t), 1).otherwise(0))
-            .cast("double")
-            .alias(f"df_{t}")
-            for t in BM25_QUERY
-        ],
-    )
-    summands = []
-    for t in BM25_QUERY:
-        tf0 = F.size(
-            F.filter("ws", lambda w: w == F.lit(t))  # noqa: B023
-        ).cast("double")
-        idf0 = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col(f"df_{t}") + 0.5)
-            / (F.col(f"df_{t}") + 0.5)
-        )
-        summands.append(
-            idf0
-            * (tf0 * (BM25_K1 + 1.0))
-            / (
-                tf0
-                + BM25_K1
-                * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-            )
-        )
-    bm25 = summands[0]
-    for s in summands[1:]:
-        bm25 = bm25 + s
+    docs, stats, bm25 = _bm25_parts(spark, sf_dir)  # bm25 + postings + dl
     rel = (
         docs.crossJoin(F.broadcast(stats))
-        .select("doc_id", "dl", "ws", F.round(bm25, 8).alias("bm25"))
+        .select("doc_id", "dl", "ws", bm25.alias("bm25"))
         .orderBy(F.desc("bm25"), F.asc("doc_id"))
         .limit(PRF_R)
     )
@@ -1182,7 +1138,7 @@ MMR_CANDIDATES = 24
 MMR_TOP = 8
 
 
-def _mmr_oracle() -> str:
+def _mmr_rerank_oracle() -> str:
     lam, om = MMR_LAMBDA, round(1.0 - MMR_LAMBDA, 10)
     steps = []
     sel_union = "SELECT vec_id FROM s1"
@@ -1243,7 +1199,7 @@ s1 AS MATERIALIZED (
 """
 
 
-@query("sim_mmr_rerank", oracle=_mmr_oracle())
+@query("sim_mmr_rerank", oracle=_mmr_rerank_oracle())
 def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance diversified re-ranking (Carbonell &
     Goldstein, SIGIR 1998) — the standard answer to "the top-k are

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .. import staging
-from ..cache import track
+from ..cache import bounded_collect, track
 from ..catalog import load_spread
 from ..registry import query
 
@@ -62,6 +62,20 @@ def _norm(v: F.Column) -> F.Column:
     return F.sqrt(
         F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
     )
+
+
+def _top_k(df: DataFrame, score: str, k: int, ascending: bool = False) -> DataFrame:
+    """The ``k`` best rows of each query_id by ``score`` (highest first
+    unless ``ascending``), ties to the smaller neighbor_id."""
+    order = F.asc(score) if ascending else F.desc(score)
+    w = W.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+
+
+def _cosine() -> F.Column:
+    """Exact cosine of the query (qv, qnrm) and candidate (v, nrm)
+    columns, rounded to 8 places like every oracle."""
+    return F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 8)
 
 
 @query(
@@ -122,9 +136,9 @@ def _bucket_spark(v: F.Column) -> F.Column:
 
 #: ANN bucket width: 4 planes = 16 buckets. The width RULE (measured,
 #: SCALING.md "ANN recall at 10x"): bits ~ log2(corpus / target
-#: bucket size). Round 4 ran 8 bits (256 buckets) over a 2k-vector
-#: corpus — ~8 vectors per bucket and a measured recall@3 of 0.03;
-#: right-sizing to 16 buckets (~125 vectors each) plus Hamming-1
+#: bucket size). 8 bits (256 buckets) over a 2k-vector corpus leave
+#: ~8 vectors per bucket and a measured recall@3 of 0.03;
+#: 16 buckets (~125 vectors each) plus Hamming-1
 #: multi-probe lifts measured recall@3 to 0.57 at sf0.1 while still
 #: rescoring <4% of the corpus per query (the remaining gap is the
 #: synthetic embeddings' weak neighbor structure — true top-3 cosines
@@ -213,7 +227,7 @@ def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus shuffles once by bucket and each query probes 5 of the
     16 cells instead of scanning the full corpus; bucket width follows
     bits ~ log2(corpus/bucket-size) (see ANN_PLANES for the measured
-    recall cliff the round-4 8-bit width sat on)."""
+    recall cliff of an 8-bit width)."""
     e = load_spread(spark, sf_dir, "embeddings")
     # The signature stage (interpreted-HOF dot products per row) feeds
     # both join sides; Catalyst won't reuse the common subtree across a
@@ -244,18 +258,9 @@ def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(*bits).alias("bucket"),
     )
     scored = c.join(F.broadcast(q), "bucket").select(
-        "query_id",
-        "neighbor_id",
-        F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 8).alias(
-            "cosine"
-        ),
+        "query_id", "neighbor_id", _cosine().alias("cosine")
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    return _top_k(scored, "cosine", 3)
 
 
 @query(
@@ -297,27 +302,22 @@ def sim_label_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_PROBE = 2  # centroid cells probed per query
 
 
-def _ivf_base(spark: SparkSession, sf_dir: str, train_filter=None):
-    """Norm table + per-label coarse centroids, both persisted — the
-    shared build inputs of every IVF tier and of the staged on-disk
-    layout. ``train_filter`` (optional Column) restricts the rows the
-    QUANTIZER is trained on without touching the norm table — the
-    frozen-quantizer device `sim_ivf_incremental` rides.
+def _ivf_base(spark: SparkSession, sf_dir: str, train=None):
+    """Norm table (vec_id, v, nrm), persisted, and the per-label coarse
+    centroids (cell, cv, cnrm): the build inputs of every IVF tier and
+    of the staged layout. ``train`` (optional Column) restricts
+    the rows the quantizer trains on without touching the norm table
+    (the frozen quantizer of `sim_ivf_incremental`).
 
-    r14 optimization (guide §2.3/§2.4): the centroid build used to
-    posexplode every training vector into DIM rows and aggregate twice
-    (label,d then label) — TWO keyed exchanges with a DIMx row
-    explosion through the first. DECIMAL sums are exact (order-free),
-    so the same per-dim means fall out of ONE groupBy(label) carrying
-    DIM decimal-sum buffers, map-side combined: one exchange, one row
-    per label crossing it, bit-identical values (the oracle keeps its
-    LATERAL-unnest spelling and still hash-matches). The quantizer is
-    consumed exactly once per invocation (collected by
-    ``_quantizer_rows`` or staged to parquet), so it is no longer
-    persisted."""
+    DECIMAL sums are exact and order-free, so one groupBy(label)
+    carrying DIM decimal-sum buffers gives the oracle's per-dim means
+    bit for bit with one exchange of one row per label (a
+    posexplode + groupBy(label, d) spelling crosses DIM x the training
+    rows). The quantizer is consumed once per call (collected by
+    ``_quantizer_rows`` or staged), so it is not persisted."""
     e = load_spread(spark, sf_dir, "embeddings")
     base = e.select("vec_id", "label", _as_double("embedding").alias("v"))
-    train = base.filter(train_filter) if train_filter is not None else base
+    rows = base.filter(train) if train is not None else base
     dims = range(1, DIM + 1)
     sums_sql = (
         "named_struct('n', count(1), "
@@ -332,7 +332,7 @@ def _ivf_base(spark: SparkSession, sf_dir: str, train_filter=None):
         + ") AS cv"
     )
     cent = (
-        train.groupBy("label")
+        rows.groupBy("label")
         .agg(F.expr(sums_sql).alias("_a"))
         .selectExpr("label AS cell", cv_sql)
     )
@@ -345,44 +345,47 @@ def _ivf_base(spark: SparkSession, sf_dir: str, train_filter=None):
     return n, cent_n
 
 
+#: Guard for every literal-centroid device (_assign_cell_sql,
+#: _probe_cells_sql, _argmin_d2_sql): max DOUBLE literals inlined per
+#: generated expression. Past this, Catalyst tree size and the Janino
+#: 64 KB method-body limit make the literal spelling a liability
+#: (interpreted fallback + planning blowup), so callers must keep (or
+#: fall back to) the broadcast/hash_argmin path. 4096 ≈ 64 cells x
+#: DIM: 3x the largest plan measured safe (20 cells x 64 dims).
+LITERAL_ARGMIN_MAX_DOUBLES = 4096
+
+#: The most quantizer cells a literal device takes (each cell inlines
+#: DIM centroid doubles plus its norm): 63; the fixtures have 10
+#: labels. The quantizer and probed-cell collects fetch at most one
+#: row more, so a label column with corpus-many values fails there
+#: instead of after the whole relation reached the driver.
+IVF_MAX_CELLS = LITERAL_ARGMIN_MAX_DOUBLES // (DIM + 1)
+
+
 def _quantizer_rows(cent_n: DataFrame) -> list[tuple[int, list[float], float]]:
-    """Collect the coarse quantizer: ONE row per cell, bounded by the
-    CELL DOMAIN (the label space) — never corpus- or request-scaled
-    (the bounded control-plane collect the probed-cell lists already
-    ride). A production IVF serves the quantizer from RAM on every
-    node — it IS the broadcast object (FAISS keeps the coarse
-    centroids in the index header) — so assignment and probing become
-    pure per-row expressions over the scan instead of joins +
-    aggregates: the corpus is never expanded, shuffled, or re-joined
-    to pick its cell. Doubles round-trip exactly (JVM -> collect ->
+    """The coarse quantizer on the driver, one (cell, cv, cnrm) row per
+    cell, at most IVF_MAX_CELLS. A production IVF keeps the coarse
+    centroids in RAM on every node (FAISS holds them in the index
+    header), so assignment and probing become per-row expressions over
+    the scan: the corpus is never expanded, shuffled or re-joined to
+    pick its cell. Doubles round-trip exactly (JVM -> collect ->
     literal), so every downstream score is bit-identical."""
     rows = sorted(
         (r["cell"], [float(x) for x in r["cv"]], float(r["cnrm"]))
-        for r in cent_n.select("cell", "cv", "cnrm").collect()
+        for r in bounded_collect(
+            cent_n.select("cell", "cv", "cnrm"), IVF_MAX_CELLS, "ivf_quantizer"
+        )
     )
     for c, cv, _ in rows:
-        # r14 ADVICE #2: the literal devices assume the DENSE
-        # fixed-DIM embedding contract (element_at(v, d) per dim,
-        # count(1) as the per-dim divisor). A ragged or truncated
-        # embedding column would silently drift from the oracle —
-        # fail loudly at the control-plane boundary instead.
+        # The literal devices assume dense DIM-wide embeddings
+        # (element_at(v, d) per dim, count(1) as the divisor); a ragged
+        # column would drift from the oracle without an error.
         if len(cv) != DIM:
             raise ValueError(
                 f"quantizer cell {c} has {len(cv)} dims, expected DIM={DIM}: "
                 "embeddings must be dense fixed-width vectors"
             )
     return rows
-
-
-#: Guard for every literal-centroid device (_assign_cell_sql,
-#: _probe_cells_sql, _argmin_d2_sql): max DOUBLE literals inlined per
-#: generated expression. Past this, Catalyst tree size and the Janino
-#: 64 KB method-body limit make the literal spelling a liability
-#: (interpreted fallback + planning blowup), so callers must keep (or
-#: fall back to) the broadcast/hash_argmin path — r14 ADVICE #4.
-#: 4096 ≈ 64 cells x DIM, well inside the measured-safe envelope of
-#: the r14 plans (20 cells x 64 dims) with 3x headroom.
-LITERAL_ARGMIN_MAX_DOUBLES = 4096
 
 
 def _vec_sql(xs: list[float]) -> str:
@@ -403,17 +406,12 @@ def _cell_struct_sql(qrows, vexpr: str, nrmexpr: str) -> str:
     by sim then max by -cell == the oracle's (sim DESC, cell ASC)
     row_number tie-break."""
     if not qrows:
-        # r14 ADVICE #3: an empty quantizer (e.g. a train_filter that
-        # matched no rows) used to surface as an opaque SQL parse
-        # error from the empty greatest()/array() expression.
+        # an empty greatest()/array() would fail as an opaque parse error
         raise ValueError(
             "empty quantizer: the centroid relation produced no cells"
         )
     n_doubles = len(qrows) * (len(qrows[0][1]) + 1)
     if n_doubles > LITERAL_ARGMIN_MAX_DOUBLES:
-        # r14 ADVICE #4: the literal device scales as n_cells x DIM
-        # inlined literals; past the codegen-safe budget callers must
-        # use the broadcast/hash_argmin path (the PQ codebooks do).
         raise ValueError(
             f"quantizer too large to literalize: {len(qrows)} cells x "
             f"{len(qrows[0][1])} dims = {n_doubles} doubles > "
@@ -446,19 +444,10 @@ def _probe_cells_sql(
     )
 
 
-def _ivf_probes(queries: DataFrame, cent_n: DataFrame, qrows=None) -> DataFrame:
-    """Each query's top-{N_PROBE} cells, WITH the query vector/norm
-    alongside: (query_id, qv, qnrm, cell). ``queries`` is
-    (vec_id, v, nrm).
-
-    r14 optimization: was a crossJoin against the broadcast centroid
-    relation plus a row_number window (an exchange of the expanded
-    requests x cells relation). The quantizer is cell-domain-sized, so
-    probing is now a single projection — the top-{N_PROBE} cells fall
-    out of one array expression over the literal centroids, and the
-    query vector rides along so consumers stop re-joining it."""
-    if qrows is None:
-        qrows = _quantizer_rows(cent_n)
+def _ivf_probes(queries: DataFrame, qrows) -> DataFrame:
+    """Each query's top-{N_PROBE} cells with the query vector alongside:
+    (vec_id, v, nrm) -> (query_id, qv, qnrm, cell), one projection over
+    the literal quantizer ``qrows``."""
     return queries.selectExpr(
         "vec_id AS query_id",
         "v AS qv",
@@ -467,127 +456,181 @@ def _ivf_probes(queries: DataFrame, cent_n: DataFrame, qrows=None) -> DataFrame:
     )
 
 
-def _ivf_parts(spark: SparkSession, sf_dir: str):
-    """Shared IVF front-end for sim_ivf_ann and sim_ivf_pq: per-label
-    coarse centroids (explode -> per-dim DECIMAL-exact mean ->
-    rebuild), the persisted norm table, the corpus-to-cell assignment,
-    and each query's {N_PROBE} probe cells. Returns ``(n, assign,
-    probes)``. n feeds four branches (corpus assignment, query
-    probing, and both rescore sides) and cent_n two; both persist so
-    the norm/centroid pipelines run once — the quantizer and the
-    vector index are build-once artifacts in a real IVF deployment
-    (``sim_ivf_staged`` demonstrates exactly that deployment shape)."""
-    n, cent_n = _ivf_base(spark, sf_dir)
-    # corpus side: nearest cell as ONE scalar expression over the
-    # literal quantizer (r14, guide §8 "decide with small rows"): the
-    # corpus streams through a single projection — no expansion join,
-    # no aggregate, no exchange — and carries (v, nrm) along so
-    # consumers rescore without re-joining the norm table. The
-    # two-pass hash_argmin remains the device for candidate relations
-    # too big to literalize (the PQ codebooks).
+def _ivf_parts(spark: SparkSession, sf_dir: str, train=None):
+    """The IVF front end: ``(n, assign, probes)``. n is the persisted
+    norm table; assign is the corpus (vec_id, v, nrm, cell) with each
+    vector's nearest cell of the quantizer trained on ``train`` (a
+    Column; default every vector); probes is each query's
+    top-{N_PROBE} cells (see ``_ivf_probes``).
+
+    Assignment is one projection over the literal quantizer: no
+    expansion join, aggregate or exchange touches the corpus, and the
+    rows carry (v, nrm) so scorers need no norm-table join. The
+    two-pass hash_argmin stays the device for candidate relations too
+    big to literalize (the PQ codebooks)."""
+    n, cent_n = _ivf_base(spark, sf_dir, train)
     qrows = _quantizer_rows(cent_n)
     assign = n.filter(F.col("vec_id") >= N_QUERIES).selectExpr(
         "vec_id", "v", "nrm", f"{_assign_cell_sql(qrows)} AS cell"
     )
-    probes = _ivf_probes(n.filter(F.col("vec_id") < N_QUERIES), cent_n, qrows)
+    probes = _ivf_probes(n.filter(F.col("vec_id") < N_QUERIES), qrows)
     return n, assign, probes
 
 
-#: The IVF front-end spelled ONCE for every oracle that rides it
-#: (sim_ivf_ann and the sq8 / true-PQ rescore family) — the SQL twin
-#: of ``_ivf_parts``: per-label coarse centroids, the norm table, the
-#: corpus->cell assignment, and each query's probe cells. Shared so
-#: the five oracles cannot silently drift apart (round-6 advice).
-_IVF_CTES = f"""
+def _exact_scored(index: DataFrame, probes: DataFrame, *extra: str) -> DataFrame:
+    """The exact scorer: index rows (vec_id, v, nrm, cell, ...) in the
+    probed cells -> (query_id, neighbor_id, cosine, *extra). The
+    request-sized probe rows broadcast onto the index, so the only
+    exchange left is the top-k window's."""
+    return index.join(F.broadcast(probes), "cell").select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), _cosine().alias("cosine"), *extra
+    )
+
+
+PQ_RERANK_R = 6  # quantized shortlist size re-ranked at full precision
+
+
+def _rerank(n: DataFrame, scored: DataFrame) -> DataFrame:
+    """Stage 2 of a quantized search: the top-{PQ_RERANK_R} of
+    ``scored`` (query_id, neighbor_id, approx_cosine) per query,
+    re-ranked by exact cosine against the full-precision vectors of
+    ``n`` -> top-3 (query_id, neighbor_id, cosine). Only the 10 query
+    rows broadcast; the shortlist joins the corpus by key."""
+    shortlist = _top_k(scored, "approx_cosine", PQ_RERANK_R).select(
+        "query_id", "neighbor_id"
+    )
+    qn = n.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qnrm"),
+    )
+    cn_ = n.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm")
+    exact = (
+        shortlist.join(F.broadcast(qn), "query_id")
+        .join(cn_, "neighbor_id")
+        .select("query_id", "neighbor_id", _cosine().alias("cosine"))
+    )
+    return _top_k(exact, "cosine", 3)
+
+
+#: The oracle's IVF inputs: the vectors as doubles and the norm table.
+_IVF_VEC_CTES = """
 e AS (
   SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v
   FROM embeddings
 ),
-dims AS (
-  SELECT label, u.d, u.x
-  FROM e, LATERAL (SELECT unnest(generate_series(1, len(v))) AS d,
-                          unnest(v) AS x) u
-),
-cent AS (
-  SELECT label AS cell, list(c ORDER BY d) AS cv
-  FROM (SELECT label, d,
-               CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS c
-        FROM dims GROUP BY label, d)
-  GROUP BY label
-),
 n AS (
   SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e
-),
-assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT n.vec_id, cent.cell,
-           row_number() OVER (
-             PARTITION BY n.vec_id
-             ORDER BY list_dot_product(n.v, cent.cv)
-                      / (n.nrm * sqrt(list_sum(list_transform(cent.cv, x -> x*x))))
-                      DESC, cent.cell) AS rn
-    FROM n CROSS JOIN cent
-  ) WHERE rn = 1
-),
-probes AS (
-  SELECT vec_id, cell FROM (
-    SELECT n.vec_id, cent.cell,
-           row_number() OVER (
-             PARTITION BY n.vec_id
-             ORDER BY list_dot_product(n.v, cent.cv)
-                      / (n.nrm * sqrt(list_sum(list_transform(cent.cv, x -> x*x))))
-                      DESC, cent.cell) AS rn
-    FROM n CROSS JOIN cent WHERE n.vec_id < {N_QUERIES}
-  ) WHERE rn <= {N_PROBE}
 )"""
 
 
-@query(
-    "sim_ivf_ann",
-    oracle="WITH " + _IVF_CTES + f"""
-SELECT query_id, neighbor_id, cosine FROM (
+def _cent_sql(pred: str) -> str:
+    """Per-label coarse centroids (cell, cv) over the ``e`` rows that
+    satisfy ``pred``: the DECIMAL-exact per-dim means of ``_ivf_base``."""
+    return f"""(
+  SELECT label AS cell, list(c ORDER BY d) AS cv
+  FROM (SELECT label, d,
+               CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS c
+        FROM (SELECT label, u.d, u.x
+              FROM e, LATERAL (SELECT unnest(generate_series(1, len(v))) AS d,
+                                      unnest(v) AS x) u
+              WHERE {pred})
+        GROUP BY label, d)
+  GROUP BY label
+)"""
+
+
+def _near_cells_sql(cent: str, pred: str, k: int) -> str:
+    """(vec_id, cell) for the ``k`` cells of ``cent`` nearest by cosine
+    (ties to the smaller cell) to each ``n`` row that satisfies
+    ``pred``: the oracle's assignment (k = 1) and probing."""
+    return f"""(
+  SELECT vec_id, cell FROM (
+    SELECT n.vec_id, cent.cell,
+           row_number() OVER (
+             PARTITION BY n.vec_id
+             ORDER BY list_dot_product(n.v, cent.cv)
+                      / (n.nrm * sqrt(list_sum(list_transform(cent.cv, x -> x*x))))
+                      DESC, cent.cell) AS rn
+    FROM n CROSS JOIN {cent} cent WHERE {pred}
+  ) WHERE rn <= {k}
+)"""
+
+
+def _ivf_ctes(train: str = "TRUE") -> str:
+    """The SQL twin of ``_ivf_parts`` over the quantizer trained on the
+    vectors that satisfy ``train``: the corpus->cell assignment, each
+    query's probe cells and the probed candidates with both vectors
+    (query_id, neighbor_id, qv, qnrm, v, nrm)."""
+    return _IVF_VEC_CTES + f""",
+cent AS {_cent_sql(train)},
+assign AS {_near_cells_sql("cent", f"vec_id >= {N_QUERIES}", 1)},
+probes AS {_near_cells_sql("cent", f"vec_id < {N_QUERIES}", N_PROBE)},
+cand AS (
   SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id,
-         round(list_dot_product(qn.v, cn_.v) / (qn.nrm * cn_.nrm), 8) AS cosine,
-         row_number() OVER (
-           PARTITION BY p.vec_id
-           ORDER BY round(list_dot_product(qn.v, cn_.v) / (qn.nrm * cn_.nrm), 8) DESC,
-                    a.vec_id) AS rn
+         qn.v AS qv, qn.nrm AS qnrm, cn_.v, cn_.nrm
   FROM probes p
-  JOIN assign a ON a.cell = p.cell AND a.vec_id >= {N_QUERIES}
+  JOIN assign a ON a.cell = p.cell
   JOIN n qn  ON qn.vec_id = p.vec_id
   JOIN n cn_ ON cn_.vec_id = a.vec_id
-) WHERE rn <= 3
-""",
+)"""
+
+
+#: Exact cosine over columns named as in ``cand``.
+_COSINE_SQL = "round(list_dot_product(qv, v) / (qnrm * nrm), 8)"
+
+
+def _top_sql(rel: str, score: str, k: int, cols: str) -> str:
+    """The oracle's ``_top_k``: ``cols`` of the ``k`` best ``rel`` rows
+    per query_id by ``score`` descending, ties to the smaller
+    neighbor_id."""
+    return f"""
+SELECT {cols} FROM {rel}
+QUALIFY row_number() OVER (PARTITION BY query_id
+                           ORDER BY {score} DESC, neighbor_id) <= {k}
+"""
+
+
+def _rerank_sql(scored: str) -> str:
+    """The oracle's ``_rerank`` of the CTE ``scored``, appended to a
+    WITH list that defines ``n``."""
+    return f""",
+shortlist AS ({_top_sql(scored, "approx_cosine", PQ_RERANK_R, "query_id, neighbor_id")}),
+reranked AS (
+  SELECT s.query_id, s.neighbor_id, {_COSINE_SQL} AS cosine
+  FROM shortlist s
+  JOIN (SELECT vec_id, v AS qv, nrm AS qnrm FROM n) qn ON qn.vec_id = s.query_id
+  JOIN n cn_ ON cn_.vec_id = s.neighbor_id
+)""" + _top_sql("reranked", "cosine", 3, "query_id, neighbor_id, cosine")
+
+
+#: Exact cosine top-3 over the probed cells: sim_ivf_ann's oracle and,
+#: because the staged layout serves the same index, sim_ivf_staged's.
+_IVF_EXACT_ORACLE = (
+    "WITH "
+    + _ivf_ctes()
+    + f""",
+exact AS (SELECT query_id, neighbor_id, {_COSINE_SQL} AS cosine FROM cand)"""
+    + _top_sql("exact", "cosine", 3, "query_id, neighbor_id, cosine")
 )
+
+
+@query("sim_ivf_ann", oracle=_IVF_EXACT_ORACLE)
 def sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: data-derived coarse quantizer (per-label centroid
     = the kmeans-lite cell), corpus vectors assigned to their nearest
     cell, queries probe their {N_PROBE} nearest cells, exact cosine
     rescoring only within probed cells.
 
-    The 100 TB shape (r14): centroids are cell-domain-sized and served
-    as literals (the quantizer every IVF node keeps in RAM), so the
-    corpus is NEVER shuffled at all — one projection assigns each
-    vector its cell and carries (v, nrm), the request-sized probe rows
-    broadcast onto it, and the only exchange anywhere carries
-    (query_id, neighbor_id, cosine) candidate rows into the top-k
-    window. Previously the corpus crossed a two-pass argmin plus a
-    re-join against the norm table (guide §8: decide with small rows,
-    move big rows never). sim_bruteforce_topk is the recall oracle."""
+    The 100 TB shape: centroids are cell-domain-sized and served as
+    literals (the quantizer every IVF node keeps in RAM), so the
+    corpus is never shuffled: one projection assigns each vector its
+    cell and carries (v, nrm), the request-sized probe rows broadcast
+    onto it, and the only exchange carries (query_id, neighbor_id,
+    cosine) candidate rows into the top-k window. sim_bruteforce_topk
+    is the recall oracle."""
     _, assign, probes = _ivf_parts(spark, sf_dir)
-    cand = assign.join(F.broadcast(probes), "cell").select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 8
-        ).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    return _top_k(_exact_scored(assign, probes), "cosine", 3)
 
 
 def ivf_staged_layout(spark: SparkSession, sf_dir: str):
@@ -604,7 +647,6 @@ def ivf_staged_layout(spark: SparkSession, sf_dir: str):
     the layout (the `ppr_edges_bucketed` discipline applied to the
     vector index). Returns ``(corpus, cent_n)`` readers."""
     def build_corpus() -> DataFrame:
-        # assign already carries (v, nrm) alongside the cell id (r14)
         _, assign, _ = _ivf_parts(spark, sf_dir)
         return assign.select("vec_id", "v", "nrm", "cell")
 
@@ -624,70 +666,51 @@ def ivf_staged_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "sim_ivf_staged",
-    oracle="WITH " + _IVF_CTES + f"""
-SELECT query_id, neighbor_id, cosine FROM (
-  SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id,
-         round(list_dot_product(qn.v, cn_.v) / (qn.nrm * cn_.nrm), 8) AS cosine,
-         row_number() OVER (
-           PARTITION BY p.vec_id
-           ORDER BY round(list_dot_product(qn.v, cn_.v) / (qn.nrm * cn_.nrm), 8) DESC,
-                    a.vec_id) AS rn
-  FROM probes p
-  JOIN assign a ON a.cell = p.cell AND a.vec_id >= {N_QUERIES}
-  JOIN n qn  ON qn.vec_id = p.vec_id
-  JOIN n cn_ ON cn_.vec_id = a.vec_id
-) WHERE rn <= 3
-""",
-)
-def sim_ivf_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim_ivf_ann served from the PERSISTED partition-by-cell index
-    (`ivf_staged_layout`) instead of an in-query corpus shuffle: the
-    probe set's cells are collected (bounded by the CELL DOMAIN —
-    ~#labels values, never corpus- or request-scaled), the staged
-    corpus scan partition-prunes to exactly those directories, and
-    the request-sized (query, cell, vector) relation broadcasts onto
-    the pruned scan for exact cosine rescoring. Same candidates, same
-    tie-break, hash-identical to sim_ivf_ann's oracle — the 100 TB
-    claim in sim_ivf_ann's docstring ('a write-time layout in
-    practice') as tested code. Quantizer artifacts round-trip through
-    parquet doubles, which is exact, so probes and scores match the
-    in-query build bit-for-bit."""
-    corp, cent_n = ivf_staged_layout(spark, sf_dir)
+def _staged_probes(spark: SparkSession, sf_dir: str, cent_n: DataFrame):
+    """The staged tiers' query front end over the staged quantizer
+    ``cent_n``: ``(qn0, probes, cells)``. qn0 is the query rows
+    (vec_id, v, nrm), persisted; probes is their ``_ivf_probes`` rows;
+    cells is the distinct probed cell ids, at most IVF_MAX_CELLS, that
+    prune the staged scan to the probed directories."""
     e = load_spread(spark, sf_dir, "embeddings")
     qn0 = (
         e.where(F.col("vec_id") < N_QUERIES)
         .select("vec_id", _as_double("embedding").alias("v"))
         .withColumn("nrm", _norm(F.col("v")))
-        .transform(track)  # probe window + rescore both read it
+        .transform(track)
     )
-    probes = _ivf_probes(qn0, cent_n)  # carries (qv, qnrm) alongside
-    # bounded collect: distinct probed cell ids, <= the cell domain
-    cells = [r[0] for r in probes.select("cell").distinct().collect()]
-    cand = (
-        corp.where(F.col("cell").isin(cells))  # partition-pruned scan
-        .join(F.broadcast(probes), "cell")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 8
-            ).alias("cosine"),
+    probes = _ivf_probes(qn0, _quantizer_rows(cent_n))
+    cells = [
+        r[0]
+        for r in bounded_collect(
+            probes.select("cell").distinct(), IVF_MAX_CELLS, "ivf_probed_cells"
         )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    ]
+    return qn0, probes, cells
+
+
+@query("sim_ivf_staged", oracle=_IVF_EXACT_ORACLE)
+def sim_ivf_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """sim_ivf_ann served from the PERSISTED partition-by-cell index
+    (`ivf_staged_layout`) instead of an in-query build: the probed
+    cells are collected (bounded by the cell domain, never corpus- or
+    request-scaled), the staged corpus scan partition-prunes to exactly
+    those directories, and the request-sized (query, cell, vector)
+    rows broadcast onto the pruned scan for exact cosine rescoring.
+    Same candidates, same tie-break, same oracle as sim_ivf_ann.
+    Quantizer artifacts round-trip through parquet doubles, which is
+    exact, so probes and scores match the in-query build bit for bit."""
+    corp, cent_n = ivf_staged_layout(spark, sf_dir)
+    _, probes, cells = _staged_probes(spark, sf_dir, cent_n)
+    pruned = corp.where(F.col("cell").isin(cells))  # partition-pruned scan
+    return _top_k(_exact_scored(pruned, probes), "cosine", 3)
 
 
 # ---------------------------------------------------------------- SQ8 family
 #: int8 scalar-quantized corpus codes: q_i = round(x_i * 127 / max|x|)
-#: per vector (the scheme embed_normalize_quantize emits).
-_SQ8_QUANT_CTE = f"""
+#: per vector (the scheme embed_normalize_quantize emits), and the
+#: probed candidates scored by the int8 asymmetric dot.
+_SQ8_CTES = _ivf_ctes() + f""",
 quant AS (
   SELECT vec_id,
          list_transform(v, x -> CAST(round(x * 127 / nullif(mx, 0)) AS TINYINT))
@@ -695,48 +718,24 @@ quant AS (
          mx / 127 AS scale
   FROM (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS mx
         FROM e WHERE vec_id >= {N_QUERIES})
+),
+sq8scored AS (
+  SELECT c.query_id, c.neighbor_id,
+         round(qz.scale *
+               list_sum(list_transform(list_zip(c.qv, qz.qi), t -> t[1] * t[2]))
+               / (c.qnrm * c.nrm), 8) AS approx_cosine
+  FROM cand c JOIN quant qz ON qz.vec_id = c.neighbor_id
 )"""
 
-#: probe candidates scored by the int8 asymmetric dot, ranked per
-#: query — the block sim_ivf_sq8 cuts at rn<=3 and sim_ivf_sq8_rerank
-#: cuts at rn<={PQ_RERANK_R} (one spelling, two consumers).
-_SQ8_SCORED_SELECT = f"""
-  SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id,
-         round(qz.scale *
-               list_sum(list_transform(list_zip(qn.v, qz.qi), t -> t[1] * t[2]))
-               / (qn.nrm * cn_.nrm), 8) AS approx_cosine,
-         row_number() OVER (
-           PARTITION BY p.vec_id
-           ORDER BY round(qz.scale *
-                    list_sum(list_transform(list_zip(qn.v, qz.qi), t -> t[1] * t[2]))
-                    / (qn.nrm * cn_.nrm), 8) DESC,
-                    a.vec_id) AS rn
-  FROM probes p
-  JOIN assign a ON a.cell = p.cell AND a.vec_id >= {N_QUERIES}
-  JOIN n qn  ON qn.vec_id = p.vec_id
-  JOIN n cn_ ON cn_.vec_id = a.vec_id
-  JOIN quant qz ON qz.vec_id = a.vec_id
-"""
 
-
-def _sq8_scored(spark: SparkSession, sf_dir: str):
-    """Shared int8 (SQ8) scoring stage under sim_ivf_sq8 and
-    sim_ivf_sq8_rerank (one spelling — round-6 advice flagged the
-    copy-paste twins): IVF front-end from ``_ivf_parts``, corpus
-    quantized to per-vector int8 codes + one fp scale + exact norm,
-    probe candidates scored with the asymmetric quantized dot (query
-    stays full-precision). Returns ``(n, qn, cand)`` where ``cand``
-    is (query_id, neighbor_id, approx_cosine), unranked."""
-    n, assign, probes = _ivf_parts(spark, sf_dir)
-    qn = n.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    # r14: the int8 codes are a per-row function of the vector the
-    # assignment projection already carries — computing them THERE
-    # removes the corpus-sized quant join (the index row stores its
-    # codes next to its cell id, exactly the on-disk layout).
+def _sq8_scored(assign: DataFrame, probes: DataFrame) -> DataFrame:
+    """The SQ8 scorer: the assigned corpus quantized to per-vector int8
+    codes + one fp scale + the exact norm, probe candidates scored by
+    the asymmetric quantized dot (the query stays full-precision) ->
+    (query_id, neighbor_id, approx_cosine), unranked. The codes are a
+    per-row function of the vector the assignment already carries, so
+    they are computed in that projection: no corpus-sized join, and
+    the index row holds its codes next to its cell id."""
     mx = F.array_max(F.transform("v", F.abs))
     quant = assign.withColumn("mx", mx).select(
         F.col("vec_id").alias("neighbor_id"),
@@ -760,31 +759,27 @@ def _sq8_scored(spark: SparkSession, sf_dir: str):
         / (F.col("qnrm") * F.col("nrm")),
         8,
     )
-    cand = quant.join(F.broadcast(probes), "cell").select(
+    return quant.join(F.broadcast(probes), "cell").select(
         "query_id", "neighbor_id", approx.alias("approx_cosine")
     )
-    return n, qn, cand
 
 
 @query(
     "sim_ivf_sq8",
-    oracle="WITH " + _IVF_CTES + "," + _SQ8_QUANT_CTE + f"""
-SELECT query_id, neighbor_id, approx_cosine FROM (
-{_SQ8_SCORED_SELECT}) WHERE rn <= 3
-""",
+    oracle="WITH "
+    + _SQ8_CTES
+    + _top_sql("sq8scored", "approx_cosine", 3, "query_id, neighbor_id, approx_cosine"),
 )
 def sim_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF + int8 scalar-quantization (SQ8) rescoring — renamed from
-    ``sim_ivf_pq`` in round 7: this operator is per-vector SCALAR
-    quantization (one int8 code per dimension + one fp scale), a 4x
-    index reduction; true PRODUCT quantization with per-subspace
-    codebooks and ADC lookup is ``sim_ivf_truepq`` below. Identical
-    coarse quantizer, assignment and probing as sim_ivf_ann (shared
-    ``_ivf_parts``), but the probed cells are rescored against the
-    int8 codes while the query stays full-precision — the standard
-    asymmetric arrangement that cuts index memory/bandwidth 4x at
-    100 TB. Exact per-vector L2 norms ride alongside the codes
-    (8 bytes against a 4x-reduced vector — standard practice), so the
+    """IVF + int8 scalar quantization (SQ8) rescoring: one int8 code per
+    dimension + one fp scale, a 4x index reduction (true product
+    quantization with per-subspace codebooks and ADC lookup is
+    ``sim_ivf_truepq`` below). Same coarse quantizer, assignment and
+    probing as sim_ivf_ann (shared ``_ivf_parts``), but the probed
+    cells are rescored against the int8 codes while the query stays
+    full-precision — the standard asymmetric arrangement that cuts
+    index memory/bandwidth 4x at 100 TB. Exact per-vector L2 norms ride
+    alongside the codes (8 bytes against a 4x-reduced vector), so the
     only approximation is the quantized dot product; measured recall@3
     vs the exact top-3 is recorded in SCALING.md via
     tools/measure_ann_recall.py.
@@ -794,73 +789,24 @@ def sim_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     embed_normalize_quantize precedent), the dot is a sequential
     double fold on both sides, and ranking rounds to 8 decimals with
     vec_id tie-break."""
-    _, _, cand = _sq8_scored(spark, sf_dir)
-    w = W.partitionBy("query_id").orderBy(F.desc("approx_cosine"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "approx_cosine")
-    )
+    _, assign, probes = _ivf_parts(spark, sf_dir)
+    return _top_k(_sq8_scored(assign, probes), "approx_cosine", 3)
 
 
-PQ_RERANK_R = 6  # quantized shortlist size re-ranked at full precision
-
-
-@query(
-    "sim_ivf_sq8_rerank",
-    oracle="WITH " + _IVF_CTES + "," + _SQ8_QUANT_CTE + f""",
-shortlist AS (
-  SELECT query_id, neighbor_id FROM (
-{_SQ8_SCORED_SELECT}) WHERE rn <= {PQ_RERANK_R}
-)
-SELECT query_id, neighbor_id, cosine FROM (
-  SELECT s.query_id, s.neighbor_id,
-         round(list_dot_product(qn.v, cn_.v) / (qn.nrm * cn_.nrm), 8) AS cosine,
-         row_number() OVER (
-           PARTITION BY s.query_id
-           ORDER BY round(list_dot_product(qn.v, cn_.v) / (qn.nrm * cn_.nrm), 8) DESC,
-                    s.neighbor_id) AS rn
-  FROM shortlist s
-  JOIN n qn  ON qn.vec_id = s.query_id
-  JOIN n cn_ ON cn_.vec_id = s.neighbor_id
-) WHERE rn <= 3
-""",
-)
+@query("sim_ivf_sq8_rerank", oracle="WITH " + _SQ8_CTES + _rerank_sql("sq8scored"))
 def sim_ivf_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage retrieval over the int8 IVF index (renamed from
-    ``sim_ivf_pq_rerank`` in round 7 alongside sim_ivf_sq8) — the
-    production architecture a memory-bounded 100 TB vector store
-    actually runs: stage 1 shortlists the top-{PQ_RERANK_R} per query
-    by the int8 asymmetric score (4x less index traffic, same probe
-    geometry as sim_ivf_ann/sim_ivf_sq8), stage 2 re-ranks ONLY the
-    shortlist against the full-precision vectors (one
-    {PQ_RERANK_R}-rows-per-query join) and emits exact-cosine top-3.
-    Any pair the int8 score orders wrongly inside the shortlist is
-    corrected, so the result converges to sim_ivf_ann's as R grows,
-    while the fp vectors are touched for R rows per query instead of
-    the whole probe set."""
-    n, qn, cand = _sq8_scored(spark, sf_dir)
-    w1 = W.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        cand.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= PQ_RERANK_R)
-        .select("query_id", "neighbor_id")
-    )
-    cn_ = n.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm")
-    exact = F.round(
-        _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 8
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        shortlist.join(F.broadcast(qn), "query_id")
-        .join(cn_, "neighbor_id")
-        .select("query_id", "neighbor_id", exact.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    """Two-stage retrieval over the int8 IVF index — the architecture a
+    memory-bounded 100 TB vector store runs: stage 1 shortlists the
+    top-{PQ_RERANK_R} per query by the int8 asymmetric score (4x less
+    index traffic, same probe geometry as sim_ivf_ann/sim_ivf_sq8),
+    stage 2 (``_rerank``) re-ranks ONLY the shortlist against the
+    full-precision vectors and emits exact-cosine top-3. Any pair the
+    int8 score orders wrongly inside the shortlist is corrected, so
+    the result converges to sim_ivf_ann's as R grows, while the fp
+    vectors are touched for R rows per query instead of the whole
+    probe set."""
+    n, assign, probes = _ivf_parts(spark, sf_dir)
+    return _rerank(n, _sq8_scored(assign, probes))
 
 
 # ------------------------------------------------------------ true-PQ family
@@ -874,7 +820,7 @@ def sim_ivf_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: A corpus vector is then 8 codes x 8 bits = 8 BYTES against 256 fp
 #: bytes — the 32x (vs int8's 4x) reduction a genuinely memory-bound
 #: 100 TB index runs. Geometry chosen by a measured sweep (SCALING.md
-#: round-7 PQ table): coarser grids (4x16, 8x64) leave ADC recall at
+#: PQ geometry table): coarser grids (4x16, 8x64) leave ADC recall at
 #: 0.07-0.23 on this corpus's weak neighbor structure; 8x256 scores
 #: 0.367 vs the 0.433 IVF-exact ceiling at sf0.01 and the fp rerank
 #: recovers the ceiling exactly.
@@ -935,9 +881,8 @@ def _pq_d2_scalar() -> F.Column:
     doubles — bit-identical values — but each operand is a flat double
     column instead of an array element_at, so the expanded
     (subvectors x codewords) relation pays no per-element null/bounds
-    checks or array headers (r15, guide §2.3 'narrower types' applied
-    to the argmin expansion — the expansion is the whole cost of PQ
-    assignment)."""
+    checks or array headers (narrower types where the expansion is
+    the whole cost of PQ assignment)."""
     terms = []
     for i in range(1, PQ_SUBDIM + 1):
         dx = F.col(f"sv{i}") - F.col(f"cv{i}")
@@ -981,15 +926,14 @@ def hash_argmin(
     out: str = "cell",
 ) -> DataFrame:
     """Distributed argmin over a broadcast candidate relation with
-    (score asc, cell asc) tie-break, using ONLY hash aggregates — the
-    r10 replacement for both min(struct(score, cell)) and per-key
-    row_number windows.
+    (score asc, cell asc) tie-break, using ONLY hash aggregates — never
+    min(struct(score, cell)) or per-key row_number windows.
 
     Why: min(STRUCT) is a DeclarativeAggregate with an immutable
     buffer type, so Catalyst falls back to SortAggregate, whose
     PARTIAL phase SORTS the whole expanded (narrow x candidates)
     relation inside each task — at the 1000x replica that sort
-    spilled >60 GB and filled the disk (sim_ivf_truepq, r10). A
+    spilled >60 GB and filled the disk (sim_ivf_truepq). A
     row_number window has the same shape plus an exchange of the
     expanded relation. This helper never sorts and never shuffles
     anything expanded: pass 1 broadcasts `cand`, expands, and
@@ -1024,12 +968,12 @@ def _pq_assign(sub: DataFrame, cent: DataFrame) -> DataFrame:
     cell): broadcast the (PQ_M x PQ_K)-row codebook, argmin squared
     distance within the SAME subspace, ties on cell asc — the grouped
     twin of lloyd_assign's assignment step, via the two-pass
-    hash_argmin (the r9 min(struct) spelling fell back to
-    SortAggregate and sort-spilled corpus x PQ_K rows at the 1000x
-    replica; see hash_argmin). Matches the oracle's row_number
-    (d2 asc, cell asc) tie-break exactly; the corpus never shuffles
-    expanded for assignment. r15: the expansion runs in the scalar
-    spelling (see _pq_d2_scalar) — same doubles, same tie-break."""
+    hash_argmin (a min(struct) spelling falls back to SortAggregate
+    and sort-spilled corpus x PQ_K rows at the 1000x replica; see
+    hash_argmin). Matches the oracle's row_number (d2 asc, cell asc)
+    tie-break exactly; the corpus never shuffles expanded for
+    assignment. The expansion runs in the scalar spelling (see
+    _pq_d2_scalar) — same doubles, same tie-break."""
     return hash_argmin(
         _pq_scalar_sub(sub),
         _pq_scalar_cand(cent),
@@ -1131,8 +1075,7 @@ def _pq_train(sub: DataFrame) -> DataFrame:
     means through DECIMAL. Returns the final codebook (sub, cell, cv)
     as a LOCAL relation.
 
-    r15 (guide §1.2 step 1 — fix the distributed algorithm): PQ
-    training is bounded by PQ_TRAIN_SAMPLE (the FAISS practice:
+    PQ training is bounded by PQ_TRAIN_SAMPLE (the FAISS practice:
     codebooks train on a fixed sample regardless of index size, and
     the trained codebook IS the index header every node holds). The
     relational spelling paid 2 x PQ_ITERS broadcast-expand argmin
@@ -1154,11 +1097,18 @@ def _pq_train(sub: DataFrame) -> DataFrame:
     return _pq_codebook_local(spark, rows)
 
 
-def _adc_tables(cent: DataFrame, qsub: DataFrame):
-    """The two broadcast-sized ADC relations shared by every PQ
-    consumer (in-query and staged): the per-query lookup table
-    lut = (query_id, sub, code, dot(q_sub, codeword)) and the codeword
-    sqnorm table cw = (sub, code, |codeword|^2)."""
+def _adc_scored(cand_codes: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFrame:
+    """The ADC scorer: (query_id, neighbor_id, sub, code) candidates ->
+    (query_id, neighbor_id, approx_cosine) against the codebook
+    ``cent`` (sub, cell, cv) for the query rows ``queries`` (vec_id, v,
+    nrm). Two broadcast-sized tables carry the arithmetic: the
+    per-query lookup table (query_id, sub, code, dot(q_sub, codeword))
+    and the codeword sqnorms (sub, code, |codeword|^2). Partial dots
+    and sqnorms sum through DECIMAL so the cross-subspace order cannot
+    flip the hash; the reconstructed norm is sqrt of the summed
+    codeword sqnorms. sim_ivf_truepq and sim_ivf_staged_pq both score
+    here, which is what keeps them bit-equal."""
+    qsub = _pq_subvectors(queries.select("vec_id", "v"))
     lut = qsub.join(cent, "sub").select(
         F.col("vec_id").alias("query_id"),
         "sub",
@@ -1169,19 +1119,7 @@ def _adc_tables(cent: DataFrame, qsub: DataFrame):
         F.transform("cv", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
     )
     cw = cent.select("sub", F.col("cell").alias("code"), sq.alias("csq"))
-    return lut, cw
-
-
-def _adc_fold(cand_codes: DataFrame, lut: DataFrame, cw: DataFrame, qnrm: DataFrame) -> DataFrame:
-    """ADC scoring: (query_id, neighbor_id, sub, code) candidates fold
-    against the broadcast lut/cw tables into (query_id, neighbor_id,
-    approx_cosine) — partial dots and sqnorms sum through DECIMAL so
-    the cross-subspace order cannot flip the hash, the reconstructed
-    norm is sqrt of the summed codeword sqnorms. ONE spelling of the
-    scoring arithmetic, consumed by sim_ivf_truepq (transient build)
-    and sim_ivf_staged_pq (persisted index) — the bit-equality
-    contract between them holds because this is literally the same
-    code."""
+    qnrm = queries.select(F.col("vec_id").alias("query_id"), F.col("nrm").alias("qnrm"))
     return (
         cand_codes.join(F.broadcast(lut), ["query_id", "sub", "code"])
         .join(F.broadcast(cw), ["sub", "code"])
@@ -1201,51 +1139,37 @@ def _adc_fold(cand_codes: DataFrame, lut: DataFrame, cw: DataFrame, qnrm: DataFr
     )
 
 
-def _truepq_scored(spark: SparkSession, sf_dir: str):
-    """Shared true-PQ scoring stage under sim_ivf_truepq and
-    sim_ivf_truepq_rerank: IVF front-end from ``_ivf_parts``, per-
-    subspace codebooks from ``_pq_train``, corpus encoded to PQ_M
-    codes per vector, and probe candidates scored by ADC — the
+def _truepq_scored(n: DataFrame, assign: DataFrame, probes: DataFrame) -> DataFrame:
+    """The true-PQ (ADC) scorer over the IVF front end ``_ivf_parts``:
+    per-subspace codebooks from ``_pq_train``, the corpus encoded to
+    PQ_M codes per vector, and probe candidates scored by ADC — the
     approximate dot is the sum of PQ_M codebook-table lookups
-    dot(q_sub, codeword[code]), and the reconstructed norm is
-    sqrt(sum of codeword sqnorms): NO per-vector fp state survives on
-    the index side, codes only. Partial dots and sqnorms sum through
-    DECIMAL so the 4-way sum is order-independent on both engines.
-    Returns ``(n, qn, scored)`` with scored = (query_id, neighbor_id,
+    dot(q_sub, codeword[code]) and the reconstructed norm is
+    sqrt(sum of codeword sqnorms): no per-vector fp state survives on
+    the index side, codes only. Returns (query_id, neighbor_id,
     approx_cosine), unranked."""
-    n, assign, probes = _ivf_parts(spark, sf_dir)
     sub = _pq_subvectors(n.filter(F.col("vec_id") >= N_QUERIES).select("vec_id", "v"))
-    # train on the bounded deterministic sample (see PQ_TRAIN_SAMPLE);
-    # the trained codebook feeds three consumers (encode, sqnorm table,
-    # query LUT) — it is a LOCAL relation (r15, see _pq_train), so
-    # every consumer reads 2048 local rows and no persist is needed.
+    # The codebook is a local relation of at most PQ_M x PQ_K rows (see
+    # _pq_train), so its three consumers (encode, sqnorm table, query
+    # LUT) need no persist.
     cent = _pq_train(sub)
     codes = _pq_assign(sub, cent).select(
         F.col("vec_id").alias("neighbor_id"), "sub", F.col("cell").alias("code")
-    )
-    qsub = _pq_subvectors(
-        n.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "v")
-    )
-    lut, cw = _adc_tables(cent, qsub)
-    qn = n.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
     )
     cand_codes = (
         probes.join(assign, "cell")
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .join(codes, "neighbor_id")
     )
-    scored = _adc_fold(cand_codes, lut, cw, qn.select("query_id", "qnrm"))
-    return n, qn, scored
+    return _adc_scored(cand_codes, cent, n.filter(F.col("vec_id") < N_QUERIES))
 
 
 def _pq_ctes() -> str:
-    """The true-PQ oracle CTE chain appended to _IVF_CTES: per-subspace
-    Lloyd UNROLLED (the _kmeans_blocks pattern with the sub column
-    threaded through every key), final-codebook encode, codeword
-    sqnorm table, query LUT, and the ADC-scored candidate relation."""
+    """The true-PQ oracle CTE chain appended to ``_ivf_ctes()``:
+    per-subspace Lloyd UNROLLED (the _kmeans_blocks pattern with the
+    sub column threaded through every key), final-codebook encode,
+    codeword sqnorm table, query LUT, and the ADC-scored candidates
+    ``pqscored``."""
     sd = PQ_SUBDIM
     d2 = (
         "list_sum(list_transform(list_zip(s.sv, c.cv),"
@@ -1321,7 +1245,7 @@ pqscored AS (
            CAST(sum(CAST(l.pdot AS DECIMAL(28,12))) AS DOUBLE) AS num,
            CAST(sum(CAST(w.csq AS DECIMAL(28,12))) AS DOUBLE) AS csqs
     FROM probes p
-    JOIN assign a ON a.cell = p.cell AND a.vec_id >= {N_QUERIES}
+    JOIN assign a ON a.cell = p.cell
     JOIN codes k ON k.vec_id = a.vec_id
     JOIN lut l ON l.query_id = p.vec_id AND l.sub = k.sub AND l.code = k.code
     JOIN cw w ON w.sub = k.sub AND w.code = k.code
@@ -1332,17 +1256,17 @@ pqscored AS (
     return ",".join(blocks)
 
 
-@query(
-    "sim_ivf_truepq",
-    oracle="WITH " + _IVF_CTES + "," + _pq_ctes() + """
-SELECT query_id, neighbor_id, approx_cosine FROM (
-  SELECT query_id, neighbor_id, approx_cosine,
-         row_number() OVER (PARTITION BY query_id
-           ORDER BY approx_cosine DESC, neighbor_id) AS rn
-  FROM pqscored
-) WHERE rn <= 3
-""",
+#: The IVF front end plus the ADC-scored candidates ``pqscored``.
+_PQ_CTES = _ivf_ctes() + "," + _pq_ctes()
+
+#: ADC top-3: sim_ivf_truepq's oracle and, because the staged PQ layout
+#: serves the same codes, sim_ivf_staged_pq's.
+_PQ_ORACLE = "WITH " + _PQ_CTES + _top_sql(
+    "pqscored", "approx_cosine", 3, "query_id, neighbor_id, approx_cosine"
 )
+
+
+@query("sim_ivf_truepq", oracle=_PQ_ORACLE)
 def sim_ivf_truepq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF + TRUE product quantization (Jegou et al. 2011, "Product
     Quantization for Nearest Neighbor Search"): the 64-dim corpus is
@@ -1377,70 +1301,22 @@ def sim_ivf_truepq(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer argmins with cell-asc tie-break over identically-folded
     doubles (green kmeans precedent), and the cross-subspace sums go
     through DECIMAL so partial order cannot flip the hash."""
-    _, _, scored = _truepq_scored(spark, sf_dir)
-    w = W.partitionBy("query_id").orderBy(F.desc("approx_cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "approx_cosine")
-    )
+    n, assign, probes = _ivf_parts(spark, sf_dir)
+    return _top_k(_truepq_scored(n, assign, probes), "approx_cosine", 3)
 
 
-@query(
-    "sim_ivf_truepq_rerank",
-    oracle="WITH " + _IVF_CTES + "," + _pq_ctes() + f""",
-shortlist AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-             ORDER BY approx_cosine DESC, neighbor_id) AS rn
-    FROM pqscored
-  ) WHERE rn <= {PQ_RERANK_R}
-)
-SELECT query_id, neighbor_id, cosine FROM (
-  SELECT s.query_id, s.neighbor_id,
-         round(list_dot_product(qn.v, cn_.v) / (qn.nrm * cn_.nrm), 8) AS cosine,
-         row_number() OVER (
-           PARTITION BY s.query_id
-           ORDER BY round(list_dot_product(qn.v, cn_.v) / (qn.nrm * cn_.nrm), 8) DESC,
-                    s.neighbor_id) AS rn
-  FROM shortlist s
-  JOIN n qn  ON qn.vec_id = s.query_id
-  JOIN n cn_ ON cn_.vec_id = s.neighbor_id
-) WHERE rn <= 3
-""",
-)
+@query("sim_ivf_truepq_rerank", oracle="WITH " + _PQ_CTES + _rerank_sql("pqscored"))
 def sim_ivf_truepq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage retrieval over the 2-byte PQ index: stage 1
+    """Two-stage retrieval over the 8-byte PQ index: stage 1
     shortlists the top-{PQ_RERANK_R} per query by the ADC score
-    (codes-only index traffic), stage 2 re-ranks ONLY the shortlist
-    against the full-precision vectors and emits exact-cosine top-3 —
-    the recovery path for PQ's quantization error (SCALING.md records
-    the recall delta this closes vs sim_ivf_truepq). Identical
-    architecture to sim_ivf_sq8_rerank; only the stage-1 quantizer
-    differs (codebook ADC vs per-vector int8)."""
-    n, qn, scored = _truepq_scored(spark, sf_dir)
-    w1 = W.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= PQ_RERANK_R)
-        .select("query_id", "neighbor_id")
-    )
-    cn_ = n.select(F.col("vec_id").alias("neighbor_id"), "v", "nrm")
-    exact = F.round(
-        _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 8
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        shortlist.join(F.broadcast(qn), "query_id")
-        .join(cn_, "neighbor_id")
-        .select("query_id", "neighbor_id", exact.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    (codes-only index traffic), stage 2 (``_rerank``) re-ranks ONLY
+    the shortlist against the full-precision vectors and emits
+    exact-cosine top-3 — the recovery path for PQ's quantization
+    error (SCALING.md records the recall delta this closes vs
+    sim_ivf_truepq). sim_ivf_sq8_rerank with the ADC scorer in place
+    of the int8 one."""
+    n, assign, probes = _ivf_parts(spark, sf_dir)
+    return _rerank(n, _truepq_scored(n, assign, probes))
 
 
 BRP_RECALL_TOL = 0.8  # measured overall recall@3: 0.933 (sf0.01), 0.967 (sf0.1)
@@ -1510,14 +1386,13 @@ def sim_brp_lsh_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         6,
     )
-    w = W.partitionBy("query_id").orderBy(F.asc("euclidean_dist"), F.asc("neighbor_id"))
-    exact = (
+    exact = _top_k(
         F.broadcast(q_)
         .crossJoin(c_)
-        .select("query_id", "neighbor_id", dist.alias("euclidean_dist"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .drop("rn")
+        .select("query_id", "neighbor_id", dist.alias("euclidean_dist")),
+        "euclidean_dist",
+        3,
+        ascending=True,
     )
 
     vec = base.select("vec_id", array_to_vector("v").alias("features"))
@@ -1534,11 +1409,8 @@ def sim_brp_lsh_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("datasetB.vec_id").alias("neighbor_id"),
         F.col("distCol").alias("d"),
     )
-    wa = W.partitionBy("query_id").orderBy(F.asc("d"), F.asc("neighbor_id"))
-    ann3 = (
-        ann.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    ann3 = _top_k(ann, "d", 3, ascending=True).select(
+        "query_id", "neighbor_id", F.lit(1).alias("hit")
     )
     recall = (
         exact.join(ann3, ["query_id", "neighbor_id"], "left")
@@ -1748,7 +1620,7 @@ def _argmin_d2_sql(crows, vexpr: str = "v") -> str:
         )
 
     def d2(cv):
-        # the fold-with-literal-array spelling (the r14 _dot_lit_sql
+        # the fold-with-literal-array spelling (the _dot_lit_sql
         # device): tree size O(DIM) per cell — the inlined element_at
         # spelling was measured to REGRESS (a ~2k-node Catalyst tree
         # per cell re-walked on every iteration's planning).
@@ -1813,10 +1685,10 @@ def lloyd_assign(base: DataFrame, k: int, iters: int):
     Returns ``(assign, cent)``: final membership (vec_id, cell, v) and
     final centroids (cell, cv — a LOCAL relation).
 
-    r15 (guide §2.4, the r14 literal-quantizer discipline): the
-    centroid set is CELL-DOMAIN-sized (k rows), so each iteration
-    collects it (bounded control-plane collect, doubles round-trip
-    exactly) and assignment becomes a pure projection — the literal
+    As with the IVF quantizer, the centroid set is CELL-DOMAIN-sized
+    (k rows), so each iteration collects it (bounded control-plane
+    collect, doubles round-trip exactly) and assignment becomes a pure
+    projection — the literal
     argmin expression of :func:`_argmin_d2_sql` — with the update ONE
     groupBy(cell) carrying DIM decimal-sum buffers, map-side combined
     (bit-identical to the posexplode spelling: DECIMAL sums are exact
@@ -2165,25 +2037,18 @@ def sim_bruteforce_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     local = corpus.mapInPandas(
         score, "query_id long, neighbor_id long, cosine double"
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    pandas_top = (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    exact = (
+    pandas_top = _top_k(local, "cosine", 3).select("query_id", "neighbor_id")
+    exact = _top_k(
         topk_cosine(
             corpus=corpus,
             queries=base.filter(F.col("vec_id") < N_QUERIES),
             id_col="vec_id",
             vec_col="v",
             k=TOP_K,
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "cosine")
-        .transform(track)  # consumed by the result AND the verdict join
-    )
+        ),
+        "cosine",
+        3,
+    ).transform(track)  # consumed by the result AND the verdict join
     hits = exact.join(pandas_top, ["query_id", "neighbor_id"]).agg(
         F.count(F.lit(1)).cast("double").alias("n_hit")
     )
@@ -2627,7 +2492,7 @@ def ivf_pq_staged_layout(spark: SparkSession, sf_dir: str):
     cent = (sub, cell, cv)."""
 
     def build_cent() -> DataFrame:
-        n, _, _ = _ivf_parts(spark, sf_dir)
+        n, _ = _ivf_base(spark, sf_dir)
         sub = _pq_subvectors(
             n.filter(F.col("vec_id") >= N_QUERIES).select("vec_id", "v")
         )
@@ -2636,11 +2501,9 @@ def ivf_pq_staged_layout(spark: SparkSession, sf_dir: str):
     cent = staging.staged(spark, "ivfpq_cent", sf_dir, staging.spread(build_cent))
 
     def build_codes() -> DataFrame:
-        # derive codes FROM the staged fp layout (the realistic ingest
-        # pipeline: fp index first, PQ body derived) — its (vec_id,
-        # cell) column IS the coarse assignment, so the corpus x cells
-        # hash_argmin does not run a second time (r11-continuation
-        # review finding)
+        # Codes derive from the staged fp layout (fp index first, PQ
+        # body derived): its (vec_id, cell) column is the coarse
+        # assignment, so the corpus is not assigned a second time.
         corp, _ = ivf_staged_layout(spark, sf_dir)
         sub = _pq_subvectors(corp.select("vec_id", "v"))
         codes = _pq_assign(sub, cent).select(
@@ -2656,17 +2519,7 @@ def ivf_pq_staged_layout(spark: SparkSession, sf_dir: str):
     return codes, cent
 
 
-@query(
-    "sim_ivf_staged_pq",
-    oracle="WITH " + _IVF_CTES + "," + _pq_ctes() + """
-SELECT query_id, neighbor_id, approx_cosine FROM (
-  SELECT query_id, neighbor_id, approx_cosine,
-         row_number() OVER (PARTITION BY query_id
-           ORDER BY approx_cosine DESC, neighbor_id) AS rn
-  FROM pqscored
-) WHERE rn <= 3
-""",
-)
+@query("sim_ivf_staged_pq", oracle=_PQ_ORACLE)
 def sim_ivf_staged_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`sim_ivf_truepq` served from the PERSISTED index — the two
     demonstrated scale devices composed into the production ANN
@@ -2691,32 +2544,11 @@ def sim_ivf_staged_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     constants (8x256 LUT, 8x256 sqnorms), and the only shuffle is the
     map-side-combined (query, neighbor) ADC sum."""
     codes, cent = ivf_pq_staged_layout(spark, sf_dir)
-    cent_n = ivf_staged_centroids(spark, sf_dir)
-    e = load_spread(spark, sf_dir, "embeddings")
-    qn0 = (
-        e.where(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", _as_double("embedding").alias("v"))
-        .withColumn("nrm", _norm(F.col("v")))
-        .transform(track)  # probe window + LUT + norms all read it
-    )
-    probes = _ivf_probes(qn0, cent_n).select("query_id", "cell")
-    # bounded collect: distinct probed cell ids, <= the cell domain
-    cells = [r[0] for r in probes.select("cell").distinct().collect()]
-    qsub = _pq_subvectors(qn0.select("vec_id", "v"))
-    lut, cw = _adc_tables(cent, qsub)
-    qnrm = qn0.select(F.col("vec_id").alias("query_id"), F.col("nrm").alias("qnrm"))
+    qn0, probes, cells = _staged_probes(spark, sf_dir, ivf_staged_centroids(spark, sf_dir))
     cand_codes = codes.where(F.col("cell").isin(cells)).join(  # pruned scan
-        F.broadcast(probes), "cell"
+        F.broadcast(probes.select("query_id", "cell")), "cell"
     )
-    scored = _adc_fold(cand_codes, lut, cw, qnrm)
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "approx_cosine")
-    )
+    return _top_k(_adc_scored(cand_codes, cent, qn0), "approx_cosine", 3)
 
 
 # ---------------------------------------------------------- binary quantization
@@ -2898,65 +2730,15 @@ DELTA_MOD = 7
 
 @query(
     "sim_ivf_incremental",
-    oracle=f"""
-WITH e AS (
-  SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v
-  FROM embeddings
-),
-tr AS (
-  SELECT * FROM e WHERE vec_id >= {N_QUERIES} AND vec_id % {DELTA_MOD} != 0
-),
-dims AS (
-  SELECT label, u.d, u.x
-  FROM tr, LATERAL (SELECT unnest(generate_series(1, len(v))) AS d,
-                           unnest(v) AS x) u
-),
-cent AS (
-  SELECT label AS cell, list(c ORDER BY d) AS cv
-  FROM (SELECT label, d,
-               CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS c
-        FROM dims GROUP BY label, d)
-  GROUP BY label
-),
-n AS (
-  SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e
-),
-idx AS (
-  SELECT vec_id, cell, (vec_id % {DELTA_MOD} = 0) AS from_delta FROM (
-    SELECT n.vec_id, cent.cell,
-           row_number() OVER (
-             PARTITION BY n.vec_id
-             ORDER BY list_dot_product(n.v, cent.cv)
-                      / (n.nrm * sqrt(list_sum(list_transform(cent.cv, x -> x*x))))
-                      DESC, cent.cell) AS rn
-    FROM n CROSS JOIN cent WHERE n.vec_id >= {N_QUERIES}
-  ) WHERE rn = 1
-),
-probes AS (
-  SELECT vec_id, cell FROM (
-    SELECT n.vec_id, cent.cell,
-           row_number() OVER (
-             PARTITION BY n.vec_id
-             ORDER BY list_dot_product(n.v, cent.cv)
-                      / (n.nrm * sqrt(list_sum(list_transform(cent.cv, x -> x*x))))
-                      DESC, cent.cell) AS rn
-    FROM n CROSS JOIN cent WHERE n.vec_id < {N_QUERIES}
-  ) WHERE rn <= {N_PROBE}
-)
-SELECT query_id, neighbor_id, cosine, from_delta FROM (
-  SELECT p.vec_id AS query_id, i.vec_id AS neighbor_id,
-         round(list_dot_product(qn.v, cn_.v) / (qn.nrm * cn_.nrm), 8) AS cosine,
-         i.from_delta,
-         row_number() OVER (
-           PARTITION BY p.vec_id
-           ORDER BY round(list_dot_product(qn.v, cn_.v) / (qn.nrm * cn_.nrm), 8) DESC,
-                    i.vec_id) AS rn
-  FROM probes p
-  JOIN idx i ON i.cell = p.cell
-  JOIN n qn  ON qn.vec_id = p.vec_id
-  JOIN n cn_ ON cn_.vec_id = i.vec_id
-) WHERE rn <= 3
-""",
+    oracle="WITH "
+    + _ivf_ctes(f"vec_id >= {N_QUERIES} AND vec_id % {DELTA_MOD} != 0")
+    + f""",
+exact AS (
+  SELECT query_id, neighbor_id, {_COSINE_SQL} AS cosine,
+         (neighbor_id % {DELTA_MOD} = 0) AS from_delta
+  FROM cand
+)"""
+    + _top_sql("exact", "cosine", 3, "query_id, neighbor_id, cosine, from_delta"),
 )
 def sim_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF index maintenance — the growing-segment
@@ -2977,49 +2759,19 @@ def sim_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors). The only corpus-wide relations are the base build —
     exactly what the staged deployment amortizes to build-once.
 
-    100 TB shape: the incremental step costs O(|delta| x cells) via
-    a broadcast nested loop over the tiny frozen centroid relation —
-    the base corpus is NEVER rescanned, re-shuffled, or re-sorted on
-    ingest (the whole point; re-assigning 100 TB per daily batch is
-    the anti-pattern). Queries pay one union of a delta segment that
-    is small by construction between compactions. Assignment argmins
-    are per-row expressions over the literal frozen quantizer (r14),
-    same as every IVF tier here."""
+    100 TB shape: the incremental step costs O(|delta| x cells), one
+    projection over the literal frozen quantizer as in every IVF tier
+    here — the base corpus is NEVER re-shuffled or re-sorted on ingest
+    (re-assigning 100 TB per daily batch is the anti-pattern). Queries
+    pay one union of a delta segment that is small by construction
+    between compactions."""
     is_corpus = F.col("vec_id") >= N_QUERIES
     is_delta = F.col("vec_id") % DELTA_MOD == 0
-    n, cent_n = _ivf_base(spark, sf_dir, train_filter=is_corpus & ~is_delta)
-    # THE incremental step (r14 spelling): the FROZEN quantizer —
-    # trained on the base only — is cell-domain-sized and served as a
-    # literal, so assignment is one projection per segment; the delta
-    # branch still scans only the arrivals (pushed filter) in a real
-    # ingest, and the base corpus is never re-shuffled or re-joined.
-    # Both segments fall out of the same pass here with from_delta
-    # flagging the arrivals (the union of two identical projections,
-    # fused).
-    qrows = _quantizer_rows(cent_n)
-    idx = n.filter(is_corpus).selectExpr(
-        "vec_id",
-        "v",
-        "nrm",
-        f"{_assign_cell_sql(qrows)} AS cell",
-        f"(vec_id % {DELTA_MOD} = 0) AS from_delta",
-    )
-    probes = _ivf_probes(n.filter(F.col("vec_id") < N_QUERIES), cent_n, qrows)
-    cand = idx.join(F.broadcast(probes), "cell").select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")),
-            8,
-        ).alias("cosine"),
-        "from_delta",
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "cosine", "from_delta")
-    )
+    # The frozen quantizer trains on the base only; both segments are
+    # assigned in one projection over it, from_delta flagging arrivals.
+    _, assign, probes = _ivf_parts(spark, sf_dir, is_corpus & ~is_delta)
+    idx = assign.withColumn("from_delta", is_delta)
+    return _top_k(_exact_scored(idx, probes, "from_delta"), "cosine", 3)
 
 
 #: retrain gate for the composed index-maintenance capstone: if the
@@ -3032,12 +2784,8 @@ def sim_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: at every fixture SF: 0.986-0.997 measured, so 0.95 separates cleanly.)
 MAINT_COS_FLOOR = 0.95
 
-#: shared SQL for the maintenance gate + both assignment branches
-_MAINT_CTES = f"""
-e AS (
-  SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v
-  FROM embeddings
-),
+#: The maintenance gate's SQL; both assignment branches read its ``n``.
+_MAINT_CTES = _IVF_VEC_CTES + f""",
 corpus AS (SELECT * FROM e WHERE vec_id >= {N_QUERIES}),
 xx AS (
   SELECT CASE WHEN vec_id % {DELTA_MOD} = 0 THEN 1 ELSE 0 END AS grp, u.d, u.x
@@ -3056,47 +2804,8 @@ gate AS (
          AS dc
   FROM (SELECT * FROM m2 WHERE grp = 0) a
   JOIN (SELECT * FROM m2 WHERE grp = 1) b ON a.d = b.d
-),
-n AS (
-  SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-  FROM e
 )
 """
-
-
-def _maint_cent_sql(train_pred: str) -> str:
-    """Per-label coarse-centroid CTE body over ``corpus`` rows
-    satisfying ``train_pred`` — the quantizer-train twin of
-    ``_ivf_base``'s, parameterized by the training population."""
-    return f"""(
-  SELECT label AS cell, list(c ORDER BY d) AS cv
-  FROM (SELECT label, d,
-               CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS c
-        FROM (SELECT label, u.d, u.x
-              FROM corpus, LATERAL (SELECT unnest(generate_series(1, len(v))) AS d,
-                                           unnest(v) AS x) u
-              WHERE {train_pred})
-        GROUP BY label, d)
-  GROUP BY label
-)"""
-
-
-def _maint_assign_sql(cent_cte: str, rows_pred: str) -> str:
-    """Nearest-cell assignment of ``n`` rows satisfying ``rows_pred``
-    against ``cent_cte`` — the SQL twin of ``hash_argmin`` over the
-    broadcast centroid relation."""
-    return f"""(
-  SELECT vec_id, cell FROM (
-    SELECT n.vec_id, cent.cell,
-           row_number() OVER (
-             PARTITION BY n.vec_id
-             ORDER BY list_dot_product(n.v, cent.cv)
-                      / (n.nrm * sqrt(list_sum(list_transform(cent.cv, x -> x*x))))
-                      DESC, cent.cell) AS rn
-    FROM n CROSS JOIN {cent_cte} cent
-    WHERE n.vec_id >= {N_QUERIES} AND ({rows_pred})
-  ) WHERE rn = 1
-)"""
 
 
 def _maintenance_drift(spark: SparkSession, sf_dir: str) -> float:
@@ -3105,13 +2814,10 @@ def _maintenance_drift(spark: SparkSession, sf_dir: str) -> float:
     a single row — the collect is a bounded 1-row control-plane read
     (the MMR / scalar-verdict precedent), never corpus-sized."""
     e = load_spread(spark, sf_dir, "embeddings")
-    # r15 (guide §2.3, the _ivf_base device): was posexplode(DIMx) ->
-    # groupBy(grp, d) — a 64-fold row explosion through a keyed
-    # exchange. One groupBy(grp) carrying DIM decimal-sum buffers is
-    # bit-identical (exact order-free DECIMAL sums of the same
-    # products, same per-dim division) and folds map-side to 2 rows;
-    # the (grp, d, e2) shape is rebuilt from the 2-row result so the
-    # profile-cosine arithmetic below is untouched.
+    # One groupBy(grp) carrying DIM decimal-sum buffers folds
+    # map-side to 2 rows (a posexplode + groupBy(grp, d) spelling
+    # crosses DIM x the corpus); exact order-free DECIMAL sums keep it
+    # bit-identical, and the (grp, d, e2) rows are rebuilt from them.
     x0 = e.filter(F.col("vec_id") >= N_QUERIES).select(
         (F.col("vec_id") % DELTA_MOD == 0).cast("int").alias("grp"),
         _as_double("embedding").alias("v"),
@@ -3181,16 +2887,11 @@ def _maintenance_assign(
     — the corpus-sized rebuild, paid only when the gate fires."""
     is_corpus = F.col("vec_id") >= N_QUERIES
     is_delta = F.col("vec_id") % DELTA_MOD == 0
-    train = is_corpus if retrain else (is_corpus & ~is_delta)
-    n, cent_n = _ivf_base(spark, sf_dir, train_filter=train)
-    rows = is_corpus if retrain else (is_corpus & is_delta)
-    # r14: assignment is one projection over the literal quantizer
-    # (see _assign_cell_sql) — the assigned population never expands,
-    # shuffles, or aggregates.
-    qrows = _quantizer_rows(cent_n)
-    return n.filter(rows).selectExpr(
-        "vec_id", f"{_assign_cell_sql(qrows)} AS cell"
-    )
+    train = is_corpus if retrain else is_corpus & ~is_delta
+    _, assign, _ = _ivf_parts(spark, sf_dir, train)
+    if not retrain:
+        assign = assign.filter(is_delta)  # pushed below the assignment
+    return assign.select("vec_id", "cell")
 
 
 @query(
@@ -3199,19 +2900,20 @@ def _maintenance_assign(
 WITH {_MAINT_CTES}
 SELECT f.vec_id, f.cell, round(g.dc, 6) AS drift_cosine,
        FALSE AS retrain_required
-FROM {_maint_assign_sql(_maint_cent_sql(f"vec_id % {DELTA_MOD} != 0"), f"vec_id % {DELTA_MOD} = 0")} f,
+FROM {_near_cells_sql(_cent_sql(f"vec_id >= {N_QUERIES} AND vec_id % {DELTA_MOD} != 0"),
+                      f"vec_id >= {N_QUERIES} AND vec_id % {DELTA_MOD} = 0", 1)} f,
      gate g
 WHERE g.dc >= {MAINT_COS_FLOOR}
 UNION ALL
 SELECT r.vec_id, r.cell, round(g.dc, 6) AS drift_cosine,
        TRUE AS retrain_required
-FROM {_maint_assign_sql(_maint_cent_sql("TRUE"), "TRUE")} r,
+FROM {_near_cells_sql(_cent_sql(f"vec_id >= {N_QUERIES}"), f"vec_id >= {N_QUERIES}", 1)} r,
      gate g
 WHERE g.dc < {MAINT_COS_FLOOR}
 """,
 )
 def sim_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The similarity family's composed capstone (r13 verdict #8):
+    """The similarity family's composed capstone:
     drift-gated index maintenance — the daily decision loop of a
     production vector store, under ONE oracle. The delta batch (every
     {DELTA_MOD}-th corpus vector, `sim_ivf_incremental`'s fixture)

@@ -748,12 +748,25 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 EWMA_TERMS = 7  # truncation horizon (alpha = 0.5 -> residual weight < 0.8%)
 
 
-def _ewma_sql() -> str:
-    terms = ["0.5 * v"] + [
-        f"{0.5 ** (k + 1)} * coalesce(lag(v, {k}) OVER w, 0)"
+def _ewma_sql(col: str = "v", a: float = 0.5) -> str:
+    """Truncated EWMA convolution of ``col`` over window ``w``: weight
+    a(1-a)^k on lag k, EWMA_TERMS terms. For a = 0.5 every weight is
+    0.5**(k+1) exactly, so the literals match `_ewma`'s doubles."""
+    terms = [f"{a!r} * {col}"] + [
+        f"{a * (1 - a) ** k!r} * coalesce(lag({col}, {k}) OVER w, 0)"
         for k in range(1, EWMA_TERMS)
     ]
     return " + ".join(terms)
+
+
+def _ewma(col: F.Column, w, a: float = 0.5) -> F.Column:
+    """`_ewma_sql` as a Column over window spec ``w``."""
+    terms = F.lit(a) * col
+    for k in range(1, EWMA_TERMS):
+        terms = terms + F.lit(a * (1 - a) ** k) * F.coalesce(
+            F.lag(col, k).over(w), F.lit(0.0)
+        )
+    return terms
 
 
 @query(
@@ -788,16 +801,11 @@ def events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(dsum("value").alias("v"))
     w = W.partitionBy("event_type").orderBy("day")
-    terms = F.lit(0.5) * F.col("v")
-    for k in range(1, EWMA_TERMS):
-        terms = terms + F.lit(0.5 ** (k + 1)) * F.coalesce(
-            F.lag("v", k).over(w), F.lit(0.0)
-        )
     return daily.select(
         "event_type",
         "day",
         F.round("v", 2).alias("daily_value"),
-        F.round(terms, 6).alias("ewma"),
+        F.round(_ewma(F.col("v"), w), 6).alias("ewma"),
     )
 
 
@@ -2611,16 +2619,6 @@ def quality_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 DES_HORIZON = 7
 
 
-def _conv_sql(col: str) -> str:
-    """Truncated alpha=0.5 EWMA convolution of ``col`` over window w —
-    the _ewma_sql device generalized to any input column."""
-    terms = [f"0.5 * {col}"] + [
-        f"{0.5 ** (k + 1)} * coalesce(lag({col}, {k}) OVER w, 0)"
-        for k in range(1, EWMA_TERMS)
-    ]
-    return " + ".join(terms)
-
-
 @query(
     "ts_brown_des_forecast",
     oracle=f"""
@@ -2630,11 +2628,11 @@ WITH daily AS (
   FROM events WHERE value IS NOT NULL GROUP BY 1, 2
 ),
 s1 AS (
-  SELECT event_type, day, v, round({_conv_sql('v')}, 6) AS sp
+  SELECT event_type, day, v, round({_ewma_sql('v')}, 6) AS sp
   FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day)
 ),
 s2 AS (
-  SELECT event_type, day, v, sp, round({_conv_sql('sp')}, 6) AS spp
+  SELECT event_type, day, v, sp, round({_ewma_sql('sp')}, 6) AS spp
   FROM s1 WINDOW w AS (PARTITION BY event_type ORDER BY day)
 )
 SELECT event_type, day, round(v, 2) AS daily_value,
@@ -2664,24 +2662,15 @@ def ts_brown_des_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     daily = _daily_value_rollup(spark, sf_dir)
     w = W.partitionBy("event_type").orderBy("day")
-
-    def conv(col):
-        terms = F.lit(0.5) * col
-        for k in range(1, EWMA_TERMS):
-            terms = terms + F.lit(0.5 ** (k + 1)) * F.coalesce(
-                F.lag(col, k).over(w), F.lit(0.0)
-            )
-        return terms
-
     s1 = daily.select(
-        "event_type", "day", "v", F.round(conv(F.col("v")), 6).alias("sp")
+        "event_type", "day", "v", F.round(_ewma(F.col("v"), w), 6).alias("sp")
     )
     s2 = s1.select(
         "event_type",
         "day",
         "v",
         "sp",
-        F.round(conv(F.col("sp")), 6).alias("spp"),
+        F.round(_ewma(F.col("sp"), w), 6).alias("spp"),
     )
     level = 2 * F.col("sp") - F.col("spp")
     trend = F.col("sp") - F.col("spp")
@@ -4293,14 +4282,6 @@ def events_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 SES_ALPHAS = (0.2, 0.35, 0.5, 0.65, 0.8)  # grid for one-step selection
 
 
-def _ses_conv_sql(col: str, a: float) -> str:
-    terms = [f"{a!r} * {col}"] + [
-        f"{a * (1 - a) ** k!r} * coalesce(lag({col}, {k}) OVER w, 0)"
-        for k in range(1, EWMA_TERMS)
-    ]
-    return " + ".join(terms)
-
-
 def _ses_select_oracle() -> str:
     per_alpha = []
     for a in SES_ALPHAS:
@@ -4313,7 +4294,7 @@ SELECT event_type, {a!r} AS alpha,
 FROM (
   SELECT event_type, day, v, lag(s) OVER w2 AS f
   FROM (
-    SELECT event_type, day, v, round({_ses_conv_sql('v', a)}, 6) AS s
+    SELECT event_type, day, v, round({_ewma_sql('v', a)}, 6) AS s
     FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day)
   ) WINDOW w2 AS (PARTITION BY event_type ORDER BY day)
 ) WHERE f IS NOT NULL
@@ -4352,22 +4333,13 @@ def ts_ses_alpha_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-series window work; alphas add expressions, not passes."""
     daily = _daily_value_rollup(spark, sf_dir)
     w = W.partitionBy("event_type").orderBy("day")
-
-    def conv(a: float):
-        terms = F.lit(a) * F.col("v")
-        for k in range(1, EWMA_TERMS):
-            terms = terms + F.lit(a * (1 - a) ** k) * F.coalesce(
-                F.lag("v", k).over(w), F.lit(0.0)
-            )
-        return terms
-
     cols = ["event_type", "day", "v"]
     # two window layers: the convolution itself, then the one-step lag
     # (nesting a lag of a lag-expression is illegal on both engines)
     smoothed = daily.select(
         *cols,
         *[
-            F.round(conv(a), 6).alias(f"s{i}")
+            F.round(_ewma(F.col("v"), w, a), 6).alias(f"s{i}")
             for i, a in enumerate(SES_ALPHAS)
         ],
     ).select(
@@ -4505,7 +4477,7 @@ RECON_HORIZON = 7  # days forecast in the reconciliation example
 
 
 def _recon_oracle() -> str:
-    conv = _conv_sql("v")
+    conv = _ewma_sql("v")
     return f"""
 WITH daily AS ({_DAILY_SQL}),
 fitted AS (
@@ -4562,17 +4534,8 @@ def ts_forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     log."""
     daily = _daily_value_rollup(spark, sf_dir)
     w = W.partitionBy("event_type").orderBy("day")
-
-    def conv(col, wspec):
-        terms = F.lit(0.5) * col
-        for k in range(1, EWMA_TERMS):
-            terms = terms + F.lit(0.5 ** (k + 1)) * F.coalesce(
-                F.lag(col, k).over(wspec), F.lit(0.0)
-            )
-        return terms
-
     fitted = daily.select(
-        "event_type", "day", F.round(conv(F.col("v"), w), 6).alias("level")
+        "event_type", "day", F.round(_ewma(F.col("v"), w), 6).alias("level")
     )
     last_level = (
         fitted.withColumn(
@@ -4593,7 +4556,7 @@ def ts_forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wt = W.orderBy("day")  # global-ok: daily rollup, calendar-bounded
     top_fc = (
-        top.select("day", F.round(conv(F.col("v"), wt), 6).alias("level"))
+        top.select("day", F.round(_ewma(F.col("v"), wt), 6).alias("level"))
         # global-ok: daily rollup, calendar-bounded
         .withColumn("rn", F.row_number().over(W.orderBy(F.desc("day"))))
         .where(F.col("rn") == 1)

@@ -1,6 +1,8 @@
 """Property tests for the LLM operators: LSH recall against the exact
 baseline, simhash locality, multimodal stub behavior."""
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -816,6 +818,31 @@ def test_literal_argmin_guard_cutover(spark, sf_dir):
     big_k = S.LITERAL_ARGMIN_MAX_DOUBLES // S.DIM + 1
     rel_assign, _ = S.lloyd_assign(base, big_k, 1)
     assert "least(" not in plan_string(rel_assign)
+
+
+def test_ivf_driver_collects_are_bounded(spark, sf_dir, caplog, monkeypatch):
+    """The quantizer and the probed cells reach the driver through
+    bounded_collect under IVF_MAX_CELLS (63, the literal devices'
+    limit): one collect line per site on a normal run, and a bound of 1
+    stops each site with BoundExceeded naming it."""
+    import aws_etl_pipeline_spark.llm.similarity as S
+    from aws_etl_pipeline_spark.cache import BoundExceeded
+
+    assert S.IVF_MAX_CELLS == 63
+    cent_n = S.ivf_staged_centroids(spark, sf_dir)
+    with caplog.at_level(logging.INFO, logger="aws_etl_pipeline_spark.staging"):
+        _, _, cells = S._staged_probes(spark, sf_dir, cent_n)
+    collects = [m.split()[1] for m in caplog.messages if m.startswith("collect ")]
+    assert collects == ["ivf_quantizer", "ivf_probed_cells"]
+    assert 0 < len(cells) <= S.IVF_MAX_CELLS
+
+    qrows = S._quantizer_rows(cent_n)
+    monkeypatch.setattr(S, "IVF_MAX_CELLS", 1)
+    with pytest.raises(BoundExceeded, match="ivf_quantizer"):
+        S._ivf_parts(spark, sf_dir)
+    monkeypatch.setattr(S, "_quantizer_rows", lambda _: qrows)
+    with pytest.raises(BoundExceeded, match="ivf_probed_cells"):
+        S._staged_probes(spark, sf_dir, cent_n)
 
 
 def test_bpe_train_with_no_pair_left_emits_no_merge(spark, tmp_path):

@@ -2,6 +2,9 @@
 physical plans Catalyst actually produces: pushdown reaches the scan,
 small dimensions broadcast, hot paths stay in whole-stage codegen."""
 
+import itertools
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -428,6 +431,56 @@ def test_ivf_truepq_all_index_joins_keyed(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     assert not python_eval_nodes(df)
+
+
+def _subtree(plan: str, node_id: str) -> list[str]:
+    """The formatted plan's tree lines for operator ``(node_id)`` and
+    everything under it."""
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    start = next(i for i, ln in enumerate(tree) if ln.endswith(f"({node_id})"))
+
+    def depth(line: str) -> int:
+        return line.find("+- ")
+
+    return [tree[start]] + list(
+        itertools.takewhile(
+            lambda ln: depth(ln) > depth(tree[start]), tree[start + 1 :]
+        )
+    )
+
+
+@pytest.mark.parametrize("name", ["sim_ivf_sq8_rerank", "sim_ivf_truepq_rerank"])
+def test_ivf_rerank_broadcasts_only_the_query_rows(spark, sf_dir, name):
+    """The rerank's broadcast side (query_id, qv, qnrm) is the query
+    rows, filtered to vec_id < N_QUERIES in the query's own plan, so it
+    stays request-sized when constraint propagation, which could infer
+    the bound from the join, is switched off."""
+    from aws_etl_pipeline_spark.llm.similarity import N_QUERIES
+    from aws_etl_pipeline_spark.registry import all_queries
+
+    conf = "spark.sql.constraintPropagation.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        plan = _plan(all_queries()[name].fn(spark, sf_dir))
+    finally:
+        spark.conf.set(conf, prev)
+    (bx,) = re.findall(
+        r"\((\d+)\) BroadcastExchange\nInput \[3\]: \[query_id#\d+L, qv#\d+, qnrm#\d+\]",
+        plan,
+    )
+    filters = [
+        re.search(r"\((\d+)\)$", ln).group(1)
+        for ln in _subtree(plan, bx)
+        if "Filter (" in ln
+    ]
+    conditions = [
+        re.search(rf"\({f}\) Filter\n.*\nCondition : (.*)", plan).group(1)
+        for f in filters
+    ]
+    assert any(
+        re.search(rf"vec_id#\d+L < {N_QUERIES}\b", c) for c in conditions
+    ), (conditions, plan)
 
 
 def test_dsir_feature_models_broadcast(spark, sf_dir):
